@@ -5,6 +5,7 @@ from __future__ import annotations
 import contextlib
 import contextvars
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 # ---------------------------------------------------------------------
@@ -117,9 +118,25 @@ import re as _re
 
 _WIDE_NODE = _re.compile(
     r"^[\s:+\-*(]*(Join|Aggregate|Window|Sort|Repartition|"
-    r"RepartitionByExpression|Rebalance|Deduplicate|Distinct|"
+    r"RepartitionByExpression|RebalancePartitions|Deduplicate|Distinct|"
     r"GlobalLimit|Intersect|Except|CoGroup|FlatMapGroups)\b",
     _re.MULTILINE)
+
+
+def estimated_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate for `df` in bytes, or None when
+    it cannot be read. A plan-stats read: no job runs. The size gates
+    that pick a plan (weighted-percentile window vs distributed CDF,
+    tfidf/bm25 rescan vs persist) read it here, and each caller
+    decides what None means. Inputs without statistics (in-memory or
+    checkpointed frames) read as Spark's default size, which every
+    gate treats as big."""
+    try:
+        return int(str(df._jdf.queryExecution().optimizedPlan()
+                       .stats().sizeInBytes()))
+    except (AttributeError, Py4JError):
+        # no JVM-backed frame (`_jdf`), or the JVM plan API moved
+        return None
 
 
 def narrow_num_partitions(df: DataFrame) -> int | None:

@@ -139,40 +139,8 @@ def span_first_flags(ex: DataFrame, id_col: str = "__id",
     return solo.unionByName(multi)
 
 
-#: auto span_dedup/exact_substr keying threshold. MEASURED
-#: (SCALE_REHEARSAL_r06_100x.json): the text-keyed window plan wins
-#: at every rehearsed scale for BOTH policies — span_dedup 4.5 s vs
-#: 34.1 s and exact_substr 59.5 s vs 86.1 s at 100x replicas (~27M
-#: tokens; stride-1 windows make exact_substr the heaviest candidate
-#: generator in the package, window_words x the aligned volume) —
-#: because a single-JVM shuffle of megabytes of span text is
-#: effectively free while the hash plan pays 4 extra exchanges. The
-#: hash plan exists for the regime this box cannot rehearse: true
-#: multi-TB span-text volume crossing a cluster network, where the
-#: shuffle bytes ARE the bottleneck. The threshold is therefore
-#: deliberately conservative (1 GiB of compressed-text estimate,
-#: ~50x past the largest measured point); operators at that scale
-#: should benchmark both on their own cluster and pin hash_key.
-SPAN_HASH_KEY_BYTES = 1 << 30
-
-
-def _auto_hash_key(df: DataFrame, text_col: str) -> bool:
-    """THE keying auto-decision shared by span_dedup and
-    exact_substr_dedup (one probe, so an estimation change cannot
-    drift between the two policies): hash-key above
-    SPAN_HASH_KEY_BYTES of the optimizer's text size estimate — a
-    plan-stats read, no job; unknown estimate assumes big."""
-    try:
-        size = int(str(df.select(text_col)._jdf.queryExecution()
-                       .optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        size = SPAN_HASH_KEY_BYTES + 1   # unknown: assume big
-    return size > SPAN_HASH_KEY_BYTES
-
-
 def span_dedup(df: DataFrame, id_col: str, text_col: str,
-               span_words: int = 20,
-               hash_key: bool | None = None) -> DataFrame:
+               span_words: int = 20) -> DataFrame:
     """Exact substring dedup at span granularity (the ExactSubstr
     policy of Lee et al. 2022, "Deduplicating Training Data Makes
     Language Models Better", restricted to aligned windows): split
@@ -189,78 +157,29 @@ def span_dedup(df: DataFrame, id_col: str, text_col: str,
     them (and the other columns) through unchanged, as the streaming
     variant does. CONTRACT: id_col must be unique per row (it is a
     document id); duplicate ids make the merged reassembly
-    ill-defined in any plan (positions from different rows collide)
-    — the hash plan defensively emits one row per id regardless, but
+    ill-defined (positions from different rows collide) —
     de-duplicate ids upstream.
 
-    Keying is AUTO by default (hash_key=None): the text-keyed plan
-    under SPAN_HASH_KEY_BYTES of estimated text (fewer stages win on
-    small corpora — measured 3x at sf0.1), the hash-keyed plan above
-    it (the optimizer's sizeInBytes estimate; a plan-stats read, no
-    job). Both plans are exact; pass True/False to pin one.
+    Plan: one window shuffle partitioned by the raw span text (the
+    first-occurrence row_number) and the per-doc reassembly
+    aggregate — two exchanges. It is the only plan because a
+    hash-keyed one that kept span text out of the shuffles measured
+    slower at every rehearsed scale (1x/10x/100x sf0.1 replicas,
+    SCALE_REHEARSAL_r0{6,7,8}_100x.json: 4.5-17.5 s text-keyed vs
+    34.1-99.3 s hash-keyed at 100x). span_first_flags (the
+    hash-keyed kept-flag variant of the exact_keep_first protocol)
+    is the streaming legs' within-batch pass. The aligned-window
+    policy itself is what keeps the plan join-free (a suffix-array
+    ExactSubstr needs global sort order)."""
+    from pyspark.sql import Window
 
-    Scale (hash_key=True — the 100 TB form): span text is never
-    BUILT for the unique mass, let alone shuffled. Duplicated
-    positions come from _keyed_dup_rows (aligned chain keys over
-    per-token hashes; narrow (wh, id, pos) shuffles; span text
-    re-sliced only for hash-collision candidates ahead of the
-    real-text winner re-check); they reduce to one narrow per-doc
-    sorted-positions row for only the AFFECTED docs, and dedup_text
-    is REBUILT from the original text at the final id-equi-join
-    with pure array expressions (unaffected docs pass the LEFT join
-    whole). Exactness is identical to the text-keyed plan.
-    span_first_flags (the kept-flag variant of the same protocol)
-    remains the streaming legs' within-batch pass.
-
-    hash_key=False keeps the direct plan — one window shuffle
-    partitioned by the raw span text — as the fuzz oracle for the
-    hash path and the simpler plan for small corpora. The
-    aligned-window policy itself is what keeps both join-free (a
-    suffix-array ExactSubstr needs global sort order)."""
-    if hash_key is None:
-        hash_key = _auto_hash_key(df, text_col)
-    if not hash_key:
-        from pyspark.sql import Window
-
-        ex = doc_spans(df, id_col, text_col, span_words) \
-            .withColumnRenamed(id_col, "__id")
-        w = Window.partitionBy("span").orderBy("__id", "pos")
-        flagged = ex.withColumn("__rn", F.row_number().over(w))
-        return (flagged.groupBy("__id")
-                .agg(*span_reassembly_aggs(F.col("__rn") == 1))
-                .withColumnRenamed("__id", id_col))
-    # hash plan: string-free chain keys (_keyed_dup_rows,
-    # aligned=True) yield only the DUPLICATED positions — usually a
-    # tiny fraction — and the reassembly derives everything else
-    # from the source row: affected docs carry a sorted dup-position
-    # array, unaffected docs pass through the LEFT join whole with
-    # an empty one
-    dup = _keyed_dup_rows(df, id_col, text_col, span_words,
-                          aligned=True)
-    per_doc = (dup.groupBy("__id")
-                  .agg(F.sort_array(F.collect_list("pos"))
-                        .alias("__dp")))
-    words = F.split(F.col(text_col), " ")
-    last = (((F.size(words) - F.lit(1))
-             - F.pmod(F.size(words) - F.lit(1), F.lit(span_words)))
-            / F.lit(span_words)).cast("int")
-    spans = F.transform(
-        F.sequence(F.lit(0), last),
-        lambda i: F.concat_ws(" ", F.slice(words, i * span_words + 1,
-                                           span_words)))
-    dp = F.coalesce(F.col("__dp"), F.array().cast("array<int>"))
-    kept = F.filter(F.sequence(F.lit(0), last),
-                    lambda p: ~F.array_contains(dp, p))
-    return (df.select(id_col, text_col).dropDuplicates([id_col])
-              .where(F.col(text_col).isNotNull())
-              .join(per_doc, F.col(id_col) == F.col("__id"), "left")
-              .select(id_col,
-                      (last + F.lit(1)).cast("long").alias("n_spans"),
-                      F.size(kept).cast("long").alias("n_kept"),
-                      F.concat_ws(" ", F.transform(
-                          kept,
-                          lambda p: F.element_at(spans, p + 1)))
-                      .alias("dedup_text")))
+    ex = doc_spans(df, id_col, text_col, span_words) \
+        .withColumnRenamed(id_col, "__id")
+    w = Window.partitionBy("span").orderBy("__id", "pos")
+    flagged = ex.withColumn("__rn", F.row_number().over(w))
+    return (flagged.groupBy("__id")
+            .agg(*span_reassembly_aggs(F.col("__rn") == 1))
+            .withColumnRenamed("__id", id_col))
 
 
 def span_reassembly_aggs(kept: Column) -> list:
@@ -1491,8 +1410,8 @@ def doc_windows(df: DataFrame, id_col: str, text_col: str,
 def span_dup_rows(ex: DataFrame, id_col: str = "__id",
                   hash_fn=None) -> DataFrame:
     """(id_col, pos) of the NON-first occurrences only — the dup-set
-    complement of span_first_flags, for consumers (exact_substr_dedup)
-    that never look at kept rows. Same winner rule and collision
+    complement of span_first_flags, for consumers (line_dedup's
+    keep_first) that never look at kept rows. Same winner rule and collision
     re-check, one full-width shuffle FEWER: span_first_flags must
     join every (hash, id, pos) row back to its group to emit kept
     flags for solo rows, but solo rows (count == 1 — the dominant
@@ -1559,147 +1478,9 @@ def _full_doc_copies(df: DataFrame, id_col: str, text_col: str,
                  .select(F.col("__id").alias(id_col), "n_tokens"))
 
 
-def doc_window_keys(df: DataFrame, id_col: str, text_col: str,
-                    window_words: int = 10) -> DataFrame:
-    """(id_col, pos, wh): a 64-bit key for EVERY stride-1 window,
-    built as an xxhash64 CHAIN over per-token hashes — h_0 = 0,
-    h_{j+1} = xxhash64(h_j, tok_hash[i+j]) — so no window STRING is
-    ever materialized. doc_windows' concat_ws builds ~n·window_words
-    characters of span text per document and re-hashes every byte;
-    at 100x-rehearsal scale that string construction dominated the
-    whole hash plan. Here the same O(n·window_words) loop is pure
-    64-bit mixing (token text is hashed ONCE per token), and
-    xxhash64's two-column form chains without any overflow-prone
-    arithmetic (ANSI-safe). Equal windows always collide (the chain
-    is a function of the token strings); unequal windows collide at
-    hash-collision rates — consumers re-check candidates on real
-    text exactly like span_first_flags."""
-    if window_words < 1:
-        raise ValueError("window_words must be >= 1")
-    words = F.split(F.col(text_col), " ")
-    th = F.transform(words, lambda t: F.xxhash64(t))
-    wins = F.when(
-        F.size(words) >= window_words,
-        F.transform(
-            F.sequence(F.lit(0),
-                       (F.size(words) - window_words).cast("int")),
-            lambda i: F.aggregate(
-                F.slice(th, i + 1, window_words),
-                F.lit(0).cast("long"),
-                lambda acc, x: F.xxhash64(acc, x)))) \
-        .otherwise(F.array().cast("array<long>"))
-    return df.select(F.col(id_col),
-                     F.posexplode(wins).alias("pos", "wh"))
-
-
-def _keyed_dup_rows(df: DataFrame, id_col: str, text_col: str,
-                    window_words: int, aligned: bool,
-                    key_mod: int | None = None,
-                    key_plan: str = "count") -> DataFrame:
-    """("__id", pos) of non-first window occurrences, keyed WITHOUT
-    materializing window strings — the shared candidate pass behind
-    exact_substr_dedup (aligned=False: stride-1 windows) and
-    span_dedup (aligned=True: non-overlapping spans incl. the
-    trailing partial). Keys come from doc_window_keys' xxhash64
-    chain over per-token hashes; the narrow (wh, id, pos) stream
-    hits one count aggregate (map-side partials collapse repeated
-    windows), only multi-member hash groups survive, and window TEXT
-    is constructed just for those candidate positions (re-sliced
-    from the source row at an id-equi-join) before the real-text
-    winner re-check — so removal stays exact under any hash
-    collision. Unique windows — the dominant mass — never build a
-    string, never shuffle one.
-
-    `key_mod` is the fuzz hook: a deliberately weak key floods the
-    candidate path with cross-window collisions; the re-check must
-    keep the dup set identical regardless."""
-    words = F.split(F.col(text_col), " ")
-    th = F.transform(words, lambda t: F.xxhash64(t))
-    W = window_words
-    if aligned:
-        # doc_spans geometry: span i covers words [i*W+1, i*W+W]
-        # (trailing partial included); every non-null doc emits >= 1
-        last = (((F.size(words) - F.lit(1))
-                 - F.pmod(F.size(words) - F.lit(1), F.lit(W)))
-                / F.lit(W)).cast("int")
-        keys = F.transform(
-            F.sequence(F.lit(0), last),
-            lambda i: F.aggregate(
-                F.slice(th, i * W + 1, W),
-                F.lit(0).cast("long"),
-                lambda acc, x: F.xxhash64(acc, x)))
-        start_of = lambda p: p * W + 1
-    else:
-        keys = F.when(
-            F.size(words) >= W,
-            F.transform(
-                F.sequence(F.lit(0), (F.size(words) - W).cast("int")),
-                lambda i: F.aggregate(
-                    F.slice(th, i + 1, W),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: F.xxhash64(acc, x))))             .otherwise(F.array().cast("array<long>"))
-        start_of = lambda p: p + 1
-    nx = df.select(F.col(id_col).alias("__id"),
-                   F.posexplode(keys).alias("pos", "wh"))
-    if key_mod is not None:
-        nx = nx.withColumn("wh", F.pmod(F.col("wh"), F.lit(key_mod)))
-    if key_plan == "grouped":
-        # one-pass variant: a single (wh -> [(id, pos)]) groupBy
-        # finds the multi-member groups directly, so the O(n·W)
-        # chain-key computation runs ONCE (the count plan's semi
-        # join re-derives nx for its probe side). Costs (id, pos)
-        # payload bytes in the wide shuffle for the unique mass —
-        # the trade the count plan exists to avoid on a cluster;
-        # kept as the measured A/B arm of the 100x rehearsal.
-        cand = (nx.groupBy("wh")
-                  .agg(F.collect_list(F.struct("__id", "pos"))
-                        .alias("__m"))
-                  .where(F.size("__m") > 1)
-                  .select(F.explode("__m").alias("__e"))
-                  .select(F.col("__e.__id").alias("__id"),
-                          F.col("__e.pos").alias("pos")))
-    else:
-        multi_h = (nx.groupBy("wh")
-                     .agg(F.count(F.lit(1)).alias("__n"))
-                     .where(F.col("__n") > 1)
-                     .select("wh"))
-        cand = nx.join(multi_h, "wh", "left_semi")
-    per_doc = (cand.groupBy("__id")
-                   .agg(F.collect_list("pos").alias("__cp")))
-    cand_spans = (df.select(F.col(id_col).alias("__id"), text_col)
-                  .join(per_doc, "__id")
-                  .select("__id",
-                          F.explode(F.transform(
-                              F.col("__cp"),
-                              lambda p: F.struct(
-                                  p.alias("pos"),
-                                  F.concat_ws(" ", F.slice(
-                                      words, start_of(p), W))
-                                   .alias("span")))).alias("__e"))
-                  .select("__id", "__e.pos", "__e.span"))
-    fm = (cand_spans.groupBy("span")
-                    .agg(F.min(F.struct("__id", "pos")).alias("__w2")))
-    return (cand_spans.join(fm, "span")
-            .where(F.struct("__id", "pos") != F.col("__w2"))
-            .select("__id", "pos"))
-
-
-def _window_dup_rows(df: DataFrame, id_col: str, text_col: str,
-                     window_words: int,
-                     key_mod: int | None = None,
-                     key_plan: str = "count") -> DataFrame:
-    """exact_substr_dedup's stride-1 candidate pass — see
-    _keyed_dup_rows (aligned=False)."""
-    return _keyed_dup_rows(df, id_col, text_col, window_words,
-                           aligned=False, key_mod=key_mod,
-                           key_plan=key_plan)
-
-
 def exact_substr_dedup(df: DataFrame, id_col: str, text_col: str,
                        window_words: int = 10,
-                       hash_key: bool | None = None,
-                       collapse_dup_docs: bool = True,
-                       key_plan: str = "grouped") -> DataFrame:
+                       collapse_dup_docs: bool = True) -> DataFrame:
     """UNALIGNED exact-substring dedup — the full ExactSubstr policy
     of Lee et al. 2022 ("Deduplicating Training Data Makes Language
     Models Better"), word-granular: a token is REMOVED iff it is
@@ -1720,31 +1501,19 @@ def exact_substr_dedup(df: DataFrame, id_col: str, text_col: str,
     dedup_text = ''. NULL-text rows are absent (LEFT-join back on
     id_col to carry them). CONTRACT: id_col unique per row.
 
-    Scale shape: stride-1 windows are a window_words× text blowup if
-    the window TEXT shuffles — or even if it is merely BUILT (the
-    concat_ws construction of ~n·window_words chars/doc dominated
-    the 100x rehearsal) — so keying is AUTO like span_dedup:
-    text-keyed window plan below SPAN_HASH_KEY_BYTES (fewest stages;
-    measured fastest on single-JVM scales), string-free
-    _window_dup_rows above it (doc_window_keys chains xxhash64 over
-    per-token hashes, so unique windows — the dominant stride-1
-    mass — never materialize a string; span text is re-sliced only
-    for hash-collision candidates before the real-text winner
-    re-check, which keeps removal exact — the 100 TB form). The
-    hash path's candidate pass defaults to key_plan='grouped' (ONE
-    (wh -> members) groupBy, so the O(n·window_words) chain-key
-    computation runs once): a 4-rep alternating-order 100x A/B
-    (SCALE_REHEARSAL_r08_exsubAB.json) has it ahead of the two-pass
-    'count' + semi-join plan in every paired slot (~8% mean wall on
-    a +/-20% host), and it strictly dominates on dup-heavy corpora
-    (where the count plan's semi join outgrows broadcast and
-    shuffles the window stream a second time). 'count' remains for
-    dup-light cluster regimes where the narrower (wh, partial-count)
-    shuffle — 16 vs ~28 bytes/window — outweighs the second
-    key-computation pass; both arms stay measured in
-    SCALE_REHEARSAL (and both are collision-fuzzed). Before
-    any
-    windowing, `collapse_dup_docs` removes exact full-text COPY docs
+    Plan: the stride-1 windows are keyed by their text in ONE
+    window shuffle (the first-occurrence row_number); every row past
+    the first is a duplicated window start. It is the only plan
+    because a string-free hash-keyed one (xxhash64 chains over
+    per-token hashes, text re-sliced only for collision candidates)
+    measured slower at every rehearsed scale (1x/10x/100x sf0.1
+    replicas, SCALE_REHEARSAL_r0{6,7,8}_100x.json: 42.6-59.5 s
+    text-keyed vs 57.3-86.1 s hash-keyed at 100x) — a single-JVM
+    shuffle of window text costs less than the hash plan's extra
+    exchanges.
+
+    Before any windowing, `collapse_dup_docs` removes exact full-text
+    COPY docs
     wholesale (_full_doc_copies — provably n_kept = 0, provably
     outcome-neutral for every other doc): on real web corpora whole-
     document duplication is the bulk of the duplicate mass, and one
@@ -1757,8 +1526,8 @@ def exact_substr_dedup(df: DataFrame, id_col: str, text_col: str,
     surviving text is rebuilt at the final id-equi-join with pure
     array expressions: the per-doc filter costs
     O(n_tokens * n_intervals), never O(n_tokens * n_dup_windows)."""
-    if hash_key is None:
-        hash_key = _auto_hash_key(df, text_col)
+    from pyspark.sql import Window
+
     copies = None
     work = df
     if collapse_dup_docs:
@@ -1770,17 +1539,11 @@ def exact_substr_dedup(df: DataFrame, id_col: str, text_col: str,
         copies = _full_doc_copies(df, id_col, text_col, window_words) \
             .localCheckpoint(eager=True)
         work = df.join(copies.select(id_col), id_col, "left_anti")
-    if hash_key:
-        dup = _window_dup_rows(work, id_col, text_col, window_words,
-                               key_plan=key_plan)
-    else:
-        from pyspark.sql import Window
-
-        ex = doc_windows(work, id_col, text_col, window_words) \
-            .withColumnRenamed(id_col, "__id")
-        w = Window.partitionBy("span").orderBy("__id", "pos")
-        dup = (ex.withColumn("__rn", F.row_number().over(w))
-                 .where(F.col("__rn") > 1))
+    ex = doc_windows(work, id_col, text_col, window_words) \
+        .withColumnRenamed(id_col, "__id")
+    w = Window.partitionBy("span").orderBy("__id", "pos")
+    dup = (ex.withColumn("__rn", F.row_number().over(w))
+             .where(F.col("__rn") > 1))
     out = token_removal_rebuild(work, dup, id_col, text_col,
                                 window_words)
     if copies is not None:

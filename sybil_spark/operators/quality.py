@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sybil_spark.functions.text import tokens
+from sybil_spark.operators._util import estimated_bytes
 
 _DEC = "decimal(38,6)"
 
@@ -137,12 +138,9 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str,
     active, by `_util.unpersist_unscoped()` — so long-lived sessions
     need not nuke the whole Spark cache."""
     if persist_tf is None:
-        try:
-            est = int(str(df._jdf.queryExecution().optimizedPlan()
-                          .stats().sizeInBytes()))
-        except Exception:
-            est = TFIDF_PERSIST_BYTES + 1   # unknown: assume big
-        persist_tf = est > TFIDF_PERSIST_BYTES
+        est = estimated_bytes(df)
+        # unknown: assume big
+        persist_tf = est is None or est > TFIDF_PERSIST_BYTES
     n_docs = df.count()
     toks = df.select(F.col(id_col).alias("__id"),
                      F.explode(tokens(F.col(text_col))).alias("tok"))
@@ -522,12 +520,9 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str,
     from pyspark.sql import Window
 
     if persist_tf is None:
-        try:
-            est = int(str(df._jdf.queryExecution().optimizedPlan()
-                          .stats().sizeInBytes()))
-        except Exception:
-            est = TFIDF_PERSIST_BYTES + 1   # unknown: assume big
-        persist_tf = est > TFIDF_PERSIST_BYTES
+        est = estimated_bytes(df)
+        # unknown: assume big
+        persist_tf = est is None or est > TFIDF_PERSIST_BYTES
     toks = df.select(F.col(id_col).alias("__doc"),
                      F.explode(tokens(F.col(text_col))).alias("tok"))
     tf = toks.groupBy("__doc", "tok").agg(F.count(F.lit(1)).alias("tf"))

@@ -49,14 +49,9 @@ from pyspark.sql import functions as F
 #: sybil NUM_BUCKETS (reference: src/lib/hist.go:3)
 NUM_BUCKETS = 1000
 
-#: ungrouped EXACT weighted percentiles: at or below this many rows a
-#: single-partition window is cheapest; above it _wp_frame switches
-#: to the distributed two-pass CDF (range-partition by value,
-#: per-partition prefix offsets, windowed partials) — same exact
-#: answer, parallel sort, no single-executor envelope.
-WP_UNGROUPED_MAX_ROWS = 2_000_000
-#: GROUPED exact weighted percentiles: optimizer input-size estimate
-#: (bytes, plan-stats read — no job) above which _wp_frame switches
+#: EXACT weighted percentiles (ungrouped is the one-group case):
+#: optimizer input-size estimate (bytes, plan-stats read — no job,
+#: see operators._util.estimated_bytes) above which _wp_frame switches
 #: from the per-group window (task parallelism = |groups|, serial for
 #: few huge groups) to the distributed prefix-sum CDF
 #: (_wp_grouped_distributed). Below it the single hash-partitioned
@@ -381,20 +376,22 @@ class Query:
         src/lib/hist_basic.go:111-118, 153-183).
 
         Plan shape: one window pass building the weighted CDF
-        (partitioned by the group columns — the per-group sort is the
+        (partitioned by the group key — the per-group sort is the
         unavoidable cost of an exact percentile and Spark spills it),
         then a grouped min over threshold-crossing values. Weights
         accumulate in decimal, so the CDF is order-exact and
-        bit-matches a SQL window oracle. UNGROUPED at modest row
-        counts the window is a single partition (cheapest); above
-        WP_UNGROUPED_MAX_ROWS it switches to _wp_ungrouped_distributed
-        — same exact answer, parallel sort. GROUPED above
+        bit-matches a SQL window oracle. Above
         WP_GROUPED_DISTRIBUTED_MIN_BYTES of estimated input it
-        likewise switches to _wp_grouped_distributed (the per-group
-        window caps task parallelism at |groups|). The mergeable
-        constant-size path either way remains the histogram CDF
-        (hist_summary / rollup)."""
+        switches to _wp_grouped_distributed (the per-group window
+        caps task parallelism at |groups|). With no group columns the
+        key is an EMPTY struct — one group holding every row — so the
+        ungrouped query takes the same two paths (below the gate it
+        builds lazily: no plan-time job) and its crossing aggregation
+        drops the key. The mergeable constant-size path either way
+        remains the histogram CDF (hist_summary / rollup)."""
         from pyspark.sql import Window
+
+        from sybil_spark.operators._util import estimated_bytes
 
         names = self._group_names(df)
         gexprs = self._group_cols(df)
@@ -407,75 +404,58 @@ class Query:
         # whole-partition frame is its own WindowExec that buffers
         # and re-walks EVERY row (the r10 before-plan showed two
         # stacked Window nodes). The total is a |groups|-row
-        # aggregate instead — broadcast-joined for the grouped path,
-        # folded into the already-paid plan-time count for the
-        # ungrouped path — and decimal sums are order-independent,
-        # so the value is bit-identical to the window it replaces.
-        if not names:
-            stats = proj.agg(F.count(F.lit(1)).alias("n"),
-                             F.sum("__w").alias("tw")).collect()[0]
-            if stats["n"] > WP_UNGROUPED_MAX_ROWS:
-                return self._wp_ungrouped_distributed(proj, a)
-            tw_lit = F.lit(str(stats["tw"] or 0)).cast(self._DEC)
-            cdf = Window.partitionBy().orderBy("__v", "__w").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow)
-            proj = proj.select("__v",
-                               F.sum("__w").over(cdf).alias("__cw"),
-                               tw_lit.alias("__tw"))
+        # aggregate instead, broadcast-joined back — and decimal sums
+        # are order-independent, so the value is bit-identical to the
+        # window it replaces.
+        #
+        # The group key is ONE struct column, not the bare group
+        # columns, for two reasons (r11, replaces the r10 forced
+        # F.broadcast(totals) that was an unbounded driver-side
+        # hazard for high-cardinality group-bys):
+        # - struct equality is null-safe per field (verified:
+        #   struct(NULL) = struct(NULL) is TRUE), so the totals
+        #   re-attach as a PLAIN equi-join — NULL group values
+        #   stay real groups without <=> conditions, whose
+        #   coalesce-wrapped keys would defeat co-partitioning;
+        # - the join's required distribution (__wp_g) is exactly
+        #   the window's own exchange and the window sort
+        #   (__wp_g, __v, __w) is a prefix-match for the merge
+        #   sort, so even if the (gate-bounded) broadcast hint
+        #   below were ever dropped, the fallback SortMergeJoin
+        #   adds ZERO exchanges and ZERO probe-side sorts.
+        proj = proj.withColumn(
+            "__wp_g", F.struct(*[F.col(n) for n in names]))
+        # Few huge groups serialize the per-group window (task
+        # parallelism = |groups|: the r11 10x scaling leg measured
+        # weighted_percentile FLAT from 8 to 32 cores because its
+        # 3-group window runs 3 tasks). Above a size gate the
+        # path switches to the distributed prefix-sum CDF — the gate
+        # is the optimizer's input-size estimate (a plan-stats read,
+        # no job, the tfidf persist_tf discipline), so the decision
+        # costs nothing and scales with the data, not a core
+        # count. Unknown stats (checkpointed/injected inputs)
+        # assume big.
+        est = estimated_bytes(proj)
+        if est is None or est > WP_GROUPED_DISTRIBUTED_MIN_BYTES:
+            proj = self._wp_grouped_distributed(proj)
         else:
-            # The group key is ONE struct column, not the bare group
-            # columns, for two reasons (r11, replaces the r10 forced
-            # F.broadcast(totals) that was an unbounded driver-side
-            # hazard for high-cardinality group-bys):
-            # - struct equality is null-safe per field (verified:
-            #   struct(NULL) = struct(NULL) is TRUE), so the totals
-            #   re-attach as a PLAIN equi-join — NULL group values
-            #   stay real groups without <=> conditions, whose
-            #   coalesce-wrapped keys would defeat co-partitioning;
-            # - the join's required distribution (__wp_g) is exactly
-            #   the window's own exchange and the window sort
-            #   (__wp_g, __v, __w) is a prefix-match for the merge
-            #   sort, so even if the (gate-bounded) broadcast hint
-            #   below were ever dropped, the fallback SortMergeJoin
-            #   adds ZERO exchanges and ZERO probe-side sorts.
-            proj = proj.withColumn(
-                "__wp_g", F.struct(*[F.col(n) for n in names]))
-            # Few huge groups serialize the per-group window (task
-            # parallelism = |groups|: the r11 10x scaling leg measured
-            # weighted_percentile FLAT from 8 to 32 cores because its
-            # 3-group window runs 3 tasks). Above a size gate the
-            # grouped path switches to the same distributed prefix-sum
-            # CDF the ungrouped path uses — the gate is the
-            # optimizer's input-size estimate (a plan-stats read, no
-            # job, the tfidf persist_tf discipline), so the decision
-            # costs nothing and scales with the data, not a core
-            # count. Unknown stats (checkpointed/injected inputs)
-            # assume big.
-            try:
-                est = int(str(proj._jdf.queryExecution()
-                              .optimizedPlan().stats().sizeInBytes()))
-            except Exception:
-                est = WP_GROUPED_DISTRIBUTED_MIN_BYTES + 1
-            if est > WP_GROUPED_DISTRIBUTED_MIN_BYTES:
-                proj = self._wp_grouped_distributed(proj)
-            else:
-                part = Window.partitionBy("__wp_g")
-                cdf = part.orderBy("__v", "__w").rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow)
-                totals = proj.groupBy("__wp_g") \
-                             .agg(F.sum("__w").alias("__tw"))
-                # The broadcast hint is BOUNDED here, not the r10
-                # unbounded-hazard shape the ADVICE flagged: this
-                # branch only runs when the whole input estimates
-                # ≤ WP_GROUPED_DISTRIBUTED_MIN_BYTES, and |totals| ≤
-                # |input| rows by construction — a high-cardinality
-                # group-by over big data lands on the distributed
-                # path above, which has no hint at all. Measured:
-                # the un-hinted SMJ re-attach cost ~0.3-0.4 s at
-                # sf0.1 vs the broadcast (r11 interleaved A/B).
-                proj = (proj.select("__wp_g", "__v",
-                                    F.sum("__w").over(cdf).alias("__cw"))
-                        .join(F.broadcast(totals), "__wp_g"))
+            part = Window.partitionBy("__wp_g")
+            cdf = part.orderBy("__v", "__w").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow)
+            totals = proj.groupBy("__wp_g") \
+                         .agg(F.sum("__w").alias("__tw"))
+            # The broadcast hint is BOUNDED here, not the r10
+            # unbounded-hazard shape the ADVICE flagged: this
+            # branch only runs when the whole input estimates
+            # ≤ WP_GROUPED_DISTRIBUTED_MIN_BYTES, and |totals| ≤
+            # |input| rows by construction — a high-cardinality
+            # group-by over big data lands on the distributed
+            # path above, which has no hint at all. Measured:
+            # the un-hinted SMJ re-attach cost ~0.3-0.4 s at
+            # sf0.1 vs the broadcast (r11 interleaved A/B).
+            proj = (proj.select("__wp_g", "__v",
+                                F.sum("__w").over(cdf).alias("__cw"))
+                    .join(F.broadcast(totals), "__wp_g"))
         pcts = a.params.get("percentiles", [0.25, 0.5, 0.75])
         aggs = []
         for p in pcts:
@@ -485,6 +465,9 @@ class Query:
             aggs.append(F.min(hit).cast("double")
                         .alias(a.alias or f"p{int(p * 100)}_{a.col}"))
         if not names:
+            # a global aggregate, not a groupBy on the empty key: it
+            # still yields its one (NULL) row when no value survives
+            # the filter, which the caller's crossJoin relies on
             return proj.agg(*aggs)
         out = proj.groupBy("__wp_g").agg(*aggs)
         return out.select(
@@ -493,8 +476,8 @@ class Query:
 
     def _wp_grouped_distributed(self, proj: DataFrame) -> DataFrame:
         """Exact GROUPED weighted percentiles without per-group
-        single-task windows — the grouped form of the distributed
-        prefix-sum CDF (see _wp_ungrouped_distributed):
+        single-task windows — the distributed prefix-sum CDF (the
+        ungrouped query runs it too, as the one empty-struct group):
 
         1. range-partition (__wp_g, __v, __w): each group's rows span
            a CONTIGUOUS run of partitions in (value, weight) order;
@@ -518,6 +501,7 @@ class Query:
         smallest VALUE whose cumulative weight reaches p·total — is
         invariant to ordering among ties, so this bit-matches the
         per-group-window path (pinned by
+        test_weighted_percentile_distributed_matches_window and
         test_weighted_percentile_grouped_distributed_matches_window).
 
         Returns the same (__wp_g, __v, __cw, __tw) frame the window
@@ -550,65 +534,6 @@ class Query:
                             (F.sum("__w").over(cdf)
                              + F.col("__off")).alias("__cw"),
                             "__tw"))
-
-    def _wp_ungrouped_distributed(self, proj: DataFrame,
-                                  a: "_Agg") -> DataFrame:
-        """Exact UNGROUPED weighted percentiles without a global
-        one-partition sort — the distributed prefix-sum CDF:
-
-        1. range-partition (__v) so partition i holds values below
-           partition i+1's, and PIN the sampled range boundaries with
-           a localCheckpoint (the offsets pass and the final pass
-           must see the SAME partition assignment — re-running the
-           range sampler between two jobs could move rows);
-        2. one tiny aggregation collects per-partition weight sums
-           (≤ numPartitions decimal rows to the driver) and turns
-           them into exclusive prefix offsets;
-        3. each partition windows ONLY its own rows (parallel,
-           spillable) and adds its offset — the global decimal-exact
-           cumulative weight — then the usual min-over-crossing
-           finishes per percentile.
-
-        Equal values straddling a range boundary can interleave
-        differently than the single-window (__v, __w) order, but the
-        answer — the smallest VALUE whose cumulative weight reaches
-        p·total — is invariant to ordering among ties, so this
-        bit-matches the single-window path (pinned by
-        test_weighted_percentile_distributed_matches_window)."""
-        from decimal import Decimal
-
-        from pyspark.sql import Window
-
-        spark = proj.sparkSession
-        npart = spark.sparkContext.defaultParallelism
-        part = (proj.repartitionByRange(npart, "__v")
-                    .withColumn("__pid", F.spark_partition_id())
-                    .localCheckpoint())
-        offs = (part.groupBy("__pid").agg(F.sum("__w").alias("pw"))
-                    .orderBy("__pid").collect())
-        run = Decimal(0)
-        pairs: list[Column] = []
-        for r in offs:
-            pairs += [F.lit(int(r["__pid"])),
-                      F.lit(str(run)).cast(self._DEC)]
-            run += r["pw"]
-        total = run
-        off_col = F.element_at(F.create_map(*pairs), F.col("__pid")) \
-            if pairs else F.lit(0).cast(self._DEC)
-        w_in = Window.partitionBy("__pid").orderBy("__v", "__w") \
-                     .rowsBetween(Window.unboundedPreceding,
-                                  Window.currentRow)
-        cdf = part.select(
-            "__v", (F.sum("__w").over(w_in) + off_col).alias("__cw"))
-        pcts = a.params.get("percentiles", [0.25, 0.5, 0.75])
-        aggs = []
-        for p in pcts:
-            hit = F.when(F.col("__cw").cast("double")
-                         >= F.lit(float(p) * float(total)),
-                         F.col("__v"))
-            aggs.append(F.min(hit).cast("double")
-                        .alias(a.alias or f"p{int(p * 100)}_{a.col}"))
-        return cdf.agg(*aggs)
 
     def _group_cols(self, df: DataFrame) -> list[Column]:
         cols = [F.col(g) for g in self._groups]

@@ -889,9 +889,10 @@ def test_span_dedup_matches_duckdb(fuzz_spark, texts, dup_first,
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
-def test_span_dedup_hash_key_collision_adversarial(fuzz_spark, texts,
-                                                   span_words, mod):
-    """The hash-keyed span plan vs the text-keyed plan on random
+def test_span_first_flags_collision_adversarial(fuzz_spark, texts,
+                                                span_words, mod):
+    """span_first_flags (the hash-keyed kept-flag pass the streaming
+    span leg runs) vs the text-keyed row_number flags on random
     corpora WITH A DELIBERATELY WEAK HASH (xxhash64 mod 1/2/4 — mod 1
     sends EVERY span to one hash group): cross-span collisions flood
     the re-check path, and the first-occurrence flags must still be
@@ -924,7 +925,7 @@ def test_span_dedup_hash_key_collision_adversarial(fuzz_spark, texts,
                                  HealthCheck.too_slow])
 def test_span_dup_rows_collision_adversarial(fuzz_spark, texts,
                                              window_words, mod):
-    """span_dup_rows (the dup-only hash plan exact_substr uses) vs
+    """span_dup_rows (the dup-only hash plan line_dedup uses) vs
     the text-keyed row_number dup set, under a deliberately weak
     hash flooding the re-check path with cross-span collisions — the
     dup SET must be identical: no first occurrence cut, no duplicate
@@ -947,29 +948,6 @@ def test_span_dup_rows_collision_adversarial(fuzz_spark, texts,
     got = {(r["__id"], r["pos"]) for r in weak.collect()}
     exp = {(r["__id"], r["pos"]) for r in oracle.collect()}
     assert got == exp
-
-
-@given(texts=docs_st, span_words=st.sampled_from([2, 4]))
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture,
-                                 HealthCheck.too_slow])
-def test_span_dedup_hash_vs_text_keyed(fuzz_spark, texts, span_words):
-    """End-to-end: span_dedup's default hash-keyed plan equals the
-    text-keyed plan (hash_key=False) row-for-row on random corpora —
-    same docs, counts, and reassembled text."""
-    from sybil_spark.operators import dedup
-    spark = fuzz_spark
-    sdf = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [f"d{i:03d}" for i in range(len(texts))],
-                      "text": texts}))
-    # hash_key=True explicitly: the auto size probe resolves tiny
-    # fuzz corpora to the text plan, which would compare the text
-    # plan to itself and leave the hash-keyed rebuild untested
-    a = dedup.span_dedup(sdf, "doc_id", "text", span_words,
-                         hash_key=True).toPandas()
-    b = dedup.span_dedup(sdf, "doc_id", "text", span_words,
-                         hash_key=False).toPandas()
-    _cmp_frames(a, b)
 
 
 @given(texts=docs_st,
@@ -1332,9 +1310,9 @@ def test_exact_substr_matches_python_ref(fuzz_spark, texts, dup_first,
     window collisions at arbitrary offsets; `dup_first` plants a
     whole-doc duplicate to fuzz the n_kept=0 path) vs an independent
     pure-Python first-occurrence/coverage reference — token counts
-    and reassembled text exact, on BOTH keying plans. Exercises the
-    interval-merge aggregate against overlapping and adjacent
-    duplicated windows."""
+    and reassembled text exact, with and without the doc-copy
+    collapse. Exercises the interval-merge aggregate against
+    overlapping and adjacent duplicated windows."""
     from sybil_spark.operators import dedup
     spark = fuzz_spark
     if dup_first:
@@ -1343,16 +1321,15 @@ def test_exact_substr_matches_python_ref(fuzz_spark, texts, dup_first,
     sdf = spark.createDataFrame(
         pd.DataFrame({"doc_id": [f"d{i}" for i in range(len(texts))],
                       "text": texts}))
-    # (keying, collapse_dup_docs) combos: both keyings under the
-    # default doc-copy collapse, plus the hash plan with collapse
-    # off — pinning that the wholesale-removal shortcut and the
-    # windowed path agree on planted whole-doc duplicates
-    for hk, cd in ((False, True), (True, True), (True, False)):
+    # both collapse_dup_docs settings — pinning that the
+    # wholesale-removal shortcut and the windowed path agree on
+    # planted whole-doc duplicates
+    for cd in (True, False):
         got = {r["doc_id"]: (r["n_tokens"], r["n_kept"], r["dedup_text"])
                for r in dedup.exact_substr_dedup(
                    sdf, "doc_id", "text", window_words,
-                   hash_key=hk, collapse_dup_docs=cd).collect()}
-        assert got == exp, (window_words, hk, cd)
+                   collapse_dup_docs=cd).collect()}
+        assert got == exp, (window_words, cd)
 
 
 @given(texts=docs_st)
@@ -1588,37 +1565,3 @@ def test_line_dedup_matches_duckdb(fuzz_spark, texts, policy_docs):
                  as dedup_text
         from k group by doc_id""").df()
     _cmp_frames(got, oracle)
-
-
-@given(texts=docs_st, window_words=st.sampled_from([2, 3, 5]),
-       mod=st.sampled_from([1, 2, 4]),
-       key_plan=st.sampled_from(["count", "grouped"]))
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture,
-                                 HealthCheck.too_slow])
-def test_window_dup_rows_collision_adversarial(fuzz_spark, texts,
-                                               window_words, mod,
-                                               key_plan):
-    """_window_dup_rows (the string-free chain-key plan behind
-    exact_substr's hash keying) under a deliberately weak key (chain
-    hash mod 1/2/4 — mod 1 sends EVERY window to one group), in BOTH
-    candidate plans (two-pass count + semi join, one-pass grouped
-    collect): the real-text re-check must keep the dup set identical
-    to the text-keyed row_number oracle."""
-    from pyspark.sql import Window
-
-    from sybil_spark.operators import dedup
-    spark = fuzz_spark
-    sdf = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [f"d{i:03d}" for i in range(len(texts))],
-                      "text": texts}))
-    weak = dedup._window_dup_rows(sdf, "doc_id", "text", window_words,
-                                  key_mod=mod, key_plan=key_plan)
-    ex = dedup.doc_windows(sdf, "doc_id", "text", window_words) \
-        .withColumnRenamed("doc_id", "__id")
-    w = Window.partitionBy("span").orderBy("__id", "pos")
-    oracle = (ex.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") > 1))
-    got = {(r["__id"], r["pos"]) for r in weak.collect()}
-    exp = {(r["__id"], r["pos"]) for r in oracle.collect()}
-    assert got == exp

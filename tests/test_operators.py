@@ -931,7 +931,7 @@ def test_exact_substr_unaligned_catch(spark):
             Row(doc_id=4, text="tiny")]
     out = {r["doc_id"]: r for r in dedup.exact_substr_dedup(
         spark.createDataFrame(rows), "doc_id", "text",
-        window_words=3, hash_key=True).collect()}
+        window_words=3).collect()}
     assert (out[1]["n_tokens"], out[1]["n_kept"]) == (6, 6)
     assert out[2]["dedup_text"] == "x y z" and out[2]["n_kept"] == 3
     assert out[3]["n_kept"] == 0 and out[3]["dedup_text"] == ""
@@ -953,18 +953,17 @@ def test_exact_substr_doc_copy_collapse(spark):
             Row(doc_id=9, text="hi yo"),             # short copy: kept
             Row(doc_id=4, text=None)]                # absent per contract
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for hk in (False, True):
-        on = {r["doc_id"]: tuple(r)[1:] for r in dedup.exact_substr_dedup(
-            df, "doc_id", "text", window_words=3, hash_key=hk,
-            collapse_dup_docs=True).collect()}
-        off = {r["doc_id"]: tuple(r)[1:] for r in dedup.exact_substr_dedup(
-            df, "doc_id", "text", window_words=3, hash_key=hk,
-            collapse_dup_docs=False).collect()}
-        assert on == off, hk
-        assert on[5] == (6, 0, "")                  # wholesale removal
-        assert on[9] == (2, 2, "hi yo")             # short copy survives
-        assert on[3] == (6, 3, "q r s")             # overlap still cut
-        assert 4 not in on
+    on = {r["doc_id"]: tuple(r)[1:] for r in dedup.exact_substr_dedup(
+        df, "doc_id", "text", window_words=3,
+        collapse_dup_docs=True).collect()}
+    off = {r["doc_id"]: tuple(r)[1:] for r in dedup.exact_substr_dedup(
+        df, "doc_id", "text", window_words=3,
+        collapse_dup_docs=False).collect()}
+    assert on == off
+    assert on[5] == (6, 0, "")                      # wholesale removal
+    assert on[9] == (2, 2, "hi yo")                 # short copy survives
+    assert on[3] == (6, 3, "q r s")                 # overlap still cut
+    assert 4 not in on
 
 
 def test_line_dedup_policies(spark):
@@ -1178,6 +1177,27 @@ def test_narrow_num_partitions_gates_rdd_probe(spark, docs):
     b = sorted((r["id"], r["h"]) for r in
                dedup.shingle_hashes(composed, "doc_id", "text").collect())
     assert a == b
+
+
+def test_narrow_num_partitions_rebalance_is_wide(spark):
+    """A rebalance hint plans as a RebalancePartitions node — a
+    shuffle — so the probe must refuse it like any other wide node
+    rather than run the input once for the count and again for the
+    real action."""
+    from sybil_spark.operators._util import narrow_num_partitions
+    assert narrow_num_partitions(spark.range(100).hint("rebalance")) \
+        is None
+
+
+def test_estimated_bytes_reads_stats_or_none(spark):
+    """The optimizer-size read behind every plan-choosing size gate:
+    an int for a JVM-backed frame with statistics (no job), None
+    when the plan reach-through is unavailable — the callers' own
+    "unknown" branch, never an exception."""
+    from sybil_spark.operators._util import estimated_bytes
+    est = estimated_bytes(spark.range(100))
+    assert isinstance(est, int) and 0 < est < 1 << 20
+    assert estimated_bytes(object()) is None
 
 
 def test_cap_per_group(spark):

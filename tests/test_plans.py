@@ -389,53 +389,13 @@ def test_quantized_topk_plan(spark, sf_dir):
     assert I.shuffle_exchange_count(q) == 0, p
 
 
-def test_span_dedup_plan_hash_keyed_narrow(spark, sf_dir):
-    """span_dedup's default (hash-keyed) plan keeps span text out of
-    the wide shuffles — and, since the chain-key rework, out of
-    CONSTRUCTION for the unique mass: no span-partitioned Window
-    anywhere; the candidate exchanges partition on the 8-byte chain
-    key `wh`; the only span-partitioned exchange is the multi-group
-    re-check aggregate (duplicate/collision rows only); text rebuild
-    happens at the final doc-id join, not via a span shuffle."""
-    import re
-
-    from sybil_spark.operators import dedup
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    q = dedup.span_dedup(docs, "doc_id", "text", span_words=5,
-                         hash_key=True)
-    p = I.formatted_plan(q)
-    assert "Window (" not in p, p              # no sort-based window
-    assert re.search(r"hashpartitioning\(wh#", p), p  # narrow pass
-    # exactly one span-keyed exchange: the re-check over multi groups
-    assert len(re.findall(r"hashpartitioning\(span#", p)) == 1, p
-    assert "posexplode" in p.lower(), p
-
-
-def test_span_dedup_auto_keying_by_size(spark, sf_dir, monkeypatch):
-    """hash_key=None picks the plan from the optimizer's size
-    estimate: text-keyed below SPAN_HASH_KEY_BYTES (the sf0.001
-    corpus), hash-keyed above (threshold forced to 0)."""
-    from sybil_spark.operators import dedup
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    small = I.formatted_plan(
-        dedup.span_dedup(docs, "doc_id", "text", span_words=5))
-    assert "Window (" in small, small
-    monkeypatch.setattr(dedup, "SPAN_HASH_KEY_BYTES", 0)
-    big = I.formatted_plan(
-        dedup.span_dedup(docs, "doc_id", "text", span_words=5))
-    import re
-    assert re.search(r"hashpartitioning\(wh#", big) \
-        and "Window (" not in big, big
-
-
 def test_span_dedup_plan_text_keyed_two_shuffles(spark, sf_dir):
-    """The text-keyed fallback stays exactly two shuffles — the
+    """The text-keyed plan stays exactly two shuffles — the
     first-occurrence window on the span and the per-doc reassembly
     agg; span construction stays array expressions over the scan."""
     from sybil_spark.operators import dedup
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    q = dedup.span_dedup(docs, "doc_id", "text", span_words=5,
-                         hash_key=False)
+    q = dedup.span_dedup(docs, "doc_id", "text", span_words=5)
     p = I.formatted_plan(q)
     assert I.shuffle_exchange_count(q) == 2, p
     assert "Window (" in p, p
@@ -474,29 +434,6 @@ def test_tfidf_rank_limit_pushdown(spark, sf_dir):
     p = I.formatted_plan(q)
     assert "WindowGroupLimit" in p, p
     assert I.broadcast_join_count(q) >= 1, p
-
-
-def test_exact_substr_plan_hash_keyed_narrow(spark, sf_dir):
-    """exact_substr_dedup's hash-keyed plan keeps the stride-1
-    window mass narrow — the regime where it matters most (window
-    text volume = window_words x corpus text): no window-partitioned
-    sort Window, candidate exchanges on the 8-byte chain key `wh`
-    (doc_window_keys — no window string is built for the unique
-    mass), exactly one span-keyed re-check exchange, and NO
-    exchange ever carries document text keyed by text (the copy
-    detector is checkpointed out of the serving plan)."""
-    import re
-
-    from sybil_spark.operators import dedup
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    q = dedup.exact_substr_dedup(docs, "doc_id", "text",
-                                 window_words=8, hash_key=True)
-    p = I.formatted_plan(q)
-    assert "Window (" not in p, p
-    assert re.search(r"hashpartitioning\(wh#", p), p
-    assert len(re.findall(r"hashpartitioning\(span#", p)) == 1, p
-    assert not re.search(r"hashpartitioning\(__t#", p), p
-    assert "posexplode" in p.lower(), p
 
 
 def test_no_raw_text_shuffle_key_in_corpus(spark):

@@ -413,11 +413,11 @@ def test_oracles_render_decimal_sums_via_varchar():
 
 
 def test_weighted_percentile_distributed_matches_window(spark, monkeypatch):
-    """Above WP_UNGROUPED_MAX_ROWS the ungrouped exact weighted
-    percentile switches to the distributed prefix-sum CDF
-    (range-partition + per-partition offsets) instead of one global
-    single-partition window. Forcing the switch at a tiny threshold
-    must yield bit-identical results to the single-window path,
+    """Above WP_GROUPED_DISTRIBUTED_MIN_BYTES of estimated input the
+    ungrouped exact weighted percentile (no group_by: one empty-struct
+    group) switches from one global single-partition window to the
+    distributed prefix-sum CDF (range-partition + per-partition
+    offsets). Forcing each path must yield bit-identical results,
     including heavy ties straddling range boundaries."""
     import random
 
@@ -429,11 +429,18 @@ def test_weighted_percentile_distributed_matches_window(spark, monkeypatch):
     d = spark.createDataFrame(rows).repartition(16)
     q = lambda: (Query.table(d).weight_col("w")
                  .agg("v", "percentile", percentiles=[0.1, 0.5, 0.9])
-                 .limit(None).execute(spark).collect()[0])
+                 .limit(None).execute(spark).collect())
+    # both paths forced: an in-memory frame has no size statistics
+    # and estimates at Spark's default (huge) size, so unforced it
+    # would already take the distributed path
+    monkeypatch.setattr(B, "WP_GROUPED_DISTRIBUTED_MIN_BYTES",
+                        float("inf"))
     single = q()
-    monkeypatch.setattr(B, "WP_UNGROUPED_MAX_ROWS", 10)
+    assert len(single) == 1
+    monkeypatch.setattr(B, "WP_GROUPED_DISTRIBUTED_MIN_BYTES", 1)
     dist = q()
-    assert dist.asDict() == single.asDict()
+    assert len(dist) == 1
+    assert dist[0].asDict() == single[0].asDict()
 
 
 def test_weighted_percentile_grouped_distributed_matches_window(
@@ -441,10 +448,10 @@ def test_weighted_percentile_grouped_distributed_matches_window(
     """Above WP_GROUPED_DISTRIBUTED_MIN_BYTES of estimated input the
     GROUPED exact weighted percentile switches from the per-group
     window (task parallelism = |groups| — serial for few huge groups)
-    to the grouped distributed prefix-sum CDF. Forcing the switch at
-    a tiny threshold must yield bit-identical results to the window
-    path: same groups (including a NULL group key), same percentile
-    values, heavy ties straddling range boundaries."""
+    to the grouped distributed prefix-sum CDF. Forcing each path must
+    yield bit-identical results: same groups (including a NULL group
+    key), same percentile values, heavy ties straddling range
+    boundaries."""
     import random
 
     from sybil_spark.query import builder as B
@@ -460,10 +467,38 @@ def test_weighted_percentile_grouped_distributed_matches_window(
          (Query.table(d).group_by("g").weight_col("w")
           .agg("v", "percentile", percentiles=[0.1, 0.5, 0.9])
           .limit(None).execute(spark).collect())], key=key)
+    monkeypatch.setattr(B, "WP_GROUPED_DISTRIBUTED_MIN_BYTES",
+                        float("inf"))
     single = q()
     monkeypatch.setattr(B, "WP_GROUPED_DISTRIBUTED_MIN_BYTES", 1)
     dist = q()
     assert dist == single
+
+
+def test_weighted_percentile_ungrouped_builds_lazily(spark):
+    """Building an ungrouped exact weighted percentile below the size
+    gate runs no Spark job: the plan is chosen from the optimizer's
+    size estimate, not from a plan-time count/sum collect, so the
+    query stays a lazy DataFrame until the caller's action. The job
+    group's tracker sees nothing at build time and the action's jobs
+    afterwards. (spark.range carries real size statistics; an
+    in-memory frame would estimate at Spark's default huge size and
+    take the checkpointed distributed path.)"""
+    d = spark.range(200).select(
+        (F.col("id") % 7).cast("double").alias("v"),
+        (F.col("id") % 3 + 1).alias("w"))
+    sc = spark.sparkContext
+    group = "wp-ungrouped-lazy-build"
+    sc.setJobGroup(group, "ungrouped weighted percentile build")
+    try:
+        q = (Query.table(d).weight_col("w")
+             .agg("v", "percentile", percentiles=[0.5])
+             .limit(None).execute(spark))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert q.collect()[0]["p50_v"] == 3.0
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
 
 
 def test_having_filters_groups(spark, df):

@@ -143,39 +143,31 @@ def main() -> None:
         f.unpersist()
     out["pipelines"]["tfidf_terms"] = tq
 
-    # --- span_dedup 1x/10x/100x: hash-keyed vs text-keyed ----------
-    # the r6 hash plan's claim is a flatter curve at scale (span
-    # text never enters a wide shuffle); measure both plans
-    def run_span(df, hk):
-        # NOT .count(): the hash plan ends in a LEFT join on the
-        # unique doc id, which Catalyst ELIMINATES under a bare
-        # count — the same measurement hole run_exsub documents.
-        # Summing n_kept + rebuilt-text length forces the full
-        # dedup machinery on BOTH plans.
+    # --- span_dedup 1x/10x/100x (text-keyed window plan) ------------
+    def run_span(df):
+        # NOT .count(): a bare count lets Catalyst prune the
+        # reassembly; summing n_kept + rebuilt-text length forces the
+        # full dedup machinery
         t0 = time.time()
-        (dedup.span_dedup(df, "doc_id", "text", span_words=5,
-                          hash_key=hk)
+        (dedup.span_dedup(df, "doc_id", "text", span_words=5)
               .agg(F.sum("n_kept"),
                    F.sum(F.length("dedup_text"))).collect())
         return round(time.time() - t0, 2)
 
     frames = {n: _replicate_docs(spark, F, n) for n in (1, 10, 100)}
-    run_span(frames[1], True)   # warm
+    run_span(frames[1])   # warm
     sp = {}
-    for hk, name in ((True, "hash"), (False, "text")):
-        for n in (1, 10, 100):
-            sp[f"t_{name}_{n}x_s"] = run_span(frames[n], hk)
-        sp[f"growth_{name}_100x"] = round(
-            sp[f"t_{name}_100x_s"] / sp[f"t_{name}_1x_s"], 2)
+    for n in (1, 10, 100):
+        sp[f"t_text_{n}x_s"] = run_span(frames[n])
+    sp["growth_text_100x"] = round(sp["t_text_100x_s"] / sp["t_text_1x_s"], 2)
     for f in frames.values():
         f.unpersist()
     out["pipelines"]["span_dedup"] = sp
 
-    # --- exact_substr 1x/10x/100x: hash vs text keying -------------
+    # --- exact_substr 1x/10x/100x (text-keyed window plan) ----------
     # the unaligned policy's window volume is window_words x the
-    # aligned leg's, so its keying crossover is the one most likely
-    # to flip first at cluster scale; same measurement as span_dedup
-    def run_exsub(df, hk, plan="grouped"):
+    # aligned leg's: the heaviest candidate generator in the package
+    def run_exsub(df):
         # NOT .count(): the output's cardinality is determined by the
         # doc-id dropDuplicates alone, so Catalyst ELIMINATES the
         # left join to the aggregated dup-position frame (unique join
@@ -183,25 +175,17 @@ def main() -> None:
         # Summing n_kept + the rebuilt text length forces the full
         # pipeline.
         t0 = time.time()
-        (dedup.exact_substr_dedup(df, "doc_id", "text",
-                                  window_words=8, hash_key=hk,
-                                  key_plan=plan)
+        (dedup.exact_substr_dedup(df, "doc_id", "text", window_words=8)
               .agg(F.sum("n_kept"),
                    F.sum(F.length("dedup_text"))).collect())
         return round(time.time() - t0, 2)
 
     frames = {n: _replicate_docs(spark, F, n) for n in (1, 10, 100)}
-    run_exsub(frames[1], True)   # warm
+    run_exsub(frames[1])   # warm
     ex = {}
-    # three arms: hash/grouped (default), hash/count (the r7 plan —
-    # the A/B that justified the default flip), text-keyed
-    for hk, plan, name in ((True, "grouped", "hash"),
-                           (True, "count", "hashcount"),
-                           (False, "grouped", "text")):
-        for n in (1, 10, 100):
-            ex[f"t_{name}_{n}x_s"] = run_exsub(frames[n], hk, plan)
-        ex[f"growth_{name}_100x"] = round(
-            ex[f"t_{name}_100x_s"] / ex[f"t_{name}_1x_s"], 2)
+    for n in (1, 10, 100):
+        ex[f"t_text_{n}x_s"] = run_exsub(frames[n])
+    ex["growth_text_100x"] = round(ex["t_text_100x_s"] / ex["t_text_1x_s"], 2)
     for f in frames.values():
         f.unpersist()
     out["pipelines"]["exact_substr"] = ex
