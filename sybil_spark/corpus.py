@@ -4705,9 +4705,9 @@ def q_weighted_hist_summary(spark, sf):
     over every lineitem row are the stage cost and the single-row-
     group testdata pins them to one task; the guarded repartition
     parallelizes the partial aggregation (interleaved A/B min
-    1.70→1.18 s at sf0.1, 6 reps — tools/exp_spread.py) and is a
-    no-op when the scan already carries >= cores splits. The other
-    §7-class queries measured AGAINST spread (0.45–0.65x: the
+    1.70→1.18 s at sf0.1, 6 reps — SCALE_REHEARSAL_r11_spread.json)
+    and is a no-op when the scan already carries >= cores splits. The
+    other §7-class queries measured AGAINST spread (0.45–0.65x: the
     events-scan queries pay more for the extra exchange than the
     parallelism returns) and keep their single-shuffle plans."""
     from sybil_spark.operators._util import spread
@@ -6556,13 +6556,16 @@ def q_top_ngrams(spark, sf):
 # (b) queries whose implementation or oracle changed this round. The rest
 # keep registration order. Rotate this list each round.
 _DRIVER_FIRST = [
-    # (b) implementation changed: span_dedup / exact_substr run the
-    # text-keyed window plan only; weighted_percentile's window
-    # shares one keyed path with the ungrouped case; tfidf_terms / bm25_search read their
-    # persist gate through the shared optimizer-size helper; and
+    # (b) implementation changed: bm25_index_add_search's
+    # bm25_index_add reads its compaction thresholds from the ingest
+    # constants (its threshold keywords are gone); span_dedup /
+    # exact_substr (text-keyed window plan only), weighted_percentile
+    # (one keyed path with the ungrouped case), tfidf_terms /
+    # bm25_search (shared optimizer-size helper) and
     # weighted_hist_summary / cluster_splits carry over from the
     # previous rotation's head — re-verify first per this file's
     # standing policy:
+    "bm25_index_add_search",
     "span_dedup", "exact_substr", "weighted_percentile", "tfidf_terms",
     "bm25_search", "weighted_hist_summary", "cluster_splits",
     # (a) The 11 queries that landed after the 50-row window filled

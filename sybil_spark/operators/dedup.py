@@ -302,10 +302,14 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str,
     # narrow_num_partitions); a shuffle-bearing input falls back to
     # the conf floor, which at real scale is >= the cluster's
     # configured shuffle width (never shrinks what an upstream
-    # exchange already spread).
+    # exchange already spread). A non-integer conf (e.g. "auto" on
+    # managed platforms) falls back to the default parallelism.
     n_in = narrow_num_partitions(docs)
     if n_in is None:
-        n_in = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        try:
+            n_in = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except ValueError:
+            n_in = npart
     docs = docs.repartition(max(npart, n_in), "id")
     toks = docs.select(
         "id", F.posexplode(tokens(F.col("__text"))).alias("pos", "tok"))
@@ -872,7 +876,7 @@ def simhash_df(df: DataFrame, id_col: str, text_col: str,
     chain generates a janino method large enough that codegen
     compilation alone cost ~4 s per fresh JVM (measured r5, STILL
     true on Spark 4.1.2: first-run 7.6 s, and warm runs ~2x slower
-    than the exploded shape at sf0.1 — tools/exp_simhash.py). The
+    than the exploded shape at sf0.1 — OPTIMIZATION_r11.md V1). The
     packed one-agg variant (30 lane sums, no explode) also measured
     slower warm (1.96 s vs 1.15/1.20 s); the generator + hash-agg
     span is what codegen executes well. Both aggs partial-aggregate

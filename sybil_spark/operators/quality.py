@@ -796,10 +796,7 @@ def _bm25_pending_pressure(index_path: str) -> tuple:
 
 
 def bm25_index_add(df: DataFrame, index_path: str,
-                   mode: str = "rescore",
-                   auto_compact: bool = True,
-                   piece_threshold: int | None = None,
-                   size_threshold_kb: int | None = None) -> int:
+                   mode: str = "rescore") -> int:
     """Incrementally add documents to a persisted BM25 index — the
     lexical mirror of similarity.ivf_index_add, closing the gap
     where continuous ingestion (the engine's own streaming story)
@@ -825,16 +822,16 @@ def bm25_index_add(df: DataFrame, index_path: str,
     `mode="defer"` stops there — the cheapest write, for
     high-frequency appends; serving pays one extra aggregation over
     the pruned buckets until a compact. Deferred pieces do NOT
-    accumulate unboundedly: with `auto_compact` (default) the add
-    triggers the compactor under the same lock hold once committed
-    pending pieces pass the thresholds (piece count > 256 or bytes
-    > 2 MB — ingest.maybe_digest's reference values,
-    src/lib/table_ingest.go:63-71 / row_store.go:77-123, applied to
-    the index lifecycle), so a long defer-add sequence stays under
-    the piece budget with serving bit-equal throughout (the fold is
-    exact). `mode="rescore"` (default) unconditionally runs the
-    compactor under the SAME lock hold,
-    folding all pending pieces into the base postings with exact
+    accumulate unboundedly: the add triggers the compactor under the
+    same lock hold once committed pending pieces pass the thresholds
+    (piece count > `ingest.FILE_DIGEST_THRESHOLD` = 256 or bytes >
+    `ingest.SIZE_DIGEST_THRESHOLD_KB` = 2048 KB — ingest.
+    maybe_digest's reference values, src/lib/table_ingest.go:63-71 /
+    row_store.go:77-123, applied to the index lifecycle), so a long
+    defer-add sequence stays under the piece budget with serving
+    bit-equal throughout (the fold is exact). `mode="rescore"`
+    (default) unconditionally runs the compactor under the SAME lock
+    hold, folding all pending pieces into the base postings with exact
     denormalized df (bm25_index_compact — a whole-index-dir staged
     swap, the one crash-atomic unit for in-place repair), restoring
     the fast no-recompute serving path immediately. Both modes are
@@ -888,15 +885,11 @@ def bm25_index_add(df: DataFrame, index_path: str,
             tf.unpersist()
         if mode == "rescore":
             _bm25_compact_locked(spark, index_path)
-        elif auto_compact:
-            from sybil_spark.sources.ingest import (
-                FILE_DIGEST_THRESHOLD, SIZE_DIGEST_THRESHOLD_KB)
-            pt = piece_threshold if piece_threshold is not None \
-                else FILE_DIGEST_THRESHOLD
-            st = size_threshold_kb if size_threshold_kb is not None \
-                else SIZE_DIGEST_THRESHOLD_KB
+        else:
+            from sybil_spark.sources import ingest
             n_p, n_b = _bm25_pending_pressure(index_path)
-            if n_p > pt or n_b > st * 1024:
+            if (n_p > ingest.FILE_DIGEST_THRESHOLD
+                    or n_b > ingest.SIZE_DIGEST_THRESHOLD_KB * 1024):
                 _bm25_compact_locked(spark, index_path)
         return n_new
 

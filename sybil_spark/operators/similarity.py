@@ -243,9 +243,7 @@ def build_ivf_index(df: DataFrame, vec_col: str, index_path: str,
     return cents
 
 
-def ivf_index_add(df: DataFrame, index_path: str,
-                  auto_compact: bool = True,
-                  piece_threshold: int | None = None) -> int:
+def ivf_index_add(df: DataFrame, index_path: str) -> int:
     """Incrementally add vectors to a persisted IVF index: assign
     the new rows to the EXISTING centroids (the quantizer is frozen
     at build time — the standard IVF contract; FAISS's add() does
@@ -264,16 +262,17 @@ def ivf_index_add(df: DataFrame, index_path: str,
     lock so concurrent adds / a rebuild can't interleave writes.
 
     Small-files pressure is self-limiting (ivfpq_index_add's
-    contract): with `auto_compact` (default) the add triggers a
-    defrag rewrite of the vectors dir — inside the same lock hold,
-    behind a staged swap — once files since the last snapshot's
-    `base_files` pass `piece_threshold` (default: ingest's 256-file
-    reference threshold, src/lib/table_ingest.go:63-71). The defrag
-    keeps the frozen centroids (unlike ivf_index_refresh) so
-    serving is bit-equal before and after."""
+    contract): the add triggers a defrag rewrite of the vectors dir
+    — inside the same lock hold, behind a staged swap — once files
+    since the last snapshot's `base_files` pass
+    `ingest.FILE_DIGEST_THRESHOLD` (the reference's 256-file
+    threshold, src/lib/table_ingest.go:63-71). The defrag keeps the
+    frozen centroids (unlike ivf_index_refresh) so serving is
+    bit-equal before and after."""
     import json
     import os
 
+    from sybil_spark.sources import ingest
     from sybil_spark.sources.locks import path_lock
 
     with path_lock(index_path):
@@ -286,15 +285,10 @@ def ivf_index_add(df: DataFrame, index_path: str,
         (out.write.partitionBy("cluster").mode("append")
             .parquet(os.path.join(index_path, "vectors")))
         n_added = obs.get["n"]
-        if auto_compact:
-            from sybil_spark.sources.ingest import \
-                FILE_DIGEST_THRESHOLD
-            pt = piece_threshold if piece_threshold is not None \
-                else FILE_DIGEST_THRESHOLD
-            pressure = (_codes_file_count(index_path, "vectors")
-                        - int(meta.get("base_files", 0)))
-            if pressure > pt:
-                _ivf_defrag_locked(df.sparkSession, index_path, meta)
+        pressure = (_codes_file_count(index_path, "vectors")
+                    - int(meta.get("base_files", 0)))
+        if pressure > ingest.FILE_DIGEST_THRESHOLD:
+            _ivf_defrag_locked(df.sparkSession, index_path, meta)
         return n_added
 
 
@@ -1332,9 +1326,7 @@ def _ivfpq_compact_locked(spark, index_path: str,
     return len(batches)
 
 
-def ivfpq_index_add(df: DataFrame, index_path: str,
-                    auto_compact: bool = True,
-                    piece_threshold: int | None = None) -> int:
+def ivfpq_index_add(df: DataFrame, index_path: str) -> int:
     """Incrementally add vectors to a persisted IVF-PQ index: assign
     against the FROZEN coarse centroids, encode with the FROZEN
     codebooks (both quantizers freeze at build — FAISS's add()
@@ -1349,16 +1341,16 @@ def ivfpq_index_add(df: DataFrame, index_path: str,
 
     Small-files pressure is self-limiting, like bm25_index_add's:
     every append lands new part-files beside the base codes, and
-    with `auto_compact` (default) the add triggers the compactor —
-    inside the same lock hold, force-rewriting the codes dir — once
-    (files since the last compact's `base_files` snapshot +
-    committed stream batches) passes `piece_threshold` (default:
-    ingest's 256-file reference threshold). Serving is bit-equal
-    before and after the fold (PQ codes carry no corpus-global
-    state)."""
+    the add triggers the compactor — inside the same lock hold,
+    force-rewriting the codes dir — once (files since the last
+    compact's `base_files` snapshot + committed stream batches)
+    passes `ingest.FILE_DIGEST_THRESHOLD` (the reference's 256-file
+    threshold). Serving is bit-equal before and after the fold (PQ
+    codes carry no corpus-global state)."""
     import json
     import os
 
+    from sybil_spark.sources import ingest
     from sybil_spark.sources.locks import path_lock
 
     with path_lock(index_path):
@@ -1374,17 +1366,12 @@ def ivfpq_index_add(df: DataFrame, index_path: str,
         (out.write.partitionBy("cluster").mode("append")
             .parquet(os.path.join(index_path, "codes")))
         n_added = obs.get["n"]
-        if auto_compact:
-            from sybil_spark.sources.ingest import \
-                FILE_DIGEST_THRESHOLD
-            pt = piece_threshold if piece_threshold is not None \
-                else FILE_DIGEST_THRESHOLD
-            pressure = (_codes_file_count(index_path)
-                        - int(meta.get("base_files", 0))
-                        + len(_ivfpq_stream_batches(index_path)))
-            if pressure > pt:
-                _ivfpq_compact_locked(df.sparkSession, index_path,
-                                      force=True)
+        pressure = (_codes_file_count(index_path)
+                    - int(meta.get("base_files", 0))
+                    + len(_ivfpq_stream_batches(index_path)))
+        if pressure > ingest.FILE_DIGEST_THRESHOLD:
+            _ivfpq_compact_locked(df.sparkSession, index_path,
+                                  force=True)
         return n_added
 
 

@@ -135,19 +135,14 @@ FILE_DIGEST_THRESHOLD = 256
 SIZE_DIGEST_THRESHOLD_KB = 2048
 
 
-def should_digest(table: Table,
-                  file_threshold: int | None = None,
-                  size_threshold_kb: int | None = None) -> bool:
+def should_digest(table: Table) -> bool:
     """True when the landing dir has grown past the auto-compaction
-    thresholds. Directory metadata only — no data is read until the
-    digest itself runs (reference row_store.go:101-123: 'there is no
-    reason to actually read the data off disk until we decide to
-    compact')."""
+    thresholds: more than FILE_DIGEST_THRESHOLD files or
+    SIZE_DIGEST_THRESHOLD_KB whole KB. Directory metadata only — no
+    data is read until the digest itself runs (reference
+    row_store.go:101-123: 'there is no reason to actually read the
+    data off disk until we decide to compact')."""
     import os
-    if file_threshold is None:
-        file_threshold = FILE_DIGEST_THRESHOLD
-    if size_threshold_kb is None:
-        size_threshold_kb = SIZE_DIGEST_THRESHOLD_KB
     if not os.path.exists(table.ingest_path):
         return False
     n_files = 0
@@ -160,7 +155,8 @@ def should_digest(table: Table,
             n_bytes += os.path.getsize(os.path.join(table.ingest_path, f))
         except OSError:
             pass
-    return n_files > file_threshold or n_bytes // 1024 > size_threshold_kb
+    return (n_files > FILE_DIGEST_THRESHOLD
+            or n_bytes // 1024 > SIZE_DIGEST_THRESHOLD_KB)
 
 
 def maybe_digest(spark: SparkSession, table: Table) -> int:

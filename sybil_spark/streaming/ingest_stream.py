@@ -36,41 +36,11 @@ def _meta_file(index_path: str) -> str:
     return os.path.join(index_path, "_index_meta.json")
 
 
-def _check_index_meta(index_path: str, params: dict) -> None:
-    """Raise if a persisted index was built with different structural
-    parameters than this stream is using — a mismatch (e.g. bands=16
-    index, bands=32 stream) makes the equi-join match nothing and
-    every historical dup re-emit, with no error anywhere."""
-    import json
-    import os
-
-    p = _meta_file(index_path)
-    if os.path.exists(p):
-        with open(p) as f:
-            stored = json.load(f)
-        if stored != params:
-            raise ValueError(
-                f"index at {index_path} was built with {stored}, "
-                f"stream configured with {params} — rebuild the "
-                "index or match the parameters")
-
-
-def _write_index_meta(index_path: str, params: dict) -> None:
-    import json
-    import os
-
-    p = _meta_file(index_path)
-    if not os.path.exists(p):
-        os.makedirs(index_path, exist_ok=True)
-        with open(p, "w") as f:
-            json.dump(params, f)
-
-
 class StreamDedupIndex:
-    """ONE descriptor for the four streaming dedup index legs (exact
+    """ONE descriptor for the five streaming dedup index legs (exact
     key hashes / minhash bands / embedding buckets+vectors / span
-    hashes). Each index is a parquet dataset dir (or a dir of named
-    sub-datasets) plus a `_index_meta.json` sidecar:
+    hashes / window hashes). Each index is a parquet dataset dir (or
+    a dir of named sub-datasets) plus a `_index_meta.json` sidecar:
 
         {"kind": "<leg name>", "params": {...}, "subdirs": [...]}
 
@@ -96,7 +66,9 @@ class StreamDedupIndex:
     in a `_fold_watermark.json` sidecar; a replayed batch at or
     below the watermark SKIPS (its rows are already in the fold and
     its out subdir was committed before the fold could see it) —
-    the same protocol as the unigram model's compaction."""
+    the same protocol as the unigram model's compaction. Every leg
+    runs that protocol through ONE method, `batch_protocol`, started
+    by `sink`; a leg supplies only its own per-batch step."""
 
     def __init__(self, path: str, kind: str, params: dict,
                  subdirs: list[str] | None = None):
@@ -112,23 +84,31 @@ class StreamDedupIndex:
 
     def check(self) -> None:
         """Raise on a parameter/kind mismatch vs the persisted
-        sidecar (no-op when the index doesn't exist yet). A sidecar
-        in the pre-descriptor FLAT format (bare params dict, written
-        before kind/subdirs existed) is accepted when its params
-        match and upgraded in place — an existing index must not
-        fail its stream on a format change its parameters survive."""
+        sidecar (no-op when the index doesn't exist yet) — a mismatch
+        (e.g. bands=16 index, bands=32 stream) makes the equi-join
+        match nothing and every historical dup re-emit, with no error
+        anywhere. A sidecar in the pre-descriptor FLAT format (bare
+        params dict, written before kind/subdirs existed) is accepted
+        when its params match and upgraded in place — an existing
+        index must not fail its stream on a format change its
+        parameters survive."""
         import json
         import os
 
         p = _meta_file(self.path)
-        if os.path.exists(p):
-            with open(p) as f:
-                stored = json.load(f)
-            if "kind" not in stored and stored == self.params:
-                with open(p, "w") as f:   # upgrade legacy sidecar
-                    json.dump(self.meta, f)
-                return
-        _check_index_meta(self.path, self.meta)
+        if not os.path.exists(p):
+            return
+        with open(p) as f:
+            stored = json.load(f)
+        if "kind" not in stored and stored == self.params:
+            with open(p, "w") as f:   # upgrade legacy sidecar
+                json.dump(self.meta, f)
+            return
+        if stored != self.meta:
+            raise ValueError(
+                f"index at {self.path} was built with {stored}, "
+                f"stream configured with {self.meta} — rebuild the "
+                "index or match the parameters")
 
     def data_path(self, sub: str | None = None) -> str:
         import os
@@ -147,43 +127,71 @@ class StreamDedupIndex:
                      sub: str | None = None) -> None:
         """Idempotent per-batch commit: overwrite this batch's own
         subdir (replay replaces, never duplicates)."""
-        import os
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.data_path(sub), f"batch-{batch_id}"))
+        _write_out_batch(df, self.data_path(sub), batch_id)
 
     def overwrite(self, df: DataFrame, sub: str | None = None) -> None:
         df.write.mode("overwrite").parquet(self.data_path(sub))
 
     def commit_meta(self) -> None:
-        _write_index_meta(self.path, self.meta)
+        """Write the sidecar on the index's first commit (an existing
+        one was already validated by `check`)."""
+        import json
+        import os
+
+        p = _meta_file(self.path)
+        if not os.path.exists(p):
+            os.makedirs(self.path, exist_ok=True)
+            with open(p, "w") as f:
+                json.dump(self.meta, f)
 
     def fold_watermark(self) -> int:
         return _read_fold_watermark(self.path)
 
-    def lock(self, **kw):
-        from sybil_spark.sources.locks import path_lock
-        return path_lock(self.path, **kw)
-
-    def maybe_compact(self, spark: SparkSession,
-                      piece_threshold: int | None = None) -> bool:
+    def maybe_compact(self, spark: SparkSession) -> bool:
         """Auto-compaction for callers ALREADY HOLDING the index
         lock (every leg's write_batch): fold committed batch dirs +
-        loose pieces once any sub-dataset's piece count passes the
-        threshold (default: ingest's 256-file reference threshold —
-        the bm25/ivfpq add contract, applied to the dedup-index
-        lifecycle). Counting is directory metadata only; the fold is
-        semantically transparent (set semantics + watermark
-        fencing), so a long-running stream stays under the
+        loose pieces once any sub-dataset's piece count passes
+        `ingest.FILE_DIGEST_THRESHOLD` (the reference's 256-file
+        threshold — the bm25/ivfpq add contract, applied to the
+        dedup-index lifecycle). Counting is directory metadata only;
+        the fold is semantically transparent (set semantics +
+        watermark fencing), so a long-running stream stays under the
         file-listing budget with no caller involvement."""
-        from sybil_spark.sources.ingest import FILE_DIGEST_THRESHOLD
-        pt = piece_threshold if piece_threshold is not None \
-            else FILE_DIGEST_THRESHOLD
+        from sybil_spark.sources import ingest
         worst = max(len(_dataset_pieces(self.data_path(s)))
                     for s in (self.subdirs or [None]))
-        if worst <= pt:
+        if worst <= ingest.FILE_DIGEST_THRESHOLD:
             return False
         _compact_dedup_index_locked(spark, self.path)
         return True
+
+    def batch_protocol(self, step):
+        """The exactly-once micro-batch protocol shared by every
+        dedup leg, for callers holding the index lock (`sink` runs it
+        under `_foreach_batch`'s lock). `step(batch_df, batch_id)` is
+        the leg's own work: read the index minus its own batch dir,
+        write its `batch-<id>` out/index dirs. Around it: the sidecar
+        check ALWAYS first (a parameter mismatch must raise even for
+        a batch the fold watermark would skip), then the fence (a
+        batch at or below the watermark was committed AND folded
+        before an unclean stop), and after it the sidecar commit and
+        the in-lock auto-compaction."""
+        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+            self.check()   # always first, even for a fenced batch
+            if batch_id <= self.fold_watermark():
+                return   # committed AND folded before an unclean stop
+            step(batch_df, batch_id)
+            self.commit_meta()
+            self.maybe_compact(batch_df.sparkSession)
+
+        return write_batch
+
+    def sink(self, df: DataFrame, checkpoint: str,
+             step) -> StreamingQuery:
+        """Start `df` as a dedup leg: `batch_protocol(step)` per
+        non-empty micro-batch, under the index path lock."""
+        return _foreach_batch(df, checkpoint, self.batch_protocol(step),
+                              lock_path=self.path)
 
 
 def _batch_subdir_id(name: str) -> int | None:
@@ -351,6 +359,41 @@ def _compact_dedup_index_locked(spark: SparkSession,
     return total
 
 
+def _batch_lock(scope: str | Table):
+    """The lifecycle lock one micro-batch holds — a store path's
+    lock, or a Table's per-table lock. It waits up to 300 s behind a
+    compaction/digest; past that the batch fails with LockHeld BEFORE
+    its checkpoint commit, so it replays instead of being lost."""
+    from sybil_spark.sources.locks import path_lock, table_lock
+    lock = table_lock if isinstance(scope, Table) else path_lock
+    return lock(scope, timeout_s=300.0)
+
+
+def _batch_fn(write_batch, lock_path: str | None = None):
+    """The callable `_foreach_batch` hands to Spark: an empty
+    micro-batch returns before any lock or write; otherwise
+    `write_batch` runs, inside `lock_path`'s lifecycle lock when one
+    is given."""
+    from contextlib import nullcontext
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        with _batch_lock(lock_path) if lock_path else nullcontext():
+            write_batch(batch_df, batch_id)
+
+    return run
+
+
+def _foreach_batch(df: DataFrame, checkpoint: str, write_batch,
+                   lock_path: str | None = None) -> StreamingQuery:
+    """Start `df` through the one foreachBatch sink every
+    micro-batch leg shares (see `_batch_fn`)."""
+    return (df.writeStream.foreachBatch(_batch_fn(write_batch, lock_path))
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append").start())
+
+
 def stream_ingest(spark: SparkSession, source_dir: str, table: Table,
                   schema: StructType, spec: IngestSpec | None = None,
                   checkpoint: str | None = None,
@@ -379,19 +422,14 @@ def stream_ingest(spark: SparkSession, source_dir: str, table: Table,
         from sybil_spark.sources.ingest import maybe_digest
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
             # lock the append: a concurrent digest process would
             # wipe this write's in-flight _temporary committer dir.
             # maybe_digest re-takes the lock itself.
-            from sybil_spark.sources.locks import table_lock
-            with table_lock(table, timeout_s=300.0):
+            with _batch_lock(table):
                 batch_df.write.mode("append").parquet(table.ingest_path)
             maybe_digest(batch_df.sparkSession, table)
 
-        return (out.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append").start())
+        return _foreach_batch(out, ckpt, write_batch)
     return (out.writeStream
             .option("checkpointLocation", ckpt)
             .outputMode("append")
@@ -500,35 +538,26 @@ def stream_rollup_partials(df: DataFrame, rollup_path: str,
     arriving batch queues behind the swap, instead of the batch's
     files being renamed away mid-append (the pre-lock failure
     mode)."""
-    from sybil_spark.sources.locks import path_lock
     from sybil_spark.sources.rollup import build_rollup, write_rollup
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # write through write_rollup so the partition depth
         # (__day, __inc) matches every other rollup writer —
         # mixing depths under one root breaks partition discovery
         # after a compact_rollup rewrite
-        with path_lock(rollup_path, timeout_s=300.0):
-            write_rollup(
-                build_rollup(batch_df, time_col, bucket_s, group_cols,
-                             num_cols, distinct_cols),
-                rollup_path, mode="append", inc=f"stream-{batch_id}")
+        write_rollup(
+            build_rollup(batch_df, time_col, bucket_s, group_cols,
+                         num_cols, distinct_cols),
+            rollup_path, mode="append", inc=f"stream-{batch_id}")
 
-    return (df.writeStream
-            .foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or rollup_path + "_checkpoint")
-            .outputMode("append")
-            .start())
+    return _foreach_batch(df, checkpoint or rollup_path + "_checkpoint",
+                          write_batch, lock_path=rollup_path)
 
 
 def stream_dedup_against_index(df: DataFrame, key_cols: list[str],
                                id_col: str, out_path: str,
                                index_path: str,
-                               checkpoint: str | None = None,
-                               auto_compact: bool = True
+                               checkpoint: str | None = None
                                ) -> StreamingQuery:
     """Continuous corpus-level exact dedup: each micro-batch first
     dedups within itself (operators.dedup.exact_keep_first), then
@@ -559,30 +588,16 @@ def stream_dedup_against_index(df: DataFrame, key_cols: list[str],
     sdi = StreamDedupIndex(index_path, "exact_keys",
                            {"key_cols": list(key_cols)})
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        with sdi.lock(timeout_s=300.0):
-            sdi.check()   # always first: a parameter mismatch must
-            # raise even for a batch the fold watermark would skip
-            if batch_id <= sdi.fold_watermark():
-                return   # committed AND folded before an unclean stop
-            fresh = exact_keep_first(batch_df, key_cols, id_col)
-            idx = sdi.read(spark, exclude_batch=batch_id)
-            if idx is not None:
-                fresh = filter_seen(fresh, key_cols, idx)
-            fresh = fresh.localCheckpoint()  # both writes: one snapshot
-            _write_out_batch(fresh, out_path, batch_id)
-            sdi.append_batch(hash_index(fresh, key_cols), batch_id)
-            sdi.commit_meta()
-            if auto_compact:
-                sdi.maybe_compact(batch_df.sparkSession)
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        fresh = exact_keep_first(batch_df, key_cols, id_col)
+        idx = sdi.read(batch_df.sparkSession, exclude_batch=batch_id)
+        if idx is not None:
+            fresh = filter_seen(fresh, key_cols, idx)
+        fresh = fresh.localCheckpoint()  # both writes: one snapshot
+        _write_out_batch(fresh, out_path, batch_id)
+        sdi.append_batch(hash_index(fresh, key_cols), batch_id)
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or out_path + "_checkpoint")
-            .outputMode("append").start())
+    return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)
 
 
 def bootstrap_minhash_band_index(df: DataFrame, id_col: str,
@@ -609,8 +624,7 @@ def stream_near_dedup_against_index(df: DataFrame, id_col: str,
                                     num_hashes: int = 64,
                                     bands: int = 16,
                                     shingle_n: int = 3,
-                                    checkpoint: str | None = None,
-                                    auto_compact: bool = True
+                                    checkpoint: str | None = None
                                     ) -> StreamingQuery:
     """Continuous corpus-level NEAR-dup filtering: the streaming
     analog of the batch minhash_dedup_pairs pipeline. Each
@@ -655,57 +669,43 @@ def stream_near_dedup_against_index(df: DataFrame, id_col: str,
                            {"num_hashes": num_hashes, "bands": bands,
                             "shingle_n": shingle_n})
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        with sdi.lock(timeout_s=300.0):
-            sdi.check()   # always first: a parameter mismatch must
-            # raise even for a batch the fold watermark would skip
-            if batch_id <= sdi.fold_watermark():
-                return   # committed AND folded before an unclean stop
-            docs = batch_df.localCheckpoint()  # one snapshot, all uses
-            bnd = minhash_bands(docs, id_col, text_col, num_hashes,
-                                bands, shingle_n).localCheckpoint()
-            # 2. within-batch: losers = larger id of a colliding pair
-            a, b = bnd.alias("a"), bnd.alias("b")
-            losers = (a.join(b, [F.col("a.band") == F.col("b.band"),
-                                 F.col("a.band_hash")
-                                 == F.col("b.band_hash"),
-                                 F.col("a.id") > F.col("b.id")])
-                        .select(F.col("a.id").alias("id")).distinct())
-            dropped = losers
-            keep_bnd = bnd.join(losers, "id", "left_anti")
-            # 3. against the persisted index. Only a MISSING index
-            # reads as "first batch"; any other read failure (corrupt
-            # footer, transient FS error) must raise — swallowing it
-            # would skip history filtering and leak near-dups
-            # silently.
-            idx = sdi.read(spark, exclude_batch=batch_id)
-            if idx is not None:
-                hit = (keep_bnd.join(idx, ["band", "band_hash"],
-                                     "left_semi")
-                               .select("id").distinct())
-                keep_bnd = keep_bnd.join(hit, "id", "left_anti")
-                dropped = dropped.unionByName(hit)
-            keep_bnd = keep_bnd.localCheckpoint()  # pre-write snapshot
-            dropped = dropped.localCheckpoint()
-            # survivors = everything NOT dropped — including docs
-            # with no bands at all (NULL/short text), which can't
-            # collide
-            survivors = docs.join(
-                dropped.withColumnRenamed("id", id_col), id_col,
-                "left_anti")
-            _write_out_batch(survivors, out_path, batch_id)
-            sdi.append_batch(keep_bnd, batch_id)
-            sdi.commit_meta()
-            if auto_compact:
-                sdi.maybe_compact(batch_df.sparkSession)
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        docs = batch_df.localCheckpoint()  # one snapshot, all uses
+        bnd = minhash_bands(docs, id_col, text_col, num_hashes,
+                            bands, shingle_n).localCheckpoint()
+        # 2. within-batch: losers = larger id of a colliding pair
+        a, b = bnd.alias("a"), bnd.alias("b")
+        losers = (a.join(b, [F.col("a.band") == F.col("b.band"),
+                             F.col("a.band_hash")
+                             == F.col("b.band_hash"),
+                             F.col("a.id") > F.col("b.id")])
+                    .select(F.col("a.id").alias("id")).distinct())
+        dropped = losers
+        keep_bnd = bnd.join(losers, "id", "left_anti")
+        # 3. against the persisted index. Only a MISSING index
+        # reads as "first batch"; any other read failure (corrupt
+        # footer, transient FS error) must raise — swallowing it
+        # would skip history filtering and leak near-dups
+        # silently.
+        idx = sdi.read(batch_df.sparkSession, exclude_batch=batch_id)
+        if idx is not None:
+            hit = (keep_bnd.join(idx, ["band", "band_hash"],
+                                 "left_semi")
+                           .select("id").distinct())
+            keep_bnd = keep_bnd.join(hit, "id", "left_anti")
+            dropped = dropped.unionByName(hit)
+        keep_bnd = keep_bnd.localCheckpoint()  # pre-write snapshot
+        dropped = dropped.localCheckpoint()
+        # survivors = everything NOT dropped — including docs
+        # with no bands at all (NULL/short text), which can't
+        # collide
+        survivors = docs.join(
+            dropped.withColumnRenamed("id", id_col), id_col,
+            "left_anti")
+        _write_out_batch(survivors, out_path, batch_id)
+        sdi.append_batch(keep_bnd, batch_id)
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or out_path + "_checkpoint")
-            .outputMode("append").start())
+    return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)
 
 
 def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
@@ -714,8 +714,7 @@ def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
                                          threshold: float = 0.95,
                                          num_planes: int = 8,
                                          tables: int = 4,
-                                         checkpoint: str | None = None,
-                                         auto_compact: bool = True
+                                         checkpoint: str | None = None
                                          ) -> StreamingQuery:
     """Continuous embedding-cosine near-dup filtering — the third leg
     of the streaming dedup triad (exact keys:
@@ -756,79 +755,66 @@ def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
                             "tables": tables},
                            subdirs=["buckets", "vectors"])
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        docs = batch_df.localCheckpoint()
+        bkt = embedding_buckets(docs, id_col, vec_col, dim,
+                                num_planes, tables).localCheckpoint()
+        vecs = docs.select(F.col(id_col).alias("id"),
+                           F.col(vec_col).alias("vec"))
+        # 2. within-batch: collide → verify → keep-min-id
+        a, b = bkt.alias("a"), bkt.alias("b")
+        cand = (a.join(b, [F.col("a.table") == F.col("b.table"),
+                           F.col("a.bucket") == F.col("b.bucket"),
+                           F.col("a.id") > F.col("b.id")])
+                  .select(F.col("a.id").alias("id"),
+                          F.col("b.id").alias("id_keep")).distinct())
+        va = vecs.select(F.col("id"), F.col("vec").alias("__va"))
+        vb = vecs.select(F.col("id").alias("id_keep"),
+                         F.col("vec").alias("__vb"))
+        losers = (cand.join(va, "id").join(vb, "id_keep")
+                      .where(cosine(F.col("__va"), F.col("__vb"))
+                             >= threshold)
+                      .select("id").distinct())
+        dropped = losers
+        keep = vecs.join(losers, "id", "left_anti")
+        keep_bkt = bkt.join(losers, "id", "left_anti")
+        # 3. against the persisted index (bucket join, vector
+        # verify)
         spark = batch_df.sparkSession
-        with sdi.lock(timeout_s=300.0):
-            sdi.check()   # always first: a parameter mismatch must
-            # raise even for a batch the fold watermark would skip
-            if batch_id <= sdi.fold_watermark():
-                return   # committed AND folded before an unclean stop
-            docs = batch_df.localCheckpoint()
-            bkt = embedding_buckets(docs, id_col, vec_col, dim,
-                                    num_planes, tables).localCheckpoint()
-            vecs = docs.select(F.col(id_col).alias("id"),
-                               F.col(vec_col).alias("vec"))
-            # 2. within-batch: collide → verify → keep-min-id
-            a, b = bkt.alias("a"), bkt.alias("b")
-            cand = (a.join(b, [F.col("a.table") == F.col("b.table"),
-                               F.col("a.bucket") == F.col("b.bucket"),
-                               F.col("a.id") > F.col("b.id")])
-                      .select(F.col("a.id").alias("id"),
-                              F.col("b.id").alias("id_keep")).distinct())
-            va = vecs.select(F.col("id"), F.col("vec").alias("__va"))
-            vb = vecs.select(F.col("id").alias("id_keep"),
-                             F.col("vec").alias("__vb"))
-            losers = (cand.join(va, "id").join(vb, "id_keep")
-                          .where(cosine(F.col("__va"), F.col("__vb"))
-                                 >= threshold)
-                          .select("id").distinct())
-            dropped = losers
-            keep = vecs.join(losers, "id", "left_anti")
-            keep_bkt = bkt.join(losers, "id", "left_anti")
-            # 3. against the persisted index (bucket join, vector
-            # verify)
-            idx_b = sdi.read(spark, "buckets", exclude_batch=batch_id)
-            idx_v = sdi.read(spark, "vectors",
-                             exclude_batch=batch_id) \
-                if idx_b is not None else None
-            if idx_b is not None and idx_v is not None:
-                hits = (keep_bkt.join(
-                            idx_b.withColumnRenamed("id", "old_id"),
-                            ["table", "bucket"])
-                                .select("id", "old_id").distinct())
-                seen = (hits.join(keep.select("id", F.col("vec")
-                                              .alias("__va")), "id")
-                            .join(idx_v.select(
-                                F.col("id").alias("old_id"),
-                                F.col("vec").alias("__vb")), "old_id")
-                            .where(cosine(F.col("__va"), F.col("__vb"))
-                                   >= threshold)
-                            .select("id").distinct())
-                keep = keep.join(seen, "id", "left_anti")
-                keep_bkt = keep_bkt.join(seen, "id", "left_anti")
-                dropped = dropped.unionByName(seen)
-            keep = keep.localCheckpoint()       # pre-write snapshot
-            keep_bkt = keep_bkt.localCheckpoint()
-            dropped = dropped.localCheckpoint()
-            # survivors = everything NOT dropped — a row only drops
-            # on a verified cosine match, never for lacking
-            # buckets/vector
-            survivors = docs.join(
-                dropped.withColumnRenamed("id", id_col), id_col,
-                "left_anti")
-            _write_out_batch(survivors, out_path, batch_id)
-            sdi.append_batch(keep, batch_id, "vectors")
-            sdi.append_batch(keep_bkt, batch_id, "buckets")
-            sdi.commit_meta()
-            if auto_compact:
-                sdi.maybe_compact(batch_df.sparkSession)
+        idx_b = sdi.read(spark, "buckets", exclude_batch=batch_id)
+        idx_v = sdi.read(spark, "vectors",
+                         exclude_batch=batch_id) \
+            if idx_b is not None else None
+        if idx_b is not None and idx_v is not None:
+            hits = (keep_bkt.join(
+                        idx_b.withColumnRenamed("id", "old_id"),
+                        ["table", "bucket"])
+                            .select("id", "old_id").distinct())
+            seen = (hits.join(keep.select("id", F.col("vec")
+                                          .alias("__va")), "id")
+                        .join(idx_v.select(
+                            F.col("id").alias("old_id"),
+                            F.col("vec").alias("__vb")), "old_id")
+                        .where(cosine(F.col("__va"), F.col("__vb"))
+                               >= threshold)
+                        .select("id").distinct())
+            keep = keep.join(seen, "id", "left_anti")
+            keep_bkt = keep_bkt.join(seen, "id", "left_anti")
+            dropped = dropped.unionByName(seen)
+        keep = keep.localCheckpoint()       # pre-write snapshot
+        keep_bkt = keep_bkt.localCheckpoint()
+        dropped = dropped.localCheckpoint()
+        # survivors = everything NOT dropped — a row only drops
+        # on a verified cosine match, never for lacking
+        # buckets/vector
+        survivors = docs.join(
+            dropped.withColumnRenamed("id", id_col), id_col,
+            "left_anti")
+        _write_out_batch(survivors, out_path, batch_id)
+        sdi.append_batch(keep, batch_id, "vectors")
+        sdi.append_batch(keep_bkt, batch_id, "buckets")
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or out_path + "_checkpoint")
-            .outputMode("append").start())
+    return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)
 
 
 def bootstrap_span_index(df: DataFrame, id_col: str, text_col: str,
@@ -852,8 +838,7 @@ def stream_span_dedup_against_index(df: DataFrame, id_col: str,
                                     text_col: str, out_path: str,
                                     index_path: str,
                                     span_words: int = 20,
-                                    checkpoint: str | None = None,
-                                    auto_compact: bool = True
+                                    checkpoint: str | None = None
                                     ) -> StreamingQuery:
     """Continuous span-level exact-substring dedup — the streaming
     analog of the batch `dedup.span_dedup`, and the fourth leg of the
@@ -884,57 +869,53 @@ def stream_span_dedup_against_index(df: DataFrame, id_col: str,
     its first attempt saw, so n_kept/dedup_text come out identical
     instead of the old smaller-n_kept re-emission; read out_path
     with `read_stream_output`."""
-    from sybil_spark.operators.dedup import doc_spans, span_first_flags
+    from sybil_spark.operators.dedup import doc_spans, span_reassembly_aggs
 
     sdi = StreamDedupIndex(index_path, "span_hashes",
                            {"span_words": span_words})
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        with sdi.lock(timeout_s=300.0):
-            sdi.check()   # always first: a parameter mismatch must
-            # raise even for a batch the fold watermark would skip
-            if batch_id <= sdi.fold_watermark():
-                return   # committed AND folded before an unclean stop
-            docs = batch_df.localCheckpoint()
-            base = doc_spans(docs, id_col, text_col, span_words)
-            # within-batch first occurrence: the batch operator's
-            # hash-keyed + collision-re-checked flags (one key path
-            # for batch and stream)
-            flags = span_first_flags(base, id_col)
-            sp = (base.withColumn("__h", F.xxhash64("span"))
-                      .join(flags, [id_col, "pos"])
-                      .withColumnRenamed("__kept", "__new"))
-            idx = sdi.read(spark, exclude_batch=batch_id)
-            if idx is not None:
-                # a span stays kept only if it is new within the
-                # batch AND absent from the index — mark via a left
-                # join on the distinct historical hashes (equi-join,
-                # co-partitions)
-                hit = (idx.select("__h").distinct()
-                          .withColumn("__hit", F.lit(True)))
-                sp = (sp.join(hit, "__h", "left")
-                        .withColumn("__new", F.col("__new")
-                                    & F.col("__hit").isNull())
-                        .drop("__hit"))
-            sp = sp.localCheckpoint()  # snapshot before the writes
-            from sybil_spark.operators.dedup import span_reassembly_aggs
-            kept = F.col("__new")
-            stats = sp.groupBy(id_col).agg(*span_reassembly_aggs(kept))
-            _write_out_batch(docs.join(stats, id_col, "left"),
-                             out_path, batch_id)
-            sdi.append_batch(sp.where(kept).select("__h").distinct(),
-                             batch_id)
-            sdi.commit_meta()
-            if auto_compact:
-                sdi.maybe_compact(batch_df.sparkSession)
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        docs = batch_df.localCheckpoint()
+        sp = _mark_new_spans(
+            doc_spans(docs, id_col, text_col, span_words), id_col,
+            sdi.read(batch_df.sparkSession, exclude_batch=batch_id))
+        kept = F.col("__new")
+        stats = sp.groupBy(id_col).agg(*span_reassembly_aggs(kept))
+        _write_out_batch(docs.join(stats, id_col, "left"),
+                         out_path, batch_id)
+        sdi.append_batch(sp.where(kept).select("__h").distinct(),
+                         batch_id)
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or out_path + "_checkpoint")
-            .outputMode("append").start())
+    return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)
+
+
+def _mark_new_spans(base: DataFrame, id_col: str,
+                    idx: DataFrame | None) -> DataFrame:
+    """The span and window legs' shared marking: `base`'s
+    (id, pos, span) rows gain their `__h` hash and `__new` = first
+    occurrence within the batch AND absent from the index `idx`
+    (None = no history yet); snapshotted before the leg's writes."""
+    from sybil_spark.operators.dedup import span_first_flags
+
+    # within-batch first occurrence: the batch operator's
+    # hash-keyed + collision-re-checked flags (one key path
+    # for batch and stream)
+    flags = span_first_flags(base, id_col)
+    sp = (base.withColumn("__h", F.xxhash64("span"))
+              .join(flags, [id_col, "pos"])
+              .withColumnRenamed("__kept", "__new"))
+    if idx is not None:
+        # a span stays kept only if it is new within the
+        # batch AND absent from the index — mark via a left
+        # join on the distinct historical hashes (equi-join,
+        # co-partitions)
+        hit = (idx.select("__h").distinct()
+                  .withColumn("__hit", F.lit(True)))
+        sp = (sp.join(hit, "__h", "left")
+                .withColumn("__new", F.col("__new")
+                            & F.col("__hit").isNull())
+                .drop("__hit"))
+    return sp.localCheckpoint()  # snapshot before the writes
 
 
 def bootstrap_window_index(df: DataFrame, id_col: str, text_col: str,
@@ -958,8 +939,7 @@ def stream_exact_substr_against_index(df: DataFrame, id_col: str,
                                       text_col: str, out_path: str,
                                       index_path: str,
                                       window_words: int = 10,
-                                      checkpoint: str | None = None,
-                                      auto_compact: bool = True
+                                      checkpoint: str | None = None
                                       ) -> StreamingQuery:
     """Continuous UNALIGNED exact-substring dedup — the streaming
     analog of the batch `dedup.exact_substr_dedup` (full ExactSubstr
@@ -986,57 +966,31 @@ def stream_exact_substr_against_index(df: DataFrame, id_col: str,
     (own-batch exclusion + fold watermark); read out_path with
     `read_stream_output`."""
     from sybil_spark.operators.dedup import (doc_windows,
-                                             span_first_flags,
                                              token_removal_rebuild)
 
     sdi = StreamDedupIndex(index_path, "window_hashes",
                            {"window_words": window_words})
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        with sdi.lock(timeout_s=300.0):
-            sdi.check()   # always first: a parameter mismatch must
-            # raise even for a batch the fold watermark would skip
-            if batch_id <= sdi.fold_watermark():
-                return   # committed AND folded before an unclean stop
-            docs = batch_df.localCheckpoint()
-            base = doc_windows(docs, id_col, text_col, window_words)
-            flags = span_first_flags(base, id_col)
-            sp = (base.withColumn("__h", F.xxhash64("span"))
-                      .join(flags, [id_col, "pos"])
-                      .withColumnRenamed("__kept", "__new"))
-            idx = sdi.read(spark, exclude_batch=batch_id)
-            if idx is not None:
-                hit = (idx.select("__h").distinct()
-                          .withColumn("__hit", F.lit(True)))
-                sp = (sp.join(hit, "__h", "left")
-                        .withColumn("__new", F.col("__new")
-                                    & F.col("__hit").isNull())
-                        .drop("__hit"))
-            sp = sp.localCheckpoint()  # snapshot before the writes
-            dup = (sp.where(~F.col("__new"))
-                     .select(F.col(id_col).alias("__id"), "pos"))
-            stats = token_removal_rebuild(docs, dup, id_col, text_col,
-                                          window_words)
-            # stats is (id, n_tokens, n_kept, dedup_text) — original
-            # columns ride through from docs
-            _write_out_batch(docs.join(stats, id_col, "left"),
-                             out_path, batch_id)
-            # corpus-first windows only: non-firsts are covered by
-            # the index (their first is either appended this batch
-            # or was already a hit), exactly the span leg's protocol
-            sdi.append_batch(sp.where(F.col("__new"))
-                               .select("__h").distinct(), batch_id)
-            sdi.commit_meta()
-            if auto_compact:
-                sdi.maybe_compact(batch_df.sparkSession)
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        docs = batch_df.localCheckpoint()
+        sp = _mark_new_spans(
+            doc_windows(docs, id_col, text_col, window_words), id_col,
+            sdi.read(batch_df.sparkSession, exclude_batch=batch_id))
+        dup = (sp.where(~F.col("__new"))
+                 .select(F.col(id_col).alias("__id"), "pos"))
+        stats = token_removal_rebuild(docs, dup, id_col, text_col,
+                                      window_words)
+        # stats is (id, n_tokens, n_kept, dedup_text) — original
+        # columns ride through from docs
+        _write_out_batch(docs.join(stats, id_col, "left"),
+                         out_path, batch_id)
+        # corpus-first windows only: non-firsts are covered by
+        # the index (their first is either appended this batch
+        # or was already a hit), exactly the span leg's protocol
+        sdi.append_batch(sp.where(F.col("__new"))
+                           .select("__h").distinct(), batch_id)
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or out_path + "_checkpoint")
-            .outputMode("append").start())
+    return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)
 
 
 def stream_dedup(df: DataFrame, key_cols: list[str], time_col: str,
@@ -1130,24 +1084,18 @@ def stream_unigram_counts(df: DataFrame, text_col: str,
     from sybil_spark.functions.text import tokens
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from sybil_spark.sources.locks import path_lock
-        with path_lock(model_path, timeout_s=300.0):
-            if batch_id <= _read_fold_watermark(model_path):
-                return  # already folded into the batch_id=-1 snapshot
-            (batch_df.select(
-                F.explode(tokens(F.col(text_col))).alias("tok"))
-                .groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite").parquet(model_path))
+        if batch_id <= _read_fold_watermark(model_path):
+            return  # already folded into the batch_id=-1 snapshot
+        (batch_df.select(
+            F.explode(tokens(F.col(text_col))).alias("tok"))
+            .groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite").parquet(model_path))
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or model_path + "_checkpoint")
-            .outputMode("append").start())
+    return _foreach_batch(df, checkpoint or model_path + "_checkpoint",
+                          write_batch, lock_path=model_path)
 
 
 def _fold_watermark_path(model_path: str) -> str:
@@ -1252,8 +1200,7 @@ def stream_media_ingest(spark: SparkSession, source_dir: str,
 
 
 def stream_bm25_index_add(df: DataFrame, index_path: str,
-                          checkpoint: str | None = None,
-                          auto_compact: bool = True
+                          checkpoint: str | None = None
                           ) -> StreamingQuery:
     """Continuously maintained BM25 inverted index: each micro-batch
     of (id, text) documents tokenizes into pb-partitioned postings
@@ -1282,66 +1229,56 @@ def stream_bm25_index_add(df: DataFrame, index_path: str,
     import json
     import os
 
-    from sybil_spark.sources.locks import path_lock
+    from sybil_spark.operators.quality import (_bm25_compact_locked,
+                                               _bm25_meta,
+                                               _bm25_pending_state,
+                                               _bm25_tf)
+    from sybil_spark.sources import ingest
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        meta = _bm25_meta(index_path)
+        if batch_id <= int(meta.get("stream_fold_watermark", -1)):
+            return   # committed AND folded before an unclean stop
+        bdir = os.path.join(index_path, "postings_stream",
+                            f"batch-{batch_id}")
+        if os.path.exists(os.path.join(bdir, "_delta.json")):
+            # committed but the checkpoint never advanced:
+            # tokenization is deterministic, so the dir already
+            # holds this replay's exact content — skip rather
+            # than rewrite a committed dir under a serve
             return
-        spark = batch_df.sparkSession
-        with path_lock(index_path, timeout_s=300.0):
-            from sybil_spark.operators.quality import _bm25_meta
-            meta = _bm25_meta(index_path)
-            if batch_id <= int(meta.get("stream_fold_watermark", -1)):
-                return   # committed AND folded before an unclean stop
-            bdir = os.path.join(index_path, "postings_stream",
-                                f"batch-{batch_id}")
-            if os.path.exists(os.path.join(bdir, "_delta.json")):
-                # committed but the checkpoint never advanced:
-                # tokenization is deterministic, so the dir already
-                # holds this replay's exact content — skip rather
-                # than rewrite a committed dir under a serve
-                return
-            from sybil_spark.operators.quality import _bm25_tf
-            tf = (_bm25_tf(batch_df, meta["id_col"],
-                           meta["text_col"])
-                  .localCheckpoint())   # one snapshot, three uses
-            dl = tf.groupBy("doc").agg(F.sum("tf").alias("dl"))
-            stats = dl.agg(F.count(F.lit(1)).alias("n"),
-                           F.sum("dl").alias("s")).collect()[0]
-            if not stats["n"]:
-                return   # no tokenizable docs in the batch
-            bdf = tf.groupBy("tok").agg(
-                F.count(F.lit(1)).alias("df_t"))
-            rows = (tf.join(dl, "doc").join(bdf, "tok")
-                      .withColumn("pb", F.pmod(F.xxhash64("tok"),
-                                               F.lit(meta["nbuckets"]))))
-            (rows.write.partitionBy("pb").mode("overwrite")
-                 .parquet(bdir))
-            # sidecar LAST: its presence is the commit marker that
-            # makes the batch visible to serve/compact
-            tmp = os.path.join(bdir, "_delta.json.partial")
-            with open(tmp, "w") as f:
-                json.dump({"n": int(stats["n"]),
-                           "s": int(stats["s"])}, f)
-            os.replace(tmp, os.path.join(bdir, "_delta.json"))
-            if auto_compact:
-                from sybil_spark.operators.quality import (
-                    _bm25_compact_locked, _bm25_pending_state)
-                from sybil_spark.sources.ingest import \
-                    FILE_DIGEST_THRESHOLD
-                if len(_bm25_pending_state(index_path)[0]) \
-                        > FILE_DIGEST_THRESHOLD:
-                    _bm25_compact_locked(spark, index_path)
+        tf = (_bm25_tf(batch_df, meta["id_col"],
+                       meta["text_col"])
+              .localCheckpoint())   # one snapshot, three uses
+        dl = tf.groupBy("doc").agg(F.sum("tf").alias("dl"))
+        stats = dl.agg(F.count(F.lit(1)).alias("n"),
+                       F.sum("dl").alias("s")).collect()[0]
+        if not stats["n"]:
+            return   # no tokenizable docs in the batch
+        bdf = tf.groupBy("tok").agg(
+            F.count(F.lit(1)).alias("df_t"))
+        rows = (tf.join(dl, "doc").join(bdf, "tok")
+                  .withColumn("pb", F.pmod(F.xxhash64("tok"),
+                                           F.lit(meta["nbuckets"]))))
+        (rows.write.partitionBy("pb").mode("overwrite")
+             .parquet(bdir))
+        # sidecar LAST: its presence is the commit marker that
+        # makes the batch visible to serve/compact
+        tmp = os.path.join(bdir, "_delta.json.partial")
+        with open(tmp, "w") as f:
+            json.dump({"n": int(stats["n"]),
+                       "s": int(stats["s"])}, f)
+        os.replace(tmp, os.path.join(bdir, "_delta.json"))
+        if len(_bm25_pending_state(index_path)[0]) \
+                > ingest.FILE_DIGEST_THRESHOLD:
+            _bm25_compact_locked(batch_df.sparkSession, index_path)
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or index_path + "_checkpoint")
-            .outputMode("append").start())
+    return _foreach_batch(df, checkpoint or index_path + "_checkpoint",
+                          write_batch, lock_path=index_path)
 
 
 def stream_ivfpq_index_add(df: DataFrame, index_path: str,
-                           checkpoint: str | None = None,
-                           auto_compact: bool = True
+                           checkpoint: str | None = None
                            ) -> StreamingQuery:
     """Continuously maintained IVF-PQ vector index — the embedding
     mirror of stream_bm25_index_add: each micro-batch of
@@ -1365,58 +1302,49 @@ def stream_ivfpq_index_add(df: DataFrame, index_path: str,
     import json
     import os
 
-    from sybil_spark.operators.similarity import ivf_assign, pq_encode
-    from sybil_spark.sources.locks import path_lock
+    from pyspark.sql import Observation
+
+    from sybil_spark.operators.similarity import (_ivfpq_compact_locked,
+                                                  _ivfpq_stream_batches,
+                                                  ivf_assign, pq_encode)
+    from sybil_spark.sources import ingest
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        with open(os.path.join(index_path, "ivfpq_meta.json")) as f:
+            meta = json.load(f)
+        if batch_id <= int(meta.get("stream_fold_watermark", -1)):
+            return   # committed AND folded before an unclean stop
+        bdir = os.path.join(index_path, "codes_stream",
+                            f"batch-{batch_id}")
+        if os.path.exists(os.path.join(bdir, "_count.json")):
+            # committed but the checkpoint never advanced: the
+            # encode is deterministic under the frozen
+            # quantizers, so the dir already holds exactly what
+            # this replay would write — skipping (instead of
+            # mode-overwrite rewriting) means a committed batch
+            # is NEVER rewritten in place, closing the window
+            # where a concurrent serve saw its files vanish
             return
-        with path_lock(index_path, timeout_s=300.0):
-            with open(os.path.join(index_path,
-                                   "ivfpq_meta.json")) as f:
-                meta = json.load(f)
-            if batch_id <= int(meta.get("stream_fold_watermark", -1)):
-                return   # committed AND folded before an unclean stop
-            bdir = os.path.join(index_path, "codes_stream",
-                                f"batch-{batch_id}")
-            if os.path.exists(os.path.join(bdir, "_count.json")):
-                # committed but the checkpoint never advanced: the
-                # encode is deterministic under the frozen
-                # quantizers, so the dir already holds exactly what
-                # this replay would write — skipping (instead of
-                # mode-overwrite rewriting) means a committed batch
-                # is NEVER rewritten in place, closing the window
-                # where a concurrent serve saw its files vanish
-                return
-            enc = pq_encode(
-                ivf_assign(batch_df, meta["vec_col"],
-                           meta["centroids"]),
-                meta["vec_col"], meta["codebooks"])
-            from pyspark.sql import Observation
-            obs = Observation()
-            out = (enc.select(meta["id_col"], "pq_code", "cluster")
-                      .observe(obs, F.count(F.lit(1)).alias("n")))
-            (out.write.partitionBy("cluster").mode("overwrite")
-                .parquet(bdir))
-            n = int(obs.get["n"])
-            tmp = os.path.join(bdir, "_count.json.partial")
-            with open(tmp, "w") as f:
-                json.dump({"n": n}, f)
-            os.replace(tmp, os.path.join(bdir, "_count.json"))
-            if auto_compact:
-                from sybil_spark.operators.similarity import (
-                    _ivfpq_compact_locked, _ivfpq_stream_batches)
-                from sybil_spark.sources.ingest import \
-                    FILE_DIGEST_THRESHOLD
-                if len(_ivfpq_stream_batches(index_path)) \
-                        > FILE_DIGEST_THRESHOLD:
-                    _ivfpq_compact_locked(batch_df.sparkSession,
-                                          index_path)
+        enc = pq_encode(
+            ivf_assign(batch_df, meta["vec_col"],
+                       meta["centroids"]),
+            meta["vec_col"], meta["codebooks"])
+        obs = Observation()
+        out = (enc.select(meta["id_col"], "pq_code", "cluster")
+                  .observe(obs, F.count(F.lit(1)).alias("n")))
+        (out.write.partitionBy("cluster").mode("overwrite")
+            .parquet(bdir))
+        n = int(obs.get["n"])
+        tmp = os.path.join(bdir, "_count.json.partial")
+        with open(tmp, "w") as f:
+            json.dump({"n": n}, f)
+        os.replace(tmp, os.path.join(bdir, "_count.json"))
+        if len(_ivfpq_stream_batches(index_path)) \
+                > ingest.FILE_DIGEST_THRESHOLD:
+            _ivfpq_compact_locked(batch_df.sparkSession, index_path)
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or index_path + "_checkpoint")
-            .outputMode("append").start())
+    return _foreach_batch(df, checkpoint or index_path + "_checkpoint",
+                          write_batch, lock_path=index_path)
 
 
 def stream_quality_filter(df: DataFrame, id_col: str, out_path: str,
@@ -1454,8 +1382,6 @@ def stream_quality_filter(df: DataFrame, id_col: str, out_path: str,
                  .alias(f"__r_{i}") for i, n in enumerate(names)]
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         flagged = batch_df.select("*", *flag_cols)
         keep = F.lit(True)
         for i in range(len(names)):
@@ -1474,7 +1400,5 @@ def stream_quality_filter(df: DataFrame, id_col: str, out_path: str,
                 .withColumn("batch_id", F.lit(int(batch_id)))
             _write_out_batch(audit, audit_path, batch_id)
 
-    return (df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation",
-                    checkpoint or out_path + "_checkpoint")
-            .outputMode("append").start())
+    return _foreach_batch(df, checkpoint or out_path + "_checkpoint",
+                          write_batch)

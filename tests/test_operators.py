@@ -1189,6 +1189,29 @@ def test_narrow_num_partitions_rebalance_is_wide(spark):
         is None
 
 
+def test_shingle_hashes_non_integer_shuffle_partitions(spark, docs,
+                                                       monkeypatch):
+    """Managed platforms may report spark.sql.shuffle.partitions as
+    a non-integer ("auto"). A composed input, whose partition floor
+    comes from that conf, then falls back to the default parallelism
+    instead of raising ValueError, and shingles come out unchanged."""
+    want = sorted((r["id"], r["h"]) for r in
+                  dedup.shingle_hashes(docs, "doc_id", "text").collect())
+    composed = docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+    conf = composed.sparkSession.conf
+    real_get = conf.get
+
+    def get(key, *args, **kw):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(key, *args, **kw)
+
+    monkeypatch.setattr(conf, "get", get)
+    got = sorted((r["id"], r["h"]) for r in
+                 dedup.shingle_hashes(composed, "doc_id", "text").collect())
+    assert got == want
+
+
 def test_estimated_bytes_reads_stats_or_none(spark):
     """The optimizer-size read behind every plan-choosing size gate:
     an int for a JVM-backed frame with statistics (no job), None
@@ -2973,7 +2996,7 @@ def test_boolean_topk_serves_pending_pieces(spark, tmp_path):
     assert got == [(1, 2), (0, 5)]
 
 
-def test_bm25_index_add_auto_compacts(spark, docs, tmp_path):
+def test_bm25_index_add_auto_compacts(spark, docs, tmp_path, monkeypatch):
     """A long defer-add sequence must stay under the piece budget:
     crossing the threshold triggers the in-lock fold, and serving
     stays bit-equal to a full rebuild at every step."""
@@ -2982,14 +3005,15 @@ def test_bm25_index_add_auto_compacts(spark, docs, tmp_path):
     from pyspark.sql import Row as R
 
     from sybil_spark.operators import quality
+    from sybil_spark.sources import ingest
+    monkeypatch.setattr(ingest, "FILE_DIGEST_THRESHOLD", 2)
     idx = str(tmp_path / "bm25auto")
     quality.build_bm25_index(docs, "doc_id", "text", idx, nbuckets=4)
     all_docs = docs
     for i in range(7):
         add = spark.createDataFrame(
             [R(doc_id=1000 + i, text=f"quick extra doc number{i}")])
-        quality.bm25_index_add(add, idx, mode="defer",
-                               piece_threshold=2)
+        quality.bm25_index_add(add, idx, mode="defer")
         all_docs = all_docs.unionByName(add)
         n_pieces = len(quality._bm25_pending_state(idx)[0])
         assert n_pieces <= 3          # threshold 2 -> fold on cross
@@ -3004,14 +3028,14 @@ def test_bm25_index_add_auto_compacts(spark, docs, tmp_path):
         assert a == b, i
     # byte threshold alone also triggers (tiny cap -> immediate fold)
     add = spark.createDataFrame([R(doc_id=2000, text="quick bytes")])
-    quality.bm25_index_add(add, idx, mode="defer",
-                           piece_threshold=10**6,
-                           size_threshold_kb=0)
+    monkeypatch.setattr(ingest, "FILE_DIGEST_THRESHOLD", 10**6)
+    monkeypatch.setattr(ingest, "SIZE_DIGEST_THRESHOLD_KB", 0)
+    quality.bm25_index_add(add, idx, mode="defer")
     assert len(quality._bm25_pending_state(idx)[0]) == 0
     assert os.path.exists(os.path.join(idx, "bm25_meta.json"))
 
 
-def test_ivfpq_index_add_auto_compacts(spark, tmp_path):
+def test_ivfpq_index_add_auto_compacts(spark, tmp_path, monkeypatch):
     """Plain IVF-PQ appends accumulate part-files beside the base
     codes; crossing the files-since-base threshold must trigger the
     forced defrag under the same lock, with served top-k unchanged."""
@@ -3020,6 +3044,8 @@ def test_ivfpq_index_add_auto_compacts(spark, tmp_path):
     import random
 
     from sybil_spark.operators import similarity as S
+    from sybil_spark.sources import ingest
+    monkeypatch.setattr(ingest, "FILE_DIGEST_THRESHOLD", 4)
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)])
             for i in range(300)]
@@ -3038,7 +3064,7 @@ def test_ivfpq_index_add_auto_compacts(spark, tmp_path):
               [rng.uniform(-1, 1) for _ in range(16)])
              for j in range(3)],
             "vec_id long, embedding array<double>")
-        S.ivfpq_index_add(add, idx, piece_threshold=4)
+        S.ivfpq_index_add(add, idx)
         with open(os.path.join(idx, "ivfpq_meta.json")) as f:
             meta = json.load(f)
         pressure = S._codes_file_count(idx) \
@@ -3056,7 +3082,7 @@ def test_ivfpq_index_add_auto_compacts(spark, tmp_path):
     assert len(after) == 5
 
 
-def test_ivf_index_add_auto_compacts(spark, tmp_path):
+def test_ivf_index_add_auto_compacts(spark, tmp_path, monkeypatch):
     """Plain-IVF appends accumulate part-files beside the base
     vectors; crossing the files-since-base threshold must trigger
     the staged-swap defrag under the same lock, with the frozen
@@ -3066,6 +3092,8 @@ def test_ivf_index_add_auto_compacts(spark, tmp_path):
     import random
 
     from sybil_spark.operators import similarity as S
+    from sybil_spark.sources import ingest
+    monkeypatch.setattr(ingest, "FILE_DIGEST_THRESHOLD", 4)
     rng = random.Random(11)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
             for i in range(200)]
@@ -3084,7 +3112,7 @@ def test_ivf_index_add_auto_compacts(spark, tmp_path):
               [rng.uniform(-1, 1) for _ in range(8)])
              for j in range(3)],
             "vec_id long, embedding array<double>")
-        S.ivf_index_add(add, idx, piece_threshold=4)
+        S.ivf_index_add(add, idx)
         with open(os.path.join(idx, "ivf_meta.json")) as f:
             meta = json.load(f)
         pressure = S._codes_file_count(idx, "vectors") \

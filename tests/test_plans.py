@@ -300,8 +300,8 @@ def test_new_aggregate_shapes(spark, sf_dir):
     # its percentile-CDF branch each re-split the single-row-group
     # lineitem scan before their row-heavy stages (guarded — no-op
     # when the scan carries >= cores splits; interleaved A/B min
-    # 1.70->1.18 s at sf0.1, tools/exp_spread.py). Filters still push
-    # to the scan below the exchanges.
+    # 1.70->1.18 s at sf0.1, SCALE_REHEARSAL_r11_spread.json). Filters
+    # still push to the scan below the exchanges.
     budgets = {"hist_summary": 3, "weighted_hist_summary": 5,
                "weighted_stddev_sum": 1, "weighted_percentile": 3,
                "time_hist": 2, "pii_scrub": 1}

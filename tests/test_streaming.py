@@ -572,6 +572,51 @@ def test_stream_dedup_index_descriptor(spark, tmp_path):
         q3.stop()
 
 
+def test_stream_dedup_batch_protocol(spark, tmp_path):
+    """The per-batch protocol every dedup leg runs, called directly
+    with explicit batch ids (no streaming query): an empty batch
+    writes nothing; the sidecar check runs BEFORE the fold-watermark
+    fence, so a parameter mismatch raises even for a fenced batch; a
+    fenced batch never reaches the leg's step; a normal batch runs
+    the step under the index lock, then commits the sidecar."""
+    import os
+
+    from sybil_spark.streaming import ingest_stream as IS
+
+    idx = str(tmp_path / "pidx")
+    meta_p = os.path.join(idx, "_index_meta.json")
+    lock_dir = str(tmp_path / "pidx.lifecycle.lock")
+    calls = []   # (batch_id, lock held, sidecar present) per step
+
+    def step(batch_df, batch_id):
+        calls.append((batch_id, os.path.isdir(lock_dir),
+                      os.path.exists(meta_p)))
+
+    def run(key_cols, batch_df, batch_id):
+        sdi = IS.StreamDedupIndex(idx, "exact_keys",
+                                  {"key_cols": key_cols})
+        IS._batch_fn(sdi.batch_protocol(step), sdi.path)(batch_df,
+                                                        batch_id)
+
+    df = spark.createDataFrame([("a", 1, 1)],
+                               "host string, ping long, time long")
+    run(["host"], df.limit(0), 0)
+    assert calls == [] and not os.path.exists(idx)
+    run(["host"], df, 0)
+    assert calls == [(0, True, False)]
+    assert json.load(open(meta_p)) == {
+        "kind": "exact_keys", "params": {"key_cols": ["host"]},
+        "subdirs": []}
+    with open(os.path.join(idx, "_fold_watermark.json"), "w") as f:
+        json.dump({"max_folded_batch_id": 3}, f)
+    run(["host"], df, 3)                      # fenced: step skipped
+    with pytest.raises(ValueError, match="built with"):
+        run(["ping"], df, 2)                  # mismatch beats the fence
+    assert calls == [(0, True, False)]
+    run(["host"], df, 4)
+    assert calls[-1] == (4, True, True)
+
+
 def test_stream_dedup_exactly_once_replay(spark, tmp_path):
     """The exactly-once contract: re-delivering every batch (a fresh
     checkpoint over the same source, same batch ids) leaves out_path
