@@ -295,41 +295,28 @@ def _cacheable(args) -> bool:
     """Query shapes the per-block cache serves: count/avg pipelines
     over int/str filters (the reference likewise skips caching for
     -samples, query_cache.go:151-155). Everything else silently runs
-    the direct path — same answers, no cache."""
+    the direct path — same answers, no cache: the cached path
+    compiles its filters with the direct path's compiler
+    (builder.compile_filters over Query.filter_specs) and shapes its
+    rows with the direct path's HAVING/sort/limit step
+    (Query.shape_result)."""
     return (args.cache_queries and not args.samples and not args.loghist
             and args.op in ("count", "avg") and not args.distinct_cols
             and not args.set_filters and not args.str_replaces
             and not args.weight_col and not args.read_log)
 
 
-def _run_query_cached(spark: SparkSession, args, t, groups, int_cols):
+def _run_query_cached(spark: SparkSession, args, t, q, groups, int_cols):
     """Cached count/avg execution. Returns None when the spec can't
     be served from block files (e.g. it references a partition-dir
     column) — the caller falls back to the direct path."""
     from sybil_spark.sources import query_cache as QC
-    filters = []
-    for trip in args.int_filters:
-        f = _split_filter(trip, args.table, args.dir, kind="int")
-        if not f:
-            continue
-        col, op, val = f
-        val = float(val) if "." in val else int(val)
-        if args.time_rollup and col == args.time_col:
-            # same bucket alignment the direct path applies to time
-            # filters (builder._predicate; reference filter.go:86-95)
-            val = int(val) - int(val) % args.time_bucket
-        filters.append(("int", op, col, val))
-    for trip in args.str_filters:
-        f = _split_filter(trip, args.table, args.dir)
-        if f:
-            col, op, val = f
-            filters.append(("str", op, col, val))
     spec = QC.CacheSpec(
         group_cols=tuple(groups),
         num_cols=tuple(int_cols) if args.op == "avg" else (),
         time_col=args.time_col if args.time_rollup else None,
         bucket_s=args.time_bucket if args.time_rollup else None,
-        filters=tuple(filters))
+        filters=q.filter_specs())
     kw = {}
     if args.cache_min_rows is not None:
         kw["cache_min_rows"] = args.cache_min_rows
@@ -346,40 +333,20 @@ def _run_query_cached(spark: SparkSession, args, t, groups, int_cols):
     keep.append("count")
     if args.op == "avg":
         keep += [f"avg_{c}" for c in int_cols]
-    out = out.select(*keep)
-    if args.sort:
-        from pyspark.sql import functions as F
-        out = out.orderBy(F.col(args.sort).asc() if args.sort_asc
-                          else F.col(args.sort).desc())
-    return out.limit(args.limit) if args.limit else out
+    return q.shape_result(out.select(*keep))
 
 
 def run_query(spark: SparkSession, args) -> "DataFrame":
+    from functools import partial
+
     from sybil_spark.query.builder import Query
     from sybil_spark.table import Table
 
     t = Table(args.dir, args.table)
-    if _cacheable(args):
-        out = _run_query_cached(spark, args, t,
-                                _split(args.group), _split(args.int_cols))
-        if out is not None:
-            return out
-    if args.distinct_limit and args.distinct_cols and not args.read_log \
-            and not args.str_replaces:
-        # true input-limiting early stop over the block files
-        # (reference mid-scan abort); filters compile to the same
-        # predicate the direct path uses
-        from sybil_spark.query.builder import distinct_values_early_stop
-        from sybil_spark.sources.query_cache import _list_blocks
-        probe = Query.table(t.read(spark))
-        _filters(probe, args)
-        pred = probe._predicate(t.read(spark))
-        return distinct_values_early_stop(
-            spark, _list_blocks(t.blocks_path),
-            _split(args.distinct_cols), args.distinct_limit,
-            predicate=pred)
-    df = t.read(spark, read_log=args.read_log)
-    q = Query.table(df)
+    # the invocation's one Query: every path below takes its filters
+    # (and the aggregate paths their shaping) from it; the table is
+    # read only when a direct plan is built
+    q = Query.table(partial(t.read, read_log=args.read_log))
     _filters(q, args)
     groups = _split(args.group)
     if groups:
@@ -393,11 +360,26 @@ def run_query(spark: SparkSession, args) -> "DataFrame":
     for h in args.having:
         q.having(h)
     q.limit(args.limit)
+    int_cols = _split(args.int_cols)
 
+    if _cacheable(args):
+        out = _run_query_cached(spark, args, t, q, groups, int_cols)
+        if out is not None:
+            return out
+    if args.distinct_limit and args.distinct_cols and not args.read_log \
+            and not args.str_replaces:
+        # true input-limiting early stop over the block files
+        # (reference mid-scan abort), with the direct path's predicate
+        from sybil_spark.query.builder import (compile_filters,
+                                               distinct_values_early_stop)
+        from sybil_spark.sources.query_cache import _list_blocks
+        return distinct_values_early_stop(
+            spark, _list_blocks(t.blocks_path),
+            _split(args.distinct_cols), args.distinct_limit,
+            predicate=compile_filters(q.filter_specs()))
     if args.samples:
         return q.samples(spark, n=args.limit, sort_col=args.sort,
                          asc=args.sort_asc)
-    int_cols = _split(args.int_cols)
     if args.loghist:
         return q.loghist(spark, int_cols[0])
     if args.op == "hist":
@@ -411,6 +393,13 @@ def run_query(spark: SparkSession, args) -> "DataFrame":
         for c in int_cols:
             q.agg(c, "avg")
     return q.execute(spark)
+
+
+def _print(df, args) -> None:
+    """A result as JSON rows (-json) or an aligned table."""
+    from sybil_spark.query import printer
+    show = printer.print_json if args.json else printer.print_table
+    show(df, _split(args.group))
 
 
 def main(argv: list[str] | None = None,
@@ -452,16 +441,13 @@ def main(argv: list[str] | None = None,
                                or None)
             print(f"digested {n} records")
         elif args.cmd == "query":
-            from sybil_spark.query import printer
             out = run_query(spark, args)
             if args.export:
                 from sybil_spark.sources.export import export_tsv
                 export_tsv(out, args.export)
                 print(f"exported to {args.export}")
-            elif args.json:
-                printer.print_json(out, _split(args.group))
             else:
-                printer.print_table(out, _split(args.group))
+                _print(out, args)
         elif args.cmd == "trim":
             doomed = compact.trim(Table(args.dir, args.table),
                                   time_col=args.time_col, before=args.before,
@@ -496,36 +482,23 @@ def main(argv: list[str] | None = None,
                                  _split(args.int_cols),
                                  distinct=args.distinct)
             print(f"compacted to {n} partial rows")
-        elif args.cmd == "rollup-serve":
-            from sybil_spark.query import printer
+        elif args.cmd in ("rollup-serve", "aggregate"):
+            # one rollup dir, or several stitched: partials union,
+            # merge, finalize once
             from sybil_spark.sources import rollup as R
-            served = R.serve(R.read_rollup(spark, args.rollup),
-                             _split(args.group), _split(args.int_cols),
-                             bucket_s=args.time_bucket,
-                             distinct=args.distinct)
-            if args.json:
-                printer.print_json(served, _split(args.group))
-            else:
-                printer.print_table(served, _split(args.group))
+            paths = ([args.rollup] if args.cmd == "rollup-serve"
+                     else args.rollups)
+            union = R.read_rollup(spark, paths[0])
+            for p in paths[1:]:
+                union = union.unionByName(R.read_rollup(spark, p),
+                                          allowMissingColumns=True)
+            _print(R.serve(union, _split(args.group), _split(args.int_cols),
+                           bucket_s=args.time_bucket,
+                           distinct=args.distinct), args)
         elif args.cmd == "version":
             import pyspark
             print(f"sybil_spark 0.5.0 (round 5) / "
                   f"pyspark {pyspark.__version__}")
-        elif args.cmd == "aggregate":
-            from sybil_spark.query import printer
-            from sybil_spark.sources import rollup as R
-            parts = [R.read_rollup(spark, p) for p in args.rollups]
-            union = parts[0]
-            for p in parts[1:]:
-                union = union.unionByName(p, allowMissingColumns=True)
-            served = R.serve(union, _split(args.group),
-                             _split(args.int_cols),
-                             bucket_s=args.time_bucket,
-                             distinct=args.distinct)
-            if args.json:
-                printer.print_json(served, _split(args.group))
-            else:
-                printer.print_table(served, _split(args.group))
         elif args.cmd == "tables":
             for t in list_tables(args.dir):
                 print(t)

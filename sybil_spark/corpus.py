@@ -4490,7 +4490,7 @@ _T_ALIGNED = _T_RAW - _T_RAW % 21600
 def q_time_filter_aligned(spark, sf):
     """Time filters align to the bucket boundary when rollup is
     active: the Spark side filters on the RAW value and must floor it
-    (builder._predicate); the oracle uses the pre-floored literal."""
+    (Query.filter_specs); the oracle uses the pre-floored literal."""
     return (Query.table(_events(spark, sf)).time_col("time", 21600)
             .int_filter("time", "ge", _T_RAW)
             .limit(None).execute(spark))
@@ -6556,18 +6556,25 @@ def q_top_ngrams(spark, sf):
 # (b) queries whose implementation or oracle changed this round. The rest
 # keep registration order. Rotate this list each round.
 _DRIVER_FIRST = [
-    # (b) implementation changed: bm25_index_add_search's
+    # (b) implementation changed: the query builder's ops share one
+    # scan prelude, one filter compiler (also the query cache's) and
+    # one fixed-bucket / bucket-count step — every query built through
+    # them that the change touched goes first:
+    "str_replace_group", "loghist", "loghist_group", "weighted_loghist",
+    "hist", "group_hist", "time_hist", "hist_summary",
+    "weighted_hist_summary", "distinct_limit", "samples",
+    "time_filter_aligned", "cached_query",
+    # then the previous head — bm25_index_add_search's
     # bm25_index_add reads its compaction thresholds from the ingest
     # constants (its threshold keywords are gone); span_dedup /
     # exact_substr (text-keyed window plan only), weighted_percentile
     # (one keyed path with the ungrouped case), tfidf_terms /
-    # bm25_search (shared optimizer-size helper) and
-    # weighted_hist_summary / cluster_splits carry over from the
-    # previous rotation's head — re-verify first per this file's
-    # standing policy:
+    # bm25_search (shared optimizer-size helper) and cluster_splits
+    # carry over from the previous rotation's head — re-verify first
+    # per this file's standing policy:
     "bm25_index_add_search",
     "span_dedup", "exact_substr", "weighted_percentile", "tfidf_terms",
-    "bm25_search", "weighted_hist_summary", "cluster_splits",
+    "bm25_search", "cluster_splits",
     # (a) The 11 queries that landed after the 50-row window filled
     # and have the fewest official driver rows:
     "boolean_topk", "unigram_seed", "collocations_log",

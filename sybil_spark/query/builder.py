@@ -41,6 +41,9 @@ ultra-high-cardinality heads: operators/prune.lossy_group_topk.
 
 from __future__ import annotations
 
+import functools
+import operator
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -71,6 +74,37 @@ _AGG_OPS = {"count", "avg", "sum", "min", "max", "stddev", "hist",
             "percentile", "distinct"}
 
 
+def compile_filters(filters) -> Column | None:
+    """The one filter compiler of the query surface: AND of the
+    (kind, op, col, value) tuples that Query, query_cache.CacheSpec
+    and the CLI all carry — kind "int" ops gt/lt/ge/le/eq/neq, "str"
+    ops eq/neq/re/nre, "set" ops in/nin (array membership). A missing
+    (null) value never matches, like the reference's AND conjunction
+    (src/lib/aggregate.go:104-116). None when there is no filter."""
+    preds: list[Column] = []
+    for kind, op, col, value in filters:
+        c = F.col(col)
+        if kind == "int":
+            preds.append({"gt": c > value, "lt": c < value,
+                          "ge": c >= value, "le": c <= value,
+                          "eq": c == value, "neq": c != value}[op])
+        elif kind == "str":
+            if op == "eq":
+                preds.append(c == value)
+            elif op == "neq":
+                preds.append(c != value)
+            elif op == "re":
+                preds.append(c.rlike(value))
+            else:  # nre
+                preds.append(~c.rlike(value))
+        elif kind == "set":
+            contains = F.array_contains(c, value)
+            preds.append(contains if op == "in" else ~contains)
+        else:
+            raise ValueError(f"unsupported filter kind {kind!r}")
+    return functools.reduce(operator.and_, preds) if preds else None
+
+
 @dataclass
 class _Agg:
     col: str
@@ -82,7 +116,8 @@ class _Agg:
 class Query:
     """Fluent builder; every method returns self."""
 
-    def __init__(self, source: DataFrame | str):
+    def __init__(self, source: DataFrame | str
+                 | Callable[[SparkSession], DataFrame]):
         self._source = source
         self._filters: list[tuple[str, str, str, object]] = []
         self._str_replaces: list[tuple[str, str, str]] = []
@@ -101,7 +136,11 @@ class Query:
 
     # -- source -----------------------------------------------------------
     @classmethod
-    def table(cls, source: DataFrame | str) -> "Query":
+    def table(cls, source: DataFrame | str
+              | Callable[[SparkSession], DataFrame]) -> "Query":
+        """`source`: a DataFrame, a parquet path, or a callable
+        spark -> DataFrame that runs only when a plan is built (the
+        CLI's cached path reads block footers, never the table)."""
         return cls(source)
 
     def read_log(self, landing_df: DataFrame) -> "Query":
@@ -197,64 +236,63 @@ class Query:
         self._limit = n
         return self
 
-    def total_row(self, enabled: bool = True) -> "Query":
-        self._total_row = enabled
+    def total_row(self) -> "Query":
+        self._total_row = True
         return self
 
-    def exact_mode(self, enabled: bool = True, scale: int = 6) -> "Query":
+    def exact_mode(self) -> "Query":
         """Deterministic float aggregation: sums/averages/stddev go
-        through exact decimal(38,scale) accumulation and are cast back
+        through exact decimal(38,6) accumulation and are cast back
         to double. Partial-aggregation order then cannot perturb low
         bits, so results are bit-identical across partitionings,
         cluster sizes, AND other engines (the DuckDB correctness
-        oracle). Keep |sum|·10^scale < 2^53 — then the decimal→double
+        oracle). Keep |sum|·10^6 < 2^53 — then the decimal→double
         cast is a single correctly-rounded operation in every engine
         (larger scaled sums expose engines whose int128→double
         conversion is two-step). Slightly slower than native double
         sums; off by default."""
-        self._exact = enabled
-        self._DEC = f"decimal(38,{scale})"
+        self._exact = True
         return self
 
     # -- compile -----------------------------------------------------------
     def _load(self, spark: SparkSession) -> DataFrame:
-        df = (spark.read.parquet(self._source)
-              if isinstance(self._source, str) else self._source)
+        src = self._source
+        df = (spark.read.parquet(src) if isinstance(src, str)
+              else src(spark) if callable(src) else src)
         if self._read_log_df is not None:
             df = df.unionByName(self._read_log_df, allowMissingColumns=True)
         return df
 
-    def _predicate(self, df: DataFrame) -> Column | None:
-        preds: list[Column] = []
-        for kind, op, col, value in self._filters:
-            c = F.col(col)
-            if kind == "int":
-                # Align filters on the time column to the bucket boundary
-                # when rollup is active (reference src/lib/filter.go:86-95).
-                if (self._time_bucket and col == self._time_col
-                        and isinstance(value, (int, float))):
-                    value = int(value) - int(value) % self._time_bucket
-                preds.append({"gt": c > value, "lt": c < value,
-                              "ge": c >= value, "le": c <= value,
-                              "eq": c == value, "neq": c != value}[op])
-            elif kind == "str":
-                if op == "eq":
-                    preds.append(c == value)
-                elif op == "neq":
-                    preds.append(c != value)
-                elif op == "re":
-                    preds.append(c.rlike(value))
-                else:  # nre
-                    preds.append(~c.rlike(value))
-            else:  # set
-                contains = F.array_contains(c, value)
-                preds.append(contains if op == "in" else ~contains)
-        if not preds:
-            return None
-        out = preds[0]
-        for p in preds[1:]:
-            out = out & p
-        return out
+    def filter_specs(self) -> tuple[tuple[str, str, str, object], ...]:
+        """The filters as compile_filters / CacheSpec.filters tuples,
+        with int filters on the time column floored to the bucket
+        boundary when rollup is active (reference
+        src/lib/filter.go:86-95) — the one place that alignment
+        happens, so the direct scan and the cache key agree."""
+        b = self._time_bucket
+        return tuple(
+            (kind, op, col, int(v) - int(v) % b)
+            if (b and kind == "int" and col == self._time_col
+                and isinstance(v, (int, float)))
+            else (kind, op, col, v)
+            for kind, op, col, v in self._filters)
+
+    def _scan(self, spark: SparkSession) -> DataFrame:
+        """The scan prelude every op shares: load → str_replace →
+        filters → set-group explode. Str-replace runs before the
+        filters and the grouping (reference table_query.go:34-51);
+        set group-by explodes after the filters, so set filters still
+        see the whole array, and a group_by_set query groups per
+        element on every op."""
+        df = self._load(spark)
+        for col, pat, repl in self._str_replaces:
+            df = df.withColumn(col, F.regexp_replace(F.col(col), pat, repl))
+        pred = compile_filters(self.filter_specs())
+        if pred is not None:
+            df = df.where(pred)
+        for col, alias in self._set_groups:
+            df = df.withColumn(alias, F.explode(F.col(col)))
+        return df
 
     def _weight(self) -> Column:
         if self._weight_col:
@@ -267,24 +305,30 @@ class Query:
         """Order-independent float sum (see exact_mode)."""
         return F.sum(c.cast(self._DEC)).cast("double")
 
+    def _sum(self, c: Column) -> Column:
+        """sum(c) in the query's mode: exact decimal under exact_mode,
+        native double otherwise."""
+        return self._dsum(c) if self._exact else F.sum(c)
+
+    def _count_exprs(self) -> list[Column]:
+        """`count` (weight sum under a weight column) [+ raw `samples`]
+        — the leading columns of compile's aggregate and of hist /
+        loghist."""
+        if not self._weight_col:
+            return [F.count(F.lit(1)).alias("count")]
+        return [self._sum(self._weight()).alias("count"),
+                F.count(F.lit(1)).alias("samples")]
+
     def _agg_exprs(self) -> list[Column]:
         w = self._weight()
-        exprs: list[Column] = []
-        if self._weight_col:
-            cnt = self._dsum(w) if self._exact else F.sum(w)
-            exprs.append(cnt.alias("count"))
-            exprs.append(F.count(F.lit(1)).alias("samples"))
-        else:
-            exprs.append(F.count(F.lit(1)).alias("count"))
+        exprs = self._count_exprs()
         for a in self._aggs:
             c = F.col(a.col)
             name = a.alias or f"{a.op}_{a.col.replace(',', '_')}"
             if a.op == "avg":
                 if self._weight_col:
-                    num = self._dsum(c * w) if self._exact else F.sum(c * w)
-                    den_c = F.when(c.isNotNull(), w)
-                    den = self._dsum(den_c) if self._exact else F.sum(den_c)
-                    expr = num / den
+                    expr = (self._sum(c * w)
+                            / self._sum(F.when(c.isNotNull(), w)))
                 elif self._exact:
                     expr = self._dsum(c) / F.count(c)
                 else:
@@ -295,8 +339,7 @@ class Query:
                 # Mean()·TotalCount with a weight-scaled count
                 # (hist_compat.go:22, printer.go:122), i.e. weighted
                 cw = c * w if self._weight_col else c
-                expr = self._dsum(cw) if self._exact else F.sum(cw)
-                exprs.append(expr.alias(name))
+                exprs.append(self._sum(cw).alias(name))
             elif a.op == "min":
                 exprs.append(F.min(c).alias(name))
             elif a.op == "max":
@@ -310,9 +353,7 @@ class Query:
                     ww = F.when(c.isNotNull(), w)
                     big_w = (self._dsum(ww) if self._exact
                              else F.sum(ww).cast("double"))
-                    s1 = self._dsum(c * w) if self._exact else F.sum(c * w)
-                    s2 = (self._dsum(c * c * w) if self._exact
-                          else F.sum(c * c * w))
+                    s1, s2 = self._sum(c * w), self._sum(c * c * w)
                     var = (s2 - s1 * s1 / big_w) / (big_w - F.lit(1.0))
                     exprs.append(F.sqrt(var).alias(name))
                 elif self._exact:
@@ -362,9 +403,9 @@ class Query:
                 raise ValueError("hist aggregations compile via Query.hist()")
         return exprs
 
-    def _group_names(self, df: DataFrame) -> list[str]:
-        names = list(self._groups)
-        names += [a for _c, a in self._set_groups if a in df.columns]
+    def _group_names(self) -> list[str]:
+        """Output names of _group_cols, in order."""
+        names = self._groups + [a for _c, a in self._set_groups]
         if self._time_bucket:
             names.append("tbucket")
         return names
@@ -393,8 +434,8 @@ class Query:
 
         from sybil_spark.operators._util import estimated_bytes
 
-        names = self._group_names(df)
-        gexprs = self._group_cols(df)
+        names = self._group_names()
+        gexprs = self._group_cols()
         w = self._weight()
         proj = (df.select(*gexprs, F.col(a.col).alias("__v"),
                           w.cast(self._DEC).alias("__w"))
@@ -535,29 +576,20 @@ class Query:
                              + F.col("__off")).alias("__cw"),
                             "__tw"))
 
-    def _group_cols(self, df: DataFrame) -> list[Column]:
+    def _group_cols(self) -> list[Column]:
+        """The grouping columns of a scanned (_scan) frame: group-by
+        columns, set-group elements, then the time bucket."""
         cols = [F.col(g) for g in self._groups]
-        cols += [F.col(a) for _c, a in self._set_groups if a in df.columns]
+        cols += [F.col(a) for _c, a in self._set_groups]
         if self._time_bucket:
             t = F.col(self._time_col).cast("long")
             cols.append((t - t % self._time_bucket).alias("tbucket"))
         return cols
 
     def compile(self, spark: SparkSession) -> DataFrame:
-        df = self._load(spark)
-        for col, pat, repl in self._str_replaces:
-            df = df.withColumn(col, F.regexp_replace(F.col(col), pat, repl))
-        pred = self._predicate(df)
-        if pred is not None:
-            df = df.where(pred)
-        for col, alias in self._set_groups:
-            df = df.withColumn(alias, F.explode(F.col(col)))
-
-        group_cols = self._group_cols(df)
-        if group_cols:
-            out = df.groupBy(*group_cols).agg(*self._agg_exprs())
-        else:
-            out = df.agg(*self._agg_exprs())
+        df = self._scan(spark)
+        group_cols = self._group_cols()
+        out = df.groupBy(*group_cols).agg(*self._agg_exprs())
 
         wp_aggs = [a for a in self._aggs
                    if a.op == "percentile" and self._weight_col
@@ -566,7 +598,7 @@ class Query:
             if self._total_row:
                 raise ValueError("total_row with weighted percentiles "
                                  "is not supported")
-            names = self._group_names(df)
+            names = self._group_names()
             for a in wp_aggs:
                 frame = self._wp_frame(df, a)
                 out = (out.join(frame, names, "left") if names
@@ -580,7 +612,12 @@ class Query:
                 if gc not in total.columns:
                     total = total.withColumn(gc, F.lit(None))
             out = out.unionByName(total.select(out.columns))
+        return self.shape_result(out)
 
+    def shape_result(self, out: DataFrame) -> DataFrame:
+        """The result-shaping step of every aggregate path (direct
+        compile and the CLI's cached path): HAVING → sort (default
+        `count` desc, reference src/lib/aggregate.go:21) → limit."""
         for h in self._having:
             # post-agg, pre-sort/limit (SQL HAVING position); the
             # TOTAL row, if any, is subject to it like any other row
@@ -594,15 +631,16 @@ class Query:
         if self._sort is None and not self._limit:
             return out
         sort_col, asc = self._sort or ("count", False)
-        if group_cols:
+        if self._groups or self._set_groups or self._time_bucket:
             order = [F.col(sort_col).asc() if asc else F.col(sort_col).desc()]
-            # Group keys as tiebreakers make limit deterministic (the
-            # reference's pick under ties is block-order-dependent; ours
-            # is total-ordered — documented divergence, SURVEY §7.5).
-            order += [F.col(g).asc_nulls_last()
-                      for g in out.columns
-                      if g in self._groups or g == "tbucket"]
-            out = out.orderBy(*order)
+            # Group keys (group-by order, then tbucket) as tiebreakers
+            # make limit deterministic whatever the frame's column
+            # order (the reference's pick under ties is
+            # block-order-dependent; ours is total-ordered —
+            # documented divergence, SURVEY §7.5).
+            ties = self._groups + (["tbucket"] if self._time_bucket else [])
+            out = out.orderBy(*order, *[F.col(g).asc_nulls_last()
+                                        for g in ties])
         if self._limit:
             out = out.limit(self._limit)
         return out
@@ -613,7 +651,6 @@ class Query:
     # -- histogram path ----------------------------------------------------
     def hist(self, spark: SparkSession, col: str, bucket: float | None = None,
              min_val: float | None = None, max_val: float | None = None,
-             weighted: bool = True,
              discard_over: float | None = None,
              from_registry=None) -> DataFrame:
         """Fixed-width bucket histogram per group (reference `-op hist`,
@@ -641,6 +678,18 @@ class Query:
         Output: one row per (group..., bucket) with `bucket` = inclusive
         lower bound, `count` (weighted) and `samples` (raw).
         """
+        df, bcol = self._fixed_buckets(spark, col, bucket, min_val,
+                                       max_val, discard_over, from_registry)
+        return self._bucket_counts(df, bcol)
+
+    def _fixed_buckets(self, spark: SparkSession, col: str, bucket,
+                       min_val, max_val, discard_over,
+                       from_registry) -> tuple[DataFrame, Column]:
+        """hist/hist_summary's shared front: the scanned rows with a
+        non-null `col` (≤ discard_over), and the fixed-width `bucket`
+        lower-bound column — width and base resolved from the
+        registry, then explicit args, then the filtered rows' min/max
+        (see hist)."""
         if from_registry is not None:
             info = from_registry.load_meta().int_info.get(col)
             if not info:
@@ -651,18 +700,7 @@ class Query:
             if discard_over is None and info["max"] is not None \
                     and info["max"] > 0:
                 discard_over = 10 * info["max"]
-        df = self._load(spark)
-        for c0, pat, repl in self._str_replaces:
-            df = df.withColumn(c0, F.regexp_replace(F.col(c0), pat, repl))
-        pred = self._predicate(df)
-        if pred is not None:
-            df = df.where(pred)
-        # set group-by explodes here exactly like compile() — a
-        # group_by_set + hist query must group per element, not
-        # silently drop the grouping
-        for c0, alias in self._set_groups:
-            df = df.withColumn(alias, F.explode(F.col(c0)))
-        df = df.where(F.col(col).isNotNull())
+        df = self._scan(spark).where(F.col(col).isNotNull())
         if discard_over is not None:
             df = df.where(F.col(col) <= discard_over)
 
@@ -679,19 +717,17 @@ class Query:
                 min_val, max_val = 0.0, 0.0
             bucket = max((max_val - min_val) / NUM_BUCKETS, 1)
         base = float(min_val) if min_val is not None else 0.0
-
         bcol = (F.floor((F.col(col) - F.lit(base)) / F.lit(float(bucket)))
                 * F.lit(float(bucket)) + F.lit(base)).alias("bucket")
-        group_cols = self._group_cols(df) + [bcol]
-        w = self._weight()
-        wsum = self._dsum(w) if self._exact else F.sum(w)
-        aggs = [wsum.alias("count"), F.count(F.lit(1)).alias("samples")] \
-            if (weighted and self._weight_col) else [F.count(F.lit(1)).alias("count")]
-        out = df.groupBy(*group_cols).agg(*aggs)
-        order = [F.col(c).asc_nulls_last() for c in out.columns
-                 if c in self._groups or c in ("tbucket", "bucket")
-                 or c in {a for _c, a in self._set_groups}]
-        return out.orderBy(*order)
+        return df, bcol
+
+    def _bucket_counts(self, df: DataFrame, bcol: Column) -> DataFrame:
+        """hist/loghist's shared tail: count[, samples] per
+        (group..., bucket), ordered by group keys then bucket."""
+        out = df.groupBy(*self._group_cols(), bcol) \
+                .agg(*self._count_exprs())
+        return out.orderBy(*[F.col(c).asc_nulls_last()
+                             for c in self._group_names() + ["bucket"]])
 
     def hist_summary(self, spark: SparkSession, col: str,
                      bucket: float | None = None,
@@ -722,44 +758,9 @@ class Query:
         WEIGHTS in exact decimal — the reference's weight-scaled
         histogram semantics (hist_basic.go:111-118, 153-183); this
         is the mergeable scale path for weighted percentiles."""
-        if from_registry is not None:
-            info = from_registry.load_meta().int_info.get(col)
-            if not info:
-                raise ValueError(
-                    f"no registry stats for column {col!r}; run digest")
-            min_val = info["min"] if min_val is None else min_val
-            max_val = info["max"] if max_val is None else max_val
-            if discard_over is None and info["max"] is not None \
-                    and info["max"] > 0:
-                discard_over = 10 * info["max"]
-        df = self._load(spark)
-        for c0, pat, repl in self._str_replaces:
-            df = df.withColumn(c0, F.regexp_replace(F.col(c0), pat, repl))
-        pred = self._predicate(df)
-        if pred is not None:
-            df = df.where(pred)
-        for c0, alias in self._set_groups:
-            df = df.withColumn(alias, F.explode(F.col(c0)))
-        df = df.where(F.col(col).isNotNull())
-        if discard_over is not None:
-            df = df.where(F.col(col) <= discard_over)
-        if bucket is None:
-            if min_val is None or max_val is None:
-                row = df.agg(F.min(col).alias("mn"),
-                             F.max(col).alias("mx")).first()
-                min_val = row["mn"] if min_val is None else min_val
-                max_val = row["mx"] if max_val is None else max_val
-            if min_val is None or max_val is None:
-                # empty filtered input — same degenerate bucket as
-                # hist(): no None arithmetic, empty/zero-count result
-                min_val, max_val = 0.0, 0.0
-            bucket = max((max_val - min_val) / NUM_BUCKETS, 1)
-        base = float(min_val) if min_val is not None else 0.0
-
+        df, bcol = self._fixed_buckets(spark, col, bucket, min_val,
+                                       max_val, discard_over, from_registry)
         c = F.col(col)
-        bcol = (F.floor((c - F.lit(base)) / F.lit(float(bucket)))
-                * F.lit(float(bucket)) + F.lit(base)).alias("bucket")
-        group_cols = self._group_cols(df)
         use_w = bool(self._weight_col)
         wcol = self._weight()
         vw = c * wcol if use_w else c
@@ -769,9 +770,8 @@ class Query:
                  F.sum(vvw.cast(self._DEC)).alias("__ss")]
         if use_w:
             baggs.append(F.sum(wcol.cast(self._DEC)).alias("__w"))
-        per_bucket = df.groupBy(*group_cols, bcol).agg(*baggs)
-        gnames = [x for x in per_bucket.columns
-                  if x not in ("bucket", "__n", "__s", "__ss", "__w")]
+        per_bucket = df.groupBy(*self._group_cols(), bcol).agg(*baggs)
+        gnames = self._group_names()
         n = F.sum("__n")
         # W: the denominator — weight sum under a weight column, else
         # the raw row count (frequency-weight moments generalize both)
@@ -791,8 +791,7 @@ class Query:
                 entries.alias("__e")]
         if use_w:
             aggs.insert(1, F.sum("__w").cast("double").alias("count"))
-        out = (per_bucket.groupBy(*gnames).agg(*aggs) if gnames
-               else per_bucket.agg(*aggs))
+        out = per_bucket.groupBy(*gnames).agg(*aggs)
 
         def _cdf_walk(target):
             return F.aggregate(
@@ -812,8 +811,7 @@ class Query:
         order = [F.col(x).asc_nulls_last() for x in gnames]
         return out.orderBy(*order) if order else out
 
-    def loghist(self, spark: SparkSession, col: str,
-                weighted: bool = True) -> DataFrame:
+    def loghist(self, spark: SparkSession, col: str) -> DataFrame:
         """Log-scaled histogram (reference `-loghist`,
         src/lib/hist_multi.go:6-261): bucket width shrinks
         logarithmically so wide-range columns keep resolution near
@@ -823,29 +821,14 @@ class Query:
         engines (float log2 differs in the last ulp near exact powers
         of two: Spark evaluates ln(x)/ln(2)). Output columns mirror
         hist(): bucket (lower bound), count[, samples]."""
-        df = self._load(spark)
-        pred = self._predicate(df)
-        if pred is not None:
-            df = df.where(pred)
-        for c0, alias in self._set_groups:
-            df = df.withColumn(alias, F.explode(F.col(c0)))
-        df = df.where(F.col(col).isNotNull())
+        df = self._scan(spark).where(F.col(col).isNotNull())
         bcol = (F.when(F.col(col) >= 1,
                        F.pow(F.lit(2.0),
                              (F.length(F.bin(F.floor(F.col(col))
                                              .cast("long"))) - 1)
                              .cast("double")))
                  .otherwise(F.lit(0.0))).alias("bucket")
-        group_cols = self._group_cols(df) + [bcol]
-        w = self._weight()
-        wsum = self._dsum(w) if self._exact else F.sum(w)
-        aggs = [wsum.alias("count"), F.count(F.lit(1)).alias("samples")] \
-            if (weighted and self._weight_col) else [F.count(F.lit(1)).alias("count")]
-        out = df.groupBy(*group_cols).agg(*aggs)
-        order = [F.col(c).asc_nulls_last() for c in out.columns
-                 if c in self._groups or c in ("tbucket", "bucket")
-                 or c in {a for _c, a in self._set_groups}]
-        return out.orderBy(*order)
+        return self._bucket_counts(df, bcol)
 
     # -- raw-record paths --------------------------------------------------
     def samples(self, spark: SparkSession, n: int = 100,
@@ -856,12 +839,7 @@ class Query:
         by `sort_col` (reference default: reverse-chronological) and
         the top n return. Compiles to TakeOrderedAndProject — no full
         sort, no collect."""
-        df = self._load(spark)
-        for c0, pat, repl in self._str_replaces:
-            df = df.withColumn(c0, F.regexp_replace(F.col(c0), pat, repl))
-        pred = self._predicate(df)
-        if pred is not None:
-            df = df.where(pred)
+        df = self._scan(spark)
         if cols:
             df = df.select(*cols)
         order_col = sort_col or self._time_col
@@ -900,11 +878,7 @@ class Query:
         Compiles to TakeOrderedAndProject over the distinct
         aggregate — per-partition top-n then a k-row merge, never a
         full sort."""
-        df = self._load(spark)
-        pred = self._predicate(df)
-        if pred is not None:
-            df = df.where(pred)
-        out = df.select(*cols).distinct()
+        out = self._scan(spark).select(*cols).distinct()
         if limit and deterministic:
             tie = F.md5(F.concat_ws(
                 "\x1f", *[F.coalesce(F.col(c).cast("string"),

@@ -52,9 +52,10 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sybil_spark.query.builder import compile_filters
 from sybil_spark.table import CHUNK_SIZE, Table
 from sybil_spark.sources import rollup as R
 
@@ -77,8 +78,10 @@ class CacheSpec:
     distinct_cols: tuple[str, ...] = ()
     time_col: str | None = None
     bucket_s: int | None = None
-    #: (kind, op, col, value) tuples, builder.Query filter semantics:
-    #: kind "int" ops gt/lt/ge/le/eq/neq; kind "str" ops eq/neq/re/nre
+    #: (kind, op, col, value) tuples compiled by the query surface's
+    #: one filter compiler, builder.compile_filters (kind "int" ops
+    #: gt/lt/ge/le/eq/neq; kind "str" ops eq/neq/re/nre). Time
+    #: filters arrive already bucket-aligned (Query.filter_specs).
     filters: tuple[tuple[str, str, str, object], ...] = ()
     hist_buckets: tuple[tuple[str, float], ...] = ()
 
@@ -198,29 +201,6 @@ def _trivial(flt, stats: dict) -> bool:
         return False
 
 
-def _compile(filters) -> Column | None:
-    """AND of builder.Query-semantics predicates."""
-    preds = []
-    for kind, op, col, value in filters:
-        c = F.col(col)
-        if kind == "int":
-            preds.append({"gt": c > value, "lt": c < value,
-                          "ge": c >= value, "le": c <= value,
-                          "eq": c == value, "neq": c != value}[op])
-        elif kind == "str":
-            preds.append({"eq": c == value, "neq": c != value,
-                          "re": c.rlike(value),
-                          "nre": ~c.rlike(value)}[op])
-        else:
-            raise ValueError(f"unsupported filter kind {kind!r}")
-    if not preds:
-        return None
-    out = preds[0]
-    for p in preds[1:]:
-        out = out & p
-    return out
-
-
 def plan(blocks: list[str], spec: CacheSpec, cache_root: str,
          cache_min_rows: int = CHUNK_SIZE) -> CachePlan:
     """Classify every block: HIT (partial on disk), MISS (compute +
@@ -263,7 +243,7 @@ def run(spark: SparkSession, source: Table | list[str], spec: CacheSpec,
 
     pl = plan(blocks, spec, cache_root, cache_min_rows)
     parts: list[DataFrame] = []
-    pred = _compile(spec.filters)
+    pred = compile_filters(spec.filters)
 
     def _partial(files: list[str], with_bid: bool) -> DataFrame:
         """Mergeable partial over `files`, optionally grouped by

@@ -186,11 +186,12 @@ def test_cli_inspect(capsys, spark, db):
     assert meta["key_types"]["ping"] == "int"
 
 
-def test_cli_cached_query_matches_direct(capsys, spark, db):
+def test_cli_cached_query_matches_direct(capsys, monkeypatch, spark, db):
     """-cache-queries (reference FLAGS.CACHED_QUERIES): the cached
     avg answer equals the direct path's, cold and warm, and the
     table grows a cache/ dir of per-block partials."""
     import os
+    from sybil_spark.table import Table
     direct = _run_json(capsys, spark,
                        ["query", "-dir", db, "-table", "uptime",
                         "-group", "host", "-int", "ping", "-op", "avg",
@@ -210,6 +211,21 @@ def test_cli_cached_query_matches_direct(capsys, spark, db):
                       for r in rows)
     assert key(cold) == key(warm) == key(direct)
     assert os.path.isdir(os.path.join(db, "uptime", "cache"))
+
+    # the cached path shapes its rows with the direct path's step:
+    # default count-desc sort with group-key tiebreaks, HAVING, limit
+    # (200 rows over 60 host,ping groups: 20 of count 4, 40 of 3)
+    for shape in (["-limit", "5"], ["-limit", "5", "-having", "count > 3"]):
+        argv = ["query", "-dir", db, "-table", "uptime",
+                "-group", "host,ping", "-op", "count", *shape]
+        direct = _run_json(capsys, spark, argv)
+        with monkeypatch.context() as m:
+            # the cached path reads block footers, never the table
+            m.setattr(Table, "read", lambda *a, **k: pytest.fail("read"))
+            cached = _run_json(capsys, spark, argv + [
+                "-cache-queries", "-cache-min-rows", "1"])
+        assert len(direct) == 5
+        assert cached == direct
 
 
 def test_cli_distinct_limit_early_stop(capsys, spark, db):

@@ -137,10 +137,19 @@ def test_sort_and_limit_deterministic(spark, df):
 
 
 def test_str_replace(spark, df):
-    res = (Query.table(df).str_replace("age_str", "^1", "X")
-           .group_by("age_str").limit(None).execute(spark).collect())
+    def q():
+        return (Query.table(df).str_replace("age_str", "^1", "X")
+                .group_by("age_str").limit(None))
+
+    res = q().execute(spark).collect()
     keys = {r["age_str"] for r in res}
     assert all(k.startswith("X") or k.startswith("2") for k in keys)
+    # every op sees the same rewritten key (one shared scan prelude)
+    for rows in (q().hist(spark, "age", bucket=5.0).collect(),
+                 q().hist_summary(spark, "age", bucket=5.0).collect(),
+                 q().loghist(spark, "age").collect(),
+                 q().distinct_values(spark, ["age_str"]).collect()):
+        assert {r["age_str"] for r in rows} == keys
 
 
 def test_hist_buckets(spark, df):

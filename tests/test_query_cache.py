@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sybil_spark.query.builder import compile_filters
 from sybil_spark.sources import query_cache as QC
 from sybil_spark.sources.query_cache import CacheSpec
 
@@ -231,7 +232,7 @@ def test_cached_equals_direct_fuzz(spark, fuzz_blocks, tmp_path_factory,
                      num_cols=("v",), filters=tuple(filters))
 
     raw = spark.read.parquet(*fuzz_blocks)
-    pred = QC._compile(spec.filters)
+    pred = compile_filters(spec.filters)
     raw = raw.where(pred)
     gb = raw.groupBy("g") if grouped else raw.groupBy()
     direct = {(r["g"] if grouped else None):
@@ -471,6 +472,6 @@ def test_cache_fuzz_warm_equals_cold(spark, tmp_path_factory, shapes,
             continue
         raw = spark.read.parquet(b)
         for f in dropped:
-            pred = QC._compile([f])
+            pred = compile_filters([f])
             assert raw.where(~pred).count() == 0, (b, f)
             assert raw.where(F.col(f[2]).isNull()).count() == 0, (b, f)
