@@ -211,10 +211,9 @@ def build_parser() -> argparse.ArgumentParser:
 
 def run_inspect(path: str) -> dict:
     """Footer/metadata facts for one file — no data scan."""
-    import json as _json
     if path.endswith(".json"):
-        with open(path) as f:
-            return _json.load(f)
+        from sybil_spark.sources import commit
+        return commit.read_json(path)
     import pyarrow.parquet as pq
     pf = pq.ParquetFile(path)
     md = pf.metadata

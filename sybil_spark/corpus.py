@@ -6556,15 +6556,23 @@ def q_top_ngrams(spark, sf):
 # (b) queries whose implementation or oracle changed this round. The rest
 # keep registration order. Rotate this list each round.
 _DRIVER_FIRST = [
-    # (b) implementation changed: the query builder's ops share one
+    # (b) implementation changed: the persisted BM25 and IVF-PQ
+    # indexes they build and serve now write, list and swap through
+    # sources/commit (bm25_index_add_search and boolean_topk, also
+    # index-served, are already in the head below):
+    "bm25_index_search", "ivfpq_topk", "phrase_index_topk",
+    "proximity_topk",
+    # and the two served by ivf_assign_batch, whose cosine now
+    # divides by the norms after the dot product:
+    "ivf_topk", "semantic_dedup",
+    # then the previous head — the query builder's ops share one
     # scan prelude, one filter compiler (also the query cache's) and
-    # one fixed-bucket / bucket-count step — every query built through
-    # them that the change touched goes first:
+    # one fixed-bucket / bucket-count step:
     "str_replace_group", "loghist", "loghist_group", "weighted_loghist",
     "hist", "group_hist", "time_hist", "hist_summary",
     "weighted_hist_summary", "distinct_limit", "samples",
     "time_filter_aligned", "cached_query",
-    # then the previous head — bm25_index_add_search's
+    # and the head before that — bm25_index_add_search's
     # bm25_index_add reads its compaction thresholds from the ingest
     # constants (its threshold keywords are gone); span_dedup /
     # exact_substr (text-keyed window plan only), weighted_percentile
@@ -6585,13 +6593,13 @@ _DRIVER_FIRST = [
     # rotation, oldest driver rows first:
     "minhash_lsh", "ngram_jaccard", "simhash_dup", "decontaminate",
     "containment_dup", "lsh_recall", "winnow_dup", "norm_dedup",
-    "semantic_dedup", "percentiles", "embedding_dup",
+    "percentiles", "embedding_dup",
     "token_freq", "cube_counts", "lag_delta", "retention",
     "tpch_q13", "tpch_q17", "tpch_q19", "tpch_q21", "tpch_q22",
     "ppl_buckets", "weighted_sample",
     "corpus_stats", "corpus_diff",
     "hybrid_search", "gopher_rules", "dsir_weights",
-    "repetition_stats", "bm25_index_search", "source_mix",
+    "repetition_stats", "source_mix",
     "repetition", "quality_cascade", "dedup_exact",
     "dedup_keep_first", "dedup_best", "dedup_clusters",
 ]

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from sybil_spark.functions.text import tokens
 from sybil_spark.operators._util import estimated_bytes
+from sybil_spark.sources import commit
 
 _DEC = "decimal(38,6)"
 
@@ -699,11 +700,9 @@ def _bm25_meta(index_path: str) -> dict:
     here so a pre-positional index fails with an actionable
     'rebuild required' error instead of an AnalysisException about a
     missing `pos` column halfway into a locked fold."""
-    import json
     import os
 
-    with open(os.path.join(index_path, "bm25_meta.json")) as f:
-        meta = json.load(f)
+    meta = commit.read_json(os.path.join(index_path, "bm25_meta.json"))
     fmt = int(meta.get("format", 1))
     if fmt != BM25_FORMAT:
         raise ValueError(
@@ -738,7 +737,6 @@ def build_bm25_index(df: DataFrame, id_col: str, text_col: str,
     incremental df maintenance bounded); a full rebuild is only the
     compaction/defrag path. Holds the index path lock across the
     overwrite + meta rewrite, shared with bm25_index_add."""
-    import json
     import os
 
     from sybil_spark.sources.locks import path_lock
@@ -765,34 +763,15 @@ def build_bm25_index(df: DataFrame, id_col: str, text_col: str,
                                         F.lit(nbuckets)))
                .write.partitionBy("pb").mode("overwrite")
                .parquet(os.path.join(index_path, "postings")))
-            with open(os.path.join(index_path, "bm25_meta.json"),
-                      "w") as f:
-                json.dump({"format": BM25_FORMAT,
-                           "id_col": id_col, "text_col": text_col,
-                           "nbuckets": nbuckets,
-                           "n_docs": int(stats["n"]),
-                           "sum_dl": int(stats["s"])}, f)
+            commit.write_json(
+                os.path.join(index_path, "bm25_meta.json"),
+                {"format": BM25_FORMAT,
+                 "id_col": id_col, "text_col": text_col,
+                 "nbuckets": nbuckets,
+                 "n_docs": int(stats["n"]),
+                 "sum_dl": int(stats["s"])})
     finally:
         tf.unpersist()
-
-
-def _bm25_pending_pressure(index_path: str) -> tuple:
-    """(n_pieces, n_bytes) of COMMITTED pending append pieces — the
-    small-files pressure gauge for auto-compaction. Directory
-    metadata only (the should_digest contract: nothing is read off
-    disk until the fold itself runs)."""
-    import os
-
-    dirs, _n, _s, _mx = _bm25_pending_state(index_path)
-    nb = 0
-    for d in dirs:
-        for root, _subdirs, files in os.walk(d):
-            for f in files:
-                try:
-                    nb += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return len(dirs), nb
 
 
 def bm25_index_add(df: DataFrame, index_path: str,
@@ -840,7 +819,6 @@ def bm25_index_add(df: DataFrame, index_path: str,
     Serializes on the index path lock shared with build/serve-side
     rebuilds, so concurrent adds can't interleave with a compact's
     read-fold-swap."""
-    import json
     import os
     import uuid
 
@@ -877,18 +855,19 @@ def bm25_index_add(df: DataFrame, index_path: str,
             (piece.write.partitionBy("pb").mode("overwrite")
                   .parquet(adir))
             # sidecar LAST: the single commit point
-            tmp = os.path.join(adir, "_delta.json.partial")
-            with open(tmp, "w") as f:
-                json.dump({"n": n_new, "s": int(stats["s"])}, f)
-            os.replace(tmp, os.path.join(adir, "_delta.json"))
+            commit.write_json(os.path.join(adir, "_delta.json"),
+                              {"n": n_new, "s": int(stats["s"])})
         finally:
             tf.unpersist()
         if mode == "rescore":
             _bm25_compact_locked(spark, index_path)
         else:
             from sybil_spark.sources import ingest
-            n_p, n_b = _bm25_pending_pressure(index_path)
-            if (n_p > ingest.FILE_DIGEST_THRESHOLD
+            # small-files pressure of the COMMITTED pending pieces —
+            # directory metadata only (the should_digest contract)
+            pdirs = _bm25_pending_state(index_path)[0]
+            n_b = sum(commit.usage(d)[1] for d in pdirs)
+            if (len(pdirs) > ingest.FILE_DIGEST_THRESHOLD
                     or n_b > ingest.SIZE_DIGEST_THRESHOLD_KB * 1024):
                 _bm25_compact_locked(spark, index_path)
         return n_new
@@ -907,39 +886,26 @@ def _bm25_pending_state(index_path: str):
     (piece_dirs, n_docs_delta, sum_dl_delta, max_stream_batch_id);
     half-written pieces are invisible and are replaced by their
     replay (stream) or re-issued by the caller (add)."""
-    import json
     import os
 
     dirs, n, s, mx = [], 0, 0, -1
     for sub, prefix, track_id in (("postings_stream", "batch-", True),
                                   ("postings_adds", "add-", False)):
-        root = os.path.join(index_path, sub)
-        if not os.path.isdir(root):
-            continue
-        for name in sorted(os.listdir(root)):
-            d = os.path.join(root, name)
-            if not name.startswith(prefix) or not os.path.isdir(d):
-                continue
-            delta_p = os.path.join(d, "_delta.json")
-            if not (os.path.exists(os.path.join(d, "_SUCCESS"))
-                    and os.path.exists(delta_p)):
-                continue
+        for pid, d in commit.pieces(os.path.join(index_path, sub),
+                                    prefix, "_SUCCESS", "_delta.json"):
             if track_id:
                 try:
-                    bid = int(name[len(prefix):])
+                    mx = max(mx, int(pid))
                 except ValueError:
                     continue
-                mx = max(mx, bid)
-            with open(delta_p) as f:
-                delta = json.load(f)
+            delta = commit.read_json(os.path.join(d, "_delta.json"))
             dirs.append(d)
             n += int(delta["n"])
             s += int(delta["s"])
     return dirs, n, s, mx
 
 
-def bm25_index_compact(spark, index_path: str,
-                       files_per_bucket: int = 1) -> int:
+def bm25_index_compact(spark, index_path: str) -> int:
     """Defragment a BM25 index and FOLD its pending appends: every
     committed `bm25_index_add` piece (postings_adds/add-<uuid>) and
     `stream_bm25_index_add` micro-batch (postings_stream/batch-<id>)
@@ -947,28 +913,27 @@ def bm25_index_compact(spark, index_path: str,
     streaming small-files problem — and serving pays a df
     aggregation over the pruned scan while any pending piece exists.
     This job rewrites the postings from the postings THEMSELVES — no
-    re-tokenization, the expensive stage of a full build — merged
-    with every committed pending piece, coalesced to
-    `files_per_bucket` files per bucket with df_t recomputed exactly
-    (token-hash colocation again), folds the piece deltas into the
-    meta scalars, clears the legacy `df_on_read`/`stale_pb` flags,
-    and advances `stream_fold_watermark` so a replayed
-    already-folded micro-batch skips instead of double-appending
-    (the compact_dedup_index protocol). Returns the number of
-    posting rows written.
+    re-tokenization, the expensive stage of a full build — merged with
+    every committed pending piece, coalesced to one file per bucket
+    with df_t recomputed exactly (token-hash colocation again), folds
+    the piece deltas into the meta scalars, clears the legacy
+    `df_on_read`/`stale_pb` flags, and advances
+    `stream_fold_watermark` so a replayed already-folded micro-batch
+    skips instead of double-appending (the compact_dedup_index
+    protocol). Returns the number of posting rows written.
 
-    The ENTIRE index dir is swapped as one unit (rollup's
-    _staged_swap; the path lock lives beside the store, so it
-    survives the rename): a crash leaves either the old index —
-    postings + pending pieces + old meta, still consistent — or the
-    new one, never a state where folded rows are counted twice
-    through both postings and a surviving piece dir. This whole-dir
-    swap is the ONE crash-atomic unit for in-place repair, which is
-    why appends never rewrite buckets themselves. Uncommitted
-    (crashed mid-write) pieces are dropped with the old dir — a
-    stream replay recreates its batch (its id is above every folded
-    id), and an uncommitted add was never acknowledged to its
-    caller.
+    The ENTIRE index dir is swapped as one unit (commit.staged_swap;
+    the path lock lives beside the store, so it survives the rename,
+    and taking it undoes a swap that crashed between its renames): a
+    crash leaves either the old index — postings + pending pieces +
+    old meta, still consistent — or the new one, never a state where
+    folded rows are counted twice through both postings and a
+    surviving piece dir. This whole-dir swap is the ONE crash-atomic
+    unit for in-place repair, which is why appends never rewrite
+    buckets themselves. Uncommitted (crashed mid-write) pieces are
+    dropped with the old dir — a stream replay recreates its batch
+    (its id is above every folded id), and an uncommitted add was
+    never acknowledged to its caller.
 
     Scale: one hash exchange on the partition key; at 100 TB run it
     per-bucket-range if a full-table rewrite is too large a unit of
@@ -977,19 +942,14 @@ def bm25_index_compact(spark, index_path: str,
     from sybil_spark.sources.locks import path_lock
 
     with path_lock(index_path):
-        return _bm25_compact_locked(spark, index_path,
-                                    files_per_bucket)
+        return _bm25_compact_locked(spark, index_path)
 
 
-def _bm25_compact_locked(spark, index_path: str,
-                         files_per_bucket: int = 1) -> int:
+def _bm25_compact_locked(spark, index_path: str) -> int:
     """bm25_index_compact's body, for callers already holding the
     index path lock (bm25_index_add's rescore mode runs the fold
     inside its own lock hold)."""
-    import json
     import os
-
-    from sybil_spark.sources.rollup import _staged_swap
 
     meta = _bm25_meta(index_path)
     post_p = os.path.join(index_path, "postings")
@@ -1001,13 +961,12 @@ def _bm25_compact_locked(spark, index_path: str,
             spark.read.parquet(d).select(*cols))
     dfreq = post.groupBy("tok").agg(
         F.count(F.lit(1)).alias("df_t"))
-    # hash-exchange on the partition key: files_per_bucket write
-    # tasks per bucket => that many files per bucket dir;
-    # localCheckpoint breaks the lineage so the staged write never
-    # re-reads the dirs the swap renames away
+    # hash-exchange on the partition key: one write task per
+    # bucket => one file per bucket dir; localCheckpoint breaks the
+    # lineage so the staged write never re-reads the dirs the swap
+    # renames away
     out = (post.join(dfreq, "tok")
-               .repartition(max(1, files_per_bucket
-                                * meta["nbuckets"]), F.col("pb"))
+               .repartition(max(1, meta["nbuckets"]), F.col("pb"))
                .localCheckpoint(eager=True))
     n = out.count()
     meta["n_docs"] = int(meta["n_docs"]) + pn
@@ -1022,10 +981,9 @@ def _bm25_compact_locked(spark, index_path: str,
     def write(tmp: str) -> None:
         out.write.partitionBy("pb").parquet(
             os.path.join(tmp, "postings"))
-        with open(os.path.join(tmp, "bm25_meta.json"), "w") as f:
-            json.dump(meta, f)
+        commit.write_json(os.path.join(tmp, "bm25_meta.json"), meta)
 
-    _staged_swap(index_path, write)
+    commit.staged_swap(index_path, write)
     return n
 
 
@@ -1053,7 +1011,6 @@ def bm25_index_topk(spark, index_path: str,
     is recomputed from the pruned scan — results stay bit-equal to a
     full rebuild over base + appended docs at every point until
     bm25_index_compact folds them back onto the fast path."""
-    import json
     import os
 
     from pyspark.sql import Window
@@ -1191,9 +1148,6 @@ def phrase_index_topk(spark, index_path: str, phrase: str,
     Output: (doc_id_col, n_matches, rank), ordered; overlapping
     occurrences count (stride-1 semantics, matching
     phrase_match_count)."""
-    import json
-    import os
-
     from pyspark.sql import Window
 
     from sybil_spark.functions.text import tokenize_str
@@ -1707,9 +1661,6 @@ def proximity_topk(spark, index_path: str, term_a: str, term_b: str,
     a k-way sorted merge — per-doc bounded, a mapInPandas candidate
     if ever needed; two-term NEAR covers the common query form with
     pure codegen, so it ships first."""
-    import json
-    import os
-
     from pyspark.sql import Window
 
     from sybil_spark.functions.text import tokenize_str

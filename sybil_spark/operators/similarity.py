@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from sybil_spark.functions.vectors import cosine_to_const, dot, norm_sq
 from sybil_spark.operators._util import spread
+from sybil_spark.sources import commit
 
 
 def brute_force_topk(df: DataFrame, vec_col: str, query: list[float],
@@ -142,14 +143,16 @@ def ivf_assign_batch(df: DataFrame, vec_col: str,
                      centroids: list[list[float]],
                      cluster_col: str = "cluster") -> DataFrame:
     """ivf_assign via one Arrow-batched numpy matmul per batch
-    (X_norm @ C_normᵀ argmax, ties → lowest index like ivf_assign).
-    ~10x faster than the interpreted fold expressions when assigning
-    a whole table at query time; use ivf_assign (pure JVM) when the
-    assignment runs once at ingest and feeds partitionBy."""
+    (argmax of (X @ Cᵀ) / (|x|·|c|), ties → lowest index like
+    ivf_assign). ~10x faster than the interpreted fold expressions
+    when assigning a whole table at query time; use ivf_assign (pure
+    JVM) when the assignment runs once at ingest and feeds
+    partitionBy. Norms divide after the dot product, as in the fold
+    and the oracle: normalizing first can break an exact tie."""
     import numpy as np
 
     C = np.asarray(centroids, dtype=np.float64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    cn = np.linalg.norm(C, axis=1)
     cols = df.columns
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in df.schema.fields)
@@ -161,7 +164,7 @@ def ivf_assign_batch(df: DataFrame, vec_col: str,
                           for v in pdf[vec_col]])
             n = np.linalg.norm(X, axis=1, keepdims=True)
             n[n == 0] = 1.0
-            sims = (X / n) @ Cn.T
+            sims = (X @ C.T) / (n * cn)
             pdf = pdf.copy()
             # argmax takes the first (lowest) index on ties — same
             # rule as ivf_assign's struct ordering
@@ -222,7 +225,6 @@ def build_ivf_index(df: DataFrame, vec_col: str, index_path: str,
     rewrite, sharing it with ivf_index_add — a rebuild racing a live
     add would otherwise delete the add's committed files or strand
     old-centroid assignments under the new quantizer."""
-    import json
     import os
 
     from sybil_spark.sources.locks import path_lock
@@ -234,12 +236,12 @@ def build_ivf_index(df: DataFrame, vec_col: str, index_path: str,
         (ivf_assign(df, vec_col, cents)
             .write.partitionBy("cluster").mode("overwrite")
             .parquet(os.path.join(index_path, "vectors")))
-        with open(os.path.join(index_path, "ivf_meta.json"), "w") as f:
-            json.dump({"vec_col": vec_col, "id_col": id_col,
-                       "nlist": len(cents), "centroids": cents,
-                       "base_files": _codes_file_count(index_path,
-                                                       "vectors")},
-                      f)
+        commit.write_json(
+            os.path.join(index_path, "ivf_meta.json"),
+            {"vec_col": vec_col, "id_col": id_col,
+             "nlist": len(cents), "centroids": cents,
+             "base_files": commit.usage(
+                 os.path.join(index_path, "vectors"))[0]})
     return cents
 
 
@@ -262,22 +264,20 @@ def ivf_index_add(df: DataFrame, index_path: str) -> int:
     lock so concurrent adds / a rebuild can't interleave writes.
 
     Small-files pressure is self-limiting (ivfpq_index_add's
-    contract): the add triggers a defrag rewrite of the vectors dir
-    — inside the same lock hold, behind a staged swap — once files
-    since the last snapshot's `base_files` pass
-    `ingest.FILE_DIGEST_THRESHOLD` (the reference's 256-file
-    threshold, src/lib/table_ingest.go:63-71). The defrag keeps the
-    frozen centroids (unlike ivf_index_refresh) so serving is
-    bit-equal before and after."""
-    import json
+    contract): the add triggers a defrag — inside the same lock hold,
+    the whole-dir rewrite ivf_index_refresh also uses
+    (_ivf_rewrite_locked) — once files since the last snapshot's
+    `base_files` pass `ingest.FILE_DIGEST_THRESHOLD` (the reference's
+    256-file threshold, src/lib/table_ingest.go:63-71). The defrag
+    keeps the frozen centroids and their assignments (unlike
+    ivf_index_refresh) so serving is bit-equal before and after."""
     import os
 
     from sybil_spark.sources import ingest
     from sybil_spark.sources.locks import path_lock
 
     with path_lock(index_path):
-        with open(os.path.join(index_path, "ivf_meta.json")) as f:
-            meta = json.load(f)
+        meta = commit.read_json(os.path.join(index_path, "ivf_meta.json"))
         out = ivf_assign(df, meta["vec_col"], meta["centroids"])
         from pyspark.sql import Observation
         obs = Observation()
@@ -285,40 +285,39 @@ def ivf_index_add(df: DataFrame, index_path: str) -> int:
         (out.write.partitionBy("cluster").mode("append")
             .parquet(os.path.join(index_path, "vectors")))
         n_added = obs.get["n"]
-        pressure = (_codes_file_count(index_path, "vectors")
+        pressure = (commit.usage(os.path.join(index_path, "vectors"))[0]
                     - int(meta.get("base_files", 0)))
         if pressure > ingest.FILE_DIGEST_THRESHOLD:
-            _ivf_defrag_locked(df.sparkSession, index_path, meta)
+            _ivf_rewrite_locked(
+                index_path, meta,
+                df.sparkSession.read.parquet(
+                    os.path.join(index_path, "vectors"))
+                .localCheckpoint(eager=True))
         return n_added
 
 
-def _ivf_defrag_locked(spark, index_path: str, meta: dict) -> None:
-    """Rewrite the IVF vectors dir as one file set per cluster —
-    the small-files defrag for long append sequences, for callers
-    already holding the index path lock. Centroids (and therefore
-    assignments and served results) are untouched; the whole-dir
-    staged swap is the one crash-atomic commit point."""
-    import json
+def _ivf_rewrite_locked(index_path: str, meta: dict,
+                        assigned: DataFrame) -> None:
+    """Rewrite an IVF index as one unit, for callers holding the index
+    path lock: `assigned` (every vector with its `cluster` under
+    meta's centroids, snapshotted so the write never re-reads the dir
+    being swapped away) lands as one file set per cluster beside the
+    meta, and the whole index dir is swapped in (commit.staged_swap).
+    A crash leaves the old vectors with the old meta or the new
+    vectors with the new meta, never one without the other."""
     import os
 
-    from sybil_spark.sources.rollup import _staged_swap
-
-    vec = spark.read.parquet(os.path.join(index_path, "vectors")) \
-               .localCheckpoint(eager=True)
-
     def write(tmp: str) -> None:
-        (vec.write.partitionBy("cluster")
-            .parquet(os.path.join(tmp, "vectors")))
-        meta["base_files"] = _codes_file_count(tmp, "vectors")
-        with open(os.path.join(tmp, "ivf_meta.json"), "w") as f:
-            json.dump(meta, f)
+        vecs = os.path.join(tmp, "vectors")
+        assigned.write.partitionBy("cluster").parquet(vecs)
+        meta["base_files"] = commit.usage(vecs)[0]
+        commit.write_json(os.path.join(tmp, "ivf_meta.json"), meta)
 
-    _staged_swap(index_path, write)
+    commit.staged_swap(index_path, write)
 
 
-def ivf_index_refresh(spark, index_path: str, nlist: int | None = None,
-                      kmeans: bool = True, seed: int = 7,
-                      max_iter: int = 10) -> list[list[float]]:
+def ivf_index_refresh(spark, index_path: str,
+                      nlist: int | None = None) -> list[list[float]]:
     """Re-train the coarse quantizer on the index's CURRENT contents
     and re-partition the vectors under the new centroids — the
     remedy for quantizer drift after many `ivf_index_add` appends
@@ -328,47 +327,37 @@ def ivf_index_refresh(spark, index_path: str, nlist: int | None = None,
     index" step expressed as a table rewrite). Returns the new
     centroids.
 
-    One full pass: read vectors (cluster column dropped), train
-    (seeded k-means by default — the same trainer as
-    build_ivf_index(kmeans=True) — or the hash-sample quantizer),
-    re-assign with the pure-JVM fold, and write the re-partitioned
-    table to a staging dir that is swapped in whole (rollup's
-    _staged_swap: write new -> rename old away -> rename new in),
-    so a crash mid-refresh leaves either the old or the new layout,
-    never a mix. Serving is unaffected mid-swap: a scan that has
-    listed its files reads them regardless of the renames.
+    Retrain, then rewrite: read the vectors (cluster column dropped),
+    train seeded k-means (ivf_centroids_kmeans at its defaults, the
+    same trainer as build_ivf_index(kmeans=True)), re-assign with the
+    pure-JVM fold, and rewrite the index through the same whole-dir
+    staged swap as the add-path defrag (_ivf_rewrite_locked): vectors
+    and ivf_meta.json commit at one rename, so a crash mid-refresh
+    leaves either the old layout with its centroids or the new one
+    with its centroids, never a mix. Serving is unaffected mid-swap:
+    a scan that has listed its files reads them regardless of the
+    renames.
 
     Holds the index path lock for the duration, serializing against
     build/add — an add landing mid-refresh would otherwise write
     old-centroid assignments into the new layout (or into the
     renamed-away dir). `nlist=None` keeps the current list count."""
-    import json
     import os
 
     from sybil_spark.sources.locks import path_lock
-    from sybil_spark.sources.rollup import _staged_swap
 
     with path_lock(index_path):
-        meta_p = os.path.join(index_path, "ivf_meta.json")
-        with open(meta_p) as f:
-            meta = json.load(f)
-        k = nlist or meta["nlist"]
+        meta = commit.read_json(os.path.join(index_path, "ivf_meta.json"))
         vec_col = meta["vec_col"]
-        vecs_p = os.path.join(index_path, "vectors")
-        # localCheckpoint: the staged write must not re-read vecs_p
-        # after the swap renames it away, and training + assignment
-        # would otherwise scan the parquet twice anyway
-        vecs = (spark.read.parquet(vecs_p).drop("cluster")
-                .localCheckpoint(eager=True))
-        cents = (ivf_centroids_kmeans(vecs, vec_col, k, seed=seed,
-                                      max_iter=max_iter) if kmeans
-                 else ivf_centroids(vecs, vec_col, meta["id_col"], k))
-        assigned = ivf_assign(vecs, vec_col, cents)
-        _staged_swap(vecs_p, lambda tmp: (
-            assigned.write.partitionBy("cluster").parquet(tmp)))
+        # localCheckpoint: the staged write must not re-read the
+        # vectors after the swap renames them away, and training +
+        # assignment would otherwise scan the parquet twice anyway
+        vecs = (spark.read.parquet(os.path.join(index_path, "vectors"))
+                .drop("cluster").localCheckpoint(eager=True))
+        cents = ivf_centroids_kmeans(vecs, vec_col, nlist or meta["nlist"])
         meta.update({"nlist": len(cents), "centroids": cents})
-        with open(meta_p, "w") as f:
-            json.dump(meta, f)
+        _ivf_rewrite_locked(index_path, meta,
+                            ivf_assign(vecs, vec_col, cents))
     return cents
 
 
@@ -398,11 +387,9 @@ def ivf_index_topk(spark, index_path: str, query: list[float],
     lists and exact-score them (brute_force_topk). The cluster
     filter is a partition-directory predicate, so pruning happens at
     file listing — verified by the PartitionFilters plan test."""
-    import json
     import os
 
-    with open(os.path.join(index_path, "ivf_meta.json")) as f:
-        meta = json.load(f)
+    meta = commit.read_json(os.path.join(index_path, "ivf_meta.json"))
     probes = _rank_probes(meta["centroids"], query, nprobe)
     vecs = (spark.read.parquet(os.path.join(index_path, "vectors"))
                  .where(F.col("cluster").isin(probes)))
@@ -715,7 +702,6 @@ def cross_topk_ivf(spark, queries: DataFrame, index_path: str,
     matmul candidates); this trades recall for scanning only probed
     inverted lists. Equivalence when nprobe == nlist is pinned by
     test_cross_topk_ivf_full_probe."""
-    import json
     import os
 
     import numpy as np
@@ -723,8 +709,7 @@ def cross_topk_ivf(spark, queries: DataFrame, index_path: str,
 
     from sybil_spark.functions.vectors import cosine
 
-    with open(os.path.join(index_path, "ivf_meta.json")) as f:
-        meta = json.load(f)
+    meta = commit.read_json(os.path.join(index_path, "ivf_meta.json"))
     C = np.asarray(meta["centroids"], dtype=np.float64)
     Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
 
@@ -921,7 +906,6 @@ def hybrid_index_topk(spark, bm25_index_path: str, ivf_index_path: str,
     fusion itself is exact (fixed two-operand IEEE sum, as
     hybrid_topk). Output matches hybrid_topk: (q_id, id, rrf,
     lex_rank, sem_rank, rank)."""
-    import json
     import os
 
     from pyspark.sql import Window
@@ -930,8 +914,7 @@ def hybrid_index_topk(spark, bm25_index_path: str, ivf_index_path: str,
 
     k_lex = k if k_lex is None else k_lex
     k_sem = k if k_sem is None else k_sem
-    with open(os.path.join(ivf_index_path, "ivf_meta.json")) as f:
-        imeta = json.load(f)
+    imeta = commit.read_json(os.path.join(ivf_index_path, "ivf_meta.json"))
     from sybil_spark.operators.quality import _bm25_meta
     bmeta = _bm25_meta(bm25_index_path)
     id_col = imeta["id_col"]
@@ -1155,7 +1138,6 @@ def build_ivfpq_index(df: DataFrame, vec_col: str, index_path: str,
     per-subspace Lloyd via pq_codebooks_kmeans when pq_kmeans) when
     not supplied. Holds the index path lock across the overwrite +
     meta rewrite; returns {"centroids", "codebooks"}."""
-    import json
     import os
 
     from sybil_spark.sources.locks import path_lock
@@ -1171,27 +1153,13 @@ def build_ivfpq_index(df: DataFrame, vec_col: str, index_path: str,
         (enc.select(id_col, "pq_code", "cluster")
             .write.partitionBy("cluster").mode("overwrite")
             .parquet(os.path.join(index_path, "codes")))
-        with open(os.path.join(index_path, "ivfpq_meta.json"),
-                  "w") as f:
-            json.dump({"vec_col": vec_col, "id_col": id_col,
-                       "nlist": len(cents), "centroids": cents,
-                       "codebooks": cbs,
-                       "base_files": _codes_file_count(index_path)},
-                      f)
+        commit.write_json(
+            os.path.join(index_path, "ivfpq_meta.json"),
+            {"vec_col": vec_col, "id_col": id_col,
+             "nlist": len(cents), "centroids": cents, "codebooks": cbs,
+             "base_files": commit.usage(
+                 os.path.join(index_path, "codes"))[0]})
     return {"centroids": cents, "codebooks": cbs}
-
-
-def _codes_file_count(index_path: str, sub: str = "codes") -> int:
-    """Data files currently under <index>/<sub>/ — minus this
-    count's `base_files` snapshot in the meta, the add-piece
-    small-files pressure gauge (directory metadata only)."""
-    import os
-
-    root = os.path.join(index_path, sub)
-    n = 0
-    for _r, _dirs, files in os.walk(root):
-        n += sum(1 for f in files if not f.startswith(("_", ".")))
-    return n
 
 
 def ivfpq_index_topk(spark, index_path: str, query: list[float],
@@ -1213,11 +1181,9 @@ def ivfpq_index_topk(spark, index_path: str, query: list[float],
     in place (a replay of a committed batch is a no-op in
     stream_ivfpq_index_add), so there is no window where a listed
     batch's files vanish except the rename itself."""
-    import json
     import os
 
-    with open(os.path.join(index_path, "ivfpq_meta.json")) as f:
-        meta = json.load(f)
+    meta = commit.read_json(os.path.join(index_path, "ivfpq_meta.json"))
     probes = _rank_probes(meta["centroids"], query, nprobe)
     codes = (spark.read.parquet(os.path.join(index_path, "codes"))
              .where(F.col("cluster").isin(probes)))
@@ -1226,7 +1192,7 @@ def ivfpq_index_topk(spark, index_path: str, query: list[float],
     # BM25 — PQ distances carry NO corpus-global state (only the
     # frozen quantizers), so a plain union is exact at every point
     cols = [meta["id_col"], "pq_code", "cluster"]
-    for bdir in _ivfpq_stream_batches(index_path):
+    for _b, bdir in _ivfpq_stream_batches(index_path):
         codes = codes.select(*cols).unionByName(
             spark.read.parquet(bdir)
                  .where(F.col("cluster").isin(probes)).select(*cols))
@@ -1234,34 +1200,25 @@ def ivfpq_index_topk(spark, index_path: str, query: list[float],
                    id_col=meta["id_col"])
 
 
-def _ivfpq_stream_batches(index_path: str) -> list[str]:
-    """Committed streamed-batch dirs under codes_stream/, batch-id
-    order. Commit marker = `_count.json` written after the parquet
-    (the sidecar-last protocol every streamed index leg shares): a
-    dir without it is a torn write — invisible to serve and compact,
-    deleted by the next compact."""
+def _ivfpq_stream_batches(index_path: str) -> list[tuple[str, str]]:
+    """(batch id, dir) of the committed streamed batches under
+    codes_stream/, in name order. Commit marker = `_count.json`
+    written after the parquet (the sidecar-last protocol every
+    streamed index leg shares): a dir without it is a torn write —
+    invisible to serve and compact, deleted by the next compact."""
     import os
 
-    root = os.path.join(index_path, "codes_stream")
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for d in sorted(os.listdir(root)):
-        full = os.path.join(root, d)
-        if d.startswith("batch-") and \
-                os.path.exists(os.path.join(full, "_count.json")):
-            out.append(full)
-    return out
+    return commit.pieces(os.path.join(index_path, "codes_stream"),
+                         "batch-", "_count.json")
 
 
 def ivfpq_index_compact(spark, index_path: str) -> int:
     """Fold committed streamed batches into the base codes dir by
-    swapping the ENTIRE index dir as one unit (rollup's
-    _staged_swap, the bm25_index_compact protocol): the replacement
-    dir holds the merged codes, a meta whose
-    `stream_fold_watermark` is already advanced, and NO
-    codes_stream — so fold + watermark + stream-dir removal commit
-    at one rename. A crash leaves either the old index (codes +
+    swapping the ENTIRE index dir as one unit (commit.staged_swap,
+    the bm25_index_compact protocol): the replacement dir holds the
+    merged codes, a meta whose `stream_fold_watermark` is already
+    advanced, and NO codes_stream — so fold + watermark + stream-dir
+    removal commit at one rename. A crash leaves either the old index (codes +
     pending batches + old meta, still consistent) or the new one,
     never a state where a folded batch survives beside the folded
     codes (double-serve) or a folded batch's watermark advance is
@@ -1283,11 +1240,8 @@ def _ivfpq_compact_locked(spark, index_path: str,
     fold inside its own lock hold). `force` rewrites the codes dir
     even with no pending stream batches — the defrag path for
     small-files pressure from plain appends."""
-    import json
     import os
     import shutil
-
-    from sybil_spark.sources.rollup import _staged_swap
 
     batches = _ivfpq_stream_batches(index_path)
     root = os.path.join(index_path, "codes_stream")
@@ -1295,34 +1249,27 @@ def _ivfpq_compact_locked(spark, index_path: str,
         if os.path.isdir(root):
             shutil.rmtree(root)   # only torn dirs remain
         return 0
-    with open(os.path.join(index_path, "ivfpq_meta.json")) as f:
-        meta = json.load(f)
+    meta = commit.read_json(os.path.join(index_path, "ivfpq_meta.json"))
     cols = [meta["id_col"], "pq_code", "cluster"]
     base = os.path.join(index_path, "codes")
     merged = spark.read.parquet(base).select(*cols)
     hi = -1
-    for bdir in batches:
+    for b, bdir in batches:
         merged = merged.unionByName(
             spark.read.parquet(bdir).select(*cols))
-        hi = max(hi, int(os.path.basename(bdir).split("-", 1)[1]))
+        hi = max(hi, int(b))
     # snapshot before the swap renames the dirs the plan reads
     merged = merged.localCheckpoint(eager=True)
     meta["stream_fold_watermark"] = max(
         hi, int(meta.get("stream_fold_watermark", -1)))
 
     def write(tmp: str) -> None:
-        (merged.write.partitionBy("cluster")
-               .parquet(os.path.join(tmp, "codes")))
-        n = 0
-        for _r, _d, files in os.walk(os.path.join(tmp, "codes")):
-            n += sum(1 for f in files
-                     if not f.startswith(("_", ".")))
-        meta["base_files"] = n
-        with open(os.path.join(tmp, "ivfpq_meta.json"),
-                  "w") as f:
-            json.dump(meta, f)
+        codes = os.path.join(tmp, "codes")
+        merged.write.partitionBy("cluster").parquet(codes)
+        meta["base_files"] = commit.usage(codes)[0]
+        commit.write_json(os.path.join(tmp, "ivfpq_meta.json"), meta)
 
-    _staged_swap(index_path, write)
+    commit.staged_swap(index_path, write)
     return len(batches)
 
 
@@ -1347,15 +1294,13 @@ def ivfpq_index_add(df: DataFrame, index_path: str) -> int:
     passes `ingest.FILE_DIGEST_THRESHOLD` (the reference's 256-file
     threshold). Serving is bit-equal before and after the fold (PQ
     codes carry no corpus-global state)."""
-    import json
     import os
 
     from sybil_spark.sources import ingest
     from sybil_spark.sources.locks import path_lock
 
     with path_lock(index_path):
-        with open(os.path.join(index_path, "ivfpq_meta.json")) as f:
-            meta = json.load(f)
+        meta = commit.read_json(os.path.join(index_path, "ivfpq_meta.json"))
         out = pq_encode(
             ivf_assign(df, meta["vec_col"], meta["centroids"]),
             meta["vec_col"], meta["codebooks"])
@@ -1366,7 +1311,7 @@ def ivfpq_index_add(df: DataFrame, index_path: str) -> int:
         (out.write.partitionBy("cluster").mode("append")
             .parquet(os.path.join(index_path, "codes")))
         n_added = obs.get["n"]
-        pressure = (_codes_file_count(index_path)
+        pressure = (commit.usage(os.path.join(index_path, "codes"))[0]
                     - int(meta.get("base_files", 0))
                     + len(_ivfpq_stream_batches(index_path)))
         if pressure > ingest.FILE_DIGEST_THRESHOLD:

@@ -6,7 +6,7 @@ applying is the everyday operation — so the trained artifact needs
 the same persisted-index treatment as BM25/IVF: one JSON file with a
 format version (the bm25_meta lesson: readers must refuse artifacts
 they cannot interpret with a clear 'rebuild required' error, never an
-opaque downstream failure), written via tmp-file + rename so a crash
+opaque downstream failure), published atomically (sources/commit) so a crash
 can never leave a half-written tokenizer where a serving job would
 load it.
 
@@ -19,10 +19,9 @@ PATH where they now take family-specific rule lists."""
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
+
+from sybil_spark.sources import commit
 
 #: bump when the payload shapes change; loaders refuse newer formats
 TOKENIZER_FORMAT = 1
@@ -37,7 +36,7 @@ def save_tokenizer(path: str, kind: str, data, meta: dict | None = None
     unigram   -> [(piece, logprob), ...]            (unigram_train)
     wordpiece -> [piece, ...]                       (wordpiece_train)
     `meta` is free-form provenance (corpus, date, sizes) stored
-    verbatim. Commit is tmp-write + rename (atomic on POSIX)."""
+    verbatim. Commit is commit.write_json's tmp-write + rename."""
     if kind not in _KINDS:
         raise ValueError(f"save_tokenizer: unknown kind {kind!r}")
     if kind == "bpe":
@@ -48,19 +47,14 @@ def save_tokenizer(path: str, kind: str, data, meta: dict | None = None
         payload = [str(p) for p in data]
     doc = {"format": TOKENIZER_FORMAT, "kind": kind,
            "data": payload, "meta": meta or {}}
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-    os.replace(tmp, path)
+    commit.write_json(path, doc)
 
 
 def load_tokenizer(path: str) -> dict:
     """Load a persisted tokenizer -> {kind, data, meta}. Raises a
     clear rebuild-required error on a newer/unknown format instead
     of letting a shape mismatch surface downstream."""
-    with open(path) as f:
-        doc = json.load(f)
+    doc = commit.read_json(path)
     fmt = int(doc.get("format", -1))
     if fmt > TOKENIZER_FORMAT or doc.get("kind") not in _KINDS:
         raise ValueError(

@@ -53,14 +53,13 @@ from sybil_spark.table import CHUNK_SIZE, Table
 def digest(spark: SparkSession, table: Table,
            time_col: str | None = None,
            chunk_size: int = CHUNK_SIZE,
-           compression: str = "zstd",
            day_partitions: bool = False,
            skip_outliers: bool = True,
            cluster_cols: list[str] | None = None) -> int:
     """Compact the row log into time-sorted blocks. Returns rows
     digested (0 = nothing to do).
 
-    Blocks default to zstd: at 100 TB the scan is IO-bound and zstd
+    Blocks are zstd: at 100 TB the scan is IO-bound and zstd
     reads ~30-40% fewer bytes than snappy for ~equal decode cost on
     modern cores (the reference gzips whole column files for the same
     reason, src/lib/file_decoder.go:10-53). The landing log stays
@@ -90,14 +89,13 @@ def digest(spark: SparkSession, table: Table,
     processes on one table queue instead of racing the staging
     renames (reference GrabDigestLock, src/lib/table_lock.go)."""
     with table_lock(table):
-        return _digest(spark, table, time_col, chunk_size, compression,
+        return _digest(spark, table, time_col, chunk_size,
                        day_partitions, skip_outliers, cluster_cols)
 
 
 def _digest(spark: SparkSession, table: Table,
             time_col: str | None = None,
             chunk_size: int = CHUNK_SIZE,
-            compression: str = "zstd",
             day_partitions: bool = False,
             skip_outliers: bool = True,
             cluster_cols: list[str] | None = None) -> int:
@@ -162,43 +160,9 @@ def _digest(spark: SparkSession, table: Table,
         shutil.rmtree(stage)
         return 0
 
-    df = spark.read.option("mergeSchema", "true").parquet(stage)
-    n = df.count()
-    npart = max(1, -(-n // chunk_size))
-    if cluster_cols:
-        from sybil_spark.functions.zorder import zorder_key
-        # one extra agg over the staged log for exact bounds — the
-        # log is bounded small by the auto-digest thresholds (256
-        # files / 2 MB), so this is noise next to the write; the
-        # registry's outlier-suppressed min/max would mis-scale the
-        # very values an outlier-heavy digest most needs spread out
-        stats = df.agg(*[f for c in cluster_cols
-                         for f in (F.min(c).alias(f"lo_{c}"),
-                                   F.max(c).alias(f"hi_{c}"))]).first()
-        zk = zorder_key([(F.col(c),
-                          float(stats[f"lo_{c}"] or 0),
-                          float(stats[f"hi_{c}"] or 0))
-                         for c in cluster_cols])
-        df = (df.withColumn("__zk", zk)
-                .repartitionByRange(npart, F.col("__zk"))
-                .sortWithinPartitions("__zk")
-                .drop("__zk"))
-    elif time_col and time_col in df.columns:
-        df = (df.repartitionByRange(npart, F.col(time_col))
-                .sortWithinPartitions(time_col))
-    else:
-        df = df.repartition(npart)
-    w = (df.write.mode("append")
-           .option("maxRecordsPerFile", chunk_size)
-           .option("compression", compression))
-    if day_partitions and time_col and time_col in df.columns:
-        w = (df.withColumn("day", F.to_date(F.timestamp_seconds(
-                F.col(time_col).cast("long"))))
-               .write.mode("append")
-               .option("maxRecordsPerFile", chunk_size)
-               .option("compression", compression)
-               .partitionBy("day"))
-    w.parquet(table.blocks_path)
+    n = _write_blocks(spark.read.option("mergeSchema", "true")
+                      .parquet(stage), table.blocks_path, chunk_size,
+                      time_col, cluster_cols, day_partitions)
     # stats read the staged files again — must run before the
     # cleanup. Files recovered from a COMPACT-origin crash were
     # already counted into the registry by their original digest
@@ -218,6 +182,50 @@ def _digest(spark: SparkSession, table: Table,
     if cluster_cols:
         meta.cluster_cols = list(cluster_cols)
     table.save_meta(meta)
+    return n
+
+
+def _write_blocks(df, blocks_path: str, chunk_size: int,
+                  time_col: str | None, cluster_cols: list[str] | None,
+                  day_partitions: bool = False) -> int:
+    """The one block layout digest and compact_blocks share: z-order
+    on `cluster_cols` when given, else range-partition and sort by
+    `time_col` when present, else round-robin — then append
+    `chunk_size`-row zstd files to `blocks_path` (under day=
+    dirs with `day_partitions`). Returns rows written."""
+    n = df.count()
+    npart = max(1, -(-n // chunk_size))
+    if cluster_cols:
+        from sybil_spark.functions.zorder import zorder_key
+        # one extra agg over the staged rows for exact bounds — the
+        # input is bounded small by the auto-digest thresholds (256
+        # files / 2 MB), so this is noise next to the write; the
+        # registry's outlier-suppressed min/max would mis-scale the
+        # very values an outlier-heavy digest most needs spread out
+        stats = df.agg(*[f for c in cluster_cols
+                         for f in (F.min(c).alias(f"lo_{c}"),
+                                   F.max(c).alias(f"hi_{c}"))]).first()
+        zk = zorder_key([(F.col(c),
+                          float(stats[f"lo_{c}"] or 0),
+                          float(stats[f"hi_{c}"] or 0))
+                         for c in cluster_cols])
+        df = (df.withColumn("__zk", zk)
+                .repartitionByRange(npart, F.col("__zk"))
+                .sortWithinPartitions("__zk")
+                .drop("__zk"))
+    elif time_col and time_col in df.columns:
+        df = (df.repartitionByRange(npart, F.col(time_col))
+                .sortWithinPartitions(time_col))
+    else:
+        df = df.repartition(npart)
+    day = day_partitions and time_col and time_col in df.columns
+    if day:
+        df = df.withColumn("day", F.to_date(F.timestamp_seconds(
+            F.col(time_col).cast("long"))))
+    w = (df.write.mode("append")
+           .option("maxRecordsPerFile", chunk_size)
+           .option("compression", "zstd"))
+    (w.partitionBy("day") if day else w).parquet(blocks_path)
     return n
 
 
@@ -386,15 +394,13 @@ def _file_time_stats(path: str, time_col: str) -> tuple[int | None, int | None]:
 
 def compact_blocks(spark: SparkSession, table: Table,
                    time_col: str | None = None,
-                   chunk_size: int = CHUNK_SIZE,
-                   small_fraction: float = 0.5,
-                   compression: str = "zstd") -> int:
+                   chunk_size: int = CHUNK_SIZE) -> int:
     """Rewrite undersized blocks into full ones (the reference tops up
     the last partial block on every digest — FillPartialBlock,
     src/lib/table_block_io.go:48-107; here it is a periodic job so
     digest stays append-only and cheap).
 
-    Files with fewer than `small_fraction * chunk_size` rows (parquet
+    Files with fewer than half of `chunk_size` rows (parquet
     footer metadata only — no scan) are staged out of the block dir,
     re-read, re-sorted by time, and rewritten as full chunks. Single
     writer assumed, like every lifecycle job here (the reference
@@ -405,23 +411,19 @@ def compact_blocks(spark: SparkSession, table: Table,
     place. Serializes on the per-table lifecycle lock with digest/
     trim. Returns rows rewritten."""
     with table_lock(table):
-        return _compact_blocks(spark, table, time_col, chunk_size,
-                               small_fraction, compression)
+        return _compact_blocks(spark, table, time_col, chunk_size)
 
 
 def _compact_blocks(spark: SparkSession, table: Table,
                     time_col: str | None = None,
-                    chunk_size: int = CHUNK_SIZE,
-                    small_fraction: float = 0.5,
-                    compression: str = "zstd") -> int:
+                    chunk_size: int = CHUNK_SIZE) -> int:
     """compact_blocks body — caller holds the table lock."""
     import pyarrow.parquet as pq
     if recover_stages(table):
         # adopted files sit in the ingest log; digest them NOW so
         # rows that were queryable before the crash are queryable
         # again after this pass (not only after some future digest)
-        _digest(spark, table, time_col=time_col, chunk_size=chunk_size,
-                compression=compression)
+        _digest(spark, table, time_col=time_col, chunk_size=chunk_size)
     if not os.path.exists(table.blocks_path):
         return 0
     meta = table.load_meta()
@@ -435,7 +437,7 @@ def _compact_blocks(spark: SparkSession, table: Table,
             nrows = pq.ParquetFile(p).metadata.num_rows
         except Exception:
             continue
-        if nrows < chunk_size * small_fraction:
+        if nrows < chunk_size * 0.5:
             smalls.append(p)
     if len(smalls) < 2:
         return 0
@@ -447,33 +449,11 @@ def _compact_blocks(spark: SparkSession, table: Table,
     for p in smalls:
         os.rename(p, os.path.join(stage, os.path.basename(p)))
     df = spark.read.option("mergeSchema", "true").parquet(stage)
-    n = df.count()
-    npart = max(1, -(-n // chunk_size))
-    ccols = [c for c in (meta.cluster_cols or []) if c in df.columns]
-    if ccols:
-        # a z-ordered table stays z-ordered through compaction —
-        # rewriting smalls time-sorted would erode the layout
-        from sybil_spark.functions.zorder import zorder_key
-        stats = df.agg(*[f for c in ccols
-                         for f in (F.min(c).alias(f"lo_{c}"),
-                                   F.max(c).alias(f"hi_{c}"))]).first()
-        zk = zorder_key([(F.col(c),
-                          float(stats[f"lo_{c}"] or 0),
-                          float(stats[f"hi_{c}"] or 0))
-                         for c in ccols])
-        df = (df.withColumn("__zk", zk)
-                .repartitionByRange(npart, F.col("__zk"))
-                .sortWithinPartitions("__zk")
-                .drop("__zk"))
-    elif time_col and time_col in df.columns:
-        df = (df.repartitionByRange(npart, F.col(time_col))
-                .sortWithinPartitions(time_col))
-    else:
-        df = df.repartition(npart)
-    (df.write.mode("append")
-       .option("maxRecordsPerFile", chunk_size)
-       .option("compression", compression)
-       .parquet(table.blocks_path))
+    # a z-ordered table stays z-ordered through compaction —
+    # rewriting smalls time-sorted would erode the layout
+    n = _write_blocks(df, table.blocks_path, chunk_size, time_col,
+                      [c for c in (meta.cluster_cols or [])
+                       if c in df.columns])
     shutil.rmtree(stage)
     # the smalls' cache entries (if any) point at removed files —
     # GC them now so the cache dir never accumulates dead partials

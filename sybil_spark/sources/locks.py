@@ -23,11 +23,14 @@ same protocol re-expressed for the Spark lifecycle:
   re-created a LIVE lock can never have its fresh lock tombstoned
   by a contender acting on a stale observation;
 - stale-lock RECOVERY is not a lock concern here, by design: every
-  guarded writer is already crash-recoverable on entry
-  (recover_stages re-adopts stranded staging dirs, _staged_swap's
-  recover_stages/_recover_pending replay half-swaps), which is what
-  lets takeover be a rename+retry instead of the reference's
-  per-lock-type Recover() hooks.
+  guarded writer is crash-recoverable on entry, which is what lets
+  takeover be a rename+retry instead of the reference's
+  per-lock-type Recover() hooks. Tables re-adopt stranded staging
+  dirs in recover_stages (digest/compact entry) and rollups drop an
+  uncommitted increment in _recover_pending; a store dir's
+  half-finished staged swap is undone by `commit.recover`, which
+  `path_lock` runs right after the lock is taken, before the holder
+  reads the store.
 
 What it protects (each was a real race before this module):
 - two `digest`s staging the same ingest files (the loser's rename
@@ -56,6 +59,8 @@ from __future__ import annotations
 import os
 import time
 import uuid
+
+from sybil_spark.sources import commit
 
 
 class LockHeld(RuntimeError):
@@ -259,16 +264,31 @@ class DirLock:
         self.release()
 
 
+class _StoreLock(DirLock):
+    """path_lock's lock: once held, `commit.recover` finishes whatever
+    a crashed staged swap left of the store it guards."""
+
+    def acquire(self) -> "DirLock":
+        super().acquire()
+        try:
+            commit.recover(self.dir[:-len(".lifecycle.lock")])
+        except BaseException:
+            self.release()
+            raise
+        return self
+
+
 def path_lock(path: str, **kw) -> DirLock:
     """Lifecycle lock for a standalone store directory (rollup dir,
-    unigram model dir, ...). The lock dir lives BESIDE the store —
-    `<parent>/<name>.lifecycle.lock` — never inside it: the staged
-    compactors RENAME the store away mid-swap, and a lock inside
-    would travel with it."""
+    unigram model dir, index dir, ...). The lock dir lives BESIDE the
+    store — `<parent>/<name>.lifecycle.lock` — never inside it: the
+    staged compactors RENAME the store away mid-swap, and a lock
+    inside would travel with it. Taking it runs `commit.recover` on
+    the store, so every `commit.staged_swap(path)` runs under it."""
     path = os.path.abspath(path.rstrip("/"))
     parent = os.path.dirname(path)
     os.makedirs(parent, exist_ok=True)
-    return DirLock(parent, os.path.basename(path) + ".lifecycle", **kw)
+    return _StoreLock(parent, os.path.basename(path) + ".lifecycle", **kw)
 
 
 def table_lock(table, **kw) -> DirLock:

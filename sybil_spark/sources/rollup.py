@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sybil_spark.sources import commit
+
 _DEC = "decimal(38,6)"
 #: unit separator — same tuple encoding as the distinct query path
 _SEP = "\x1f"
@@ -262,9 +264,6 @@ def compact_rollup(spark: SparkSession, path: str, group_cols: list[str],
     dir, so an append landing mid-swap (a live stream_rollup_partials
     micro-batch, a concurrent refresh) would be renamed away and
     lost; writers share the lock and queue instead."""
-    import os
-    import shutil
-
     from sybil_spark.sources.locks import path_lock
     with path_lock(path):
         return _compact_rollup(spark, path, group_cols, num_cols,
@@ -300,26 +299,8 @@ def _compact_rollup(spark: SparkSession, path: str, group_cols: list[str],
         if os.path.exists(_manifest_path(path)):
             shutil.copy(_manifest_path(path), _manifest_path(tmp))
 
-    _staged_swap(path, write)
+    commit.staged_swap(path, write)
     return spark.read.parquet(path).count()
-
-
-def _staged_swap(path: str, write_fn) -> None:
-    """write_fn writes the replacement dir to a tmp path; then the
-    live dir is swapped out atomically-enough for single-writer
-    lifecycles (write new → rename old away → rename new in →
-    delete old) — the protocol compact_blocks and the reference's
-    .partial renames use."""
-    import os
-    import shutil
-    import uuid
-
-    tmp = f"{path}__stage-{uuid.uuid4().hex[:8]}"
-    write_fn(tmp)
-    old = f"{path}__old-{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
 
 
 def _recover_pending(path: str) -> None:
@@ -328,37 +309,23 @@ def _recover_pending(path: str) -> None:
     absent from the manifest, so the next refresh re-processes them
     exactly once)."""
     import glob
-    import json
     import os
     import shutil
 
     manifest_p = _manifest_path(path)
-    if not os.path.exists(manifest_p):
-        return
-    with open(manifest_p) as f:
-        man = json.load(f)
+    man = commit.read_json(manifest_p, {})
     if not man.get("pending"):
         return
     inc = man["pending"]["inc"]
     for d in glob.glob(os.path.join(path, "__day=*", f"__inc={inc}")):
         shutil.rmtree(d, ignore_errors=True)
     man["pending"] = None
-    _save_manifest(manifest_p, man)
+    commit.write_json(manifest_p, man)
 
 
 def _manifest_path(path: str) -> str:
     import os
     return os.path.join(path, "_manifest.json")
-
-
-def _save_manifest(path: str, man: dict) -> None:
-    import json
-    import os
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".partial"
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    os.replace(tmp, path)
 
 
 def refresh_rollup(spark: SparkSession, blocks_root: str, path: str,
@@ -407,7 +374,6 @@ def _refresh_rollup(spark: SparkSession, blocks_root: str, path: str,
                     distinct_cols: list[str] | None = None,
                     hist_buckets: dict[str, float] | None = None) -> int:
     """refresh_rollup body — caller holds the path lock."""
-    import json
     import os
     import shutil
     import uuid
@@ -427,10 +393,7 @@ def _refresh_rollup(spark: SparkSession, blocks_root: str, path: str,
     # fully written but uncommitted — delete its partition dirs and
     # re-process its blocks (they are still not in the manifest)
     _recover_pending(path)
-    man: dict = {"blocks": [], "pending": None}
-    if os.path.exists(manifest_p):
-        with open(manifest_p) as f:
-            man = json.load(f)
+    man = commit.read_json(manifest_p, {"blocks": [], "pending": None})
 
     blocks = _list_blocks(blocks_root)
     ids = {_block_id(b): b for b in blocks}
@@ -446,7 +409,7 @@ def _refresh_rollup(spark: SparkSession, blocks_root: str, path: str,
             # manifest so the next refresh starts clean
             shutil.rmtree(path, ignore_errors=True)
             os.makedirs(path, exist_ok=True)
-            _save_manifest(manifest_p, {"blocks": [], "pending": None})
+            commit.write_json(manifest_p, {"blocks": [], "pending": None})
             return 0
         df = (spark.read.option("mergeSchema", "true")
               .option("basePath", blocks_root).parquet(*blocks))
@@ -455,10 +418,10 @@ def _refresh_rollup(spark: SparkSession, blocks_root: str, path: str,
 
         def write(tmp: str) -> None:
             write_rollup(roll, tmp)
-            _save_manifest(_manifest_path(tmp),
-                           {"blocks": sorted(ids), "pending": None})
+            commit.write_json(_manifest_path(tmp),
+                              {"blocks": sorted(ids), "pending": None})
 
-        _staged_swap(path, write)
+        commit.staged_swap(path, write)
         return len(blocks)
 
     new = [b for i, b in ids.items() if i not in seen]
@@ -467,7 +430,7 @@ def _refresh_rollup(spark: SparkSession, blocks_root: str, path: str,
     inc = uuid.uuid4().hex[:8]
     man["pending"] = {"inc": inc,
                       "ids": sorted(_block_id(b) for b in new)}
-    _save_manifest(manifest_p, man)
+    commit.write_json(manifest_p, man)
 
     # basePath keeps directory-derived partition columns (day=) of
     # the 100 TB layout visible to the aggregation
@@ -479,5 +442,5 @@ def _refresh_rollup(spark: SparkSession, blocks_root: str, path: str,
 
     man["blocks"] = sorted(seen | set(man["pending"]["ids"]))
     man["pending"] = None
-    _save_manifest(manifest_p, man)
+    commit.write_json(manifest_p, man)
     return len(new)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from sybil_spark.sources import commit
 from sybil_spark.sources.ingest import IngestSpec, coerce
 from sybil_spark.table import Table
 
@@ -92,17 +93,12 @@ class StreamDedupIndex:
         when its params match and upgraded in place — an existing
         index must not fail its stream on a format change its
         parameters survive."""
-        import json
-        import os
-
         p = _meta_file(self.path)
-        if not os.path.exists(p):
+        stored = commit.read_json(p, None)
+        if stored is None:
             return
-        with open(p) as f:
-            stored = json.load(f)
         if "kind" not in stored and stored == self.params:
-            with open(p, "w") as f:   # upgrade legacy sidecar
-                json.dump(self.meta, f)
+            commit.write_json(p, self.meta)   # upgrade legacy sidecar
             return
         if stored != self.meta:
             raise ValueError(
@@ -135,14 +131,11 @@ class StreamDedupIndex:
     def commit_meta(self) -> None:
         """Write the sidecar on the index's first commit (an existing
         one was already validated by `check`)."""
-        import json
         import os
 
         p = _meta_file(self.path)
         if not os.path.exists(p):
-            os.makedirs(self.path, exist_ok=True)
-            with open(p, "w") as f:
-                json.dump(self.meta, f)
+            commit.write_json(p, self.meta)
 
     def fold_watermark(self) -> int:
         return _read_fold_watermark(self.path)
@@ -194,53 +187,36 @@ class StreamDedupIndex:
                               lock_path=self.path)
 
 
-def _batch_subdir_id(name: str) -> int | None:
-    if name.startswith("batch-"):
-        try:
-            return int(name[len("batch-"):])
-        except ValueError:
-            return None
-    return None
-
-
-def _committed(d: str) -> bool:
-    """A batch/fold subdir counts only with its _SUCCESS marker: a
+def _batches(root: str) -> list[tuple[int, str]]:
+    """(id, dir) of the COMMITTED `batch-<id>` subdirs of one dataset
+    dir. A batch/fold subdir counts only with its _SUCCESS marker: a
     dir left by a write that died mid-flight (only _temporary
     inside) must be invisible to readers AND to compaction — folding
     past a half-written batch would advance the watermark over it
     and permanently skip its replay (silent index-row loss)."""
-    import os
-    return os.path.exists(os.path.join(d, "_SUCCESS"))
+    out = []
+    for b, p in commit.pieces(root, "batch-", "_SUCCESS"):
+        try:
+            out.append((int(b), p))
+        except ValueError:
+            pass
+    return out
 
 
 def _dataset_pieces(root: str, exclude_batch: int | None = None,
                     max_batch: int | None = None) -> list[str]:
-    """Readable pieces of one dataset dir: loose parquet files,
-    COMMITTED fold-* dirs, and COMMITTED batch-<id> subdirs
-    (optionally excluding one batch id / capping at max_batch)."""
+    """Readable pieces of one dataset dir, in name order: loose
+    parquet files, COMMITTED fold-* dirs, and COMMITTED batch-<id>
+    subdirs (optionally excluding one batch id / capping at
+    max_batch)."""
     import os
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for name in sorted(os.listdir(root)):
-        p = os.path.join(root, name)
-        if name.startswith(("_", ".")):
-            continue
-        if os.path.isfile(p):
-            if name.endswith(".parquet"):
-                out.append(p)
-            continue
-        bid = _batch_subdir_id(name)
-        if bid is not None:
-            if exclude_batch is not None and bid == exclude_batch:
-                continue
-            if max_batch is not None and bid > max_batch:
-                continue
-            if _committed(p):
-                out.append(p)
-        elif name.startswith("fold-") and _committed(p):
-            out.append(p)
-    return out
+    loose = [p for n, p in commit.pieces(root)
+             if n.endswith(".parquet") and not n.startswith(("_", "."))
+             and os.path.isfile(p)]
+    folds = [p for _f, p in commit.pieces(root, "fold-", "_SUCCESS")]
+    batches = [p for b, p in _batches(root) if b != exclude_batch
+               and (max_batch is None or b <= max_batch)]
+    return sorted(loose + folds + batches)
 
 
 def _read_pieces(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -293,18 +269,16 @@ def _compact_dedup_index_locked(spark: SparkSession,
     """compact_dedup_index's body, for callers already holding the
     index path lock (StreamDedupIndex.maybe_compact runs the fold
     inside a leg's own write_batch lock hold)."""
-    import json
     import os
     import shutil
     import uuid
 
     meta_p = _meta_file(index_path)
-    if not os.path.exists(meta_p):
+    meta = commit.read_json(meta_p, None)
+    if meta is None:
         raise FileNotFoundError(
             f"{meta_p} missing — not a stream dedup index (bootstrap "
             "helpers and streams write the sidecar on first commit)")
-    with open(meta_p) as f:
-        meta = json.load(f)
     subs = meta.get("subdirs") or [None]
     total = 0
     roots = [os.path.join(index_path, s) if s else index_path
@@ -312,14 +286,8 @@ def _compact_dedup_index_locked(spark: SparkSession,
     # fold cap: only batch ids COMMITTED (_SUCCESS present — a
     # half-written dir from a crash must be left for replay, not
     # folded past and watermarked away) in EVERY dataset
-    maxes = []
-    for r in roots:
-        ids = []
-        for n in (os.listdir(r) if os.path.isdir(r) else []):
-            b = _batch_subdir_id(n)
-            if b is not None and _committed(os.path.join(r, n)):
-                ids.append(b)
-        maxes.append(max(ids) if ids else None)
+    maxes = [max((b for b, _p in _batches(r)), default=None)
+             for r in roots]
     real = [m for m in maxes if m is not None]
     # fold batches only when every dataset has committed them;
     # otherwise (a crash split a batch across datasets) leave
@@ -343,9 +311,8 @@ def _compact_dedup_index_locked(spark: SparkSession,
         staged.append((r, pieces, fold_dir))
         total += folded.count()
     # 2) advance the watermark (replays of folded ids now skip)
-    new_wm = max(prev_wm, cap)
-    with open(_fold_watermark_path(index_path), "w") as f:
-        json.dump({"max_folded_batch_id": new_wm}, f)
+    commit.write_json(_fold_watermark_path(index_path),
+                      {"max_folded_batch_id": max(prev_wm, cap)})
     # 3) remove the folded sources
     for _r, pieces, _fd in staged:
         for p in pieces:
@@ -1107,14 +1074,8 @@ def _fold_watermark_path(model_path: str) -> str:
 def _read_fold_watermark(model_path: str) -> int:
     """Highest batch id ever folded into the batch_id=-1 snapshot by
     `compact_unigram_model`; -1 when no compaction has happened."""
-    import json
-    import os
-
-    p = _fold_watermark_path(model_path)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as f:
-        return int(json.load(f)["max_folded_batch_id"])
+    wm = commit.read_json(_fold_watermark_path(model_path), None)
+    return -1 if wm is None else int(wm["max_folded_batch_id"])
 
 
 def read_unigram_model(spark: SparkSession, model_path: str) -> DataFrame:
@@ -1144,10 +1105,7 @@ def compact_unigram_model(spark: SparkSession, model_path: str) -> None:
     this is what makes compaction safe after an UNCLEAN stop, where
     the final micro-batch may be committed to model_path but not to
     the checkpoint and would otherwise be folded AND replayed."""
-    import json
-
     from sybil_spark.sources.locks import path_lock
-    from sybil_spark.sources.rollup import _staged_swap
 
     with path_lock(model_path):
         # materialize BEFORE the swap — the write closure must not
@@ -1163,10 +1121,10 @@ def compact_unigram_model(spark: SparkSession, model_path: str) -> None:
         def write(tmp: str) -> None:
             merged.write.partitionBy("batch_id") \
                   .mode("overwrite").parquet(tmp)
-            with open(_fold_watermark_path(tmp), "w") as f:
-                json.dump({"max_folded_batch_id": folded}, f)
+            commit.write_json(_fold_watermark_path(tmp),
+                              {"max_folded_batch_id": folded})
 
-        _staged_swap(model_path, write)
+        commit.staged_swap(model_path, write)
 
 
 def stream_media_ingest(spark: SparkSession, source_dir: str,
@@ -1226,7 +1184,6 @@ def stream_bm25_index_add(df: DataFrame, index_path: str,
     The smallness contract is per-batch (a micro-batch's tokens),
     never per-corpus — this is the lexical mirror of the IVF
     index's continuous-ingestion path."""
-    import json
     import os
 
     from sybil_spark.operators.quality import (_bm25_compact_locked,
@@ -1264,11 +1221,8 @@ def stream_bm25_index_add(df: DataFrame, index_path: str,
              .parquet(bdir))
         # sidecar LAST: its presence is the commit marker that
         # makes the batch visible to serve/compact
-        tmp = os.path.join(bdir, "_delta.json.partial")
-        with open(tmp, "w") as f:
-            json.dump({"n": int(stats["n"]),
-                       "s": int(stats["s"])}, f)
-        os.replace(tmp, os.path.join(bdir, "_delta.json"))
+        commit.write_json(os.path.join(bdir, "_delta.json"),
+                          {"n": int(stats["n"]), "s": int(stats["s"])})
         if len(_bm25_pending_state(index_path)[0]) \
                 > ingest.FILE_DIGEST_THRESHOLD:
             _bm25_compact_locked(batch_df.sparkSession, index_path)
@@ -1299,7 +1253,6 @@ def stream_ivfpq_index_add(df: DataFrame, index_path: str,
     against a concurrent compact/rebuild. Frozen-quantizer drift is
     the documented trade (ivfpq_index_add) — re-train via
     build_ivfpq_index when recall decays."""
-    import json
     import os
 
     from pyspark.sql import Observation
@@ -1310,8 +1263,8 @@ def stream_ivfpq_index_add(df: DataFrame, index_path: str,
     from sybil_spark.sources import ingest
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        with open(os.path.join(index_path, "ivfpq_meta.json")) as f:
-            meta = json.load(f)
+        meta = commit.read_json(os.path.join(index_path,
+                                             "ivfpq_meta.json"))
         if batch_id <= int(meta.get("stream_fold_watermark", -1)):
             return   # committed AND folded before an unclean stop
         bdir = os.path.join(index_path, "codes_stream",
@@ -1335,10 +1288,7 @@ def stream_ivfpq_index_add(df: DataFrame, index_path: str,
         (out.write.partitionBy("cluster").mode("overwrite")
             .parquet(bdir))
         n = int(obs.get["n"])
-        tmp = os.path.join(bdir, "_count.json.partial")
-        with open(tmp, "w") as f:
-            json.dump({"n": n}, f)
-        os.replace(tmp, os.path.join(bdir, "_count.json"))
+        commit.write_json(os.path.join(bdir, "_count.json"), {"n": n})
         if len(_ivfpq_stream_batches(index_path)) \
                 > ingest.FILE_DIGEST_THRESHOLD:
             _ivfpq_compact_locked(batch_df.sparkSession, index_path)

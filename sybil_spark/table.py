@@ -105,12 +105,8 @@ class Table:
 
     def save_meta(self, meta: TableMeta) -> None:
         meta.updated_at = time.time()
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self.meta_path + ".partial"
-        with open(tmp, "w") as f:
-            f.write(meta.to_json())
-        os.replace(tmp, self.meta_path)  # atomic publish, like the
-        # reference's .partial → validate → rename (column_store_io.go:419-491)
+        from sybil_spark.sources import commit
+        commit.write_text(self.meta_path, meta.to_json())
 
     # -- reads -------------------------------------------------------------
     def read(self, spark: SparkSession, read_log: bool = False) -> DataFrame:
@@ -147,11 +143,10 @@ def list_tables(db_dir: str) -> list[str]:
 def table_info(spark: SparkSession, db_dir: str, name: str) -> dict:
     """Per-table count / size / columns-by-type (reference `-info`,
     src/lib/printer.go:569-647)."""
+    from sybil_spark.sources import commit
     t = Table(db_dir, name)
     meta = t.load_meta()
-    size = 0
-    for root, _dirs, files in os.walk(t.path):
-        size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+    size = commit.usage(t.path)[1]
     df = t.read(spark, read_log=True)
     count = df.count()
     return {

@@ -9,7 +9,8 @@ import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import (HealthCheck, example, given, settings,
+                        strategies as st)
 
 from sybil_spark.query.builder import Query
 
@@ -1050,6 +1051,10 @@ vecs_st = st.lists(
 
 
 @given(vecs=vecs_st, thr=st.sampled_from([0.5, 0.8, 0.95]))
+# vec 3 ties both centroids at cosine exactly 0 (its dot with
+# centroid 1 is 1.875 - 1.875); the tie must go to centroid 0
+@example(vecs=[[0.0, 2.0, 0.0, 0.0], [0.0, -1.25, 1.5, 1.25],
+               [0.0, 0.0, 0.0, -1.0], [0.0, 0.0, 1.25, -1.5]], thr=0.5)
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])

@@ -1784,10 +1784,67 @@ def test_ivf_index_refresh_recovers_drift_recall(spark, tmp_path):
     ans = similarity.ivf_index_topk(spark, idx, q, k=5, nprobe=2)
     assert re.search(r"PartitionFilters: \[cluster#\d+ IN \(",
                      formatted_plan(ans))
-    # no staging/old dirs left behind
-    strays = [d for d in __import__("os").listdir(idx)
+    # no staging/old dirs left behind, inside the index or beside it
+    # (the whole-dir swap stages next to the index dir)
+    ls = __import__("os").listdir
+    strays = [d for d in ls(idx) + ls(str(tmp_path))
               if "__stage-" in d or "__old-" in d]
     assert strays == []
+
+
+def test_ivf_index_refresh_crash_keeps_vectors_and_meta_together(
+        spark, tmp_path, monkeypatch):
+    """A refresh that dies while writing ivf_meta.json must not leave
+    vectors partitioned under centroids the meta does not hold (every
+    later add and serve would probe the wrong lists): vectors and
+    meta commit at one whole-dir swap, so the old index survives
+    intact, and a retried refresh succeeds."""
+    import builtins
+    import json
+    import os
+
+    from pyspark.sql import Row as R
+
+    def vec(i):
+        v = [0.0] * 8
+        v[i % 4] = 1.0
+        v[4 + i % 3] = 0.1 * (i % 5)
+        return v
+
+    idx = str(tmp_path / "ivf-crash")
+    similarity.build_ivf_index(
+        spark.createDataFrame([R(vec_id=i, embedding=vec(i))
+                               for i in range(40)]),
+        "embedding", idx, nlist=4)
+
+    def stored_meta_matches_vectors():
+        with open(os.path.join(idx, "ivf_meta.json")) as f:
+            meta = json.load(f)
+        stored = spark.read.parquet(os.path.join(idx, "vectors"))
+        want = similarity.ivf_assign(stored.drop("cluster"), "embedding",
+                                     meta["centroids"])
+        assert ({(r["vec_id"], int(r["cluster"]))
+                 for r in stored.collect()}
+                == {(r["vec_id"], int(r["cluster"]))
+                    for r in want.collect()})
+        return meta
+
+    real_open = builtins.open
+
+    def failing_open(file, mode="r", *a, **kw):
+        if "w" in mode and "ivf_meta.json" in str(file):
+            raise OSError("disk full writing ivf_meta.json")
+        return real_open(file, mode, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(builtins, "open", failing_open)
+        with pytest.raises(OSError):
+            similarity.ivf_index_refresh(spark, idx, nlist=8)
+    assert len(stored_meta_matches_vectors()["centroids"]) == 4
+    assert len(similarity.ivf_index_refresh(spark, idx, nlist=8)) == 8
+    assert len(stored_meta_matches_vectors()["centroids"]) == 8
+    assert [d for d in os.listdir(tmp_path)
+            if "__stage-" in d or "__old-" in d] == []
 
 
 def test_corpus_diff_labels(spark):
@@ -3044,7 +3101,7 @@ def test_ivfpq_index_add_auto_compacts(spark, tmp_path, monkeypatch):
     import random
 
     from sybil_spark.operators import similarity as S
-    from sybil_spark.sources import ingest
+    from sybil_spark.sources import commit, ingest
     monkeypatch.setattr(ingest, "FILE_DIGEST_THRESHOLD", 4)
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)])
@@ -3054,7 +3111,7 @@ def test_ivfpq_index_add_auto_compacts(spark, tmp_path, monkeypatch):
     S.build_ivfpq_index(df, "embedding", idx, nlist=4, m=4, kcb=4)
     with open(os.path.join(idx, "ivfpq_meta.json")) as f:
         base_files = json.load(f)["base_files"]
-    assert base_files == S._codes_file_count(idx)
+    assert base_files == commit.usage(os.path.join(idx, "codes"))[0]
     q = rows[0][1]
     before = [tuple(r) for r in
               S.ivfpq_index_topk(spark, idx, q, k=5).collect()]
@@ -3067,7 +3124,7 @@ def test_ivfpq_index_add_auto_compacts(spark, tmp_path, monkeypatch):
         S.ivfpq_index_add(add, idx)
         with open(os.path.join(idx, "ivfpq_meta.json")) as f:
             meta = json.load(f)
-        pressure = S._codes_file_count(idx) \
+        pressure = commit.usage(os.path.join(idx, "codes"))[0] \
             - int(meta.get("base_files", 0))
         assert pressure <= 4 + 12, (i, pressure)  # bounded, not monotone
     # at least one fold ran: base_files advanced past the build's
@@ -3092,7 +3149,7 @@ def test_ivf_index_add_auto_compacts(spark, tmp_path, monkeypatch):
     import random
 
     from sybil_spark.operators import similarity as S
-    from sybil_spark.sources import ingest
+    from sybil_spark.sources import commit, ingest
     monkeypatch.setattr(ingest, "FILE_DIGEST_THRESHOLD", 4)
     rng = random.Random(11)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
@@ -3102,7 +3159,7 @@ def test_ivf_index_add_auto_compacts(spark, tmp_path, monkeypatch):
     cents = S.build_ivf_index(df, "embedding", idx, nlist=4)
     with open(os.path.join(idx, "ivf_meta.json")) as f:
         base_files = json.load(f)["base_files"]
-    assert base_files == S._codes_file_count(idx, "vectors")
+    assert base_files == commit.usage(os.path.join(idx, "vectors"))[0]
     q = rows[0][1]
     before = [tuple(r) for r in
               S.ivf_index_topk(spark, idx, q, k=5, nprobe=4).collect()]
@@ -3115,7 +3172,7 @@ def test_ivf_index_add_auto_compacts(spark, tmp_path, monkeypatch):
         S.ivf_index_add(add, idx)
         with open(os.path.join(idx, "ivf_meta.json")) as f:
             meta = json.load(f)
-        pressure = S._codes_file_count(idx, "vectors") \
+        pressure = commit.usage(os.path.join(idx, "vectors"))[0] \
             - int(meta.get("base_files", 0))
         assert pressure <= 4 + 12, (i, pressure)
         assert meta["centroids"] == cents        # defrag never retrains

@@ -1358,7 +1358,7 @@ def test_bm25_stream_replay_skips_committed_batch(spark, tmp_path):
 
 def test_ivfpq_compact_crash_atomic(spark, tmp_path):
     """ivfpq_index_compact commits fold + watermark + stream-dir
-    removal at ONE rename (_staged_swap). A crash while staging the
+    removal at ONE rename (commit.staged_swap). A crash while staging the
     replacement dir leaves the old index fully intact — codes,
     pending batches, meta — and still serving exactly (ADVICE r7:
     the old two-rename + separate meta write could lose the
@@ -1367,7 +1367,7 @@ def test_ivfpq_compact_crash_atomic(spark, tmp_path):
     import os
     from pyspark.sql.types import ArrayType, DoubleType
     from sybil_spark.operators import similarity
-    from sybil_spark.sources import rollup as _rollup
+    from sybil_spark.sources import commit
 
     dim = 8
     def vec(i):
@@ -1400,7 +1400,7 @@ def test_ivfpq_compact_crash_atomic(spark, tmp_path):
     before = serve()
     assert any(r[0] in (200, 201) for r in before)   # batch served
 
-    orig_swap = _rollup._staged_swap
+    orig_swap = commit.staged_swap
 
     def crashing(path, write_fn):
         def boom(tmp):
@@ -1408,12 +1408,12 @@ def test_ivfpq_compact_crash_atomic(spark, tmp_path):
             raise RuntimeError("crash before rename")
         orig_swap(path, boom)
 
-    _rollup._staged_swap = crashing
+    commit.staged_swap = crashing
     try:
         with pytest.raises(RuntimeError):
             similarity.ivfpq_index_compact(spark, idx)
     finally:
-        _rollup._staged_swap = orig_swap
+        commit.staged_swap = orig_swap
     # old index fully intact: batch still pending, meta unchanged,
     # serve identical
     assert os.path.exists(os.path.join(bdir, "_count.json"))
@@ -1427,6 +1427,65 @@ def test_ivfpq_compact_crash_atomic(spark, tmp_path):
     meta3 = _json.load(open(f"{idx}/ivfpq_meta.json"))
     assert meta3["stream_fold_watermark"] == 0
     assert serve() == before
+
+
+def test_ivfpq_compact_half_swap_recovers(spark, tmp_path, monkeypatch):
+    """A crash BETWEEN the whole-dir swap's two renames leaves the
+    index dir missing and the live copy under `__old-`. The next
+    writer's path lock renames it back before reading, so an add
+    succeeds, serving returns the pre-compact rows plus the added
+    ones (the folded batch is still pending, not lost), and no
+    `__stage-`/`__old-` dir is left beside the index."""
+    import os
+
+    from sybil_spark.operators import similarity
+    from sybil_spark.operators.similarity import ivf_assign, pq_encode
+
+    def vec(i):
+        return [float((i * 5 + j * 7) % 11 + 1) for j in range(8)]
+
+    schema = "vec_id long, embedding array<double>"
+    idx = str(tmp_path / "halfswap")
+    similarity.build_ivfpq_index(
+        spark.createDataFrame([(i, vec(i)) for i in range(16)], schema),
+        "embedding", idx, nlist=4, m=4, kcb=4)
+    meta = json.load(open(f"{idx}/ivfpq_meta.json"))
+    extra = spark.createDataFrame([(200, vec(200)), (201, vec(201))],
+                                  schema)
+    bdir = f"{idx}/codes_stream/batch-0"
+    (pq_encode(ivf_assign(extra, "embedding", meta["centroids"]),
+               "embedding", meta["codebooks"])
+        .select("vec_id", "pq_code", "cluster")
+        .write.partitionBy("cluster").parquet(bdir))
+    with open(os.path.join(bdir, "_count.json"), "w") as f:
+        json.dump({"n": 2}, f)
+
+    def serve():
+        return sorted(tuple(r) for r in similarity.ivfpq_index_topk(
+            spark, idx, vec(3), k=100, nprobe=4).collect())
+
+    before = serve()
+    assert len(before) == 18
+    real_rename = os.rename
+
+    def crashing_rename(src, dst, *a, **kw):
+        if "__stage-" in str(src):
+            raise OSError("crash between the swap's renames")
+        return real_rename(src, dst, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crashing_rename)
+        with pytest.raises(OSError):
+            similarity.ivfpq_index_compact(spark, idx)
+    assert not os.path.exists(idx)   # the crash window itself
+    added = spark.createDataFrame([(300, vec(300)), (301, vec(301))],
+                                  schema)
+    assert similarity.ivfpq_index_add(added, idx) == 2
+    after = serve()
+    assert sorted(r[0] for r in after if r[0] >= 300) == [300, 301]
+    assert [r for r in after if r[0] < 300] == before
+    assert [d for d in os.listdir(tmp_path)
+            if "__stage-" in d or "__old-" in d] == []
 
 
 def test_stream_quality_filter(spark, tmp_path):
