@@ -6556,18 +6556,24 @@ def q_top_ngrams(spark, sf):
 # (b) queries whose implementation or oracle changed this round. The rest
 # keep registration order. Rotate this list each round.
 _DRIVER_FIRST = [
-    # (b) implementation changed: the persisted BM25 and IVF-PQ
-    # indexes they build and serve now write, list and swap through
-    # sources/commit (bm25_index_add_search and boolean_topk, also
-    # index-served, are already in the head below):
-    "bm25_index_search", "ivfpq_topk", "phrase_index_topk",
-    "proximity_topk",
-    # and the two served by ivf_assign_batch, whose cosine now
-    # divides by the norms after the dot product:
-    "ivf_topk", "semantic_dedup",
-    # then the previous head — the query builder's ops share one
-    # scan prelude, one filter compiler (also the query cache's) and
-    # one fixed-bucket / bucket-count step:
+    # (b) implementation changed: every query whose plan goes through
+    # a wide expression builder now written as one SQL string (the
+    # vector folds, LSH planes, IVF argmax, PQ encode/LUT, MinHash
+    # signatures/bands, the portable shingle fold, SimHash lanes and
+    # bands) — found by recording which builders each query's build
+    # calls:
+    "ivfpq_topk", "ivf_topk", "semantic_dedup", "minhash_lsh",
+    "simhash_dup", "lsh_recall", "winnow_dup", "embedding_dup",
+    "hybrid_search", "hard_negatives", "minhash_tuned", "ann_topk",
+    "quantize_topk", "ann_pairs_topk", "cross_topk", "lsh_topk",
+    "ivf_recall", "ivf_tuned", "pq_topk", "pq_topk_trained",
+    "cluster_balance", "norm_outliers",
+    # then the previous head — the persisted BM25 and IVF-PQ indexes
+    # write, list and swap through sources/commit:
+    "bm25_index_search", "phrase_index_topk", "proximity_topk",
+    # the query builder's ops share one scan prelude, one filter
+    # compiler (also the query cache's) and one fixed-bucket /
+    # bucket-count step:
     "str_replace_group", "loghist", "loghist_group", "weighted_loghist",
     "hist", "group_hist", "time_hist", "hist_summary",
     "weighted_hist_summary", "distinct_limit", "samples",
@@ -6589,16 +6595,15 @@ _DRIVER_FIRST = [
     "wordpiece_pairs", "wordpiece_apply", "wordpiece_fertility",
     "wordpiece_unk_rate", "pagerank_events", "ppr_events",
     "ngram_novelty", "top_ngrams",
-    # (c) remaining slots: the near-dup family and the freshness
-    # rotation, oldest driver rows first:
-    "minhash_lsh", "ngram_jaccard", "simhash_dup", "decontaminate",
-    "containment_dup", "lsh_recall", "winnow_dup", "norm_dedup",
-    "percentiles", "embedding_dup",
+    # (c) remaining slots: the rest of the near-dup family and the
+    # freshness rotation, oldest driver rows first:
+    "ngram_jaccard", "decontaminate", "containment_dup", "norm_dedup",
+    "percentiles",
     "token_freq", "cube_counts", "lag_delta", "retention",
     "tpch_q13", "tpch_q17", "tpch_q19", "tpch_q21", "tpch_q22",
     "ppl_buckets", "weighted_sample",
     "corpus_stats", "corpus_diff",
-    "hybrid_search", "gopher_rules", "dsir_weights",
+    "gopher_rules", "dsir_weights",
     "repetition_stats", "source_mix",
     "repetition", "quality_cascade", "dedup_exact",
     "dedup_keep_first", "dedup_best", "dedup_clusters",

@@ -7,55 +7,99 @@ not a UDF. Elements are cast to double *before* accumulating and the
 fold is sequential left-to-right, which makes results deterministic
 and bit-identical to any other engine that sums doubles in index
 order (the DuckDB oracle's `list_dot_product` does).
+
+Build contract: each helper writes ONE SQL expression string and
+makes ONE `F.expr` call. The same tree assembled through the Column
+API costs one py4j round trip per node — a 64-dim dot against a
+literal plane is hundreds of them, and the operators that fold dozens
+of such dots (LSH planes, IVF centroids, PQ codewords) spent seconds
+of driver time per DataFrame before Spark ran a job. So:
+
+- the Column helpers (`dot`, `cosine`, ...) take column NAMES;
+- the `*_sql` builders take SQL fragments — a name quoted by `ident`
+  or the text of another `*_sql` call — and return SQL text, so an
+  operator can assemble a whole wide projection and still pay one
+  `F.expr`/`selectExpr` call;
+- doubles render through `lit_double`, which parses back to the same
+  bits, and arrays of them through `double_array`, so the analyzed
+  expressions are exactly the ones the Column API builds;
+- SQL is never read back from a Column (its JVM accessor changed
+  between Spark 3 and 4).
+
+Lambda variables are `__x`/`__y`/`__acc`: a lambda variable shadows a
+column of the same name inside its body, and the only outside column
+a body here reads is `int8_quantize_sql`'s scale.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot(a: Column, b: Column) -> Column:
+def ident(name: str) -> str:
+    """Backtick-quoted SQL identifier for column `name` (any
+    characters, backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def lit_double(x: float) -> str:
+    """SQL double literal of `x`: `repr(x) + "D"` round-trips every
+    finite double bit-for-bit (±0.0 and subnormals included). NaN and
+    ±inf have no literal form; they render as a cast of Spark's own
+    string spelling, which constant-folds to the same value."""
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    s = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{s}' AS DOUBLE)"
+
+
+def double_array(xs: list[float]) -> str:
+    """`array<double>` literal of `xs`, built like
+    `F.lit(list).cast("array<double>")` (constant-folded once)."""
+    return ("CAST(array(" + ", ".join(lit_double(x) for x in xs)
+            + ") AS array<double>)")
+
+
+def dot_sql(a: str, b: str) -> str:
     """Σ a_i·b_i, double precision, sequential fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
+    return (f"aggregate(zip_with({a}, {b}, (__x, __y) -> "
+            "CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE)), "
+            "0.0D, (__acc, __x) -> __acc + __x)")
 
 
-def norm_sq(a: Column) -> Column:
-    return F.aggregate(a, F.lit(0.0),
-                       lambda acc, x: acc + x.cast("double") * x.cast("double"))
+def norm_sq_sql(a: str) -> str:
+    return (f"aggregate({a}, 0.0D, (__acc, __x) -> "
+            "__acc + CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE))")
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(norm_sq(a))
-
-
-def cosine(a: Column, b: Column) -> Column:
+def cosine_sql(a: str, b: str) -> str:
     """cos(a,b) = dot/(|a||b|) — written as dot products only so it
     mirrors `list_dot_product`-style oracle SQL bit-for-bit."""
-    return dot(a, b) / (F.sqrt(norm_sq(a)) * F.sqrt(norm_sq(b)))
+    return (f"({dot_sql(a, b)}) / "
+            f"(sqrt({norm_sq_sql(a)}) * sqrt({norm_sq_sql(b)}))")
 
 
-def cosine_to_const(a: Column, q: list[float]) -> Column:
+def cosine_to_const_sql(a: str, q: list[float]) -> str:
     """Cosine against a fixed query vector; the query-side norm is
     folded into one literal so only one array pass per row remains."""
-    import math
     qn = math.sqrt(sum(float(v) * float(v) for v in q))
-    ql = F.lit([float(v) for v in q]).cast("array<double>")
-    return dot(a, ql) / (F.sqrt(norm_sq(a)) * F.lit(qn))
+    return (f"({dot_sql(a, double_array(q))}) / "
+            f"(sqrt({norm_sq_sql(a)}) * {lit_double(qn)})")
 
 
-def absmax(a: Column) -> Column:
+def absmax_sql(a: str) -> str:
     """max_i |a_i|, double precision — the symmetric-quantization
     range statistic. A sequential GREATEST fold returns the same
     value as any engine's list-max-of-abs (max is order-free)."""
-    return F.aggregate(a, F.lit(0.0),
-                       lambda acc, x: F.greatest(acc,
-                                                 F.abs(x.cast("double"))))
+    return (f"aggregate({a}, 0.0D, (__acc, __x) -> "
+            "greatest(__acc, abs(CAST(__x AS DOUBLE))))")
 
 
-def int8_quantize(a: Column, scale: Column) -> Column:
+def int8_quantize_sql(a: str, scale: str) -> str:
     """Symmetric int8 quantization: q_i = floor(a_i/scale + 0.5).
 
     floor(x + 0.5) instead of round(x): engines disagree on
@@ -65,7 +109,26 @@ def int8_quantize(a: Column, scale: Column) -> Column:
     by construction — no clamp needed (|a_i|/scale <= 127, and
     floor(±127 + 0.5) stays in range). A zero vector (scale = 0)
     quantizes to zeros rather than dividing by zero."""
-    return F.transform(
-        a, lambda x: F.when(scale == F.lit(0.0), F.lit(0))
-                      .otherwise(F.floor(x.cast("double") / scale
-                                         + F.lit(0.5)).cast("int")))
+    return (f"transform({a}, __x -> CASE WHEN ({scale} = 0.0D) THEN 0 "
+            f"ELSE CAST(FLOOR(CAST(__x AS DOUBLE) / {scale} + 0.5D) "
+            "AS INT) END)")
+
+
+def dot(a: str, b: str) -> Column:
+    return F.expr(dot_sql(ident(a), ident(b)))
+
+
+def norm_sq(a: str) -> Column:
+    return F.expr(norm_sq_sql(ident(a)))
+
+
+def norm(a: str) -> Column:
+    return F.expr(f"sqrt({norm_sq_sql(ident(a))})")
+
+
+def cosine(a: str, b: str) -> Column:
+    return F.expr(cosine_sql(ident(a), ident(b)))
+
+
+def cosine_to_const(a: str, q: list[float]) -> Column:
+    return F.expr(cosine_to_const_sql(ident(a), q))

@@ -227,12 +227,12 @@ def _port_tok_hash(col: Column) -> Column:
     return F.pmod(h60, F.lit(_MERSENNE31))
 
 
-def _port_fold(parts: list[Column]) -> Column:
+def _port_fold(parts: list[str]) -> str:
     """h = ((p0*A + p1) % M * A + p2) % M ... — the portable ordered
-    combine of already-reduced values."""
+    combine of already-reduced values, over SQL fragments."""
     h = parts[0]
     for p in parts[1:]:
-        h = F.pmod(h * F.lit(_PORT_A) + p, F.lit(_MERSENNE31))
+        h = f"pmod({h} * {_PORT_A} + {p}, {_MERSENNE31})"
     return h
 
 
@@ -322,10 +322,9 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str,
     stitched = th.select("id", "pos", "h0", *leads)
     last = F.col(f"h{shingle_n - 1}")
     if portable:
-        sh_hash = _port_fold(
-            [F.col("h0")] + [
-                F.coalesce(F.col(f"h{j}"), F.lit(_port_sentinel(j)))
-                for j in range(1, shingle_n)])
+        sh_hash = F.expr(_port_fold(
+            ["h0"] + [f"coalesce(h{j}, {_port_sentinel(j)})"
+                      for j in range(1, shingle_n)]))
     else:
         sh_hash = F.xxhash64(*[
             F.coalesce(F.col(f"h{j}"), F.lit(-(j + 1))).cast("long")
@@ -385,11 +384,9 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     for i in range(num_hashes):
         a = _mix64(2 * i) % _MERSENNE31 or 1
         b = _mix64(2 * i + 1) % _MERSENNE31
-        mins.append(F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b),
-                                 F.lit(_MERSENNE31))).alias(f"m{i}"))
-    sig = base.groupBy("id").agg(*mins)
-    return sig.select(
-        "id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig"))
+        mins.append(f"min(pmod({a} * h + {b}, {_MERSENNE31}))")
+    return base.groupBy("id").agg(
+        F.expr(f"array({', '.join(mins)})").alias("sig"))
 
 
 def minhash_bands(df: DataFrame, id_col: str, text_col: str,
@@ -406,20 +403,19 @@ def minhash_bands(df: DataFrame, id_col: str, text_col: str,
     against it)."""
     rows_per_band = num_hashes // bands
 
-    def band_hash(b: int) -> Column:
+    def band_hash(b: int) -> str:
         if portable:
             return _port_fold([
-                F.element_at(F.col("sig"), b * rows_per_band + 1 + j)
+                f"element_at(sig, {b * rows_per_band + 1 + j})"
                 for j in range(rows_per_band)])
-        return F.xxhash64(F.slice(F.col("sig"),
-                                  b * rows_per_band + 1,
-                                  rows_per_band))
+        return (f"xxhash64(slice(sig, {b * rows_per_band + 1}, "
+                f"{rows_per_band}))")
 
+    hashes = ", ".join(band_hash(b) for b in range(bands))
     return (minhash_signatures(df, id_col, text_col, num_hashes, shingle_n,
                                shingles=shingles, portable=portable)
-              .select("id", F.posexplode(
-                  F.array(*[band_hash(b) for b in range(bands)]))
-                  .alias("band", "band_hash")))
+              .selectExpr("id", f"posexplode(array({hashes}))"
+                                " AS (band, band_hash)"))
 
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
@@ -901,15 +897,15 @@ def simhash_df(df: DataFrame, id_col: str, text_col: str,
     # inside the generator input measured 3x slower end-to-end
     # (5.5 s vs 1.9 s at sf0.1), so the ±1 recentering is done on the
     # aggregated side instead: vote sum v = 2*s - n > 0 ⟺ 2*s > n.
-    def _lane(j: int) -> Column:
-        lo = F.shiftright(F.col("h"), 2 * j).bitwiseAND(F.lit(1))
+    def _lane(j: int) -> str:
+        lo = f"(shiftright(h, {2 * j}) & 1)"
         if 2 * j + 1 >= bits:       # odd `bits`: last lane low half only
-            return lo.cast("long")
-        hi = F.shiftright(F.col("h"), 2 * j + 1).bitwiseAND(F.lit(1))
-        return F.shiftleft(hi, 32).bitwiseOR(lo).cast("long")
+            return f"CAST({lo} AS BIGINT)"
+        hi = f"(shiftright(h, {2 * j + 1}) & 1)"
+        return f"CAST((shiftleft({hi}, 32) | {lo}) AS BIGINT)"
 
-    lane_arr = F.array(*[_lane(j) for j in range((bits + 1) // 2)])
-    votes = (tok.select("id", F.posexplode(lane_arr).alias("j", "lane"))
+    lanes = ", ".join(_lane(j) for j in range((bits + 1) // 2))
+    votes = (tok.selectExpr("id", f"posexplode(array({lanes})) AS (j, lane)")
                 .groupBy("id", "j")
                 .agg(F.sum("lane").alias("s"), F.count(F.lit(1)).alias("n")))
     pair = F.expr(
@@ -943,11 +939,10 @@ def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
     # call rather than lineage recompute.
     sig = eager_checkpoint(
         simhash_df(df, id_col, text_col, bits, portable), "simhash_sig")
-    banded = sig.select("id", "sig", F.posexplode(F.array(*[
-                    F.shiftright(F.col("sig"), b * width)
-                     .bitwiseAND(F.lit(mask))
-                    for b in range(bands)]))
-                    .alias("band", "band_val"))
+    band_vals = ", ".join(f"(shiftright(sig, {b * width}) & {mask})"
+                          for b in range(bands))
+    banded = sig.selectExpr(
+        "id", "sig", f"posexplode(array({band_vals})) AS (band, band_val)")
     a = banded.alias("a")
     b = banded.alias("b")
     return (a.join(b, [F.col("a.band") == F.col("b.band"),
@@ -979,14 +974,16 @@ def embedding_buckets(df: DataFrame, id_col: str, vec_col: str,
     bucket bits are JVM fold expressions over literal planes — the
     frame is cheap to persist and equi-joinable, which is what the
     streaming embedding-dedup index stores."""
+    from sybil_spark.functions.vectors import ident
     from sybil_spark.operators import similarity as S
 
-    buckets = F.array(*[
-        S.random_hyperplane_bucket(F.col(vec_col), dim, num_planes,
-                                   plane_offset=t * num_planes)
-        for t in range(tables)])
-    return (df.select(F.col(id_col).alias("id"),
-                      F.posexplode(buckets).alias("table", "bucket")))
+    vec = ident(vec_col)
+    buckets = ", ".join(
+        S.random_hyperplane_bucket_sql(vec, dim, num_planes,
+                                       plane_offset=t * num_planes)
+        for t in range(tables))
+    return df.selectExpr(f"{ident(id_col)} AS id",
+                         f"posexplode(array({buckets})) AS (`table`, bucket)")
 
 
 def embedding_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
@@ -1067,7 +1064,7 @@ def embedding_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
     vb = base.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
     return (cands.join(va, "id_a").join(vb, "id_b")
                  .select("id_a", "id_b",
-                         cosine(F.col("vec_a"), F.col("vec_b")).alias("cos"))
+                         cosine("vec_a", "vec_b").alias("cos"))
                  .where(F.col("cos") >= threshold))
 
 

@@ -16,7 +16,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sybil_spark.functions.vectors import cosine_to_const, dot, norm_sq
+from sybil_spark.functions.vectors import (absmax_sql, cosine_to_const,
+                                           cosine_to_const_sql, dot_sql,
+                                           double_array, ident,
+                                           int8_quantize_sql, lit_double,
+                                           norm_sq, norm_sq_sql)
 from sybil_spark.operators._util import spread
 from sybil_spark.sources import commit
 
@@ -28,7 +32,7 @@ def brute_force_topk(df: DataFrame, vec_col: str, query: list[float],
 
     Plan shape: scan → project(cosine) → TakeOrderedAndProject(k).
     No shuffle, no UDF; scales linearly in rows and executors."""
-    sim = cosine_to_const(F.col(vec_col), query).alias(sim_col)
+    sim = cosine_to_const(vec_col, query).alias(sim_col)
     return (df.select(F.col(id_col), sim)
               .orderBy(F.desc(sim_col), F.col(id_col).asc())
               .limit(k))
@@ -48,7 +52,19 @@ def _plane(dim: int, plane_idx: int) -> list[float]:
     return out
 
 
-def random_hyperplane_bucket(vec_col: Column, dim: int,
+def random_hyperplane_bucket_sql(vec: str, dim: int,
+                                 num_planes: int = 8,
+                                 plane_offset: int = 0) -> str:
+    """SQL twin of random_hyperplane_bucket over a vector fragment."""
+    bucket = "CAST(0 AS BIGINT)"
+    for p in range(num_planes):
+        plane = double_array(_plane(dim, plane_offset + p))
+        bucket = (f"({bucket} | CASE WHEN (({dot_sql(vec, plane)}) > 0) "
+                  f"THEN shiftleft(CAST(1 AS BIGINT), {p}) ELSE 0 END)")
+    return bucket
+
+
+def random_hyperplane_bucket(vec_col: str, dim: int,
                              num_planes: int = 8,
                              plane_offset: int = 0) -> Column:
     """LSH bucket id in [0, 2^num_planes): bit p = sign(vec · plane_p).
@@ -58,13 +74,8 @@ def random_hyperplane_bucket(vec_col: Column, dim: int,
     independent plane family (planes plane_offset..plane_offset+n-1),
     the knob behind OR-amplification: T independent tables use
     offsets 0, n, 2n, ... so their bucketings are uncorrelated."""
-    bucket = F.lit(0).cast("long")
-    for p in range(num_planes):
-        plane = F.lit(_plane(dim, plane_offset + p)).cast("array<double>")
-        bit = F.when(dot(vec_col, plane) > 0,
-                     F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0))
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
+    return F.expr(random_hyperplane_bucket_sql(ident(vec_col), dim,
+                                               num_planes, plane_offset))
 
 
 def lsh_topk(df: DataFrame, vec_col: str, query: list[float], k: int = 10,
@@ -82,7 +93,7 @@ def lsh_topk(df: DataFrame, vec_col: str, query: list[float], k: int = 10,
         if sum(float(a) * b for a, b in zip(query, plane)) > 0:
             qb |= 1 << p
     bucketed = df.withColumn(
-        "__bucket", random_hyperplane_bucket(F.col(vec_col), dim, num_planes))
+        "__bucket", random_hyperplane_bucket(vec_col, dim, num_planes))
     return brute_force_topk(bucketed.where(F.col("__bucket") == qb),
                             vec_col, query, k, id_col)
 
@@ -131,12 +142,21 @@ def ivf_assign(df: DataFrame, vec_col: str, centroids: list[list[float]],
     struct ordering compares fields left-to-right, so equal sims pick
     the smaller index. No shuffle; at ingest the table is then
     *written* partitioned/bucketed by this column."""
-    sims = F.array(*[
-        F.struct(cosine_to_const(F.col(vec_col), c).alias("s"),
-                 F.lit(-i).alias("ni"))
-        for i, c in enumerate(centroids)])
-    m = F.array_max(sims)
-    return df.withColumn(cluster_col, (-m["ni"]).cast("int"))
+    cluster, _ = _ivf_argmax_sql(ident(vec_col), centroids)
+    return df.withColumn(cluster_col, F.expr(cluster))
+
+
+def _ivf_argmax_sql(vec: str, centroids: list[list[float]]
+                    ) -> tuple[str, str]:
+    """(cluster, cosine) SQL of each row's max-cosine centroid — the
+    one argmax ivf_assign and cluster_balance_report share: one fold
+    cosine per centroid, array_max over (s, ni = -index) structs,
+    whose field-by-field ordering sends equal sims to the smaller
+    index."""
+    m = "array_max(array(" + ", ".join(
+        f"struct({cosine_to_const_sql(vec, c)} AS s, {-i} AS ni)"
+        for i, c in enumerate(centroids)) + "))"
+    return f"CAST(-(({m}).ni) AS INT)", f"({m}).s"
 
 
 def ivf_assign_batch(df: DataFrame, vec_col: str,
@@ -461,7 +481,7 @@ def _prepare_blocks(df: DataFrame, id_col: str, vec_col: str,
             dim = df.select(F.size(F.col(vec_col))).first()[0]
             planes = _auto_planes(n_rows, block_rows)
             base = base.withColumn(
-                "grp", random_hyperplane_bucket(F.col("vec"), dim, planes))
+                "grp", random_hyperplane_bucket("vec", dim, planes))
             n_groups = 1 << planes
         else:
             n_groups = 1
@@ -572,7 +592,7 @@ def pairwise_topk(df: DataFrame, vec_col: str, id_col: str = "vec_id",
     vb = base.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
     return (cands.join(va, "id_a").join(vb, "id_b")
                  .select("id_a", "id_b",
-                         cosine(F.col("vec_a"), F.col("vec_b")).alias("cos"))
+                         cosine("vec_a", "vec_b").alias("cos"))
                  .orderBy(F.desc("cos"), F.col("id_a").asc(),
                           F.col("id_b").asc())
                  .limit(k))
@@ -674,8 +694,7 @@ def cross_topk(queries: DataFrame, corpus: DataFrame, vec_col: str,
     rescored = (cands.join(corpus.select(id_col, vec_col), id_col)
                      .join(F.broadcast(qdf), "q_id")
                      .select("q_id", id_col,
-                             cosine(F.col("__qv"),
-                                    F.col(vec_col)).alias("cos")))
+                             cosine("__qv", vec_col).alias("cos")))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"),
                                            F.col(id_col).asc())
     return (rescored.withColumn("__rn", F.row_number().over(w))
@@ -739,8 +758,7 @@ def cross_topk_ivf(spark, queries: DataFrame, index_path: str,
     scored = (vecs.join(F.broadcast(probes), "cluster")
                   .join(F.broadcast(qdf), "q_id")
                   .select("q_id", id_col,
-                          cosine(F.col("__qv"),
-                                 F.col(vec_col)).alias("cos")))
+                          cosine("__qv", vec_col).alias("cos")))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"),
                                            F.col(id_col).asc())
     return (scored.withColumn("__rn", F.row_number().over(w))
@@ -764,12 +782,11 @@ def quantize_int8(df: DataFrame, vec_col: str,
     scale-invariant — feed similarity search directly with no
     dequantization at all. Pure JVM higher-order functions; one scan,
     no shuffle, no UDF."""
-    from sybil_spark.functions.vectors import absmax, int8_quantize
-    v = F.col(vec_col)
-    return (df.select(F.col(id_col).alias("id"),
-                      (absmax(v) / F.lit(127.0)).alias("scale"), v)
-              .select("id", "scale",
-                      int8_quantize(v, F.col("scale")).alias("qvec")))
+    v = ident(vec_col)
+    return (df.selectExpr(f"{ident(id_col)} AS id",
+                          f"({absmax_sql(v)}) / 127.0D AS scale", v)
+              .selectExpr("id", "scale",
+                          f"{int8_quantize_sql(v, 'scale')} AS qvec"))
 
 
 def quantized_topk(df: DataFrame, vec_col: str, k: int = 10,
@@ -793,7 +810,7 @@ def quantized_topk(df: DataFrame, vec_col: str, k: int = 10,
     if qrow is None:
         raise ValueError(f"query_id {query_id} not found")
     return (q.select(F.col("id").alias(id_col),
-                     cosine_to_const(F.col("qvec"),
+                     cosine_to_const("qvec",
                                      [float(c) for c in qrow[0]])
                      .alias("qcos"))
              .orderBy(F.desc("qcos"), F.col(id_col).asc())
@@ -944,23 +961,22 @@ def hybrid_index_topk(spark, bm25_index_path: str, ivf_index_path: str,
 # product quantization (Jegou et al. 2011) — compressed ANN serving
 # ---------------------------------------------------------------------------
 
-def _l2sq_expr(a, c: list[float]):
-    """L2² of an array column slice against a constant codeword,
+def _l2sq_sql(a: str, c: list[float]) -> str:
+    """L2² of an array SQL fragment against a constant codeword,
     written in DOT-PRODUCT FORM — dot(a,a) - 2·dot(a,c) + dot(c,c),
     each dot a sequential index-order fold — so the value is
     bit-identical to oracle SQL composing list_dot_product the same
     way (the vectors.py contract). The c·c term is a Python-summed
     literal: same doubles, same left-to-right order."""
-    from sybil_spark.functions.vectors import dot, norm_sq
-    cl = F.lit([float(x) for x in c]).cast("array<double>")
     cc = 0.0
     for x in c:
         cc = cc + float(x) * float(x)
-    return norm_sq(a) - F.lit(2.0) * dot(a, cl) + F.lit(cc)
+    return (f"(({norm_sq_sql(a)}) - (2.0D * ({dot_sql(a, double_array(c))})))"
+            f" + {lit_double(cc)}")
 
 
 def _l2sq_py(a: list[float], c: list[float]) -> float:
-    """Driver-side twin of _l2sq_expr (ADC lookup tables): identical
+    """Driver-side twin of _l2sq_sql (ADC lookup tables): identical
     dot-form arithmetic, identical fold order."""
     aa = 0.0
     ac = 0.0
@@ -1008,13 +1024,11 @@ def pq_encode(df: DataFrame, vec_col: str,
     codes = []
     for s, cb in enumerate(codebooks):
         sub = len(cb[0])
-        sl = F.slice(F.col(vec_col), s * sub + 1, sub)
-        dists = F.array(*[
-            F.struct(_l2sq_expr(sl, c).alias("d"),
-                     F.lit(j).alias("j"))
-            for j, c in enumerate(cb)])
-        codes.append(F.array_min(dists)["j"])
-    return df.withColumn(code_col, F.array(*codes))
+        sl = f"slice({ident(vec_col)}, {s * sub + 1}, {sub})"
+        dists = ", ".join(f"struct({_l2sq_sql(sl, c)} AS d, {j} AS j)"
+                          for j, c in enumerate(cb))
+        codes.append(f"(array_min(array({dists}))).j")
+    return df.withColumn(code_col, F.expr(f"array({', '.join(codes)})"))
 
 
 def pq_topk(df_codes: DataFrame, query: list[float],
@@ -1040,12 +1054,10 @@ def pq_topk(df_codes: DataFrame, query: list[float],
     dist = None
     for s, cb in enumerate(codebooks):
         qs = [float(x) for x in query[s * sub:(s + 1) * sub]]
-        lut = F.lit([_l2sq_py(qs, c) for c in cb]) \
-            .cast("array<double>")
-        term = F.element_at(
-            lut, F.element_at(F.col(code_col), s + 1) + 1)
-        dist = term if dist is None else dist + term
-    return (df_codes.withColumn(dist_col, dist)
+        lut = double_array([_l2sq_py(qs, c) for c in cb])
+        term = f"element_at({lut}, element_at({ident(code_col)}, {s + 1}) + 1)"
+        dist = term if dist is None else f"({dist} + {term})"
+    return (df_codes.withColumn(dist_col, F.expr(dist))
             .select(id_col, dist_col)
             .orderBy(F.asc(dist_col), F.asc(id_col))
             .limit(k))
@@ -1408,8 +1420,7 @@ def ivf_recall_report(queries: DataFrame, corpus: DataFrame,
     scored = (assigned.join(F.broadcast(probes), "cluster")
                       .join(F.broadcast(qdf), "q_id")
                       .select("q_id", F.col(id_col).alias("__iid"),
-                              cosine(F.col("__qv"),
-                                     F.col(vec_col)).alias("cos")))
+                              cosine("__qv", vec_col).alias("cos")))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"),
                                            F.asc("__iid"))
     ivf = (scored.withColumn("__rn", F.row_number().over(w))
@@ -1481,8 +1492,7 @@ def ivf_tune(queries: DataFrame, corpus: DataFrame, vec_col: str,
                       .join(F.broadcast(qdf), "q_id")
                       .select("q_id", F.col(id_col).alias("__iid"),
                               "prank",
-                              cosine(F.col("__qv"),
-                                     F.col(vec_col)).alias("cos")))
+                              cosine("__qv", vec_col).alias("cos")))
     ex = scored.withColumn(
         "nprobe", F.explode(F.sequence(F.col("prank"),
                                        F.lit(nlist))))
@@ -1539,13 +1549,9 @@ def cluster_balance_report(df: DataFrame, vec_col: str,
     carries a vector. min/max of IEEE doubles are order-independent,
     so the report is bit-reproducible by a SQL oracle (counts are
     integers; the cosines use the sequential-fold definition)."""
-    sims = F.array(*[
-        F.struct(cosine_to_const(F.col(vec_col), c).alias("s"),
-                 F.lit(-i).alias("ni"))
-        for i, c in enumerate(centroids)])
-    m = F.array_max(sims)
-    assigned = df.select((-m["ni"]).cast("int").alias(cluster_col),
-                         m["s"].alias("__cos"))
+    cluster, cos = _ivf_argmax_sql(ident(vec_col), centroids)
+    assigned = df.selectExpr(f"{cluster} AS {ident(cluster_col)}",
+                             f"{cos} AS __cos")
     return (assigned.groupBy(cluster_col)
             .agg(F.count(F.lit(1)).alias("n_vecs"),
                  F.min("__cos").alias("min_cos"),
@@ -1582,7 +1588,7 @@ def norm_outlier_report(df: DataFrame, vec_col: str,
     rides into scan #2's filter as plain literals — a pure map. With
     the corpus cached the two scans share one materialization;
     nothing wide ever shuffles."""
-    nq = norm_sq(F.col(vec_col)).cast("decimal(38,6)")
+    nq = norm_sq(vec_col).cast("decimal(38,6)")
     e = df.select(F.col(id_col), nq.alias("__nq"))
     mean_c = (F.col("__s1").cast("string").cast("double")
               / F.col("__n").cast("double"))

@@ -739,7 +739,7 @@ def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
         vb = vecs.select(F.col("id").alias("id_keep"),
                          F.col("vec").alias("__vb"))
         losers = (cand.join(va, "id").join(vb, "id_keep")
-                      .where(cosine(F.col("__va"), F.col("__vb"))
+                      .where(cosine("__va", "__vb")
                              >= threshold)
                       .select("id").distinct())
         dropped = losers
@@ -762,7 +762,7 @@ def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
                         .join(idx_v.select(
                             F.col("id").alias("old_id"),
                             F.col("vec").alias("__vb")), "old_id")
-                        .where(cosine(F.col("__va"), F.col("__vb"))
+                        .where(cosine("__va", "__vb")
                                >= threshold)
                         .select("id").distinct())
             keep = keep.join(seen, "id", "left_anti")

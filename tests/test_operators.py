@@ -131,9 +131,9 @@ def test_simhash(spark, docs):
 
 def test_vector_functions(spark):
     d = spark.createDataFrame([Row(a=[1.0, 2.0, 3.0], b=[4.0, 5.0, 6.0])])
-    r = d.select(dot(F.col("a"), F.col("b")).alias("d"),
-                 norm(F.col("a")).alias("n"),
-                 cosine(F.col("a"), F.col("b")).alias("c")).collect()[0]
+    r = d.select(dot("a", "b").alias("d"),
+                 norm("a").alias("n"),
+                 cosine("a", "b").alias("c")).collect()[0]
     assert r["d"] == 32.0
     assert r["n"] == pytest.approx(math.sqrt(14))
     assert r["c"] == pytest.approx(32 / (math.sqrt(14) * math.sqrt(77)))
@@ -438,7 +438,7 @@ def test_embedding_dup_block_on(spark, emb):
     co-bucketed rows must return exactly the plain-variant pairs that
     share a bucket — and colinear vectors always share one."""
     bucketed = emb.withColumn(
-        "bkt", similarity.random_hyperplane_bucket(F.col("embedding"), 16, 4))
+        "bkt", similarity.random_hyperplane_bucket("embedding", 16, 4))
     got = {(r["id_a"], r["id_b"]) for r in
            dedup.embedding_dup_pairs(bucketed, "vec_id", "embedding",
                                      threshold=0.999,

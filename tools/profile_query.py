@@ -5,7 +5,10 @@ Runs the query once (plus an optional warmup), then prints every job
 the query ran with its wall time and stage task-time totals, via the
 status API listener data. Plan-time jobs (skew probes, localCheckpoint
 materializations, 1-row stats collects) show up as separate jobs —
-exactly the breakdown the bench number hides.
+exactly the breakdown the bench number hides. Each rep also prints
+its build time (the `QUERIES[name](spark, sf_dir)` call, before the
+collect) and the py4j round trips that build made: driver chatter
+that no job list shows.
 
 Usage: python tools/profile_query.py [sf_dir] <query> [--reps N]
 """
@@ -15,8 +18,39 @@ from __future__ import annotations
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+@contextmanager
+def py4j_round_trips():
+    """Yield a one-element list counting the py4j commands sent inside
+    the block, memory (object-release) commands excluded: when those
+    fire depends on the garbage collector, not on the code measured.
+    It holds None when py4j has no ClientServerConnection.send_command
+    to hook, and stays 0 when the gateway uses another connection
+    class."""
+    try:
+        from py4j.clientserver import ClientServerConnection as conn
+        from py4j.protocol import MEMORY_COMMAND_NAME
+    except ImportError:
+        conn = None
+    if not hasattr(conn, "send_command"):
+        yield [None]
+        return
+    n = [0]
+    orig = conn.send_command
+
+    def counted(self, command):
+        n[0] += not command.startswith(MEMORY_COMMAND_NAME)
+        return orig(self, command)
+
+    conn.send_command = counted
+    try:
+        yield n
+    finally:
+        conn.send_command = orig
 
 
 def main() -> None:
@@ -36,22 +70,30 @@ def main() -> None:
 
     spark = get_spark("profile", extra_conf={"spark.ui.enabled": "false"})
     sc = spark.sparkContext
-    # same warmups as bench.py so the first profiled rep is steady-state
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    # same warmups as bench.py so the first profiled rep is
+    # steady-state; read whichever table the dir has (perfbench's
+    # generated dirs have no region.parquet)
+    tables = sorted(f for f in os.listdir(sf_dir) if f.endswith(".parquet"))
+    if tables:
+        spark.read.parquet(os.path.join(sf_dir, tables[0])).count()
     (spark.range(8).repartition(8)
           .mapInPandas(lambda it: (pdf for pdf in it), "id long").count())
 
     fn = QUERIES[name]
     for rep in range(reps):
-        t0 = time.time()
         before_jobs = sc._jsc.sc().statusTracker().getJobIdsForGroup(None)
         sc.setJobDescription(f"{name} rep{rep}")
-        fn(spark, sf_dir).collect()
+        t0 = time.time()
+        with py4j_round_trips() as calls:
+            df = fn(spark, sf_dir)
+        build = time.time() - t0
+        df.collect()
         wall = time.time() - t0
         unpersist_unscoped()
         tracker = sc._jsc.sc().statusTracker()
         jobs = sorted(set(tracker.getJobIdsForGroup(None)) - set(before_jobs))
-        print(f"== {name} rep {rep}: wall {wall:.3f}s, {len(jobs)} jobs ==")
+        print(f"== {name} rep {rep}: wall {wall:.3f}s, build {build:.3f}s"
+              f" ({calls[0]} py4j round trips), {len(jobs)} jobs ==")
         store = sc._jsc.sc().statusStore()
         jlist = store.jobsList(None)
         n = jlist.size()
