@@ -1687,17 +1687,15 @@ def _bpe_apply_oracle(rules) -> str:
 
 @_q("bpe_apply", _bpe_apply_oracle(_BPE_APPLY_RULES))
 def q_bpe_apply(spark, sf):
-    """Production tokenizer apply (operators/bpe.bpe_apply, mode
-    'udf' — the broadcast-rules + Arrow-batched encode path a
-    32k-rule tokenizer needs; the fold path is pinned separately by
-    tests). Fixed 10-rule tokenizer over documents; full value
+    """Production tokenizer apply (operators/bpe.bpe_apply — the
+    broadcast-rules + Arrow-batched encode every tokenizer family
+    shares). Fixed 10-rule tokenizer over documents; full value
     check: the piece sequence itself (chr(31)-joined) plus the
     piece count, both replicated in DuckDB via the standin-char
     replace chain."""
     from sybil_spark.operators import bpe
     d = _t(spark, sf, "documents")
-    enc = bpe.bpe_apply(d, "doc_id", "text", _BPE_APPLY_RULES,
-                        mode="udf")
+    enc = bpe.bpe_apply(d, "doc_id", "text", _BPE_APPLY_RULES)
     return (enc.select(
         "doc_id",
         F.array_join("pieces", "\x1f").alias("pieces_str"),
@@ -6556,7 +6554,12 @@ def q_top_ngrams(spark, sf):
 # (b) queries whose implementation or oracle changed this round. The rest
 # keep registration order. Rotate this list each round.
 _DRIVER_FIRST = [
-    # (b) implementation changed: every query whose plan goes through
+    # (b) implementation changed: every tokenizer apply now runs the
+    # one shared Arrow encode UDF (tokenizer_store._encode_pieces);
+    # bpe_fertility left the JVM fold chain for it:
+    "bpe_apply", "bpe_fertility", "unigram_apply", "unigram_fertility",
+    "wordpiece_apply", "wordpiece_fertility", "wordpiece_unk_rate",
+    # then the previous head — every query whose plan goes through
     # a wide expression builder now written as one SQL string (the
     # vector folds, LSH planes, IVF argmax, PQ encode/LUT, MinHash
     # signatures/bands, the portable shingle fold, SimHash lanes and
@@ -6568,7 +6571,7 @@ _DRIVER_FIRST = [
     "quantize_topk", "ann_pairs_topk", "cross_topk", "lsh_topk",
     "ivf_recall", "ivf_tuned", "pq_topk", "pq_topk_trained",
     "cluster_balance", "norm_outliers",
-    # then the previous head — the persisted BM25 and IVF-PQ indexes
+    # then the head before that — the persisted BM25 and IVF-PQ indexes
     # write, list and swap through sources/commit:
     "bm25_index_search", "phrase_index_topk", "proximity_topk",
     # the query builder's ops share one scan prelude, one filter
@@ -6578,7 +6581,7 @@ _DRIVER_FIRST = [
     "hist", "group_hist", "time_hist", "hist_summary",
     "weighted_hist_summary", "distinct_limit", "samples",
     "time_filter_aligned", "cached_query",
-    # and the head before that — bm25_index_add_search's
+    # and the older heads — bm25_index_add_search's
     # bm25_index_add reads its compaction thresholds from the ingest
     # constants (its threshold keywords are gone); span_dedup /
     # exact_substr (text-keyed window plan only), weighted_percentile
@@ -6589,11 +6592,10 @@ _DRIVER_FIRST = [
     "bm25_index_add_search",
     "span_dedup", "exact_substr", "weighted_percentile", "tfidf_terms",
     "bm25_search", "cluster_splits",
-    # (a) The 11 queries that landed after the 50-row window filled
-    # and have the fewest official driver rows:
+    # (a) the rest of the 11 queries that landed after the 50-row
+    # window filled and have the fewest official driver rows:
     "boolean_topk", "unigram_seed", "collocations_log",
-    "wordpiece_pairs", "wordpiece_apply", "wordpiece_fertility",
-    "wordpiece_unk_rate", "pagerank_events", "ppr_events",
+    "wordpiece_pairs", "pagerank_events", "ppr_events",
     "ngram_novelty", "top_ngrams",
     # (c) remaining slots: the rest of the near-dup family and the
     # freshness rotation, oldest driver rows first:

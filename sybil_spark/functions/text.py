@@ -22,7 +22,7 @@ BPE_SPLIT_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 def tokens(col: Column, pattern: str | None = None) -> Column:
     """Whitespace tokens by default; regex *matches* when a pattern is
-    given (BPE-ish pre-tokenization). Driver-side twin:
+    given (BPE-ish pre-tokenization). Python twin:
     `tokenize_str` — change BOTH together."""
     if pattern is None:
         return F.split(col, " ")
@@ -30,13 +30,16 @@ def tokens(col: Column, pattern: str | None = None) -> Column:
 
 
 def tokenize_str(text: str, pattern: str | None = None) -> list[str]:
-    """Driver-side twin of `tokens()` for the handful of places that
-    tokenize a Python string on the driver (index-serving query
-    paths: bm25_index_topk, hybrid_index_topk). THE single
+    """Python twin of `tokens()` for every place that tokenizes a
+    Python string: on the driver (index-serving query paths:
+    bm25_index_topk, hybrid_index_topk) and on the executors (the
+    one tokenizer-apply UDF, tokenizer_store._encode_pieces, that
+    bpe_apply / unigram_apply / wordpiece_apply run). THE single
     definition those callers share — routing them here is what keeps
-    index-served results bit-equal to the ad-hoc corpus operators if
-    the tokenizer ever changes (test_tokens_column_matches_driver
-    pins the column/driver agreement)."""
+    index-served results and tokenizer pieces bit-equal to the
+    column operators if the tokenizer ever changes
+    (test_tokens_column_matches_driver pins the column/python
+    agreement)."""
     import re
     if pattern is None:
         return text.split(" ")

@@ -20,9 +20,10 @@ Scale shape:
   zero-shuffle fold that rewrites symbol arrays in place. Lineage is
   truncated per iteration with localCheckpoint, the same trick
   components() uses to keep round time constant.
-- `bpe_encode`: pure chained fold expressions over each document's
-  words — zero shuffle, zero UDF; cost is O(tokens x num_merges)
-  map-side work that scales embarrassingly with executors.
+- `bpe_apply`: the rules broadcast once per executor into the one
+  Arrow-batched tokenizer-apply UDF (tokenizer_store._encode_pieces)
+  — zero shuffle, one plan node however many rules; each distinct
+  word per batch is encoded once, one greedy pass per rule.
 
 Symbols are plain strings (no end-of-word marker): merges never
 cross word boundaries because pairs are generated within each word's
@@ -33,12 +34,11 @@ engine — the property the python-reference fuzz test pins.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves the pandas_udf type hints
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sybil_spark.functions.text import tokens
+from sybil_spark.operators.tokenizer_store import _encode_pieces
 
 
 def word_counts(df: DataFrame, text_col: str,
@@ -73,7 +73,9 @@ def _merge_fold(syms: Column, left: str, right: str,
     non-overlapping occurrences — a single codegen fold, no UDF.
     "aaa" under (a,a) becomes [aa, a]: after a merge the new symbol
     does not re-pair with the rule inside the same pass, matching
-    the reference implementation's scan."""
+    the reference implementation's scan. This is the trainers'
+    vocabulary rewrite (bpe_train, wordpiece_train); applying a
+    finished tokenizer goes through `_encode_word` instead."""
     if merged is None:
         merged = left + right
     init = F.array().cast("array<string>")
@@ -253,53 +255,16 @@ def merges_df(spark, merges: list[tuple]) -> DataFrame:
         [(int(a), b, c, int(d)) for a, b, c, d in merges], schema)
 
 
-def bpe_encode(df: DataFrame, id_col: str, text_col: str,
-               merges: list[tuple],
-               pattern: str | None = None,
-               pieces_col: str = "pieces",
-               keep_cols: list[str] | None = None) -> DataFrame:
-    """Apply learned merges to every document: each word becomes its
-    BPE symbol sequence, rules applied in learned order (rank order
-    is the priority order — the classic apply).
-
-    Output: (id_col, pieces array<string>, n_pieces). Zero shuffle:
-    the whole encode is nested fold expressions evaluated map-side;
-    num_merges fold passes per word, each a codegen loop. For large
-    rule sets (32k merges) this chaining would blow the expression
-    tree — that regime wants the rules broadcast into a Pandas UDF
-    instead; at the tens-of-merges scale this stays JVM-side."""
-    words = F.filter(tokens(F.col(text_col), pattern),
-                     lambda w: w != "")
-    syms = F.transform(words, lambda w: F.split(w, ""))
-    def _apply_rule(left: str, right: str):
-        # closure factory, not lambda default-args: PySpark counts a
-        # lambda's parameters (defaults included) to pick the HOF
-        # arity, so `lambda s, _l=left: ...` binds as a 3-arg lambda.
-        return lambda s: _merge_fold(s, left, right)
-
-    for _, l, r, _f in sorted(merges):
-        syms = F.transform(syms, _apply_rule(l, r))
-    pieces = F.flatten(syms)
-    extra = [F.col(c) for c in (keep_cols or [])]
-    return df.select(F.col(id_col), *extra, pieces.alias(pieces_col)) \
-             .withColumn("n_pieces", F.size(F.col(pieces_col)))
-
-
-def _encode_word(word: str, rules: list[tuple],
-                 cache: dict) -> list[str]:
+def _encode_word(word: str, rules: list[tuple]) -> list[str]:
     """Sennrich apply for ONE word, python-side: one greedy
     left-to-right non-overlapping pass PER RULE in rank order —
-    bit-equal to `_merge_fold` chaining (and deliberately NOT the
-    GPT-2 min-rank loop, which re-merges pairs a later rule
-    re-creates and so diverges from single-pass semantics on
-    adversarial rule sets). Two prunes keep 32k-rule cost sane:
-    a per-batch cache over distinct words (Zipf: most tokens are
-    repeats) and a symbol-set membership check that skips rules
-    whose sides can't occur (recomputed only when a merge fired —
-    for a short word almost every rule is a set-miss)."""
-    hit = cache.get(word)
-    if hit is not None:
-        return hit
+    the same scan as `_merge_fold` (and deliberately NOT the GPT-2
+    min-rank loop, which re-merges pairs a later rule re-creates and
+    so diverges from single-pass semantics on adversarial rule
+    sets). A symbol-set membership check skips rules whose sides
+    can't occur (recomputed only when a merge fired — for a short
+    word almost every rule is a set-miss), which keeps 32k-rule cost
+    sane; repeats are cached per batch by the caller."""
     syms = list(word)
     present = set(syms)
     for l, r, merged in rules:
@@ -319,7 +284,6 @@ def _encode_word(word: str, rules: list[tuple],
         if fired:
             syms = out
             present = set(syms)
-    cache[word] = syms
     return syms
 
 
@@ -327,78 +291,33 @@ def bpe_apply(df: DataFrame, id_col: str, text_col: str,
               merges: list[tuple],
               pattern: str | None = None,
               pieces_col: str = "pieces",
-              mode: str = "auto",
-              fold_max_rules: int = 48,
               keep_cols: list[str] | None = None) -> DataFrame:
-    """Production tokenizer apply — encodes every document under the
-    learned merges, auto-selecting the execution strategy the way
-    span_dedup selects its keying:
+    """Production tokenizer apply: encodes every document under the
+    learned merges, rules applied in learned order (rank order is the
+    priority order — the classic apply). Output: (id_col, pieces
+    array<string>, n_pieces).
 
-    - `fold` (<= fold_max_rules rules): `bpe_encode`'s chained JVM
-      fold expressions — zero Python, zero shuffle, ideal for small
-      rule sets, but the expression tree grows one nested fold per
-      rule and Janino falls over long before 32k.
-    - `udf` (above the crossover): the merge table is broadcast once
-      per executor (spark.sparkContext.broadcast — a 32k-rule
-      tokenizer is ~1 MB) and applied by ONE Arrow-batched pandas
-      UDF: per Arrow batch, python tokenizes with the `tokenize_str`
-      twin of `tokens()` and encodes each DISTINCT word once
-      (Zipf-cached), one greedy pass per rule with symbol-set
-      pruning. The scan stays a single ArrowEvalPython node however
-      many rules there are (plan-pinned in tests) — rule count
-      changes the closure, not the plan.
+    The merge table is broadcast once per executor (a 32k-rule
+    tokenizer is ~1 MB) and applied by the one tokenizer-apply UDF
+    (tokenizer_store._encode_pieces): each distinct word of an Arrow
+    batch is encoded once by `_encode_word`. The scan stays a single
+    ArrowEvalPython node however many rules there are (plan-pinned
+    in tests) — rule count changes the broadcast, not the plan. Bit-
+    equal to the python Sennrich reference (hypothesis-fuzzed).
 
-    Both paths are bit-equal to the python Sennrich reference
-    (hypothesis-fuzzed) and to each other. Output matches
-    bpe_encode: (id_col, pieces array<string>, n_pieces).
-
-    100 TB shape: map-only either way — no shuffle, no driver
-    round-trips; the UDF path's per-executor state is the broadcast
-    rule list plus a per-batch word cache."""
-    if mode not in ("auto", "fold", "udf"):
-        raise ValueError(f"bpe_apply: unknown mode {mode!r}")
-    if mode == "fold" or (mode == "auto" and
-                          len(merges) <= fold_max_rules):
-        return bpe_encode(df, id_col, text_col, merges,
+    100 TB shape: map-only — no shuffle, no driver round-trips; the
+    per-executor state is the broadcast rule list plus a per-batch
+    word cache."""
+    rules = [(l, r, l + r) for _, l, r, _f in sorted(merges)]
+    bc = df.sparkSession.sparkContext.broadcast((rules,))
+    return _encode_pieces(df, id_col, text_col, bc, _encode_word,
                           pattern=pattern, pieces_col=pieces_col,
                           keep_cols=keep_cols)
-
-    from pyspark.sql.functions import pandas_udf
-
-    rules = [(l, r, l + r) for _, l, r, _f in sorted(merges)]
-    bc = df.sparkSession.sparkContext.broadcast(rules)
-    pat = pattern
-
-    @pandas_udf("array<string>")
-    def encode_series(texts: pd.Series) -> pd.Series:
-        import re
-        rls = bc.value
-        cache: dict = {}
-        findall = re.compile(pat).findall if pat is not None else None
-
-        def enc(t):
-            if t is None:
-                return None
-            words = findall(t) if findall is not None \
-                else t.split(" ")          # tokenize_str twin
-            out: list[str] = []
-            for w in words:
-                if w:
-                    out.extend(_encode_word(w, rls, cache))
-            return out
-
-        return texts.map(enc)
-
-    extra = [F.col(c) for c in (keep_cols or [])]
-    return (df.select(F.col(id_col), *extra,
-                      encode_series(F.col(text_col)).alias(pieces_col))
-              .withColumn("n_pieces", F.size(F.col(pieces_col))))
 
 
 def fertility_report(df: DataFrame, id_col: str, text_col: str,
                      merges: list[tuple] | None, group_col: str,
                      pattern: str | None = None,
-                     mode: str = "auto",
                      unigram_vocab: list[tuple] | None = None,
                      wordpiece_vocab: list[str] | None = None
                      ) -> DataFrame:
@@ -418,8 +337,9 @@ def fertility_report(df: DataFrame, id_col: str, text_col: str,
     (pieces, n_pieces) output contract, so the report is
     tokenizer-agnostic (exactly one of the three must be given).
 
-    Composition: the chosen apply with keep_cols riding group + text
-    through the encode, so the WHOLE report is one scan — a map
+    Composition: the family's apply — all three run the one
+    tokenizer-apply UDF — with keep_cols riding group + text through
+    the encode, so the WHOLE report is one scan — a map
     (encode + token_count) straight into the |groups|-row integer
     aggregation, no id-join, nothing wide past the map-side partial
     agg. Fertility divides the two exact bigint sums in double —
@@ -443,7 +363,7 @@ def fertility_report(df: DataFrame, id_col: str, text_col: str,
                               keep_cols=[group_col, text_col])
     else:
         enc = bpe_apply(df, id_col, text_col, merges, pattern=pattern,
-                        mode=mode, keep_cols=[group_col, text_col])
+                        keep_cols=[group_col, text_col])
     nt = token_count(F.col(text_col), pattern).cast("long")
     return (enc.select(F.col(group_col), nt.alias("__nt"),
                        F.col("n_pieces").cast("long").alias("__np"))

@@ -12,21 +12,74 @@ load it.
 
 The artifact is deliberately a single small JSON file, not a
 dataset: even a 32k-merge BPE or a 100k-piece vocabulary is ~1-3 MB —
-driver-loadable and broadcastable, which is exactly how the apply
-paths consume it. `apply_tokenizer` dispatches a loaded (or given)
-artifact to the right encoder, so downstream consumers can take a
-PATH where they now take family-specific rule lists."""
+driver-loadable and broadcastable, which is exactly how the one
+apply path (`_encode_pieces`) consumes it. `apply_tokenizer`
+dispatches a loaded (or given) artifact to the right encoder, so
+downstream consumers can take a PATH where they now take
+family-specific rule lists."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
 
+import pandas as pd  # noqa: F401 — resolves the pandas_udf type hints
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+
+from sybil_spark.functions.text import tokenize_str
 from sybil_spark.sources import commit
 
 #: bump when the payload shapes change; loaders refuse newer formats
 TOKENIZER_FORMAT = 1
 
 _KINDS = ("bpe", "unigram", "wordpiece")
+
+
+def _encode_pieces(df: DataFrame, id_col: str, text_col: str, bc,
+                   encode_word: Callable[..., list],
+                   pattern: str | None = None,
+                   pieces_col: str = "pieces",
+                   keep_cols: list | None = None) -> DataFrame:
+    """The one tokenizer-apply path: (id_col, *keep_cols, pieces
+    array<string>, n_pieces) over `df`, shared by bpe_apply,
+    unigram_apply, wordpiece_apply and unigram_train's e-step.
+
+    ONE Arrow-batched pandas UDF — a single ArrowEvalPython node over
+    the scan however large the tokenizer (its size changes the
+    broadcast, never the plan). Per Arrow batch, each text is split
+    by `functions.text.tokenize_str` (the same splitter as the
+    `tokens()` column), empty words are dropped, and each DISTINCT
+    word is encoded once as `encode_word(word, *bc.value)` (Zipf:
+    most tokens are repeats) — the broadcast holds the tuple of the
+    encoder's remaining arguments; the caller makes it and owns its
+    lifetime. NULL text gives NULL pieces. Zero shuffle,
+    map-only: the 100 TB cost is executor-linear."""
+    @pandas_udf("array<string>")
+    def encode_series(texts: pd.Series) -> pd.Series:
+        args = bc.value
+        cache: dict = {}
+
+        def enc(t):
+            if t is None:
+                return None
+            out: list[str] = []
+            for w in tokenize_str(t, pattern):
+                if not w:
+                    continue
+                hit = cache.get(w)
+                if hit is None:
+                    hit = cache[w] = encode_word(w, *args)
+                out.extend(hit)
+            return out
+
+        return texts.map(enc)
+
+    extra = [F.col(c) for c in (keep_cols or [])]
+    return (df.select(F.col(id_col), *extra,
+                      encode_series(F.col(text_col)).alias(pieces_col))
+              .withColumn("n_pieces", F.size(F.col(pieces_col))))
 
 
 def save_tokenizer(path: str, kind: str, data, meta: dict | None = None

@@ -20,11 +20,12 @@ Scale shape (the same split as the BPE trainer):
   per-iteration work is unchanged — only the initial word count
   grows.
 - the Viterbi segmentation itself is dense per-word DP — exactly a
-  Python-batch workload — so e-step and apply run as ONE
-  Arrow-batched pandas UDF with the piece table broadcast
-  (mirroring bpe_apply's udf path: rule data changes the closure,
-  never the plan) and a per-batch distinct-word cache (Zipf: most
-  tokens are repeats).
+  Python-batch workload — so e-step and apply run through the one
+  tokenizer-apply UDF (tokenizer_store._encode_pieces, shared with
+  bpe_apply and wordpiece_apply): the piece table is broadcast
+  (vocab changes the broadcast, never the plan) and each batch
+  segments its distinct words once (Zipf: most tokens are
+  repeats).
 
 Determinism contract (what makes unigram_apply oracle-checkable in
 SQL with a fixed vocab): the DP at each end position i picks among
@@ -46,12 +47,11 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd  # noqa: F401 — resolves the pandas_udf type hints
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sybil_spark.operators.bpe import word_counts
+from sybil_spark.operators.tokenizer_store import _encode_pieces
 
 
 def piece_candidates(df: DataFrame, text_col: str,
@@ -118,37 +118,9 @@ def _viterbi(word: str, vocab: dict, max_len: int):
     return pieces, dp[n][1], True
 
 
-def _segment_udf(vocab_bc, max_len: int, pattern: str | None):
-    """array<string> pandas UDF: Viterbi-encode each text's words
-    under the broadcast vocab, distinct-word cached per batch."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def seg_series(texts: pd.Series) -> pd.Series:
-        import re
-        voc = vocab_bc.value
-        cache: dict = {}
-        findall = (re.compile(pattern).findall
-                   if pattern is not None else None)
-
-        def enc(t):
-            if t is None:
-                return None
-            words = findall(t) if findall is not None else t.split(" ")
-            out: list[str] = []
-            for w in words:
-                if not w:
-                    continue
-                hit = cache.get(w)
-                if hit is None:
-                    hit = _viterbi(w, voc, max_len)[0]
-                    cache[w] = hit
-                out.extend(hit)
-            return out
-
-        return texts.map(enc)
-
-    return seg_series
+def _segment(word: str, vocab: dict, max_len: int) -> list:
+    """Per-word encoder for the apply path: `_viterbi`'s pieces."""
+    return _viterbi(word, vocab, max_len)[0]
 
 
 def unigram_train(df: DataFrame, text_col: str, vocab_size: int,
@@ -209,8 +181,7 @@ def unigram_train(df: DataFrame, text_col: str, vocab_size: int,
 
         used: dict = {}
         for it in range(max(1, int(n_iters))):
-            bc = spark.sparkContext.broadcast(vocab)
-            seg = _segment_udf(bc, max_piece_len, None)
+            bc = spark.sparkContext.broadcast((vocab, max_piece_len))
             # semi-join against the vocab keys BEFORE the collect:
             # the unsegmentable-word fallback emits whole words that
             # are NOT vocab entries (coverage gaps, not pieces), and
@@ -220,7 +191,8 @@ def unigram_train(df: DataFrame, text_col: str, vocab_size: int,
             # <= |vocab| rows ever reach the driver.
             keys = spark.createDataFrame(
                 [(p,) for p in vocab], "piece string")
-            counts = (wc.select(seg(F.col("word")).alias("ps"), "cnt")
+            counts = (_encode_pieces(wc, "cnt", "word", bc, _segment,
+                                     pieces_col="ps")
                         .select(F.explode("ps").alias("piece"), "cnt")
                         .groupBy("piece")
                         .agg(F.sum("cnt").alias("c"))
@@ -264,17 +236,16 @@ def unigram_apply(df: DataFrame, id_col: str, text_col: str,
     downstream consumers (fertility_report, packing, token budgets)
     take either tokenizer.
 
-    One ArrowEvalPython node over the scan (plan-pinned like
-    bpe_apply's udf mode): the vocab is broadcast once per executor,
-    each Arrow batch Viterbi-encodes its DISTINCT words once. Zero
-    shuffle, map-only — the 100 TB cost is executor-linear."""
+    The one tokenizer-apply UDF (tokenizer_store._encode_pieces,
+    plan-pinned to one ArrowEvalPython node): the vocab is broadcast
+    once per executor, each Arrow batch Viterbi-encodes its DISTINCT
+    words once. Zero shuffle, map-only — the 100 TB cost is
+    executor-linear."""
     if not vocab:
         raise ValueError("unigram_apply: empty vocab")
     voc = {p: float(lp) for p, lp in vocab}
     max_len = max(len(p) for p in voc)
-    bc = df.sparkSession.sparkContext.broadcast(voc)
-    seg = _segment_udf(bc, max_len, pattern)
-    extra = [F.col(c) for c in (keep_cols or [])]
-    return (df.select(F.col(id_col), *extra,
-                      seg(F.col(text_col)).alias(pieces_col))
-              .withColumn("n_pieces", F.size(F.col(pieces_col))))
+    bc = df.sparkSession.sparkContext.broadcast((voc, max_len))
+    return _encode_pieces(df, id_col, text_col, bc, _segment,
+                          pattern=pattern, pieces_col=pieces_col,
+                          keep_cols=keep_cols)

@@ -27,10 +27,11 @@ Scale shape (the same split as bpe_train / unigram_train):
   driver-side state contract of bpe_train/components), then the
   zero-shuffle `_merge_fold` rewrite.
 - the greedy longest-match apply is dense per-word string scanning —
-  a Python-batch workload — so it runs as ONE Arrow-batched pandas
-  UDF with the vocabulary broadcast and a per-batch distinct-word
-  cache (bpe_apply's udf path: vocab changes the closure, never the
-  plan).
+  a Python-batch workload — so it runs through the one
+  tokenizer-apply UDF (tokenizer_store._encode_pieces, shared with
+  bpe_apply and unigram_apply) with the vocabulary broadcast and a
+  per-batch distinct-word cache (vocab changes the broadcast, never
+  the plan).
 
 Determinism contract: the training argmax compares
     score desc  (IEEE double: exact-int freq / nearest-double of the
@@ -47,13 +48,12 @@ hash-matches the piece sequences bit-for-bit).
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves the pandas_udf type hints
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sybil_spark.operators.bpe import (_merge_fold, pair_counts,
                                        word_counts)
+from sybil_spark.operators.tokenizer_store import _encode_pieces
 
 #: BERT's long-word guard: words longer than this emit [UNK] whole
 #: (matching HF WordPiece's max_input_chars_per_word).
@@ -177,19 +177,14 @@ def wordpiece_train(df: DataFrame, text_col: str, num_merges: int,
         vocab.unpersist()
 
 
-def _match_word(word: str, vocab, unk: str, max_chars: int,
-                cache: dict) -> list:
+def _match_word(word: str, vocab, unk: str, max_chars: int) -> list:
     """Greedy longest-match-first WordPiece encode of ONE word (HF
     WordPiece semantics): walk left to right, at each position take
     the LONGEST vocabulary piece ('##'-prefixed when not
     word-initial); any position with no match — or a word past
     max_chars — makes the WHOLE word [UNK]."""
-    hit = cache.get(word)
-    if hit is not None:
-        return hit
     n = len(word)
     if n > max_chars:
-        cache[word] = [unk]
         return [unk]
     out: list[str] = []
     start = 0
@@ -209,7 +204,6 @@ def _match_word(word: str, vocab, unk: str, max_chars: int,
             break
         out.append(piece)
         start = end
-    cache[word] = out
     return out
 
 
@@ -224,44 +218,18 @@ def wordpiece_apply(df: DataFrame, id_col: str, text_col: str,
     unigram_apply, so every downstream consumer (fertility_report,
     packing, token budgets) takes any of the three tokenizers.
 
-    ONE ArrowEvalPython node over the scan (plan-pinned like
-    bpe_apply's udf mode): the vocabulary set is broadcast once per
-    executor, each Arrow batch greedy-encodes its DISTINCT words
-    once (Zipf cache). Zero shuffle, map-only — executor-linear at
-    100 TB."""
+    The one tokenizer-apply UDF (tokenizer_store._encode_pieces,
+    plan-pinned to one ArrowEvalPython node): the vocabulary set is
+    broadcast once per executor, each Arrow batch greedy-encodes its
+    DISTINCT words once (Zipf cache). Zero shuffle, map-only —
+    executor-linear at 100 TB."""
     if not vocab:
         raise ValueError("wordpiece_apply: empty vocab")
-    from pyspark.sql.functions import pandas_udf
-
-    voc = frozenset(vocab)
-    bc = df.sparkSession.sparkContext.broadcast(voc)
-    pat = pattern
-    mx = int(max_word_chars)
-
-    @pandas_udf("array<string>")
-    def encode_series(texts: pd.Series) -> pd.Series:
-        import re
-        v = bc.value
-        cache: dict = {}
-        findall = re.compile(pat).findall if pat is not None else None
-
-        def enc(t):
-            if t is None:
-                return None
-            words = findall(t) if findall is not None \
-                else t.split(" ")          # tokenize_str twin
-            out: list[str] = []
-            for w in words:
-                if w:
-                    out.extend(_match_word(w, v, unk, mx, cache))
-            return out
-
-        return texts.map(enc)
-
-    extra = [F.col(c) for c in (keep_cols or [])]
-    return (df.select(F.col(id_col), *extra,
-                      encode_series(F.col(text_col)).alias(pieces_col))
-              .withColumn("n_pieces", F.size(F.col(pieces_col))))
+    bc = df.sparkSession.sparkContext.broadcast(
+        (frozenset(vocab), unk, int(max_word_chars)))
+    return _encode_pieces(df, id_col, text_col, bc, _match_word,
+                          pattern=pattern, pieces_col=pieces_col,
+                          keep_cols=keep_cols)
 
 
 def unk_rate_report(df: DataFrame, id_col: str, text_col: str,

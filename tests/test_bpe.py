@@ -82,12 +82,13 @@ def test_bpe_train_matches_reference_fixed(spark):
 
 def test_bpe_encode_matches_reference_fixed(spark):
     from sybil_spark.operators import bpe
-    texts = ["the cat sat on the mat", "aaa aaaa a", "x", ""]
+    texts = ["the cat sat on the mat", "aaa aaaa a", "x", "",
+             "thethe the t"]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                ["doc_id", "text"])
     merges = py_train(texts, 6)
     got = {r["doc_id"]: (list(r["pieces"]), r["n_pieces"])
-           for r in bpe.bpe_encode(df, "doc_id", "text", merges).collect()}
+           for r in bpe.bpe_apply(df, "doc_id", "text", merges).collect()}
     for i, t in enumerate(texts):
         exp = py_encode(t, merges)
         assert got[i] == (exp, len(exp)), (i, t, got[i], exp)
@@ -98,8 +99,8 @@ def test_bpe_overlapping_run_merge(spark):
     left-to-right NON-overlapping, the classic scan."""
     from sybil_spark.operators import bpe
     df = spark.createDataFrame([(0, "aaa aaaa aaaaa")], ["doc_id", "text"])
-    got = bpe.bpe_encode(df, "doc_id", "text",
-                         [(0, "a", "a", 9)]).collect()[0]
+    got = bpe.bpe_apply(df, "doc_id", "text",
+                        [(0, "a", "a", 9)]).collect()[0]
     assert list(got["pieces"]) == ["aa", "a", "aa", "aa", "aa", "aa", "a"]
 
 
@@ -119,7 +120,7 @@ def test_bpe_train_encode_fuzz(spark, texts, n):
     got = bpe.bpe_train(df, "text", n)
     assert got == ref
     enc = {r["doc_id"]: list(r["pieces"])
-           for r in bpe.bpe_encode(df, "doc_id", "text", got).collect()}
+           for r in bpe.bpe_apply(df, "doc_id", "text", got).collect()}
     for i, t in enumerate(texts):
         assert enc[i] == py_encode(t, got), (i, t)
 
@@ -322,28 +323,28 @@ def _synthetic_rules(n_rules, alphabet="abcdefgh", seed=11):
     return rules
 
 
-def test_bpe_apply_udf_matches_fold(spark):
-    """The Arrow-batched apply path is bit-equal to the JVM fold
-    encoder on the same rules (mode forced both ways)."""
+def test_bpe_apply_at_former_fold_gate_matches_python(spark):
+    """48 rules sat exactly on the removed fold/UDF size gate, where
+    the chained-fold plan failed analysis ("Max iterations (100)
+    reached for batch Resolution"); bpe_apply and a dispatched BPE
+    artifact now both encode it like the python reference."""
     from sybil_spark.operators import bpe
-    texts = ["the cat sat on the mat", "aaa aaaa a", "x", "",
-             "thethe the t", "cat cat cat mat"]
+    from sybil_spark.operators.tokenizer_store import apply_tokenizer
+    rules = _synthetic_rules(48)
+    texts = ["abcd abab hgfe", "aaaa bbbb cdcd efgh a"]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                ["doc_id", "text"])
-    merges = py_train(texts, 12)
-
-    def collect(mode):
-        return {r["doc_id"]: (list(r["pieces"]), r["n_pieces"])
-                for r in bpe.bpe_apply(df, "doc_id", "text", merges,
-                                       mode=mode).collect()}
-
-    assert collect("udf") == collect("fold")
+    for enc in (bpe.bpe_apply(df, "doc_id", "text", rules),
+                apply_tokenizer(df, "doc_id", "text",
+                                {"kind": "bpe", "data": rules})):
+        got = {r["doc_id"]: list(r["pieces"]) for r in enc.collect()}
+        for i, t in enumerate(texts):
+            assert got[i] == py_encode(t, rules), (i, t)
 
 
 def test_bpe_apply_large_ruleset_matches_python(spark):
-    """1,000-rule synthetic tokenizer (far past the fold path's
-    expression-tree ceiling) applied via the UDF path == the python
-    Sennrich reference, including null text."""
+    """1,000-rule synthetic tokenizer applied by bpe_apply == the
+    python Sennrich reference, including null text."""
     import random
     from sybil_spark.operators import bpe
     rules = _synthetic_rules(1000)
@@ -356,8 +357,8 @@ def test_bpe_apply_large_ruleset_matches_python(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: (None if r["pieces"] is None
                          else list(r["pieces"]))
-           for r in bpe.bpe_apply(df, "doc_id", "text", rules,
-                                  mode="udf").collect()}
+           for r in bpe.bpe_apply(df, "doc_id", "text",
+                                  rules).collect()}
     for i, t in enumerate(texts):
         assert got[i] == py_encode(t, rules), (i, t)
     assert got[99] is None
@@ -372,28 +373,22 @@ def test_bpe_apply_udf_fuzz(spark, texts, n):
                                ["doc_id", "text"])
     merges = py_train(texts, n)
     got = {r["doc_id"]: list(r["pieces"])
-           for r in bpe.bpe_apply(df, "doc_id", "text", merges,
-                                  mode="udf").collect()}
+           for r in bpe.bpe_apply(df, "doc_id", "text",
+                                  merges).collect()}
     for i, t in enumerate(texts):
         assert got[i] == py_encode(t, merges), (i, t)
 
 
 def test_bpe_apply_plan_single_arrow_pass(spark):
-    """Rule count must NOT leak into the plan: the UDF path is ONE
-    ArrowEvalPython node whether 100 or 1,000 rules, and auto mode
-    picks fold (zero python) below the crossover."""
+    """Rule count must NOT leak into the plan: bpe_apply is ONE
+    ArrowEvalPython node whether 10 or 1,000 rules."""
     from sybil_spark.operators import bpe
     df = spark.createDataFrame([(0, "ab ab")], ["doc_id", "text"])
-    for n in (100, 1000):
+    for n in (10, 48, 100, 1000):
         plan = bpe.bpe_apply(df, "doc_id", "text",
-                             _synthetic_rules(n), mode="auto") \
+                             _synthetic_rules(n)) \
             ._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") == 1, plan
-    fold_plan = bpe.bpe_apply(df, "doc_id", "text",
-                              _synthetic_rules(10), mode="auto") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in fold_plan
-    assert "BatchEvalPython" not in fold_plan
+        assert plan.count("ArrowEvalPython") == 1, (n, plan)
 
 
 def test_fertility_report(spark):

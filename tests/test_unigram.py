@@ -162,7 +162,7 @@ def test_unigram_apply_fuzz(spark, texts, vocab):
 
 def test_unigram_apply_plan_single_arrow_pass(spark):
     """Vocab size must not leak into the plan: ONE ArrowEvalPython
-    node, no shuffle — the bpe_apply udf-path contract."""
+    node, no shuffle — the shared tokenizer-apply contract."""
     df = _docs(spark, ["the big"])
     vocab = [(f"a{i:03d}"[:3], -4.0) for i in range(500)] + \
         [("a", -8.0)]

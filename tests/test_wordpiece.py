@@ -89,23 +89,23 @@ VOC = frozenset(
 
 def test_match_word_semantics():
     # longest match first, continuation prefix after position 0
-    assert _match_word("abc", VOC, "[UNK]", 100, {}) == ["abc"]
-    assert _match_word("abcc", VOC, "[UNK]", 100, {}) == ["abc", "##c"]
-    assert _match_word("aab", VOC, "[UNK]", 100, {}) == ["a", "##a", "##b"]
+    assert _match_word("abc", VOC, "[UNK]", 100) == ["abc"]
+    assert _match_word("abcc", VOC, "[UNK]", 100) == ["abc", "##c"]
+    assert _match_word("aab", VOC, "[UNK]", 100) == ["a", "##a", "##b"]
     # a mid-word failure UNKs the WHOLE word (HF semantics)
-    assert _match_word("abx", VOC, "[UNK]", 100, {}) == ["[UNK]"]
-    assert _match_word("xab", VOC, "[UNK]", 100, {}) == ["[UNK]"]
+    assert _match_word("abx", VOC, "[UNK]", 100) == ["[UNK]"]
+    assert _match_word("xab", VOC, "[UNK]", 100) == ["[UNK]"]
     # greedy != optimal is accepted behavior: "abcc" -> abc + ##c,
     # never ab + ##cc, even if some scoring would prefer the latter
-    assert _match_word("abcc", VOC, "[UNK]", 100, {}) != ["ab", "##cc"]
+    assert _match_word("abcc", VOC, "[UNK]", 100) != ["ab", "##cc"]
     # long-word guard
-    assert _match_word("a" * 101, VOC, "[UNK]", 100, {}) == ["[UNK]"]
-    assert _match_word("a" * 100, VOC, "[UNK]", 100, {})[0] == "a"
+    assert _match_word("a" * 101, VOC, "[UNK]", 100) == ["[UNK]"]
+    assert _match_word("a" * 100, VOC, "[UNK]", 100)[0] == "a"
 
 
 def test_match_word_consumes_whole_word_fuzzless():
     for w in ["a", "ab", "abc", "abcabc", "cba", "bbb"]:
-        got = _match_word(w, VOC, "[UNK]", 100, {})
+        got = _match_word(w, VOC, "[UNK]", 100)
         if got != ["[UNK]"]:
             rebuilt = got[0] + "".join(p[2:] for p in got[1:])
             assert rebuilt == w
@@ -174,7 +174,7 @@ def test_wordpiece_apply_matches_driver_matcher(spark):
         exp = []
         for w in t.split(" "):
             if w:
-                exp.extend(_match_word(w, VOC, "[UNK]", 100, {}))
+                exp.extend(_match_word(w, VOC, "[UNK]", 100))
         assert got[i] == (exp, len(exp)), (i, t)
 
 
@@ -195,13 +195,13 @@ def test_wordpiece_apply_fuzz(spark, texts, extra):
         exp = []
         for w in t.split(" "):
             if w:
-                exp.extend(_match_word(w, fv, "[UNK]", 100, {}))
+                exp.extend(_match_word(w, fv, "[UNK]", 100))
         assert got[i] == exp
 
 
 def test_wordpiece_apply_plan_single_arrow_pass(spark):
     """Vocab size must not leak into the plan: ONE ArrowEvalPython
-    node, no shuffle — the bpe_apply/unigram_apply udf contract."""
+    node, no shuffle — the shared tokenizer-apply contract."""
     df = _docs(spark, ["abc ab"])
     vocab = sorted(set([f"p{i:04d}" for i in range(2000)]) | VOC)
     plan = wordpiece_apply(df, "doc_id", "text", vocab) \
