@@ -43,7 +43,9 @@ def tokenize_str(text: str, pattern: str | None = None) -> list[str]:
     import re
     if pattern is None:
         return text.split(" ")
-    return re.findall(pattern, text)
+    # the whole match, as regexp_extract_all(..., 0) returns it —
+    # re.findall would return the capture group instead
+    return [m.group(0) for m in re.finditer(pattern, text)]
 
 
 def token_count(col: Column, pattern: str | None = None) -> Column:

@@ -111,13 +111,17 @@ class StreamDedupIndex:
         return os.path.join(self.path, sub) if sub else self.path
 
     def read(self, spark: SparkSession, sub: str | None = None,
-             exclude_batch: int | None = None) -> DataFrame | None:
+             exclude_batch: int | None = None,
+             schema: StructType | None = None) -> DataFrame | None:
         """Union of every committed dataset piece (loose files, fold
-        dirs, batch subdirs), minus `exclude_batch`'s own subdir."""
+        dirs, batch subdirs), minus `exclude_batch`'s own subdir.
+        A leg passes the `schema` its own index rows have (or the
+        columns it needs of them): reading with it skips the Spark
+        job that infers the schema from a parquet footer."""
         paths = _dataset_pieces(self.data_path(sub), exclude_batch)
         if not paths:
             return None
-        return _read_pieces(spark, paths)
+        return _read_pieces(spark, paths, schema)
 
     def append_batch(self, df: DataFrame, batch_id: int,
                      sub: str | None = None) -> None:
@@ -219,9 +223,10 @@ def _dataset_pieces(root: str, exclude_batch: int | None = None,
     return sorted(loose + folds + batches)
 
 
-def _read_pieces(spark: SparkSession, paths: list[str]) -> DataFrame:
-    return (spark.read.option("recursiveFileLookup", "true")
-            .parquet(*paths))
+def _read_pieces(spark: SparkSession, paths: list[str],
+                 schema: StructType | None = None) -> DataFrame:
+    reader = spark.read.option("recursiveFileLookup", "true")
+    return (reader.schema(schema) if schema else reader).parquet(*paths)
 
 
 def _write_out_batch(df: DataFrame, out_path: str,
@@ -232,6 +237,24 @@ def _write_out_batch(df: DataFrame, out_path: str,
     import os
     df.write.mode("overwrite").parquet(
         os.path.join(out_path, f"batch-{batch_id}"))
+
+
+def _decide(docs: DataFrame, id_col: str,
+            drop: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The ONE decision snapshot of a dedup micro-batch: `docs`
+    left-joined to a drop flag for the lazy drop set `drop` (an `id`
+    column, repeats allowed), taken with a single localCheckpoint —
+    the drop set's plan (self-join, index probe, verification) runs
+    once, not once per write that needs it. Returns (survivors: the
+    docs not dropped, in docs' own columns — a NULL id never
+    matches, so it passes through; dropped: the `id`s of the docs
+    that matched)."""
+    flag = drop.select(F.col("id").alias("__drop_id"),
+                       F.lit(True).alias("__drop")).distinct()
+    snap = (docs.join(flag, docs[id_col] == flag["__drop_id"], "left")
+                .drop("__drop_id").localCheckpoint())
+    return (snap.where(F.col("__drop").isNull()).drop("__drop"),
+            snap.where(F.col("__drop")).select(F.col(id_col).alias("id")))
 
 
 def read_stream_output(spark: SparkSession, out_path: str) -> DataFrame:
@@ -606,13 +629,21 @@ def stream_near_dedup_against_index(df: DataFrame, id_col: str,
        band index — i.e. LSH-similar to something seen in an earlier
        batch or in the historical corpus the index was bootstrapped
        from (write minhash_bands of the corpus to `index_path`);
-    4. appends survivors to `out_path` and their bands to the index.
+    4. appends survivors to `out_path`, then their bands to the
+       index.
+
+    A batch takes three snapshots (localCheckpoint): the batch docs,
+    their bands, and ONE decision snapshot — the docs left-joined to
+    a drop flag for the lazy drop set of steps 2-3 (see `_decide`).
+    Both writes read the decision snapshot (the index write
+    anti-joins the bands snapshot with its dropped ids), so the
+    self-join and the index probe run once per batch.
 
     State is the parquet band index: `bands` rows x ~24 bytes per
     document ever kept — ~2.4 GB per 100M documents at the 16-band
     default, partition-prunable and shared across restarts, where
     the state-store alternative would pin signatures in executor
-    memory. The index filter is an anti-join on (band, band_hash) —
+    memory. The index filter is a semi-join on (band, band_hash) —
     an equi-join that co-partitions at any scale, same shape as the
     batch candidate join.
 
@@ -637,40 +668,34 @@ def stream_near_dedup_against_index(df: DataFrame, id_col: str,
                             "shingle_n": shingle_n})
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.localCheckpoint()  # one snapshot, all uses
+        docs = batch_df.localCheckpoint()  # the batch, once
         bnd = minhash_bands(docs, id_col, text_col, num_hashes,
                             bands, shingle_n).localCheckpoint()
         # 2. within-batch: losers = larger id of a colliding pair
         a, b = bnd.alias("a"), bnd.alias("b")
-        losers = (a.join(b, [F.col("a.band") == F.col("b.band"),
-                             F.col("a.band_hash")
-                             == F.col("b.band_hash"),
-                             F.col("a.id") > F.col("b.id")])
-                    .select(F.col("a.id").alias("id")).distinct())
-        dropped = losers
-        keep_bnd = bnd.join(losers, "id", "left_anti")
-        # 3. against the persisted index. Only a MISSING index
-        # reads as "first batch"; any other read failure (corrupt
-        # footer, transient FS error) must raise — swallowing it
-        # would skip history filtering and leak near-dups
-        # silently.
-        idx = sdi.read(batch_df.sparkSession, exclude_batch=batch_id)
+        drop = (a.join(b, [F.col("a.band") == F.col("b.band"),
+                           F.col("a.band_hash") == F.col("b.band_hash"),
+                           F.col("a.id") > F.col("b.id")])
+                  .select(F.col("a.id").alias("id")))
+        # 3. against the persisted index: docs sharing a band with it
+        # (probing every doc, losers too, leaves the drop set the same
+        # and keeps the losers' plan out of the probe). Only a
+        # MISSING index reads as "first batch"; any other read
+        # failure (corrupt footer, transient FS error) must raise —
+        # swallowing it would skip history filtering and leak
+        # near-dups silently.
+        idx = sdi.read(batch_df.sparkSession, exclude_batch=batch_id,
+                       schema=bnd.select("band", "band_hash").schema)
         if idx is not None:
-            hit = (keep_bnd.join(idx, ["band", "band_hash"],
-                                 "left_semi")
-                           .select("id").distinct())
-            keep_bnd = keep_bnd.join(hit, "id", "left_anti")
-            dropped = dropped.unionByName(hit)
-        keep_bnd = keep_bnd.localCheckpoint()  # pre-write snapshot
-        dropped = dropped.localCheckpoint()
-        # survivors = everything NOT dropped — including docs
-        # with no bands at all (NULL/short text), which can't
-        # collide
-        survivors = docs.join(
-            dropped.withColumnRenamed("id", id_col), id_col,
-            "left_anti")
+            drop = drop.unionByName(
+                bnd.join(idx, ["band", "band_hash"], "left_semi")
+                   .select("id"))
+        # 4. one decision snapshot serves both writes. Survivors are
+        # everything NOT dropped — including docs with no bands at
+        # all (NULL/short text), which can't collide
+        survivors, dropped = _decide(docs, id_col, drop)
         _write_out_batch(survivors, out_path, batch_id)
-        sdi.append_batch(keep_bnd, batch_id)
+        sdi.append_batch(bnd.join(dropped, "id", "left_anti"), batch_id)
 
     return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)
 
@@ -699,8 +724,16 @@ def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
     3. vs index: batch buckets equi-join persisted buckets →
        candidate (new, old) pairs verify against persisted vectors
        at the same threshold → matched new docs drop;
-    4. survivors append: rows to `out_path`, buckets + (id, vec) to
-       the index.
+    4. survivors append, in this order: rows to `out_path`, (id,
+       vec) to `vectors`, buckets to `buckets`.
+
+    A batch takes three snapshots (localCheckpoint): the batch docs,
+    their buckets, and ONE decision snapshot — the docs left-joined
+    to a drop flag for the lazy drop set of steps 2-3 (see
+    `_decide`). All three writes read the decision snapshot (the
+    buckets write anti-joins the buckets snapshot with its dropped
+    ids), so the bucket self-join, the index probe and both cosine
+    verifications run once per batch.
 
     Recall follows the OR-amplified sign-LSH bound
     (similarity._auto_recall — e.g. ~0.98 at cos 0.95 with 8 planes
@@ -722,12 +755,16 @@ def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
                             "tables": tables},
                            subdirs=["buckets", "vectors"])
 
+    def vec_rows(df: DataFrame) -> DataFrame:
+        return df.select(F.col(id_col).alias("id"),
+                         F.col(vec_col).alias("vec"))
+
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.localCheckpoint()
+        docs = batch_df.localCheckpoint()  # the batch, once
         bkt = embedding_buckets(docs, id_col, vec_col, dim,
                                 num_planes, tables).localCheckpoint()
-        vecs = docs.select(F.col(id_col).alias("id"),
-                           F.col(vec_col).alias("vec"))
+        va = docs.select(F.col(id_col).alias("id"),
+                         F.col(vec_col).alias("__va"))
         # 2. within-batch: collide → verify → keep-min-id
         a, b = bkt.alias("a"), bkt.alias("b")
         cand = (a.join(b, [F.col("a.table") == F.col("b.table"),
@@ -735,51 +772,39 @@ def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
                            F.col("a.id") > F.col("b.id")])
                   .select(F.col("a.id").alias("id"),
                           F.col("b.id").alias("id_keep")).distinct())
-        va = vecs.select(F.col("id"), F.col("vec").alias("__va"))
-        vb = vecs.select(F.col("id").alias("id_keep"),
-                         F.col("vec").alias("__vb"))
-        losers = (cand.join(va, "id").join(vb, "id_keep")
-                      .where(cosine("__va", "__vb")
-                             >= threshold)
-                      .select("id").distinct())
-        dropped = losers
-        keep = vecs.join(losers, "id", "left_anti")
-        keep_bkt = bkt.join(losers, "id", "left_anti")
-        # 3. against the persisted index (bucket join, vector
-        # verify)
+        vb = docs.select(F.col(id_col).alias("id_keep"),
+                         F.col(vec_col).alias("__vb"))
+        drop = (cand.join(va, "id").join(vb, "id_keep")
+                    .where(cosine("__va", "__vb") >= threshold)
+                    .select("id"))
+        # 3. against the persisted index: bucket hits, verified
+        # against the persisted vectors (every doc probes, as in the
+        # near-dup leg)
         spark = batch_df.sparkSession
-        idx_b = sdi.read(spark, "buckets", exclude_batch=batch_id)
-        idx_v = sdi.read(spark, "vectors",
-                         exclude_batch=batch_id) \
+        idx_b = sdi.read(spark, "buckets", exclude_batch=batch_id,
+                         schema=bkt.schema)
+        idx_v = sdi.read(spark, "vectors", exclude_batch=batch_id,
+                         schema=vec_rows(docs).schema) \
             if idx_b is not None else None
         if idx_b is not None and idx_v is not None:
-            hits = (keep_bkt.join(
-                        idx_b.withColumnRenamed("id", "old_id"),
-                        ["table", "bucket"])
-                            .select("id", "old_id").distinct())
-            seen = (hits.join(keep.select("id", F.col("vec")
-                                          .alias("__va")), "id")
-                        .join(idx_v.select(
-                            F.col("id").alias("old_id"),
-                            F.col("vec").alias("__vb")), "old_id")
-                        .where(cosine("__va", "__vb")
-                               >= threshold)
-                        .select("id").distinct())
-            keep = keep.join(seen, "id", "left_anti")
-            keep_bkt = keep_bkt.join(seen, "id", "left_anti")
-            dropped = dropped.unionByName(seen)
-        keep = keep.localCheckpoint()       # pre-write snapshot
-        keep_bkt = keep_bkt.localCheckpoint()
-        dropped = dropped.localCheckpoint()
-        # survivors = everything NOT dropped — a row only drops
-        # on a verified cosine match, never for lacking
+            hits = (bkt.join(idx_b.withColumnRenamed("id", "old_id"),
+                             ["table", "bucket"])
+                       .select("id", "old_id").distinct())
+            drop = drop.unionByName(
+                hits.join(va, "id")
+                    .join(idx_v.select(F.col("id").alias("old_id"),
+                                       F.col("vec").alias("__vb")),
+                          "old_id")
+                    .where(cosine("__va", "__vb") >= threshold)
+                    .select("id"))
+        # 4. one decision snapshot serves all three writes. A row
+        # only drops on a verified cosine match, never for lacking
         # buckets/vector
-        survivors = docs.join(
-            dropped.withColumnRenamed("id", id_col), id_col,
-            "left_anti")
+        survivors, dropped = _decide(docs, id_col, drop)
         _write_out_batch(survivors, out_path, batch_id)
-        sdi.append_batch(keep, batch_id, "vectors")
-        sdi.append_batch(keep_bkt, batch_id, "buckets")
+        sdi.append_batch(vec_rows(survivors), batch_id, "vectors")
+        sdi.append_batch(bkt.join(dropped, "id", "left_anti"),
+                         batch_id, "buckets")
 
     return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)
 

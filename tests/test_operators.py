@@ -1957,9 +1957,10 @@ def test_tokens_column_matches_driver(spark):
     from sybil_spark.functions.text import (BPE_SPLIT_PATTERN, tokens,
                                             tokenize_str)
     cases = ["quick brown fox", "", " lead", "trail ", "a  b",
-             "one", "don't stop, 42x!"]
+             "one", "don't stop, 42x!", "xab ab"]
     df = spark.createDataFrame([(s,) for s in cases], ["t"])
-    for pat in (None, BPE_SPLIT_PATTERN):
+    # "(a)b": a capturing group — both sides return the whole match
+    for pat in (None, BPE_SPLIT_PATTERN, "(a)b"):
         got = {r["t"]: r["toks"] for r in
                df.select("t", tokens(F.col("t"), pat).alias("toks"))
                  .collect()}

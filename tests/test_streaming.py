@@ -659,6 +659,175 @@ def test_stream_dedup_exactly_once_replay(spark, tmp_path):
     assert RSO(spark, idx_path).count() == n_idx   # no duplicate keys
 
 
+NEAR_TEXT = ("the quick brown fox jumps over the lazy dog while the "
+             "rain falls gently on the quiet village roofs tonight")
+HIST_TEXT = ("four score and seven years ago our fathers brought "
+             "forth on this continent a new nation conceived in "
+             "liberty and dedicated to a proposition")
+OTHER_TEXT = ("completely different content about spark shuffle "
+              "partitions and columnar parquet readers running wide "
+              "aggregations")
+
+
+def _swap5(text, word):
+    toks = text.split()
+    toks[5] = word
+    return " ".join(toks)
+
+
+# Both halves of the drop set fire. Each near-dup batch holds an
+# in-batch duplicate (B of A, F of D) and an index duplicate (E of the
+# bootstrapped H, C of A). The embedding leg has no bootstrap: its
+# first batch holds the in-batch duplicate B of A, its second both
+# kinds (F of E, D of A).
+NEAR_BATCHES = [
+    [{"doc_id": "A", "text": NEAR_TEXT},
+     {"doc_id": "B", "text": _swap5(NEAR_TEXT, "leaps")},
+     {"doc_id": "E", "text": _swap5(HIST_TEXT, "months")}],
+    [{"doc_id": "C", "text": _swap5(NEAR_TEXT, "hops")},
+     {"doc_id": "D", "text": OTHER_TEXT},
+     {"doc_id": "F", "text": _swap5(OTHER_TEXT, "rows")},
+     {"doc_id": "N", "text": None}],   # no bands: passes through
+]
+EMB_BATCHES = [
+    [{"vid": "A", "emb": [1.0, 0.01, 0.0, 0.0]},
+     {"vid": "B", "emb": [1.0, 0.0, 0.01, 0.0]},
+     {"vid": "C", "emb": [0.0, 1.0, 0.0, 0.0]}],
+    [{"vid": "D", "emb": [1.0, 0.005, 0.005, 0.0]},
+     {"vid": "E", "emb": [0.0, 0.0, 1.0, 0.0]},
+     {"vid": "F", "emb": [0.0, 0.0, 1.0, 0.01]},
+     {"vid": "G", "emb": None}],       # no vector: passes through
+]
+
+
+def _near_leg(spark, tmp_path):
+    """start(checkpoint) of a near-dup leg over tmp_path/in, its band
+    index bootstrapped from one historical doc H."""
+    from sybil_spark.streaming.ingest_stream import (
+        bootstrap_minhash_band_index, stream_near_dedup_against_index)
+    idx = str(tmp_path / "idx")
+    bootstrap_minhash_band_index(
+        spark.createDataFrame([("H", HIST_TEXT)],
+                              "doc_id string, text string"),
+        "doc_id", "text", idx, bands=32)
+
+    def start(ck):
+        stream = (spark.readStream.schema("doc_id string, text string")
+                  .option("maxFilesPerTrigger", 1)
+                  .json(str(tmp_path / "in")))
+        return stream_near_dedup_against_index(
+            stream, "doc_id", "text", str(tmp_path / "out"), idx,
+            bands=32, checkpoint=ck)
+    return start
+
+
+def _embedding_leg(spark, tmp_path):
+    """start(checkpoint) of an embedding leg over tmp_path/in."""
+    from sybil_spark.streaming.ingest_stream import (
+        stream_embedding_dedup_against_index)
+
+    def start(ck):
+        stream = (spark.readStream.schema("vid string, emb array<double>")
+                  .option("maxFilesPerTrigger", 1)
+                  .json(str(tmp_path / "in")))
+        return stream_embedding_dedup_against_index(
+            stream, "vid", "emb", dim=4, out_path=str(tmp_path / "out"),
+            index_path=str(tmp_path / "idx"), threshold=0.95,
+            checkpoint=ck)
+    return start
+
+
+def _query_jobs(spark, q):
+    """Jobs a streaming query has run so far: its job group is its
+    runId."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+
+def _feed(spark, tmp_path, start, batches):
+    """Feed `batches` one file (one micro-batch) at a time through a
+    fresh query; returns the jobs the last batch ran."""
+    src = tmp_path / "in"
+    src.mkdir(parents=True)
+    q = start(str(tmp_path / "ck-1"))
+    try:
+        for i, rows in enumerate(batches):
+            _write_batch(src, f"b{i}.ndjson", rows)
+            jobs0 = _query_jobs(spark, q)
+            q.processAllAvailable()
+        return _query_jobs(spark, q) - jobs0
+    finally:
+        q.stop()
+
+
+def _replay(start, ck):
+    """Re-deliver every batch: a fresh checkpoint over the same files
+    gives them the same batch ids."""
+    q = start(ck)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _rows(spark, path):
+    return sorted((tuple(tuple(v) if isinstance(v, list) else v
+                         for v in r) for r in RSO(spark, path).collect()),
+                  key=repr)
+
+
+def test_stream_near_dedup_exactly_once_replay(spark, tmp_path):
+    """The exactly-once contract for the near-dup leg: re-delivering
+    every batch leaves out_path and the band index identical, with
+    no duplicate row, while in-batch and index duplicates both drop."""
+    start = _near_leg(spark, tmp_path)
+    _feed(spark, tmp_path, start, NEAR_BATCHES)
+
+    def outputs():
+        return {p: _rows(spark, str(tmp_path / p)) for p in ("out", "idx")}
+    first = outputs()
+    assert {r[0] for r in first["out"]} == {"A", "D", "N"}
+    assert {r[0] for r in first["idx"]} == {"H", "A", "D"}
+    _replay(start, str(tmp_path / "ck-2"))
+    assert outputs() == first
+    for rows in first.values():
+        assert len(rows) == len(set(rows))
+
+
+def test_stream_embedding_dedup_exactly_once_replay(spark, tmp_path):
+    """The exactly-once contract for the embedding leg: re-delivering
+    every batch leaves out_path, vectors/ and buckets/ identical,
+    with no duplicate row, while in-batch and index duplicates both
+    drop."""
+    start = _embedding_leg(spark, tmp_path)
+    _feed(spark, tmp_path, start, EMB_BATCHES)
+
+    def outputs():
+        return {p: _rows(spark, str(tmp_path / p))
+                for p in ("out", "idx/vectors", "idx/buckets")}
+    first = outputs()
+    assert {r[0] for r in first["out"]} == {"A", "C", "E", "G"}
+    assert {r[0] for r in first["idx/vectors"]} == {"A", "C", "E", "G"}
+    assert {r[0] for r in first["idx/buckets"]} == {"A", "C", "E", "G"}
+    _replay(start, str(tmp_path / "ck-2"))
+    assert outputs() == first
+    for rows in first.values():
+        assert len(rows) == len(set(rows))
+
+
+def test_stream_dedup_legs_job_budget(spark, tmp_path):
+    """One micro-batch of each index leg, after a warm-up batch, runs
+    within its Spark job budget: the drop set is computed once, in
+    one decision snapshot that every write reads, so a plan that
+    recomputes it per write shows up as extra jobs."""
+    near = _feed(spark, tmp_path / "near",
+                 _near_leg(spark, tmp_path / "near"), NEAR_BATCHES)
+    emb = _feed(spark, tmp_path / "emb",
+                _embedding_leg(spark, tmp_path / "emb"), EMB_BATCHES)
+    assert near <= 12 and emb <= 18, (near, emb)
+
+
 def test_compact_dedup_index_subdirs(spark, tmp_path):
     """compact_dedup_index folds BOTH sub-datasets of the embedding
     leg's two-frame index (buckets + vectors) and the stream keeps
