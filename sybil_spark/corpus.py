@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from sybil_spark.query.builder import Query
 from sybil_spark.functions import text as T
+from sybil_spark.functions.exact import exact_sum
 from sybil_spark.operators import dedup, similarity
 
 QUERIES: dict = {}
@@ -507,17 +508,19 @@ def q_tpch_q1(spark, sf):
     from sybil_spark.operators._util import spread
     li = spread(_t(spark, sf, "lineitem")).where(
         F.col("l_shipdate") <= F.to_timestamp(F.lit("1998-09-02 00:00:00")))
-    dsum = lambda c: F.sum(c.cast(_DEC)).cast("double")  # noqa: E731
     disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    qty, price = (exact_sum(F.col(c)).cast("double")
+                  for c in ("l_quantity", "l_extendedprice"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum(F.col("l_quantity")).alias("sum_qty"),
-        dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-        dsum(disc).alias("sum_disc_price"),
-        dsum(disc * (F.lit(1.0) + F.col("l_tax"))).alias("sum_charge"),
-        (dsum(F.col("l_quantity")) / F.count("l_quantity")).alias("avg_qty"),
-        (dsum(F.col("l_extendedprice")) / F.count("l_extendedprice")
-         ).alias("avg_price"),
-        (dsum(F.col("l_discount")) / F.count("l_discount")).alias("avg_disc"),
+        qty.alias("sum_qty"),
+        price.alias("sum_base_price"),
+        exact_sum(disc).cast("double").alias("sum_disc_price"),
+        exact_sum(disc * (F.lit(1.0) + F.col("l_tax"))).cast("double")
+        .alias("sum_charge"),
+        (qty / F.count("l_quantity")).alias("avg_qty"),
+        (price / F.count("l_extendedprice")).alias("avg_price"),
+        (exact_sum(F.col("l_discount")).cast("double")
+         / F.count("l_discount")).alias("avg_disc"),
         F.count(F.lit(1)).alias("count_order"))
 
 
@@ -547,7 +550,7 @@ def q_tpch_q3(spark, sf):
     return (j.groupBy(F.col("o_orderkey"),
                       F.date_format("o_orderdate", "yyyy-MM-dd")
                        .alias("o_orderdate"))
-             .agg(F.sum(rev.cast(_DEC)).cast("double").alias("revenue"))
+             .agg(exact_sum(rev).cast("double").alias("revenue"))
              .select("o_orderkey", "revenue", "o_orderdate")
              .orderBy(F.desc("revenue"), F.asc("o_orderkey")).limit(10))
 
@@ -587,7 +590,7 @@ def q_tpch_q5(spark, sf):
            .join(F.broadcast(r), n.n_regionkey == r.r_regionkey))
     rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (j.groupBy("n_name")
-             .agg(F.sum(rev.cast(_DEC)).cast("double").alias("revenue")))
+             .agg(exact_sum(rev).cast("double").alias("revenue")))
 
 
 @_q("tpch_q6", f"""
@@ -608,7 +611,7 @@ def q_tpch_q6(spark, sf):
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-01-01 00:00:00")))
         & (F.col("l_discount") >= 0.02) & (F.col("l_discount") <= 0.04)
         & (F.col("l_quantity") < 24.0))
-        .agg(F.sum(rev.cast(_DEC)).cast("double").alias("revenue")))
+        .agg(exact_sum(rev).cast("double").alias("revenue")))
 
 
 @_q("tpch_q10", f"""
@@ -639,7 +642,7 @@ def q_tpch_q10(spark, sf):
            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
            .join(F.broadcast(n), c.c_nationkey == n.n_nationkey))
     return (j.groupBy("c_custkey", "c_name", "n_name")
-             .agg(F.sum(rev.cast(_DEC)).cast("double").alias("revenue"))
+             .agg(exact_sum(rev).cast("double").alias("revenue"))
              .select("c_custkey", "c_name", "revenue", "n_name")
              .orderBy(F.desc("revenue"), F.asc("c_custkey")).limit(20))
 
@@ -659,7 +662,7 @@ def q_join_geo(spark, sf):
              .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
              .groupBy("r_name")
              .agg(F.count(F.lit(1)).alias("count"),
-                  F.sum(F.col("c_acctbal").cast(_DEC)).cast("double")
+                  exact_sum(F.col("c_acctbal")).cast("double")
                    .alias("sum_acctbal")))
 
 
@@ -2789,7 +2792,7 @@ def q_text_quality(spark, sf):
     return (d.select("source", score.alias("score"))
              .groupBy("source")
              .agg(F.count(F.lit(1)).alias("count"),
-                  (F.sum(F.col("score").cast(_DEC)).cast("double")
+                  (exact_sum(F.col("score")).cast("double")
                    / F.count("score")).alias("avg_quality")))
 
 
@@ -2832,7 +2835,7 @@ def q_repetition(spark, sf):
     rep = T.repetition_ratio(F.col("text")).alias("rep")
     return (d.select("lang", rep).groupBy("lang")
             .agg(F.count(F.lit(1)).alias("count"),
-                 (F.sum(F.col("rep").cast(_DEC)).cast("double")
+                 (exact_sum(F.col("rep")).cast("double")
                   / F.count("rep")).alias("avg_repetition")))
 
 
@@ -2935,7 +2938,7 @@ def _pivot_daily(spark, sf) -> DataFrame:
     return (ev.groupBy((F.col("time") - F.col("time") % 86400)
                        .alias("day"))
               .pivot("event_type", list(_EVENT_TYPES))
-              .agg(F.sum(F.col("value").cast(_DEC)).cast("double")
+              .agg(exact_sum(F.col("value")).cast("double")
                    / F.count("value")))
 
 
@@ -3001,7 +3004,7 @@ def q_cube_counts(spark, sf):
     return (_events(spark, sf).cube("event_type", "user_id")
             .agg(F.grouping_id().alias("gid"),
                  F.count(F.lit(1)).alias("count"),
-                 F.sum(F.col("value").cast(_DEC)).cast("double")
+                 exact_sum(F.col("value")).cast("double")
                   .alias("sum_value"))
             .select("event_type", "user_id", "gid",
                     "count", "sum_value"))
@@ -4067,7 +4070,7 @@ def q_dataset_card(spark, sf):
         F.sum(T.token_count(F.col("text"))).alias("n_tokens"),
         ndist.alias("n_distinct_texts"),
         ((n - ndist).cast("double") / n).alias("dup_frac"),
-        (F.sum(T.quality_score(F.col("text")).cast(_DEC))
+        (exact_sum(T.quality_score(F.col("text")))
          .cast("double") / n).alias("mean_quality"))
 
 
@@ -4161,7 +4164,7 @@ def q_domain_report(spark, sf):
     return (f.groupBy("domain")
              .agg(F.count(F.lit(1)).alias("docs"),
                   F.sum("nt").alias("sum_tokens"),
-                  (F.sum(F.col("score").cast(_DEC)).cast("double")
+                  (exact_sum(F.col("score")).cast("double")
                    / F.count(F.lit(1))).alias("avg_quality")))
 
 
@@ -4253,9 +4256,8 @@ def q_tpch_q14(spark, sf):
                   & (F.col("l_shipdate")
                      < F.to_timestamp(F.lit("1995-10-01 00:00:00"))))
            .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey")))
-    dsum = lambda c: F.sum(c.cast(_DEC)).cast("double")  # noqa: E731
-    return j.agg((F.lit(100.00) * dsum(promo) / dsum(disc))
-                 .alias("promo_revenue"))
+    return j.agg((F.lit(100.00) * exact_sum(promo).cast("double")
+                  / exact_sum(disc).cast("double")).alias("promo_revenue"))
 
 
 @_q("tpch_q4", """
@@ -4352,14 +4354,14 @@ def q_tpch_q18(spark, sf):
     o = _t(spark, sf, "orders")
     c = _t(spark, sf, "customer")
     big = (li.groupBy("l_orderkey")
-             .agg(F.sum(F.col("l_quantity").cast(_DEC)).alias("q"))
+             .agg(exact_sum(F.col("l_quantity")).alias("q"))
              .where(F.col("q") > 300).select("l_orderkey"))
     oo = o.join(F.broadcast(big), F.col("o_orderkey") == F.col("l_orderkey"),
                 "left_semi")
     j = (oo.join(li, F.col("o_orderkey") == li["l_orderkey"])
            .join(c, F.col("c_custkey") == F.col("o_custkey")))
     return (j.groupBy("c_name", "c_custkey", "o_orderkey", "o_totalprice")
-             .agg(F.sum(F.col("l_quantity").cast(_DEC)).cast("double")
+             .agg(exact_sum(F.col("l_quantity")).cast("double")
               .alias("sum_qty"))
              .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
              .limit(20))
@@ -4542,7 +4544,7 @@ def q_tpch_q7(spark, sf):
                      F.year("l_shipdate").cast("long").alias("l_year"),
                      vol.alias("volume"))
              .groupBy("supp_nation", "cust_nation", "l_year")
-             .agg(F.sum(F.col("volume").cast(_DEC)).cast("double")
+             .agg(exact_sum(F.col("volume")).cast("double")
               .alias("revenue")))
 
 
@@ -4596,11 +4598,11 @@ def q_tpch_q8(spark, sf):
     vol = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     base = j.select(F.year("o_orderdate").cast("long").alias("o_year"),
                     vol.alias("volume"), "nation")
-    dsum = lambda c: F.sum(c.cast(_DEC)).cast("double")  # noqa: E731
     nat = F.when(F.col("nation") == "NATION_1",
                  F.col("volume")).otherwise(F.lit(0))
     return (base.groupBy("o_year")
-                .agg((dsum(nat) / dsum(F.col("volume")))
+                .agg((exact_sum(nat).cast("double")
+                      / exact_sum(F.col("volume")).cast("double"))
                      .alias("mkt_share")))
 
 
@@ -4868,13 +4870,13 @@ def q_tpch_q17(spark, sf):
     li = _t(spark, sf, "lineitem")
     p = _t(spark, sf, "part").where(F.col("p_brand") == "Brand#13")
     a = li.groupBy("l_partkey").agg(
-        (F.lit(0.2) * (F.sum(F.col("l_quantity").cast(_DEC))
+        (F.lit(0.2) * (exact_sum(F.col("l_quantity"))
                        .cast("double") / F.count("l_quantity")))
         .alias("lim"))
     j = (li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
            .join(a, "l_partkey")
            .where(F.col("l_quantity") < F.col("lim")))
-    return j.agg((F.sum(F.col("l_extendedprice").cast(_DEC))
+    return j.agg((exact_sum(F.col("l_extendedprice"))
                   .cast("double") / F.lit(7.0)).alias("avg_yearly"))
 
 
@@ -4905,7 +4907,7 @@ def q_tpch_q19(spark, sf):
     return (j.where(arm("Brand#12", 5, 1, 11)
                     | arm("Brand#23", 10, 10, 20)
                     | arm("Brand#34", 15, 20, 30))
-             .agg(F.sum(disc.cast(_DEC)).cast("double").alias("revenue")))
+             .agg(exact_sum(disc).cast("double").alias("revenue")))
 
 
 @_q("lag_delta", f"""
@@ -5121,12 +5123,11 @@ def q_corr_exact(spark, sf):
                   & F.col("l_extendedprice").isNotNull())
     xd = F.col("l_quantity").cast("decimal(18,2)")
     yd = F.col("l_extendedprice").cast("decimal(18,2)")
-    dsum = lambda c: F.sum(c).cast("double")  # noqa: E731
     m = (li.groupBy("l_returnflag")
            .agg(F.count(F.lit(1)).alias("n"),
-                dsum(xd).alias("sx"), dsum(yd).alias("sy"),
-                dsum(xd * yd).alias("sxy"), dsum(xd * xd).alias("sxx"),
-                dsum(yd * yd).alias("syy")))
+                *[F.sum(e).cast("double").alias(a) for e, a in (
+                    (xd, "sx"), (yd, "sy"), (xd * yd, "sxy"),
+                    (xd * xd, "sxx"), (yd * yd, "syy"))]))
     n = F.col("n")
     # greatest(0, .) guards catastrophic cancellation on near-constant
     # groups: a slightly-negative variance would make DuckDB's sqrt
@@ -5310,7 +5311,7 @@ def q_tpch_q22(spark, sf):
          .where(F.col("o_orderpriority") == "1-URGENT")
          .select("o_custkey").distinct())
     avg_bal = (c.where(F.col("c_acctbal") > 0.0)
-                .agg((F.sum(F.col("c_acctbal").cast(_DEC)).cast("double")
+                .agg((exact_sum(F.col("c_acctbal")).cast("double")
                       / F.count("c_acctbal")).alias("avg_bal"))
                 .first()[0])
     rich = (c.where(F.col("c_acctbal") > avg_bal)
@@ -5320,7 +5321,7 @@ def q_tpch_q22(spark, sf):
                    F.col("n_nationkey") == F.col("c_nationkey")))
     return (rich.groupBy("n_name")
                 .agg(F.count(F.lit(1)).alias("numcust"),
-                     F.sum(F.col("c_acctbal").cast(_DEC)).cast("double")
+                     exact_sum(F.col("c_acctbal")).cast("double")
                       .alias("totacctbal"))
                 .orderBy("n_name"))
 
@@ -5424,7 +5425,7 @@ def q_tpch_q9(spark, sf):
                      F.year("o_orderdate").cast("long").alias("o_year"),
                      profit.alias("profit"))
              .groupBy("nation", "o_year")
-             .agg(F.sum(F.col("profit").cast(_DEC)).cast("double")
+             .agg(exact_sum(F.col("profit")).cast("double")
                    .alias("sum_profit"))
              .orderBy(F.asc("nation"), F.desc("o_year")))
 
@@ -5468,7 +5469,7 @@ def q_tpch_q11(spark, sf):
     # per-part rows (|parts|, not |lineitem|), bounded at any SF.
     from pyspark.sql import Window
     pv = (base.groupBy("l_partkey")
-              .agg(F.sum(F.col("l_extendedprice").cast(_DEC))
+              .agg(exact_sum(F.col("l_extendedprice"))
                     .alias("vdec")))
     tot = F.sum("vdec").over(Window.partitionBy())
     return (pv.select("l_partkey",
@@ -5508,7 +5509,7 @@ def q_tpch_q15(spark, sf):
                     & (F.col("l_shipdate")
                        < F.to_timestamp(F.lit("1996-04-01 00:00:00"))))
              .groupBy(F.col("l_suppkey").alias("supplier_no"))
-             .agg(F.sum(disc.cast(_DEC)).cast("double")
+             .agg(exact_sum(disc).cast("double")
                    .alias("total_revenue")))
     # Scalar MAX as an unpartitioned window over the aggregated rev
     # rows (|suppliers|, not |lineitem|): the agg-then-join shape
@@ -5563,7 +5564,7 @@ def q_tpch_q20(spark, sf):
                        < F.to_timestamp(F.lit("1998-01-01 00:00:00"))))
              .join(F.broadcast(px), F.col("l_partkey") == F.col("p_partkey"))
              .groupBy("l_suppkey", "l_partkey")
-             .agg(F.sum(F.col("l_quantity").cast(_DEC)).alias("qty")))
+             .agg(exact_sum(F.col("l_quantity")).alias("qty")))
     good = (agg.where(F.col("qty") > 40)
                .select("l_suppkey").distinct())
     return (s.join(F.broadcast(n),
@@ -6554,12 +6555,31 @@ def q_top_ngrams(spark, sf):
 # (b) queries whose implementation or oracle changed this round. The rest
 # keep registration order. Rotate this list each round.
 _DRIVER_FIRST = [
-    # (b) implementation changed: every tokenizer apply now runs the
+    # (b) implementation changed: every query whose build sums a
+    # float through the int64 fixed-point kernel
+    # (functions.exact.exact_sum) instead of a per-row decimal(38,6)
+    # accumulation — found by recording which queries' builds call
+    # it:
+    "hybrid_search", "pq_topk_trained", "bm25_index_search",
+    "weighted_loghist", "hist_summary", "weighted_hist_summary",
+    "cached_query", "bm25_index_add_search", "bm25_search", "cube_counts",
+    "tpch_q17", "tpch_q19", "tpch_q22", "ppl_buckets", "repetition",
+    "avg", "time_avg", "group_avg", "having_avg", "group_avg_limit",
+    "regex_avg", "group2_avg", "time_group_avg_limit", "filter_eq_avg",
+    "total_row", "stddev", "sum_min_max", "weighted_count",
+    "weighted_hist", "tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6",
+    "tpch_q10", "join_geo", "bigram_logprob", "interp_logprob",
+    "doc_logprob", "zipf_fit", "text_quality", "pivot_daily_avg",
+    "unpivot_daily_avg", "icc", "rollup_serve", "backoff_logprob",
+    "dataset_card", "domain_report", "tpch_q14", "tpch_q18", "tpch_q7",
+    "tpch_q8", "weighted_stddev_sum", "tpch_q9", "tpch_q11", "tpch_q15",
+    "tpch_q20",
+    # then the previous head — every tokenizer apply now runs the
     # one shared Arrow encode UDF (tokenizer_store._encode_pieces);
     # bpe_fertility left the JVM fold chain for it:
     "bpe_apply", "bpe_fertility", "unigram_apply", "unigram_fertility",
     "wordpiece_apply", "wordpiece_fertility", "wordpiece_unk_rate",
-    # then the previous head — every query whose plan goes through
+    # then the head before that — every query whose plan goes through
     # a wide expression builder now written as one SQL string (the
     # vector folds, LSH planes, IVF argmax, PQ encode/LUT, MinHash
     # signatures/bands, the portable shingle fold, SimHash lanes and
@@ -6567,20 +6587,20 @@ _DRIVER_FIRST = [
     # calls:
     "ivfpq_topk", "ivf_topk", "semantic_dedup", "minhash_lsh",
     "simhash_dup", "lsh_recall", "winnow_dup", "embedding_dup",
-    "hybrid_search", "hard_negatives", "minhash_tuned", "ann_topk",
+    "hard_negatives", "minhash_tuned", "ann_topk",
     "quantize_topk", "ann_pairs_topk", "cross_topk", "lsh_topk",
-    "ivf_recall", "ivf_tuned", "pq_topk", "pq_topk_trained",
+    "ivf_recall", "ivf_tuned", "pq_topk",
     "cluster_balance", "norm_outliers",
-    # then the head before that — the persisted BM25 and IVF-PQ indexes
+    # then older heads — the persisted BM25 and IVF-PQ indexes
     # write, list and swap through sources/commit:
-    "bm25_index_search", "phrase_index_topk", "proximity_topk",
+    "phrase_index_topk", "proximity_topk",
     # the query builder's ops share one scan prelude, one filter
     # compiler (also the query cache's) and one fixed-bucket /
     # bucket-count step:
-    "str_replace_group", "loghist", "loghist_group", "weighted_loghist",
-    "hist", "group_hist", "time_hist", "hist_summary",
-    "weighted_hist_summary", "distinct_limit", "samples",
-    "time_filter_aligned", "cached_query",
+    "str_replace_group", "loghist", "loghist_group",
+    "hist", "group_hist", "time_hist",
+    "distinct_limit", "samples",
+    "time_filter_aligned",
     # and the older heads — bm25_index_add_search's
     # bm25_index_add reads its compaction thresholds from the ingest
     # constants (its threshold keywords are gone); span_dedup /
@@ -6589,9 +6609,8 @@ _DRIVER_FIRST = [
     # bm25_search (shared optimizer-size helper) and cluster_splits
     # carry over from the previous rotation's head — re-verify first
     # per this file's standing policy:
-    "bm25_index_add_search",
     "span_dedup", "exact_substr", "weighted_percentile", "tfidf_terms",
-    "bm25_search", "cluster_splits",
+    "cluster_splits",
     # (a) the rest of the 11 queries that landed after the 50-row
     # window filled and have the fewest official driver rows:
     "boolean_topk", "unigram_seed", "collocations_log",
@@ -6601,13 +6620,13 @@ _DRIVER_FIRST = [
     # freshness rotation, oldest driver rows first:
     "ngram_jaccard", "decontaminate", "containment_dup", "norm_dedup",
     "percentiles",
-    "token_freq", "cube_counts", "lag_delta", "retention",
-    "tpch_q13", "tpch_q17", "tpch_q19", "tpch_q21", "tpch_q22",
-    "ppl_buckets", "weighted_sample",
+    "token_freq", "lag_delta", "retention",
+    "tpch_q13", "tpch_q21",
+    "weighted_sample",
     "corpus_stats", "corpus_diff",
     "gopher_rules", "dsir_weights",
     "repetition_stats", "source_mix",
-    "repetition", "quality_cascade", "dedup_exact",
+    "quality_cascade", "dedup_exact",
     "dedup_keep_first", "dedup_best", "dedup_clusters",
 ]
 

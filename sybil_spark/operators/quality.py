@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sybil_spark.functions.exact import exact_sum
 from sybil_spark.functions.text import tokens
 from sybil_spark.operators._util import estimated_bytes
 from sybil_spark.sources import commit
@@ -84,10 +85,10 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
         cnt = _require(F.col("cnt"),
                        "unigram_logprob: token unseen by the model "
                        "under smooth_k=0: ", F.col("tok"))
-    lp = F.log(cnt.cast("double") / F.lit(denom)).cast(_DEC)
+    lp = F.log(cnt.cast("double") / F.lit(denom))
     return (joined.groupBy("__id")
             .agg(F.count(F.lit(1)).alias("n_tokens"),
-                 F.sum(lp).alias("__s"))
+                 exact_sum(lp).alias("__s"))
             .select(F.col("__id").alias(id_col), "n_tokens",
                     F.col("__s").cast("string").cast("double")
                      .alias("sum_logprob"),
@@ -238,10 +239,10 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
                        "by the model under smooth_k=0: ", pair)
         den = _require(F.col("__cc"), "bigram_logprob: context unseen "
                        "by the model under smooth_k=0: ", F.col("prev"))
-    lp = F.log(num.cast("double") / den.cast("double")).cast(_DEC)
+    lp = F.log(num.cast("double") / den.cast("double"))
     return (joined.groupBy("__id")
             .agg(F.count(F.lit(1)).alias("n_bigrams"),
-                 F.sum(lp).alias("__s"))
+                 exact_sum(lp).alias("__s"))
             .select(F.col("__id").alias(id_col), "n_bigrams",
                     F.col("__s").cast("string").cast("double")
                      .alias("sum_logprob"),
@@ -365,10 +366,10 @@ def interpolated_logprob(df: DataFrame, id_col: str, text_col: str,
     pb = cb.cast("double") / cc.cast("double")
     p = F.when(F.col("prev").isNull(), pu) \
          .otherwise(F.lit(lam) * pb + F.lit(1.0 - lam) * pu)
-    lp = F.log(p).cast(_DEC)
+    lp = F.log(p)
     return (j.groupBy("__id")
              .agg(F.count(F.lit(1)).alias("n_tokens"),
-                  F.sum(lp).alias("__s"))
+                  exact_sum(lp).alias("__s"))
              .select(F.col("__id").alias(id_col), "n_tokens",
                      F.col("__s").cast("string").cast("double")
                       .alias("sum_logprob"),
@@ -551,13 +552,13 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str,
     denom = tf_d + F.lit(k1) * (F.lit(1.0 - b)
                                 + F.lit(b) * F.col("dl").cast("double")
                                 / F.lit(avgdl))
-    term = (idf * tf_d * F.lit(k1 + 1.0) / denom).cast(_DEC)
+    term = idf * tf_d * F.lit(k1 + 1.0) / denom
     scored = (F.broadcast(qt)
               .join(tf, "tok")
               .join(dfreq, "tok")
               .join(dl, "__doc")
               .groupBy("q_id", "__doc")
-              .agg(F.sum(term).alias("__s")))
+              .agg(exact_sum(term).alias("__s")))
     w = Window.partitionBy("q_id").orderBy(F.desc("__s"),
                                            F.asc("__doc"))
     out = (scored.withColumn("rank", F.row_number().over(w))
@@ -1068,10 +1069,10 @@ def bm25_index_topk(spark, index_path: str,
     denom = tf_d + F.lit(k1) * (F.lit(1.0 - b)
                                 + F.lit(b) * F.col("dl").cast("double")
                                 / F.lit(avgdl))
-    term = (idf * tf_d * F.lit(k1 + 1.0) / denom).cast(_DEC)
+    term = idf * tf_d * F.lit(k1 + 1.0) / denom
     scored = (post.join(F.broadcast(qt), "tok")
                   .groupBy("q_id", "doc")
-                  .agg(F.sum(term).alias("__s")))
+                  .agg(exact_sum(term).alias("__s")))
     w = Window.partitionBy("q_id").orderBy(F.desc("__s"),
                                            F.asc("doc"))
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -1260,10 +1261,10 @@ def zipf_fit(df: DataFrame, text_col: str, top_n: int = 256) -> DataFrame:
     d = lambda c: F.col(c).cast("string").cast("double")  # noqa: E731
     sums = xy.agg(
         F.count(F.lit(1)).alias("n_terms"),
-        F.sum(F.col("x").cast(_DEC)).alias("sx"),
-        F.sum(F.col("y").cast(_DEC)).alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(_DEC)).alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast(_DEC)).alias("sxy"))
+        exact_sum(F.col("x")).alias("sx"),
+        exact_sum(F.col("y")).alias("sy"),
+        exact_sum(F.col("x") * F.col("x")).alias("sxx"),
+        exact_sum(F.col("x") * F.col("y")).alias("sxy"))
     n = F.col("n_terms").cast("double")
     slope = ((n * d("sxy") - d("sx") * d("sy"))
              / (n * d("sxx") - d("sx") * d("sx")))
@@ -1363,10 +1364,9 @@ def stupid_backoff_logprob(df: DataFrame, id_col: str, text_col: str,
                 F.log(F.col("c2").cast("double")
                       / F.col("ccc").cast("double"))) \
           .otherwise(F.log(F.lit(float(alpha)) * uni))
-    term = sc.cast(_DEC)
     return (j.groupBy("__id")
              .agg(F.count(F.lit(1)).alias("n_tokens"),
-                  F.sum(term).alias("__s"))
+                  exact_sum(sc).alias("__s"))
              .select(F.col("__id").alias(id_col), "n_tokens",
                      F.col("__s").cast("string").cast("double")
                       .alias("sum_score"),

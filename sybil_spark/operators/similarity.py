@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sybil_spark.functions.exact import exact_sum
 from sybil_spark.functions.vectors import (absmax_sql, cosine_to_const,
                                            cosine_to_const_sql, dot_sql,
                                            double_array, ident,
@@ -1111,8 +1112,7 @@ def pq_codebooks_kmeans(df: DataFrame, vec_col: str,
             for s in range(m)])
         ex = (enc.select(F.explode(parts).alias("p"))
                  .select("p.s", "p.j", "p.v"))
-        aggs = [F.sum(F.element_at(F.col("v"), i + 1)
-                      .cast("decimal(38,6)"))
+        aggs = [exact_sum(F.element_at(F.col("v"), i + 1))
                  .cast("string").cast("double").alias(f"d{i}")
                 for i in range(sub)]
         aggs.append(F.count(F.lit(1)).alias("n"))

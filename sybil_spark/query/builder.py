@@ -48,6 +48,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DoubleType
+
+from sybil_spark.functions.exact import DEC, sum6
 
 #: sybil NUM_BUCKETS (reference: src/lib/hist.go:3)
 NUM_BUCKETS = 1000
@@ -66,6 +69,12 @@ NUM_BUCKETS = 1000
 WP_GROUPED_DISTRIBUTED_MIN_BYTES = 64 << 20
 #: sybil default result limit (reference: src/lib/config.go:166-167)
 DEFAULT_LIMIT = 100
+
+
+def _dtype(df: DataFrame, c: Column) -> DataType:
+    """The type of `c` over `df` (an analysis call, no job)."""
+    return df.select(c).schema[0].dataType
+
 
 _INT_OPS = {"gt", "lt", "eq", "neq", "ge", "le"}
 _STR_OPS = {"eq", "neq", "re", "nre"}
@@ -241,16 +250,21 @@ class Query:
         return self
 
     def exact_mode(self) -> "Query":
-        """Deterministic float aggregation: sums/averages/stddev go
-        through exact decimal(38,6) accumulation and are cast back
-        to double. Partial-aggregation order then cannot perturb low
-        bits, so results are bit-identical across partitionings,
-        cluster sizes, AND other engines (the DuckDB correctness
-        oracle). Keep |sum|·10^6 < 2^53 — then the decimal→double
+        """Deterministic float aggregation: sums/averages/stddev
+        equal Σ cast(x as decimal(38,6)) and are cast back to double.
+        Partial-aggregation order then cannot perturb low bits, so
+        results are bit-identical across partitionings, cluster
+        sizes, AND other engines (the DuckDB correctness oracle).
+        Float summands accumulate on int64 fixed point
+        (functions.exact.exact_sum); integral ones as decimals.
+
+        Domain: keep |sum|·10^6 < 2^53 — then the decimal→double
         cast is a single correctly-rounded operation in every engine
         (larger scaled sums expose engines whose int128→double
-        conversion is two-step). Slightly slower than native double
-        sums; off by default."""
+        conversion is two-step). A float summand with |x|·10^6 ≥
+        2^63 (|x| ≳ 9.2e12) has no int64 fixed-point value: the
+        query raises rather than skip it. Slightly slower than
+        native double sums; off by default."""
         self._exact = True
         return self
 
@@ -299,15 +313,16 @@ class Query:
             return F.coalesce(F.col(self._weight_col).cast("double"), F.lit(1.0))
         return F.lit(1.0)
 
-    _DEC = "decimal(38,6)"
+    _DEC = DEC
 
-    def _dsum(self, c: Column) -> Column:
-        """Order-independent float sum (see exact_mode)."""
-        return F.sum(c.cast(self._DEC)).cast("double")
+    def _dsum(self, c: Column, dtype: DataType = DoubleType()) -> Column:
+        """Order-independent sum of a `dtype` summand (see
+        exact_mode), as double."""
+        return sum6(c, dtype).cast("double")
 
     def _sum(self, c: Column) -> Column:
-        """sum(c) in the query's mode: exact decimal under exact_mode,
-        native double otherwise."""
+        """sum(c) of a double summand in the query's mode: exact
+        under exact_mode, native double otherwise."""
         return self._dsum(c) if self._exact else F.sum(c)
 
     def _count_exprs(self) -> list[Column]:
@@ -319,7 +334,7 @@ class Query:
         return [self._sum(self._weight()).alias("count"),
                 F.count(F.lit(1)).alias("samples")]
 
-    def _agg_exprs(self) -> list[Column]:
+    def _agg_exprs(self, df: DataFrame) -> list[Column]:
         w = self._weight()
         exprs = self._count_exprs()
         for a in self._aggs:
@@ -330,7 +345,7 @@ class Query:
                     expr = (self._sum(c * w)
                             / self._sum(F.when(c.isNotNull(), w)))
                 elif self._exact:
-                    expr = self._dsum(c) / F.count(c)
+                    expr = self._dsum(c, _dtype(df, c)) / F.count(c)
                 else:
                     expr = F.avg(c)
                 exprs.append(expr.alias(name))
@@ -338,8 +353,12 @@ class Query:
                 # weighted SUM is Σv·w — the reference derives SUM as
                 # Mean()·TotalCount with a weight-scaled count
                 # (hist_compat.go:22, printer.go:122), i.e. weighted
-                cw = c * w if self._weight_col else c
-                exprs.append(self._sum(cw).alias(name))
+                if self._weight_col:
+                    exprs.append(self._sum(c * w).alias(name))
+                elif self._exact:
+                    exprs.append(self._dsum(c, _dtype(df, c)).alias(name))
+                else:
+                    exprs.append(F.sum(c).alias(name))
             elif a.op == "min":
                 exprs.append(F.min(c).alias(name))
             elif a.op == "max":
@@ -357,9 +376,9 @@ class Query:
                     var = (s2 - s1 * s1 / big_w) / (big_w - F.lit(1.0))
                     exprs.append(F.sqrt(var).alias(name))
                 elif self._exact:
-                    n = F.count(c)
-                    var = ((self._dsum(c * c)
-                            - self._dsum(c) * self._dsum(c) / n)
+                    n, ct = F.count(c), _dtype(df, c)
+                    var = ((self._dsum(c * c, ct)
+                            - self._dsum(c, ct) * self._dsum(c, ct) / n)
                            / (n - F.lit(1)))
                     exprs.append(F.sqrt(var).alias(name))
                 else:
@@ -589,7 +608,7 @@ class Query:
     def compile(self, spark: SparkSession) -> DataFrame:
         df = self._scan(spark)
         group_cols = self._group_cols()
-        out = df.groupBy(*group_cols).agg(*self._agg_exprs())
+        out = df.groupBy(*group_cols).agg(*self._agg_exprs(df))
 
         wp_aggs = [a for a in self._aggs
                    if a.op == "percentile" and self._weight_col
@@ -607,7 +626,7 @@ class Query:
         if self._total_row and group_cols:
             # Grand-total union (reference src/lib/aggregate.go:414-459);
             # group keys become null, rendered "TOTAL" in the output layer.
-            total = df.agg(*self._agg_exprs())
+            total = df.agg(*self._agg_exprs(df))
             for gc in out.columns:
                 if gc not in total.columns:
                     total = total.withColumn(gc, F.lit(None))
@@ -763,13 +782,15 @@ class Query:
         c = F.col(col)
         use_w = bool(self._weight_col)
         wcol = self._weight()
+        # summand types: weighted moments are double, raw ones the column's
+        vt = DoubleType() if use_w else _dtype(df, c)
         vw = c * wcol if use_w else c
         vvw = c * c * wcol if use_w else c * c
         baggs = [F.count(F.lit(1)).alias("__n"),
-                 F.sum(vw.cast(self._DEC)).alias("__s"),
-                 F.sum(vvw.cast(self._DEC)).alias("__ss")]
+                 sum6(vw, vt).alias("__s"),
+                 sum6(vvw, vt).alias("__ss")]
         if use_w:
-            baggs.append(F.sum(wcol.cast(self._DEC)).alias("__w"))
+            baggs.append(sum6(wcol, DoubleType()).alias("__w"))
         per_bucket = df.groupBy(*self._group_cols(), bcol).agg(*baggs)
         gnames = self._group_names()
         n = F.sum("__n")

@@ -7,19 +7,15 @@ first-class operator here).
 
 Everything is two chained aggregations — a per-group partial and a
 single-row combine — so it runs as two hash-aggregate stages with no
-collect; sums go through decimal accumulation so the statistic is
-bit-deterministic (see Query.exact_mode)."""
+collect; sums are exact Σ cast(x as decimal(38,6)) (functions.exact)
+so the statistic is bit-deterministic (see Query.exact_mode)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DEC = "decimal(38,6)"
-
-
-def _dsum(c):
-    return F.sum(c.cast(_DEC)).cast("double")
+from sybil_spark.functions.exact import exact_sum, sum6
 
 
 def icc(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -29,19 +25,21 @@ def icc(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     s_j²/n_j); MSB = SSB/(J−1), MSW = SSW/(N−J);
     ICC(1) = (MSB − MSW) / (MSB + (n̄ − 1)·MSW) with n̄ = N/J."""
     v = F.col(value_col)
+    vt = df.select(v).schema[0].dataType
     g = (df.where(v.isNotNull())
            .groupBy(group_col)
            .agg(F.count(value_col).alias("n_j"),
-                _dsum(v).alias("s_j"),
-                _dsum(v * v).alias("ss_j")))
-    # combine stage: all terms are per-group scalars; second-level sums
-    # go through decimal too so group order can't perturb the result
+                sum6(v, vt).cast("double").alias("s_j"),
+                sum6(v * v, vt).cast("double").alias("ss_j")))
+    # combine stage: all terms are per-group double scalars; they are
+    # summed exactly too so group order can't perturb the result
     combined = g.agg(
         F.sum("n_j").alias("n"),
         F.count(F.lit(1)).alias("groups"),
-        _dsum(F.col("s_j")).alias("s"),
-        _dsum(F.col("ss_j")).alias("ss"),
-        _dsum(F.col("s_j") * F.col("s_j") / F.col("n_j")).alias("sg"))
+        exact_sum(F.col("s_j")).cast("double").alias("s"),
+        exact_sum(F.col("ss_j")).cast("double").alias("ss"),
+        exact_sum(F.col("s_j") * F.col("s_j") / F.col("n_j"))
+        .cast("double").alias("sg"))
     m = F.col("s") / F.col("n")
     ssb = F.col("sg") - F.col("s") * F.col("s") / F.col("n")
     ssw = F.col("ss") - F.col("sg")

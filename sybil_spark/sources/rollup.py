@@ -36,9 +36,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sybil_spark.functions.exact import DEC as _DEC
+from sybil_spark.functions.exact import sum6
 from sybil_spark.sources import commit
 
-_DEC = "decimal(38,6)"
 #: unit separator — same tuple encoding as the distinct query path
 _SEP = "\x1f"
 
@@ -69,7 +70,7 @@ def build_rollup(df: DataFrame, time_col: str | None, bucket_s: int | None,
     for c in num_cols:
         col = F.col(c)
         aggs += [
-            F.sum(col.cast(_DEC)).alias(f"{c}__sum"),
+            sum6(col, df.select(col).schema[0].dataType).alias(f"{c}__sum"),
             F.sum(col.cast(_DEC) * col.cast(_DEC)).alias(f"{c}__sumsq"),
             F.min(col).alias(f"{c}__min"),
             F.max(col).alias(f"{c}__max"),

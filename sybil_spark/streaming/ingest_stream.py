@@ -248,9 +248,12 @@ def _decide(docs: DataFrame, id_col: str,
     once, not once per write that needs it. Returns (survivors: the
     docs not dropped, in docs' own columns — a NULL id never
     matches, so it passes through; dropped: the `id`s of the docs
-    that matched)."""
-    flag = drop.select(F.col("id").alias("__drop_id"),
-                       F.lit(True).alias("__drop")).distinct()
+    that matched). The flag is broadcast: it holds at most one
+    batch of ids, but a batch snapshot carries no size statistics
+    (it reports 8 EiB), so the planner would otherwise pick a
+    sort-merge join behind two shuffle stages."""
+    flag = F.broadcast(drop.select(F.col("id").alias("__drop_id"),
+                                   F.lit(True).alias("__drop")).distinct())
     snap = (docs.join(flag, docs[id_col] == flag["__drop_id"], "left")
                 .drop("__drop_id").localCheckpoint())
     return (snap.where(F.col("__drop").isNull()).drop("__drop"),
@@ -695,7 +698,8 @@ def stream_near_dedup_against_index(df: DataFrame, id_col: str,
         # all (NULL/short text), which can't collide
         survivors, dropped = _decide(docs, id_col, drop)
         _write_out_batch(survivors, out_path, batch_id)
-        sdi.append_batch(bnd.join(dropped, "id", "left_anti"), batch_id)
+        sdi.append_batch(bnd.join(F.broadcast(dropped), "id", "left_anti"),
+                         batch_id)
 
     return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)
 
@@ -803,7 +807,7 @@ def stream_embedding_dedup_against_index(df: DataFrame, id_col: str,
         survivors, dropped = _decide(docs, id_col, drop)
         _write_out_batch(survivors, out_path, batch_id)
         sdi.append_batch(vec_rows(survivors), batch_id, "vectors")
-        sdi.append_batch(bkt.join(dropped, "id", "left_anti"),
+        sdi.append_batch(bkt.join(F.broadcast(dropped), "id", "left_anti"),
                          batch_id, "buckets")
 
     return sdi.sink(df, checkpoint or out_path + "_checkpoint", step)

@@ -177,17 +177,24 @@ def test_day_partitioned_layout_prunes(spark, sf_dir, tmp_path):
     assert data_filters is None or "day" not in data_filters.group(1)
 
 
-def test_no_cartesian_or_nested_loop_in_corpus(spark):
+@pytest.fixture(scope="module")
+def corpus_plans(spark, sf_dir):
+    """Every corpus query's formatted physical plan at the test scale
+    factor, built once for the three corpus-wide plan-smell gates
+    below."""
+    from sybil_spark.corpus import QUERIES
+    return {name: I.formatted_plan(fn(spark, sf_dir))
+            for name, fn in QUERIES.items()}
+
+
+def test_no_cartesian_or_nested_loop_in_corpus(corpus_plans):
     """Global plan-smell gate: no corpus query may plan a
     CartesianProduct or BroadcastNestedLoopJoin — the two shapes
     that are quadratic at scale regardless of cluster size. Guards
     every future operator against accidentally joining without an
     equi-condition."""
-    from sybil_spark.corpus import QUERIES
-    sf = "/root/testdata/sf0.001"
     bad = {}
-    for name, fn in QUERIES.items():
-        plan = I.formatted_plan(fn(spark, sf))
+    for name, plan in corpus_plans.items():
         smells = [s for s in ("CartesianProduct", "BroadcastNestedLoopJoin")
                   if s in plan]
         if smells:
@@ -195,7 +202,7 @@ def test_no_cartesian_or_nested_loop_in_corpus(spark):
     assert not bad, bad
 
 
-def test_no_row_python_udf_in_corpus(spark):
+def test_no_row_python_udf_in_corpus(corpus_plans):
     """Global plan-smell gate #2: no corpus query may plan a
     BatchEvalPython node — the row-at-a-time Python UDF evaluator
     that serializes one row per round-trip (10-100x slower than the
@@ -204,10 +211,8 @@ def test_no_row_python_udf_in_corpus(spark):
     FlatMapGroupsInPandas, all of which move Arrow record batches.
     Guards every future operator against a casual F.udf() sneaking
     into the corpus."""
-    from sybil_spark.corpus import QUERIES
-    sf = "/root/testdata/sf0.001"
-    bad = [name for name, fn in QUERIES.items()
-           if "BatchEvalPython" in I.formatted_plan(fn(spark, sf))]
+    bad = [name for name, plan in corpus_plans.items()
+           if "BatchEvalPython" in plan]
     assert not bad, bad
 
 
@@ -436,7 +441,7 @@ def test_tfidf_rank_limit_pushdown(spark, sf_dir):
     assert I.broadcast_join_count(q) >= 1, p
 
 
-def test_no_raw_text_shuffle_key_in_corpus(spark):
+def test_no_raw_text_shuffle_key_in_corpus(corpus_plans):
     """Global plan-smell gate #3: no corpus query may shuffle on the
     raw document text — `hashpartitioning(text#...)` (or an alias of
     it) in an Exchange means the full document is the shuffle KEY,
@@ -449,14 +454,11 @@ def test_no_raw_text_shuffle_key_in_corpus(spark):
     text — the collision re-check itself, by design bounded to the
     duplicate mass."""
     import re
-    from sybil_spark.corpus import QUERIES
-    sf = "/root/testdata/sf0.001"
     exempt = {"dedup_exact", "dedup_keep_first", "corpus_stats"}
     bad = {}
-    for name, fn in QUERIES.items():
+    for name, plan in corpus_plans.items():
         if name in exempt:
             continue
-        plan = I.formatted_plan(fn(spark, sf))
         keys = re.findall(r"hashpartitioning\(((?:text|ta|tb)#\d+)",
                           plan)
         if keys:
