@@ -35,6 +35,10 @@ the high word's long sum overflows: it raises in an ANSI session and
 wraps in a non-ANSI one). exact_mode's own domain, |Σx|·10^6 < 2^53,
 lies far inside both bounds.
 
+The summand comes as SQL text and the kernel is one SQL string and
+one `F.expr` (the build contract in `functions.sqltext`): the same
+tree built from Column nodes takes ~45 py4j round trips per sum.
+
 The kernel is for float/double summands. Integral and decimal summands
 keep the decimal sum (`sum6` picks by dtype): their cast is cheap and
 exact, and the per-row int64 bound would narrow a bigint column's
@@ -42,11 +46,11 @@ domain."""
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, DoubleType, FloatType
+
+from sybil_spark.functions.sqltext import lit_double, lit_string
 
 #: the exact-sum result type, and the quantization every summand takes
 DEC = "decimal(38,6)"
@@ -65,43 +69,50 @@ OUT_OF_RANGE = ("exact_sum: a summand with |x|*10^6 >= 2^63 has no int64 "
                 "fixed-point value (outside exact_mode's domain)")
 
 
-def _unscaled(x: Column) -> Column:
-    """cast(x as decimal(38,6)) · 10^6 as a bigint (see the module
-    docstring for why the fast branch equals the cast)."""
-    d = x.cast("double")
-    r = d * F.lit(1e6)
-    n = F.rint(r)
-    fast = (F.abs(r) < F.lit(_FAST_LIMIT)) & (F.abs(r - n) < F.lit(_NEAR))
-    scaled = x.cast(DEC) * F.lit(1000000)
+def exact_sum_sql(x: str) -> str:
+    """SQL text of Σ cast(x as decimal(38,6)) for the float/double
+    summand `x` (SQL text: a name quoted by `sqltext.ident`, or an
+    expression over such names with `lit_double` literals), summed
+    as int64 (see the module docstring)."""
+    d = f"CAST(({x}) AS DOUBLE)"
+    r = f"({d} * {lit_double(1e6)})"
+    n = f"rint({r})"
+    fast = (f"(abs({r}) < {lit_double(_FAST_LIMIT)}) "
+            f"AND (abs({r} - {n}) < {lit_double(_NEAR)})")
+    scaled = f"(CAST(({x}) AS {DEC}) * 1000000)"
     # |x| ≥ 1e13 is out of range whatever the rounding, and catches the
     # magnitudes whose decimal(38,6) cast would be NULL; the decimal
     # compare settles [9.2e12, 1e13) exactly. NaN and ±inf fail the
     # first test and fall through to the cast, as in the decimal sum.
-    out_of_range = ((F.abs(d) < F.lit(float("inf")))
-                    & ((F.abs(d) >= F.lit(1e13))
-                       | (F.abs(scaled) >= F.lit(Decimal(1 << 63)))))
-    return (F.when(fast, n.cast("long"))
-             .when(out_of_range, F.raise_error(F.lit(OUT_OF_RANGE)))
-             .otherwise(scaled.cast("long")))
+    out_of_range = (f"(abs({d}) < {lit_double(float('inf'))}) "
+                    f"AND ((abs({d}) >= {lit_double(1e13)}) "
+                    f"OR (abs({scaled}) >= {1 << 63}BD))")
+    u = (f"CASE WHEN {fast} THEN CAST({n} AS BIGINT) "
+         f"WHEN {out_of_range} THEN raise_error({lit_string(OUT_OF_RANGE)}) "
+         f"ELSE CAST({scaled} AS BIGINT) END")
+    hi = f"sum(shiftright({u}, {_LO_BITS}))"
+    lo = f"sum(({u}) & {(1 << _LO_BITS) - 1})"
+    return (f"CAST((CAST({hi} AS decimal(38,0)) * {1 << _LO_BITS} "
+            f"+ CAST({lo} AS decimal(38,0))) * 0.000001BD AS {DEC})")
 
 
-def exact_sum(x: Column) -> Column:
-    """Σ cast(x as decimal(38,6)) for a float/double summand,
-    accumulated as int64: bit-identical to
+def exact_sum(x: str) -> Column:
+    """Σ cast(x as decimal(38,6)) for a float/double summand given as
+    SQL text, accumulated as int64: bit-identical to
     `F.sum(x.cast("decimal(38,6)"))`, including NULL for an empty or
     all-NULL group. Raises for a finite |x|·10^6 ≥ 2^63."""
-    u = _unscaled(x)
-    hi = F.sum(F.shiftright(u, _LO_BITS))
-    lo = F.sum(u.bitwiseAND(F.lit((1 << _LO_BITS) - 1)))
-    total = (hi.cast("decimal(38,0)") * F.lit(1 << _LO_BITS)
-             + lo.cast("decimal(38,0)"))
-    return (total * F.lit(Decimal("0.000001"))).cast(DEC)
+    return F.expr(exact_sum_sql(x))
 
 
-def sum6(x: Column, dtype: DataType) -> Column:
-    """Σ cast(x as decimal(38,6)) for a summand of type `dtype`: the
-    int64 kernel for float/double, the decimal sum for integral and
-    decimal summands."""
+def sum6_sql(x: str, dtype: DataType) -> str:
+    """SQL text of Σ cast(x as decimal(38,6)) for the summand text `x`
+    of type `dtype`: the int64 kernel for float/double, the decimal
+    sum for integral and decimal summands."""
     if isinstance(dtype, (DoubleType, FloatType)):
-        return exact_sum(x)
-    return F.sum(x.cast(DEC))
+        return exact_sum_sql(x)
+    return f"sum(CAST(({x}) AS {DEC}))"
+
+
+def sum6(x: str, dtype: DataType) -> Column:
+    """`sum6_sql` as a Column (one `F.expr`)."""
+    return F.expr(sum6_sql(x, dtype))

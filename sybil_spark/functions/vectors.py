@@ -8,23 +8,8 @@ fold is sequential left-to-right, which makes results deterministic
 and bit-identical to any other engine that sums doubles in index
 order (the DuckDB oracle's `list_dot_product` does).
 
-Build contract: each helper writes ONE SQL expression string and
-makes ONE `F.expr` call. The same tree assembled through the Column
-API costs one py4j round trip per node — a 64-dim dot against a
-literal plane is hundreds of them, and the operators that fold dozens
-of such dots (LSH planes, IVF centroids, PQ codewords) spent seconds
-of driver time per DataFrame before Spark ran a job. So:
-
-- the Column helpers (`dot`, `cosine`, ...) take column NAMES;
-- the `*_sql` builders take SQL fragments — a name quoted by `ident`
-  or the text of another `*_sql` call — and return SQL text, so an
-  operator can assemble a whole wide projection and still pay one
-  `F.expr`/`selectExpr` call;
-- doubles render through `lit_double`, which parses back to the same
-  bits, and arrays of them through `double_array`, so the analyzed
-  expressions are exactly the ones the Column API builds;
-- SQL is never read back from a Column (its JVM accessor changed
-  between Spark 3 and 4).
+Each helper follows the build contract in `functions.sqltext`: one
+SQL string, one `F.expr`.
 
 Lambda variables are `__x`/`__y`/`__acc`: a lambda variable shadows a
 column of the same name inside its body, and the only outside column
@@ -38,30 +23,7 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def ident(name: str) -> str:
-    """Backtick-quoted SQL identifier for column `name` (any
-    characters, backticks doubled)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def lit_double(x: float) -> str:
-    """SQL double literal of `x`: `repr(x) + "D"` round-trips every
-    finite double bit-for-bit (±0.0 and subnormals included). NaN and
-    ±inf have no literal form; they render as a cast of Spark's own
-    string spelling, which constant-folds to the same value."""
-    x = float(x)
-    if math.isfinite(x):
-        return repr(x) + "D"
-    s = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
-    return f"CAST('{s}' AS DOUBLE)"
-
-
-def double_array(xs: list[float]) -> str:
-    """`array<double>` literal of `xs`, built like
-    `F.lit(list).cast("array<double>")` (constant-folded once)."""
-    return ("CAST(array(" + ", ".join(lit_double(x) for x in xs)
-            + ") AS array<double>)")
+from sybil_spark.functions.sqltext import double_array, ident, lit_double
 
 
 def dot_sql(a: str, b: str) -> str:

@@ -974,7 +974,7 @@ def embedding_buckets(df: DataFrame, id_col: str, vec_col: str,
     bucket bits are JVM fold expressions over literal planes — the
     frame is cheap to persist and equi-joinable, which is what the
     streaming embedding-dedup index stores."""
-    from sybil_spark.functions.vectors import ident
+    from sybil_spark.functions.sqltext import ident
     from sybil_spark.operators import similarity as S
 
     vec = ident(vec_col)

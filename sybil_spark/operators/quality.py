@@ -86,9 +86,9 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
                        "unigram_logprob: token unseen by the model "
                        "under smooth_k=0: ", F.col("tok"))
     lp = F.log(cnt.cast("double") / F.lit(denom))
-    return (joined.groupBy("__id")
+    return (joined.withColumn("__lp", lp).groupBy("__id")
             .agg(F.count(F.lit(1)).alias("n_tokens"),
-                 exact_sum(lp).alias("__s"))
+                 exact_sum("__lp").alias("__s"))
             .select(F.col("__id").alias(id_col), "n_tokens",
                     F.col("__s").cast("string").cast("double")
                      .alias("sum_logprob"),
@@ -240,9 +240,9 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
         den = _require(F.col("__cc"), "bigram_logprob: context unseen "
                        "by the model under smooth_k=0: ", F.col("prev"))
     lp = F.log(num.cast("double") / den.cast("double"))
-    return (joined.groupBy("__id")
+    return (joined.withColumn("__lp", lp).groupBy("__id")
             .agg(F.count(F.lit(1)).alias("n_bigrams"),
-                 exact_sum(lp).alias("__s"))
+                 exact_sum("__lp").alias("__s"))
             .select(F.col("__id").alias(id_col), "n_bigrams",
                     F.col("__s").cast("string").cast("double")
                      .alias("sum_logprob"),
@@ -367,9 +367,9 @@ def interpolated_logprob(df: DataFrame, id_col: str, text_col: str,
     p = F.when(F.col("prev").isNull(), pu) \
          .otherwise(F.lit(lam) * pb + F.lit(1.0 - lam) * pu)
     lp = F.log(p)
-    return (j.groupBy("__id")
+    return (j.withColumn("__lp", lp).groupBy("__id")
              .agg(F.count(F.lit(1)).alias("n_tokens"),
-                  exact_sum(lp).alias("__s"))
+                  exact_sum("__lp").alias("__s"))
              .select(F.col("__id").alias(id_col), "n_tokens",
                      F.col("__s").cast("string").cast("double")
                       .alias("sum_logprob"),
@@ -557,8 +557,9 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str,
               .join(tf, "tok")
               .join(dfreq, "tok")
               .join(dl, "__doc")
+              .withColumn("__term", term)
               .groupBy("q_id", "__doc")
-              .agg(exact_sum(term).alias("__s")))
+              .agg(exact_sum("__term").alias("__s")))
     w = Window.partitionBy("q_id").orderBy(F.desc("__s"),
                                            F.asc("__doc"))
     out = (scored.withColumn("rank", F.row_number().over(w))
@@ -1071,8 +1072,9 @@ def bm25_index_topk(spark, index_path: str,
                                 / F.lit(avgdl))
     term = idf * tf_d * F.lit(k1 + 1.0) / denom
     scored = (post.join(F.broadcast(qt), "tok")
+                  .withColumn("__term", term)
                   .groupBy("q_id", "doc")
-                  .agg(exact_sum(term).alias("__s")))
+                  .agg(exact_sum("__term").alias("__s")))
     w = Window.partitionBy("q_id").orderBy(F.desc("__s"),
                                            F.asc("doc"))
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -1261,10 +1263,10 @@ def zipf_fit(df: DataFrame, text_col: str, top_n: int = 256) -> DataFrame:
     d = lambda c: F.col(c).cast("string").cast("double")  # noqa: E731
     sums = xy.agg(
         F.count(F.lit(1)).alias("n_terms"),
-        exact_sum(F.col("x")).alias("sx"),
-        exact_sum(F.col("y")).alias("sy"),
-        exact_sum(F.col("x") * F.col("x")).alias("sxx"),
-        exact_sum(F.col("x") * F.col("y")).alias("sxy"))
+        exact_sum("x").alias("sx"),
+        exact_sum("y").alias("sy"),
+        exact_sum("x * x").alias("sxx"),
+        exact_sum("x * y").alias("sxy"))
     n = F.col("n_terms").cast("double")
     slope = ((n * d("sxy") - d("sx") * d("sy"))
              / (n * d("sxx") - d("sx") * d("sx")))
@@ -1364,9 +1366,9 @@ def stupid_backoff_logprob(df: DataFrame, id_col: str, text_col: str,
                 F.log(F.col("c2").cast("double")
                       / F.col("ccc").cast("double"))) \
           .otherwise(F.log(F.lit(float(alpha)) * uni))
-    return (j.groupBy("__id")
+    return (j.withColumn("__sc", sc).groupBy("__id")
              .agg(F.count(F.lit(1)).alias("n_tokens"),
-                  exact_sum(sc).alias("__s"))
+                  exact_sum("__sc").alias("__s"))
              .select(F.col("__id").alias(id_col), "n_tokens",
                      F.col("__s").cast("string").cast("double")
                       .alias("sum_score"),

@@ -17,11 +17,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sybil_spark.functions.exact import exact_sum
+from sybil_spark.functions.sqltext import double_array, ident, lit_double
 from sybil_spark.functions.vectors import (absmax_sql, cosine_to_const,
                                            cosine_to_const_sql, dot_sql,
-                                           double_array, ident,
-                                           int8_quantize_sql, lit_double,
-                                           norm_sq, norm_sq_sql)
+                                           int8_quantize_sql, norm_sq,
+                                           norm_sq_sql)
 from sybil_spark.operators._util import spread
 from sybil_spark.sources import commit
 
@@ -1112,7 +1112,7 @@ def pq_codebooks_kmeans(df: DataFrame, vec_col: str,
             for s in range(m)])
         ex = (enc.select(F.explode(parts).alias("p"))
                  .select("p.s", "p.j", "p.v"))
-        aggs = [exact_sum(F.element_at(F.col("v"), i + 1))
+        aggs = [exact_sum(f"element_at(v, {i + 1})")
                  .cast("string").cast("double").alias(f"d{i}")
                 for i in range(sub)]
         aggs.append(F.count(F.lit(1)).alias("n"))

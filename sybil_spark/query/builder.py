@@ -50,7 +50,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, DoubleType
 
-from sybil_spark.functions.exact import DEC, sum6
+from sybil_spark.functions.exact import DEC, sum6_sql
+from sybil_spark.functions.sqltext import ident, lit_double
 
 #: sybil NUM_BUCKETS (reference: src/lib/hist.go:3)
 NUM_BUCKETS = 1000
@@ -256,7 +257,11 @@ class Query:
         results are bit-identical across partitionings, cluster
         sizes, AND other engines (the DuckDB correctness oracle).
         Float summands accumulate on int64 fixed point
-        (functions.exact.exact_sum); integral ones as decimals.
+        (functions.exact.exact_sum); integral ones as decimals. The
+        sums are built as SQL text, one `F.expr` per output column
+        (the build contract in functions.sqltext). The sample stddev
+        of a one-sample group is NULL (its n − 1 divisor is zero), as
+        stddev_samp's is, not an ANSI divide-by-zero error.
 
         Domain: keep |sum|·10^6 < 2^53 — then the decimal→double
         cast is a single correctly-rounded operation in every engine
@@ -308,22 +313,23 @@ class Query:
             df = df.withColumn(alias, F.explode(F.col(col)))
         return df
 
-    def _weight(self) -> Column:
+    def _weight_sql(self) -> str:
+        """The row weight as SQL text: the weight column as double
+        (a NULL weight counts 1), or 1.0 without a weight column."""
         if self._weight_col:
-            return F.coalesce(F.col(self._weight_col).cast("double"), F.lit(1.0))
-        return F.lit(1.0)
+            return f"coalesce(CAST({ident(self._weight_col)} AS DOUBLE), 1.0D)"
+        return "1.0D"
 
-    _DEC = DEC
+    @staticmethod
+    def _dsum(x: str, dtype: DataType = DoubleType()) -> str:
+        """Order-independent sum (see exact_mode) of the `dtype`
+        summand `x`, as double; SQL text in and out."""
+        return f"CAST({sum6_sql(x, dtype)} AS DOUBLE)"
 
-    def _dsum(self, c: Column, dtype: DataType = DoubleType()) -> Column:
-        """Order-independent sum of a `dtype` summand (see
-        exact_mode), as double."""
-        return sum6(c, dtype).cast("double")
-
-    def _sum(self, c: Column) -> Column:
-        """sum(c) of a double summand in the query's mode: exact
-        under exact_mode, native double otherwise."""
-        return self._dsum(c) if self._exact else F.sum(c)
+    def _sum(self, x: str) -> str:
+        """sum(x) of a double summand in the query's mode: exact
+        under exact_mode, native double otherwise; SQL text."""
+        return self._dsum(x) if self._exact else f"sum({x})"
 
     def _count_exprs(self) -> list[Column]:
         """`count` (weight sum under a weight column) [+ raw `samples`]
@@ -331,32 +337,38 @@ class Query:
         loghist."""
         if not self._weight_col:
             return [F.count(F.lit(1)).alias("count")]
-        return [self._sum(self._weight()).alias("count"),
+        return [F.expr(f"{self._sum(self._weight_sql())} AS `count`"),
                 F.count(F.lit(1)).alias("samples")]
 
     def _agg_exprs(self, df: DataFrame) -> list[Column]:
-        w = self._weight()
+        w = self._weight_sql()
         exprs = self._count_exprs()
         for a in self._aggs:
-            c = F.col(a.col)
+            c, v = F.col(a.col), ident(a.col)
             name = a.alias or f"{a.op}_{a.col.replace(',', '_')}"
+            # the sums below are SQL text, one F.expr per output (the
+            # build contract in functions.sqltext); Σv·w and W, the
+            # weight over non-null values, are the weighted moments
+            vw, ww = f"{v} * {w}", f"CASE WHEN {v} IS NOT NULL THEN {w} END"
             if a.op == "avg":
                 if self._weight_col:
-                    expr = (self._sum(c * w)
-                            / self._sum(F.when(c.isNotNull(), w)))
+                    exprs.append(F.expr(f"{self._sum(vw)} / {self._sum(ww)}"
+                                        f" AS {ident(name)}"))
                 elif self._exact:
-                    expr = self._dsum(c, _dtype(df, c)) / F.count(c)
+                    exprs.append(F.expr(
+                        f"{self._dsum(v, _dtype(df, c))} / count({v})"
+                        f" AS {ident(name)}"))
                 else:
-                    expr = F.avg(c)
-                exprs.append(expr.alias(name))
+                    exprs.append(F.avg(c).alias(name))
             elif a.op == "sum":
                 # weighted SUM is Σv·w — the reference derives SUM as
                 # Mean()·TotalCount with a weight-scaled count
                 # (hist_compat.go:22, printer.go:122), i.e. weighted
                 if self._weight_col:
-                    exprs.append(self._sum(c * w).alias(name))
+                    exprs.append(F.expr(f"{self._sum(vw)} AS {ident(name)}"))
                 elif self._exact:
-                    exprs.append(self._dsum(c, _dtype(df, c)).alias(name))
+                    exprs.append(F.expr(
+                        f"{self._dsum(v, _dtype(df, c))} AS {ident(name)}"))
                 else:
                     exprs.append(F.sum(c).alias(name))
             elif a.op == "min":
@@ -364,23 +376,24 @@ class Query:
             elif a.op == "max":
                 exprs.append(F.max(c).alias(name))
             elif a.op == "stddev":
+                # try_divide: a one-sample group (n − 1 = 0, W − 1 = 0)
+                # gets NULL, like stddev_samp, not an ANSI error
                 if self._weight_col:
                     # frequency-weight sample stddev: (Σwv² − (Σwv)²/W)
                     # / (W−1), W = weight over non-null values — the
                     # un-quantized version of the reference's
                     # weight-scaled hist stddev (hist_basic.go:186-219)
-                    ww = F.when(c.isNotNull(), w)
-                    big_w = (self._dsum(ww) if self._exact
-                             else F.sum(ww).cast("double"))
-                    s1, s2 = self._sum(c * w), self._sum(c * c * w)
-                    var = (s2 - s1 * s1 / big_w) / (big_w - F.lit(1.0))
-                    exprs.append(F.sqrt(var).alias(name))
+                    big_w, s1 = self._sum(ww), self._sum(vw)
+                    s2 = self._sum(f"{v} * {vw}")
+                    exprs.append(F.expr(
+                        f"sqrt(try_divide({s2} - {s1} * {s1} / {big_w}, "
+                        f"{big_w} - 1.0D)) AS {ident(name)}"))
                 elif self._exact:
-                    n, ct = F.count(c), _dtype(df, c)
-                    var = ((self._dsum(c * c, ct)
-                            - self._dsum(c, ct) * self._dsum(c, ct) / n)
-                           / (n - F.lit(1)))
-                    exprs.append(F.sqrt(var).alias(name))
+                    ct = _dtype(df, c)
+                    s1, s2 = self._dsum(v, ct), self._dsum(f"{v} * {v}", ct)
+                    exprs.append(F.expr(
+                        f"sqrt(try_divide({s2} - {s1} * {s1} / count({v}), "
+                        f"count({v}) - 1)) AS {ident(name)}"))
                 else:
                     exprs.append(F.stddev_samp(c).alias(name))
             elif a.op == "percentile":
@@ -455,9 +468,9 @@ class Query:
 
         names = self._group_names()
         gexprs = self._group_cols()
-        w = self._weight()
         proj = (df.select(*gexprs, F.col(a.col).alias("__v"),
-                          w.cast(self._DEC).alias("__w"))
+                          F.expr(f"CAST({self._weight_sql()} AS {DEC}) "
+                                 "AS __w"))
                   .where(F.col("__v").isNotNull()))
         # __tw (per-group total weight) deliberately does NOT come
         # from a second `sum over (partition by ...)` window: a
@@ -581,7 +594,7 @@ class Query:
             F.coalesce(
                 F.sum("__pw").over(
                     wg.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0).cast(self._DEC)).alias("__off"),
+                F.lit(0).cast(DEC)).alias("__off"),
             F.sum("__pw").over(
                 wg.rowsBetween(Window.unboundedPreceding,
                                Window.unboundedFollowing)).alias("__tw"))
@@ -697,16 +710,16 @@ class Query:
         Output: one row per (group..., bucket) with `bucket` = inclusive
         lower bound, `count` (weighted) and `samples` (raw).
         """
-        df, bcol = self._fixed_buckets(spark, col, bucket, min_val,
+        df, bsql = self._fixed_buckets(spark, col, bucket, min_val,
                                        max_val, discard_over, from_registry)
-        return self._bucket_counts(df, bcol)
+        return self._bucket_counts(df, F.expr(f"{bsql} AS bucket"))
 
     def _fixed_buckets(self, spark: SparkSession, col: str, bucket,
                        min_val, max_val, discard_over,
-                       from_registry) -> tuple[DataFrame, Column]:
+                       from_registry) -> tuple[DataFrame, str]:
         """hist/hist_summary's shared front: the scanned rows with a
-        non-null `col` (≤ discard_over), and the fixed-width `bucket`
-        lower-bound column — width and base resolved from the
+        non-null `col` (≤ discard_over), and the SQL text of the
+        fixed-width bucket lower bound — width and base resolved from the
         registry, then explicit args, then the filtered rows' min/max
         (see hist)."""
         if from_registry is not None:
@@ -735,10 +748,10 @@ class Query:
                 # TypeError on None arithmetic
                 min_val, max_val = 0.0, 0.0
             bucket = max((max_val - min_val) / NUM_BUCKETS, 1)
-        base = float(min_val) if min_val is not None else 0.0
-        bcol = (F.floor((F.col(col) - F.lit(base)) / F.lit(float(bucket)))
-                * F.lit(float(bucket)) + F.lit(base)).alias("bucket")
-        return df, bcol
+        base = lit_double(min_val if min_val is not None else 0.0)
+        width = lit_double(bucket)
+        return df, (f"FLOOR(({ident(col)} - {base}) / {width}) * {width}"
+                    f" + {base}")
 
     def _bucket_counts(self, df: DataFrame, bcol: Column) -> DataFrame:
         """hist/loghist's shared tail: count[, samples] per
@@ -776,59 +789,64 @@ class Query:
         variance with W−1), and the percentile CDF walks cumulative
         WEIGHTS in exact decimal — the reference's weight-scaled
         histogram semantics (hist_basic.go:111-118, 153-183); this
-        is the mergeable scale path for weighted percentiles."""
-        df, bcol = self._fixed_buckets(spark, col, bucket, min_val,
+        is the mergeable scale path for weighted percentiles. A
+        one-sample group (W − 1 = 0) has a NULL stddev.
+
+        Build: both aggregates and the CDF walks are SQL text (the
+        build contract in functions.sqltext) — the per-bucket sums,
+        the per-group merge and ONE selectExpr that walks the
+        entries for every percentile and drops the helper columns —
+        so the build pays a few py4j round trips per output column,
+        not one per expression node."""
+        df, bsql = self._fixed_buckets(spark, col, bucket, min_val,
                                        max_val, discard_over, from_registry)
-        c = F.col(col)
+        v, w = ident(col), self._weight_sql()
         use_w = bool(self._weight_col)
-        wcol = self._weight()
         # summand types: weighted moments are double, raw ones the column's
-        vt = DoubleType() if use_w else _dtype(df, c)
-        vw = c * wcol if use_w else c
-        vvw = c * c * wcol if use_w else c * c
-        baggs = [F.count(F.lit(1)).alias("__n"),
-                 sum6(vw, vt).alias("__s"),
-                 sum6(vvw, vt).alias("__ss")]
+        vt = DoubleType() if use_w else _dtype(df, F.col(col))
+        vw, vvw = ((f"{v} * {w}", f"{v} * {v} * {w}") if use_w
+                   else (v, f"{v} * {v}"))
+        baggs = ["count(1) AS __n", f"{sum6_sql(vw, vt)} AS __s",
+                 f"{sum6_sql(vvw, vt)} AS __ss"]
         if use_w:
-            baggs.append(sum6(wcol, DoubleType()).alias("__w"))
-        per_bucket = df.groupBy(*self._group_cols(), bcol).agg(*baggs)
+            baggs.append(f"{sum6_sql(w, DoubleType())} AS __w")
+        per_bucket = (df.groupBy(*self._group_cols(),
+                                 F.expr(f"{bsql} AS bucket"))
+                        .agg(*[F.expr(e) for e in baggs]))
         gnames = self._group_names()
-        n = F.sum("__n")
         # W: the denominator — weight sum under a weight column, else
         # the raw row count (frequency-weight moments generalize both)
-        big_w = F.sum("__w").cast("double") if use_w else n.cast("double")
-        s = F.sum("__s").cast("double")
-        ss = F.sum("__ss").cast("double")
-        cnt_field = F.col("__w") if use_w else F.col("__n")
-        entries = F.array_sort(F.collect_list(
-            F.struct(F.col("bucket").alias("b"),
-                     cnt_field.cast(self._DEC).alias("n"))))
-        aggs = [n.alias("samples"),
-                s.alias(f"sum_{col}"),
-                (s / big_w).alias(f"avg_{col}"),
-                F.sqrt((ss - s * s / big_w) / (big_w - F.lit(1.0)))
-                 .alias(f"stddev_{col}"),
-                big_w.alias("__W"),
-                entries.alias("__e")]
+        cnt = "__w" if use_w else "__n"
+        big_w = f"CAST(sum({cnt}) AS DOUBLE)"
+        s, ss = "CAST(sum(__s) AS DOUBLE)", "CAST(sum(__ss) AS DOUBLE)"
+        outs = {"samples": "sum(__n)"}
         if use_w:
-            aggs.insert(1, F.sum("__w").cast("double").alias("count"))
-        out = per_bucket.groupBy(*gnames).agg(*aggs)
+            outs["count"] = big_w
+        outs[f"sum_{col}"] = s
+        outs[f"avg_{col}"] = f"{s} / {big_w}"
+        # try_divide: a one-sample group (W − 1 = 0) gets NULL, not
+        # an ANSI divide-by-zero error
+        outs[f"stddev_{col}"] = (
+            f"sqrt(try_divide({ss} - {s} * {s} / {big_w}, {big_w} - 1.0D))")
+        entries = ("array_sort(collect_list(struct(bucket AS b, "
+                   f"CAST({cnt} AS {DEC}) AS n)))")
+        out = per_bucket.groupBy(*gnames).agg(
+            *[F.expr(f"{e} AS {ident(k)}") for k, e in outs.items()],
+            F.expr(f"{big_w} AS __W"), F.expr(f"{entries} AS __e"))
 
-        def _cdf_walk(target):
-            return F.aggregate(
-                F.col("__e"),
-                F.struct(F.lit(0).cast(self._DEC).alias("cum"),
-                         F.lit(None).cast("double").alias("ans")),
-                lambda acc, e: F.struct(
-                    (acc["cum"] + e["n"]).alias("cum"),
-                    F.when(acc["ans"].isNotNull(), acc["ans"])
-                     .when((acc["cum"] + e["n"]).cast("double") >= target,
-                           e["b"]).alias("ans")))
+        def _cdf_walk(p: float) -> str:
+            """The smallest bucket whose cumulative count (weight)
+            reaches p·W: a left fold over the sorted entries."""
+            cum = "__acc.cum + __x.n"
+            return (f"aggregate(__e, struct(CAST(0 AS {DEC}) AS cum, "
+                    "CAST(NULL AS DOUBLE) AS ans), (__acc, __x) -> "
+                    f"struct({cum} AS cum, CASE WHEN __acc.ans IS NOT NULL "
+                    f"THEN __acc.ans WHEN CAST({cum} AS DOUBLE) >= "
+                    f"{lit_double(p)} * __W THEN __x.b END AS ans)).ans")
 
-        for p in ps:
-            target = F.lit(float(p)) * F.col("__W")
-            out = out.withColumn(f"p{int(p * 100)}", _cdf_walk(target)["ans"])
-        out = out.drop("__e", "__W")
+        out = out.selectExpr(
+            *[ident(k) for k in [*gnames, *outs]],
+            *[f"{_cdf_walk(p)} AS p{int(p * 100)}" for p in ps])
         order = [F.col(x).asc_nulls_last() for x in gnames]
         return out.orderBy(*order) if order else out
 

@@ -57,6 +57,12 @@ DEFAULT_CONFS: dict[str, str] = {
     # the vectorized reader; surface it as a LongType of nanoseconds and
     # convert with ns_to_epoch() where needed.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # PySpark's call-site capture: every Column/DataFrame call walks
+    # the Python stack and sends it to the JVM, ~10 py4j round trips
+    # per call, and a query build is hundreds of calls. Off, an error
+    # loses only its "== DataFrame == ... was called from" trailer.
+    # Read once per process, on the first Column call.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from sybil_spark.functions.exact import DEC as _DEC
 from sybil_spark.functions.exact import sum6
+from sybil_spark.functions.sqltext import ident
 from sybil_spark.sources import commit
 
 #: unit separator — same tuple encoding as the distinct query path
@@ -70,7 +71,8 @@ def build_rollup(df: DataFrame, time_col: str | None, bucket_s: int | None,
     for c in num_cols:
         col = F.col(c)
         aggs += [
-            sum6(col, df.select(col).schema[0].dataType).alias(f"{c}__sum"),
+            sum6(ident(c), df.select(col).schema[0].dataType)
+            .alias(f"{c}__sum"),
             F.sum(col.cast(_DEC) * col.cast(_DEC)).alias(f"{c}__sumsq"),
             F.min(col).alias(f"{c}__min"),
             F.max(col).alias(f"{c}__max"),

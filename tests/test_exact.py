@@ -1,7 +1,8 @@
 """The int64 fixed-point sum kernel against the decimal sum it replaces:
-grouped `exact_sum(x)` must equal `F.sum(x.cast("decimal(38,6)"))` row
-for row, in ANSI and non-ANSI sessions, including the rows that take
-the slow branch (half-way decimals, |x·1e6| ≥ 2^44, NaN, ±inf, NULL)."""
+grouped `exact_sum("x")` must equal
+`F.sum(F.col("x").cast("decimal(38,6)"))` row for row, in ANSI and
+non-ANSI sessions, including the rows that take the slow branch
+(half-way decimals, |x·1e6| ≥ 2^44, NaN, ±inf, NULL)."""
 
 import math
 
@@ -39,14 +40,14 @@ def _outcome(spark, rows, *aggs):
     df = spark.createDataFrame(rows, "g int, x double").coalesce(1)
     try:
         return df.groupBy("g").agg(*[
-            agg(F.col("x")).alias(f"s{i}") for i, agg in enumerate(aggs)
+            agg("x").alias(f"s{i}") for i, agg in enumerate(aggs)
         ]).orderBy("g").collect()
     except Exception as e:  # noqa: BLE001 — the error IS the outcome
         return ("error", str(e).split("\n")[0])
 
 
 def _decimal_sum(x):
-    return F.sum(x.cast(DEC))
+    return F.sum(F.col(x).cast(DEC))
 
 
 @given(rows=rows_st)
@@ -94,5 +95,5 @@ def test_exact_sum_matches_decimal_sum(spark, rows):
         spark.conf.set(parts, prev[1])
     if not out_of_range:
         df = spark.createDataFrame(rows, "g int, x double")
-        assert df.select(exact_sum(F.col("x"))).schema[0].dataType \
+        assert df.select(exact_sum("x")).schema[0].dataType \
             == DecimalType(38, 6)

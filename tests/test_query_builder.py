@@ -527,3 +527,39 @@ def test_having_filters_groups(spark, df):
             .having(f"count >= {floor}").having("avg_age < -1")
             .limit(None).execute(spark).collect())
     assert none == []
+
+
+def test_one_sample_group_stddev_is_null(spark):
+    """A one-sample group has no sample stddev (n − 1 = 0, W − 1 = 0):
+    the default, exact, weighted and hist_summary paths all return
+    NULL for it, as stddev_samp does, rather than raise
+    DIVIDE_BY_ZERO under ANSI mode — and keep the other group's
+    value."""
+    d = spark.createDataFrame([("a", 1.0, 2), ("a", 3.0, 1), ("b", 5.0, 1)],
+                              "g string, v double, w int")
+    raw, weighted = 2.0 ** 0.5, (4.0 / 3.0) ** 0.5
+    builds = {
+        "default": (lambda q: q.agg("v", "stddev").execute(spark), raw),
+        "exact": (lambda q: q.exact_mode().agg("v", "stddev")
+                  .execute(spark), raw),
+        "weighted": (lambda q: q.weight_col("w").agg("v", "stddev")
+                     .execute(spark), weighted),
+        "weighted_exact": (lambda q: q.weight_col("w").exact_mode()
+                           .agg("v", "stddev").execute(spark), weighted),
+        "hist_summary": (lambda q: q.hist_summary(spark, "v", bucket=1.0,
+                                                  min_val=0.0), raw),
+        "weighted_hist_summary": (
+            lambda q: q.weight_col("w").hist_summary(
+                spark, "v", bucket=1.0, min_val=0.0), weighted),
+    }
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for path, (build, want) in builds.items():
+            rows = {r["g"]: r["stddev_v"] for r in
+                    build(Query.table(d).group_by("g").limit(None))
+                    .collect()}
+            assert rows["b"] is None, path
+            assert rows["a"] == pytest.approx(want), path
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -1,9 +1,11 @@
-"""Build contract of the wide expression builders (functions/vectors.py
-and the LSH / IVF / PQ / MinHash / SimHash folds built on it).
+"""Build contract of the wide expression builders (functions.sqltext:
+the vector folds, the LSH / IVF / PQ / MinHash / SimHash builders, the
+exact-sum kernel and the query builds that use them).
 
 - Building a wide expression costs a small, fixed number of py4j round
   trips: the builders write one SQL string and make one `F.expr` /
-  `selectExpr` call instead of one round trip per Column node.
+  `selectExpr` call instead of one round trip per Column node, and the
+  session does not capture a call site per Column call.
 - The SQL literals they write parse back to the same double bits, and
   column names are quoted, so the expressions are the ones the Column
   API would have built.
@@ -20,8 +22,9 @@ import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from sybil_spark.functions.vectors import (cosine, cosine_to_const,
-                                           double_array, ident, lit_double)
+from sybil_spark.functions.exact import exact_sum
+from sybil_spark.functions.sqltext import double_array, ident, lit_double
+from sybil_spark.functions.vectors import cosine, cosine_to_const
 from sybil_spark.operators import dedup, similarity
 from tools.profile_query import py4j_round_trips
 
@@ -72,9 +75,9 @@ def build_inputs(spark):
     return emb, docs
 
 
-@pytest.mark.parametrize("name", sorted(_BUILDS))
-def test_wide_builder_round_trip_budget(spark, build_inputs, name):
-    build, budget = _BUILDS[name]
+def _build_round_trips(spark, build) -> int:
+    """py4j round trips `build()` makes (skips when they cannot be
+    counted)."""
     with py4j_round_trips() as n:
         if n[0] is None:
             pytest.skip("py4j has no ClientServerConnection.send_command")
@@ -83,8 +86,47 @@ def test_wide_builder_round_trip_budget(spark, build_inputs, name):
             pytest.skip("py4j gateway does not use ClientServerConnection")
         gc.collect()
         n[0] = 0
-        build(*build_inputs)
-    assert 0 < n[0] <= budget, (name, n[0])
+        build()
+    return n[0]
+
+
+@pytest.mark.parametrize("name", sorted(_BUILDS))
+def test_wide_builder_round_trip_budget(spark, build_inputs, name):
+    build, budget = _BUILDS[name]
+    n = _build_round_trips(spark, lambda: build(*build_inputs))
+    assert 0 < n <= budget, (name, n)
+
+
+#: query build -> round-trip budget: the count measured at sf0.001
+#: with the session's DataFrame debugging off, plus ~20 % headroom.
+#: With debugging on and the kernel built from Column nodes these
+#: builds took 2,000-2,400 (hist_summary, tpch_q1) and ~1,250
+#: (weighted_count) round trips.
+_QUERY_BUDGETS = {"hist_summary": 190, "weighted_count": 45,
+                  "tpch_q1": 125}
+
+
+def test_exact_sum_round_trip_budget(spark):
+    assert 0 < _build_round_trips(spark, lambda: exact_sum(ident("x"))) <= 3
+
+
+@pytest.mark.parametrize("name", sorted(_QUERY_BUDGETS))
+def test_query_build_round_trip_budget(spark, sf_dir, name):
+    from sybil_spark.corpus import QUERIES
+    QUERIES[name](spark, sf_dir)          # first build: imports, caches
+    n = _build_round_trips(spark, lambda: QUERIES[name](spark, sf_dir))
+    assert 0 < n <= _QUERY_BUDGETS[name], (name, n)
+
+
+def test_session_turns_off_dataframe_debugging(spark):
+    """The test session comes from get_spark, whose sessions skip
+    PySpark's per-call call-site capture (~10 round trips on every
+    Column call)."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,10 @@ materializations, 1-row stats collects) show up as separate jobs —
 exactly the breakdown the bench number hides. Each rep also prints
 its build time (the `QUERIES[name](spark, sf_dir)` call, before the
 collect) and the py4j round trips that build made: driver chatter
-that no job list shows.
+that no job list shows. The header says whether PySpark's DataFrame
+debugging is on in the measured process: it adds ~10 round trips to
+every Column call, so counts taken with it on (any session not made
+by `session.get_spark`) are not comparable with counts taken off.
 
 Usage: python tools/profile_query.py [sf_dir] <query> [--reps N]
 """
@@ -53,6 +56,14 @@ def py4j_round_trips():
         conn.send_command = orig
 
 
+def dataframe_debugging() -> bool:
+    """Whether PySpark records a call site on every Column/DataFrame
+    call in this process (`spark.python.sql.dataFrameDebugging.enabled`
+    of the session active at the first such call; read once)."""
+    from pyspark.errors.utils import is_debugging_enabled
+    return is_debugging_enabled()
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     reps = 2
@@ -70,6 +81,7 @@ def main() -> None:
 
     spark = get_spark("profile", extra_conf={"spark.ui.enabled": "false"})
     sc = spark.sparkContext
+    print(f"dataframe debugging: {'on' if dataframe_debugging() else 'off'}")
     # same warmups as bench.py so the first profiled rep is
     # steady-state; read whichever table the dir has (perfbench's
     # generated dirs have no region.parquet)
