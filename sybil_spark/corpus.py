@@ -3326,8 +3326,7 @@ def q_ivf_topk(spark, sf):
     # test_ivf_assign_batch_matches_jvm — if a regenerated dataset
     # ever produced the theoretical last-ulp centroid tie that could
     # flip an argmax between summation orders, that test goes red
-    # before the driver compare does. use_batch_assign=False remains
-    # the escape hatch.
+    # before the driver compare does.
     return similarity.ivf_topk(emb, "embedding", qvec, k=10,
                                nlist=16, nprobe=4, centroids=cents)
 
@@ -6554,16 +6553,24 @@ def q_top_ngrams(spark, sf):
 # (b) queries whose implementation or oracle changed this round. The rest
 # keep registration order. Rotate this list each round.
 _DRIVER_FIRST = [
-    # (b) implementation changed: a one-sample group's stddev is NULL
+    # (b) implementation changed: weighted percentiles run one
+    # per-group window plan for every input (the distributed
+    # prefix-sum CDF is gone) and re-attach on a null-safe struct
+    # key, so a NULL group keeps its percentile; then the other
+    # weighted queries, and the operators that lost a path knob
+    # (ivf_topk / semantic_dedup always assign with numpy;
+    # tfidf_terms / bm25_search keep only the size gate):
+    "weighted_percentile", "weighted_count", "weighted_hist",
+    "weighted_loghist", "weighted_stddev_sum", "weighted_hist_summary",
+    "ivf_topk", "semantic_dedup", "tfidf_terms", "bm25_search",
+    # then the previous head — a one-sample group's stddev is NULL
     # (try_divide) on the exact, weighted and hist_summary paths, and
     # hist_summary / the weighted aggregates are built as SQL text:
-    "hist_summary", "weighted_hist_summary", "stddev",
-    "weighted_stddev_sum", "weighted_count", "weighted_hist",
-    "weighted_loghist", "weighted_percentile",
+    "hist_summary", "stddev",
     # then every query whose build calls the exact-sum kernel, now one
     # SQL string (functions.exact.exact_sum_sql) — the previous head:
     "hybrid_search", "pq_topk_trained", "bm25_index_search",
-    "cached_query", "bm25_index_add_search", "bm25_search", "cube_counts",
+    "cached_query", "bm25_index_add_search", "cube_counts",
     "tpch_q17", "tpch_q19", "tpch_q22", "ppl_buckets", "repetition",
     "avg", "time_avg", "group_avg", "having_avg", "group_avg_limit",
     "regex_avg", "group2_avg", "time_group_avg_limit", "filter_eq_avg",
@@ -6584,7 +6591,7 @@ _DRIVER_FIRST = [
     # signatures/bands, the portable shingle fold, SimHash lanes and
     # bands) — found by recording which builders each query's build
     # calls:
-    "ivfpq_topk", "ivf_topk", "semantic_dedup", "minhash_lsh",
+    "ivfpq_topk", "minhash_lsh",
     "simhash_dup", "lsh_recall", "winnow_dup", "embedding_dup",
     "hard_negatives", "minhash_tuned", "ann_topk",
     "quantize_topk", "ann_pairs_topk", "cross_topk", "lsh_topk",
@@ -6607,7 +6614,7 @@ _DRIVER_FIRST = [
     # bm25_search (shared optimizer-size helper) and cluster_splits
     # carry over from the previous rotation's head — re-verify first
     # per this file's standing policy:
-    "span_dedup", "exact_substr", "tfidf_terms",
+    "span_dedup", "exact_substr",
     "cluster_splits",
     # (a) the rest of the 11 queries that landed after the 50-row
     # window filled and have the fewest official driver rows:

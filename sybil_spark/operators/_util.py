@@ -125,12 +125,10 @@ _WIDE_NODE = _re.compile(
 
 def estimated_bytes(df: DataFrame) -> int | None:
     """The optimizer's size estimate for `df` in bytes, or None when
-    it cannot be read. A plan-stats read: no job runs. The size gates
-    that pick a plan (weighted-percentile window vs distributed CDF,
-    tfidf/bm25 rescan vs persist) read it here, and each caller
-    decides what None means. Inputs without statistics (in-memory or
-    checkpointed frames) read as Spark's default size, which every
-    gate treats as big."""
+    it cannot be read. A plan-stats read: no job runs. The tfidf/bm25
+    rescan-vs-persist gate reads it here and treats None as big.
+    Inputs without statistics (in-memory or checkpointed frames) read
+    as Spark's default size, which the gate also treats as big."""
     try:
         return int(str(df._jdf.queryExecution().optimizedPlan()
                        .stats().sizeInBytes()))

@@ -1071,7 +1071,6 @@ def embedding_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
 def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
                    centroids: list[list[float]], threshold: float,
                    score_col: str | None = None,
-                   use_batch_assign: bool = True,
                    block_rows: int = 2048,
                    keep_cluster_col: str | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -1091,19 +1090,18 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     transitive-cluster flavor, feed `embedding_dup_pairs` output to
     `components` + `keep_cluster_representatives` instead.
 
-    Scale: assignment is one Arrow-batched matmul pass over the table
-    (`similarity.ivf_assign_batch`; `use_batch_assign=False` for the
-    pure-JVM sequential fold whose cosines bit-match a SQL oracle's
-    list_dot_product); candidate generation runs only within clusters
-    (`embedding_dup_pairs(block_on=cluster)`), so comparison volume
-    is Σ_c n_c² — the quantizer caps it, never corpus². This is the
-    whole point of SemDeDup vs all-pairs embedding dedup."""
+    Scale: assignment is one Arrow-batched matmul pass over the
+    table (`similarity.ivf_assign_batch`); candidate generation runs
+    only within clusters (`embedding_dup_pairs(block_on=cluster)`),
+    so comparison volume is Σ_c n_c² — the quantizer caps it, never
+    corpus². This is the whole point of SemDeDup vs all-pairs
+    embedding dedup."""
     if not centroids:
         raise ValueError("semantic_dedup: centroids must be non-empty")
     from sybil_spark.operators import similarity as S
 
-    assign = S.ivf_assign_batch if use_batch_assign else S.ivf_assign
-    assigned = assign(df, vec_col, centroids, cluster_col="__sem_cluster")
+    assigned = S.ivf_assign_batch(df, vec_col, centroids,
+                                  cluster_col="__sem_cluster")
     pairs = embedding_dup_pairs(assigned, id_col, vec_col, threshold,
                                 block_on="__sem_cluster",
                                 block_rows=block_rows)

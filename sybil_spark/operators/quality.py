@@ -96,17 +96,18 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
                      / F.col("n_tokens")).alias("mean_logprob")))
 
 
-#: auto persist_tf threshold (optimizer sizeInBytes of the input):
-#: the measured crossover sits between 1x and 10x sf0.1 replicas
-#: (SCALE_REHEARSAL_r06_100x.json — rescan 1.81 s vs persist 2.31 s
-#: at 1x, 4.91 vs 4.11 at 10x, 9.82 vs 7.20 at 100x), i.e. around
-#: ~1 MiB of compressed text estimate on this layout
+#: tf persist threshold (optimizer sizeInBytes of the input): the
+#: crossover sits between 1x and 10x sf0.1 document replicas. At
+#: local[4] (WP_ONE_PLAN_AB.json, median of 5 interleaved trials)
+#: rescan wins 1x (tfidf 0.78 vs 0.88 s persisted, bm25 0.94 vs
+#: 1.22 s) and persist wins 10x (tfidf 3.14 vs 3.36 s rescanned,
+#: bm25 1.73 vs 2.07 s), i.e. around ~1 MiB of compressed text
+#: estimate on this layout
 TFIDF_PERSIST_BYTES = 1 << 20
 
 
 def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str,
-                    k: int = 5,
-                    persist_tf: bool | None = None) -> DataFrame:
+                    k: int = 5) -> DataFrame:
     """Top-k characteristic terms per document by tf·idf — the
     cheap, model-free document profiler (domain tagging, corpus
     exploration, clustering features).
@@ -126,23 +127,16 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str,
     is one count job (a driver scalar, bounded). Catalyst expands the
     tf subtree twice (once per aggregation) rather than reusing it —
     whether that beats MEMORY_AND_DISK-persisting the collapsed
-    (doc, token, tf) frame is SIZE-DEPENDENT, so the default
-    (persist_tf=None) decides from the optimizer's input size
-    estimate (a plan-stats read, no job): rescan below
-    TFIDF_PERSIST_BYTES, persist above. Measured at 1x/10x/100x
-    sf0.1 replicas (~27M tokens at 100x,
-    SCALE_REHEARSAL_r06_100x.json): rescan wins 1x (1.81 vs 2.31 s),
-    persist wins 10x (4.11 vs 4.91 s) and 100x (7.20 vs 9.82 s;
-    growth 3.12x vs the rescan 5.43x that was r5's steepest curve).
-    Pass True/False to pin a path; the persisted frame's lifetime is
-    owned by the ambient `_util.cache_scope()` (unpersisted at scope
-    exit; callers wrap their action in one) or, with no scope
-    active, by `_util.unpersist_unscoped()` — so long-lived sessions
-    need not nuke the whole Spark cache."""
-    if persist_tf is None:
-        est = estimated_bytes(df)
-        # unknown: assume big
-        persist_tf = est is None or est > TFIDF_PERSIST_BYTES
+    (doc, token, tf) frame is SIZE-DEPENDENT, so it decides from the
+    optimizer's input size estimate (a plan-stats read, no job):
+    rescan below TFIDF_PERSIST_BYTES, persist above (unknown size:
+    persist). The persisted frame's lifetime is owned by the ambient
+    `_util.cache_scope()` (unpersisted at scope exit; callers wrap
+    their action in one) or, with no scope active, by
+    `_util.unpersist_unscoped()` — so long-lived sessions need not
+    nuke the whole Spark cache."""
+    est = estimated_bytes(df)
+    persist_tf = est is None or est > TFIDF_PERSIST_BYTES
     n_docs = df.count()
     toks = df.select(F.col(id_col).alias("__id"),
                      F.explode(tokens(F.col(text_col))).alias("tok"))
@@ -487,8 +481,7 @@ def quantile_buckets(df: DataFrame, id_col: str, score_col: str,
 def bm25_topk(df: DataFrame, id_col: str, text_col: str,
               queries: DataFrame, q_id_col: str = "q_id",
               q_text_col: str = "q_text",
-              k: int = 10, k1: float = 1.2, b: float = 0.75,
-              persist_tf: bool | None = None) -> DataFrame:
+              k: int = 10, k1: float = 1.2, b: float = 0.75) -> DataFrame:
     """Batched BM25 retrieval: top-k documents per QUERY row under
     the Okapi BM25 ranking (Robertson-Sparck Jones idf variant
     ln(1 + (N - df + 0.5)/(df + 0.5))) — the standard lexical search
@@ -521,10 +514,8 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str,
     `_util.cache_scope()` (or the unscoped fallback)."""
     from pyspark.sql import Window
 
-    if persist_tf is None:
-        est = estimated_bytes(df)
-        # unknown: assume big
-        persist_tf = est is None or est > TFIDF_PERSIST_BYTES
+    est = estimated_bytes(df)
+    persist_tf = est is None or est > TFIDF_PERSIST_BYTES
     toks = df.select(F.col(id_col).alias("__doc"),
                      F.explode(tokens(F.col(text_col))).alias("tok"))
     tf = toks.groupBy("__doc", "tok").agg(F.count(F.lit(1)).alias("tf"))

@@ -197,8 +197,7 @@ def ivf_assign_batch(df: DataFrame, vec_col: str,
 
 def ivf_topk(df: DataFrame, vec_col: str, query: list[float], k: int = 10,
              id_col: str = "vec_id", nlist: int = 16, nprobe: int = 4,
-             centroids: list[list[float]] | None = None,
-             use_batch_assign: bool = True) -> DataFrame:
+             centroids: list[list[float]] | None = None) -> DataFrame:
     """IVF approximate top-k: probe only the `nprobe` inverted lists
     whose centroids are nearest the query.
 
@@ -206,17 +205,11 @@ def ivf_topk(df: DataFrame, vec_col: str, query: list[float], k: int = 10,
     ingest (ivf_assign), the `cluster IN (probes)` predicate becomes
     partition pruning — the scan touches nprobe/nlist of the data
     before any per-row cosine runs. Recall/latency trade tunes with
-    (nlist, nprobe) exactly as in FAISS IVF-flat.
-
-    `use_batch_assign=False` routes assignment through the pure-JVM
-    sequential-fold ivf_assign instead of the numpy matmul — slower,
-    but the per-centroid cosines then sum doubles in index order and
-    bit-match a SQL oracle's `list_dot_product` (numpy's pairwise/BLAS
-    summation can flip an argmax on a near-exact centroid tie)."""
+    (nlist, nprobe) exactly as in FAISS IVF-flat. Assignment is the
+    Arrow-batched numpy matmul (ivf_assign_batch)."""
     cents = centroids or ivf_centroids(df, vec_col, id_col, nlist)
     probes = _rank_probes(cents, query, nprobe)
-    assign = ivf_assign_batch if use_batch_assign else ivf_assign
-    assigned = assign(df, vec_col, cents)
+    assigned = ivf_assign_batch(df, vec_col, cents)
     return brute_force_topk(assigned.where(F.col("cluster").isin(probes)),
                             vec_col, query, k, id_col)
 

@@ -56,18 +56,6 @@ from sybil_spark.functions.sqltext import ident, lit_double
 #: sybil NUM_BUCKETS (reference: src/lib/hist.go:3)
 NUM_BUCKETS = 1000
 
-#: EXACT weighted percentiles (ungrouped is the one-group case):
-#: optimizer input-size estimate (bytes, plan-stats read — no job,
-#: see operators._util.estimated_bytes) above which _wp_frame switches
-#: from the per-group window (task parallelism = |groups|, serial for
-#: few huge groups) to the distributed prefix-sum CDF
-#: (_wp_grouped_distributed). Below it the single hash-partitioned
-#: window is the cheapest plan. Threshold = the measured crossover
-#: (SCALE_REHEARSAL_r11_wpAB.json, interleaved minima): the window
-#: wins 1x sf0.1 (1.67 vs 3.58 s, ~6.7 MB estimate), the distributed
-#: path wins 10x (7.88 vs 4.48 s, ~67 MB) and 30x (44.9 vs 20.1 s) —
-#: the per-group sort grows superlinearly, the CDF stays parallel.
-WP_GROUPED_DISTRIBUTED_MIN_BYTES = 64 << 20
 #: sybil default result limit (reference: src/lib/config.go:166-167)
 DEFAULT_LIMIT = 100
 
@@ -448,87 +436,49 @@ class Query:
         the reference's weight-scaled histogram percentiles,
         src/lib/hist_basic.go:111-118, 153-183).
 
-        Plan shape: one window pass building the weighted CDF
-        (partitioned by the group key — the per-group sort is the
+        One plan for every input: a window pass partitioned by the
+        group key builds the weighted CDF (the per-group sort is the
         unavoidable cost of an exact percentile and Spark spills it),
-        then a grouped min over threshold-crossing values. Weights
-        accumulate in decimal, so the CDF is order-exact and
-        bit-matches a SQL window oracle. Above
-        WP_GROUPED_DISTRIBUTED_MIN_BYTES of estimated input it
-        switches to _wp_grouped_distributed (the per-group window
-        caps task parallelism at |groups|). With no group columns the
-        key is an EMPTY struct — one group holding every row — so the
-        ungrouped query takes the same two paths (below the gate it
-        builds lazily: no plan-time job) and its crossing aggregation
-        drops the key. The mergeable constant-size path either way
-        remains the histogram CDF (hist_summary / rollup)."""
+        the per-group totals re-attach by a plain join, then a grouped
+        min picks the threshold-crossing values. Weights accumulate in
+        decimal, so the CDF is order-exact and bit-matches a SQL
+        window oracle. The build runs no Spark job.
+
+        The group key is ONE struct column `__wp_g`, returned packed:
+        struct equality is null-safe per field (struct(NULL) =
+        struct(NULL) is TRUE), so a missing group value is a real
+        group through every join here and through compile()'s
+        re-attach, with no <=> conditions whose coalesce-wrapped keys
+        would defeat co-partitioning. With no group columns the key
+        is an EMPTY struct (one group holding every row) and the
+        crossing aggregation is global, dropping the key. The
+        mergeable constant-size path remains the histogram CDF
+        (hist_summary / rollup)."""
         from pyspark.sql import Window
 
-        from sybil_spark.operators._util import estimated_bytes
-
         names = self._group_names()
-        gexprs = self._group_cols()
-        proj = (df.select(*gexprs, F.col(a.col).alias("__v"),
+        proj = (df.select(F.struct(*self._group_cols()).alias("__wp_g"),
+                          F.col(a.col).alias("__v"),
                           F.expr(f"CAST({self._weight_sql()} AS {DEC}) "
                                  "AS __w"))
                   .where(F.col("__v").isNotNull()))
-        # __tw (per-group total weight) deliberately does NOT come
-        # from a second `sum over (partition by ...)` window: a
-        # whole-partition frame is its own WindowExec that buffers
-        # and re-walks EVERY row (the r10 before-plan showed two
-        # stacked Window nodes). The total is a |groups|-row
-        # aggregate instead, broadcast-joined back — and decimal sums
-        # are order-independent, so the value is bit-identical to the
-        # window it replaces.
-        #
-        # The group key is ONE struct column, not the bare group
-        # columns, for two reasons (r11, replaces the r10 forced
-        # F.broadcast(totals) that was an unbounded driver-side
-        # hazard for high-cardinality group-bys):
-        # - struct equality is null-safe per field (verified:
-        #   struct(NULL) = struct(NULL) is TRUE), so the totals
-        #   re-attach as a PLAIN equi-join — NULL group values
-        #   stay real groups without <=> conditions, whose
-        #   coalesce-wrapped keys would defeat co-partitioning;
-        # - the join's required distribution (__wp_g) is exactly
-        #   the window's own exchange and the window sort
-        #   (__wp_g, __v, __w) is a prefix-match for the merge
-        #   sort, so even if the (gate-bounded) broadcast hint
-        #   below were ever dropped, the fallback SortMergeJoin
-        #   adds ZERO exchanges and ZERO probe-side sorts.
-        proj = proj.withColumn(
-            "__wp_g", F.struct(*[F.col(n) for n in names]))
-        # Few huge groups serialize the per-group window (task
-        # parallelism = |groups|: the r11 10x scaling leg measured
-        # weighted_percentile FLAT from 8 to 32 cores because its
-        # 3-group window runs 3 tasks). Above a size gate the
-        # path switches to the distributed prefix-sum CDF — the gate
-        # is the optimizer's input-size estimate (a plan-stats read,
-        # no job, the tfidf persist_tf discipline), so the decision
-        # costs nothing and scales with the data, not a core
-        # count. Unknown stats (checkpointed/injected inputs)
-        # assume big.
-        est = estimated_bytes(proj)
-        if est is None or est > WP_GROUPED_DISTRIBUTED_MIN_BYTES:
-            proj = self._wp_grouped_distributed(proj)
-        else:
-            part = Window.partitionBy("__wp_g")
-            cdf = part.orderBy("__v", "__w").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow)
-            totals = proj.groupBy("__wp_g") \
-                         .agg(F.sum("__w").alias("__tw"))
-            # The broadcast hint is BOUNDED here, not the r10
-            # unbounded-hazard shape the ADVICE flagged: this
-            # branch only runs when the whole input estimates
-            # ≤ WP_GROUPED_DISTRIBUTED_MIN_BYTES, and |totals| ≤
-            # |input| rows by construction — a high-cardinality
-            # group-by over big data lands on the distributed
-            # path above, which has no hint at all. Measured:
-            # the un-hinted SMJ re-attach cost ~0.3-0.4 s at
-            # sf0.1 vs the broadcast (r11 interleaved A/B).
-            proj = (proj.select("__wp_g", "__v",
-                                F.sum("__w").over(cdf).alias("__cw"))
-                    .join(F.broadcast(totals), "__wp_g"))
+        # __tw (per-group total weight) is a |groups|-row aggregate
+        # joined back, not a second `sum over (partition by ...)`
+        # window: a whole-partition frame is its own WindowExec that
+        # buffers and re-walks every row. Decimal sums are
+        # order-independent, so the value is the same. The join's
+        # required distribution (__wp_g) is the window's own
+        # exchange and the window sort (__wp_g, __v, __w) prefixes
+        # the merge sort, so a sort-merge re-attach adds no exchange
+        # or sort on the row side; the planner broadcasts the totals
+        # when its estimate is small.
+        cdf = Window.partitionBy("__wp_g").orderBy("__v", "__w") \
+                    .rowsBetween(Window.unboundedPreceding,
+                                 Window.currentRow)
+        totals = proj.groupBy("__wp_g").agg(F.sum("__w").alias("__tw"))
+        proj = (proj.select("__wp_g", "__v",
+                            F.sum("__w").over(cdf).alias("__cw"))
+                    .join(totals, "__wp_g"))
         pcts = a.params.get("percentiles", [0.25, 0.5, 0.75])
         aggs = []
         for p in pcts:
@@ -542,71 +492,7 @@ class Query:
             # still yields its one (NULL) row when no value survives
             # the filter, which the caller's crossJoin relies on
             return proj.agg(*aggs)
-        out = proj.groupBy("__wp_g").agg(*aggs)
-        return out.select(
-            *[F.col("__wp_g").getField(n).alias(n) for n in names],
-            *[c for c in out.columns if c != "__wp_g"])
-
-    def _wp_grouped_distributed(self, proj: DataFrame) -> DataFrame:
-        """Exact GROUPED weighted percentiles without per-group
-        single-task windows — the distributed prefix-sum CDF (the
-        ungrouped query runs it too, as the one empty-struct group):
-
-        1. range-partition (__wp_g, __v, __w): each group's rows span
-           a CONTIGUOUS run of partitions in (value, weight) order;
-           pin the assignment with a localCheckpoint and record each
-           row's partition id;
-        2. one small aggregation gives per-(partition, group) weight
-           sums — ≤ |groups| + numPartitions − 1 rows total because
-           group runs are contiguous — and a window over that small
-           frame turns them into per-group exclusive prefix offsets
-           AND per-group totals in one pass;
-        3. re-attach by (partition id, group): an equi-join against
-           the small frame (AQE broadcasts it when it measures small;
-           a shuffled join co-partitions with the window that
-           follows, so the big frame pays exactly one more narrow
-           exchange either way), then each task windows only its own
-           (partition, group) slice — parallelism follows the data,
-           not |groups| — and adds its offset.
-
-        Ties straddling a range boundary can interleave differently
-        than the single-window (__v, __w) order, but the answer — the
-        smallest VALUE whose cumulative weight reaches p·total — is
-        invariant to ordering among ties, so this bit-matches the
-        per-group-window path (pinned by
-        test_weighted_percentile_distributed_matches_window and
-        test_weighted_percentile_grouped_distributed_matches_window).
-
-        Returns the same (__wp_g, __v, __cw, __tw) frame the window
-        path produces; the caller's crossing aggregation is shared."""
-        from pyspark.sql import Window
-
-        spark = proj.sparkSession
-        npart = spark.sparkContext.defaultParallelism
-        part = (proj.repartitionByRange(npart, "__wp_g", "__v", "__w")
-                    .withColumn("__pid", F.spark_partition_id())
-                    .localCheckpoint())
-        sums = part.groupBy("__pid", "__wp_g") \
-                   .agg(F.sum("__w").alias("__pw"))
-        wg = Window.partitionBy("__wp_g").orderBy("__pid")
-        offs = sums.select(
-            "__pid", "__wp_g",
-            F.coalesce(
-                F.sum("__pw").over(
-                    wg.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0).cast(DEC)).alias("__off"),
-            F.sum("__pw").over(
-                wg.rowsBetween(Window.unboundedPreceding,
-                               Window.unboundedFollowing)).alias("__tw"))
-        cdf = Window.partitionBy("__pid", "__wp_g") \
-                    .orderBy("__v", "__w") \
-                    .rowsBetween(Window.unboundedPreceding,
-                                 Window.currentRow)
-        return (part.join(offs, ["__pid", "__wp_g"])
-                    .select("__wp_g", "__v",
-                            (F.sum("__w").over(cdf)
-                             + F.col("__off")).alias("__cw"),
-                            "__tw"))
+        return proj.groupBy("__wp_g").agg(*aggs)
 
     def _group_cols(self) -> list[Column]:
         """The grouping columns of a scanned (_scan) frame: group-by
@@ -631,10 +517,15 @@ class Query:
                 raise ValueError("total_row with weighted percentiles "
                                  "is not supported")
             names = self._group_names()
+            if names:
+                # the same struct key as _wp_frame's: a NULL group
+                # value matches its own percentile row
+                out = out.withColumn("__wp_g", F.struct(*names))
             for a in wp_aggs:
                 frame = self._wp_frame(df, a)
-                out = (out.join(frame, names, "left") if names
+                out = (out.join(frame, "__wp_g", "left") if names
                        else out.crossJoin(frame))
+            out = out.drop("__wp_g")
 
         if self._total_row and group_cols:
             # Grand-total union (reference src/lib/aggregate.go:414-459);

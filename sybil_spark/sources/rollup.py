@@ -56,8 +56,7 @@ def build_rollup(df: DataFrame, time_col: str | None, bucket_s: int | None,
     column to its fixed histogram bucket width (reference
     `-int-bucket`, src/lib/hist_basic.go:28-45); its counts land in a
     sum-mergeable map<bigint,bigint> via a second aggregate joined on
-    the rollup key (the join is co-partitioned — both sides just
-    shuffled on the same key). `time_col=None` builds an untimed
+    the rollup key (_join_on_key). `time_col=None` builds an untimed
     partial (no tbucket column) — the per-block query-cache path for
     queries with no time dimension."""
     # `t - t % bucket` (truncate toward zero), NOT pmod: the Query
@@ -90,13 +89,26 @@ def build_rollup(df: DataFrame, time_col: str | None, bucket_s: int | None,
         hist = (df.where(F.col(c).isNotNull())
                   .groupBy(*tkeys, *group_cols, hb.alias("__hb"))
                   .agg(F.count(F.lit(1)).alias("__hc"))
-                  .groupBy(*knames)
+                  .groupBy(F.struct(*knames).alias("__k"))
                   .agg(F.map_from_entries(
                       F.sort_array(F.collect_list(
                           F.struct(F.col("__hb"), F.col("__hc")))))
                       .alias(f"{c}__hist")))
-        out = out.join(hist, knames, "left")
+        out = _join_on_key(out, hist, knames)
     return out
+
+
+def _join_on_key(out: DataFrame, hist: DataFrame,
+                 keys: list[str]) -> DataFrame:
+    """Left-join a histogram frame keyed by `__k` = struct(keys) onto
+    `out`, appending its columns. Struct equality is null-safe per
+    field, so a NULL group value is a real group and keeps its
+    histogram; a group with no histogram rows keeps its row with a
+    NULL histogram. When the planner does not broadcast `hist`, the
+    sort-merge join re-partitions `out` by `__k`: one exchange of the
+    finalized rows, the smallest frame of the plan."""
+    return (out.withColumn("__k", F.struct(*keys))
+               .join(hist, "__k", "left").drop("__k"))
 
 
 def write_rollup(roll: DataFrame, path: str, mode: str = "overwrite",
@@ -178,9 +190,7 @@ def serve(roll: DataFrame, group_cols: list[str],
     out = roll.groupBy(*keys).agg(*aggs) if keys else roll.agg(*aggs)
     for c in (hist_cols or []):
         merged = _merged_hist(roll, keys, f"{c}__hist", f"hist_{c}")
-        # left join: a group whose hist rows are all NULL still keeps
-        # its finalized row (hist column NULL)
-        out = out.join(merged, keys, "left") if keys \
+        out = _join_on_key(out, merged, keys) if keys \
             else out.crossJoin(merged)
     return out
 
@@ -191,15 +201,15 @@ def _merged_hist(roll: DataFrame, keys: list[str], col: str,
     explode entries → partial-aggregated sum per (keys, bucket) →
     rebuild the sorted map. Linear in total entries and fully
     shuffle-parallel — an in-aggregate array merge is O(buckets²)
-    interpreted per group, which matters at NUM_BUCKETS=1000. The
-    join back onto the finalized frame is co-partitioned (both sides
-    just grouped on the same keys)."""
-    e = roll.select(*keys, F.explode(F.map_entries(F.col(col))).alias("e"))
-    summed = (e.groupBy(*keys, F.col("e.key").alias("__hb"))
+    interpreted per group, which matters at NUM_BUCKETS=1000. Grouped
+    output is keyed by `__k` = struct(keys), for _join_on_key."""
+    e = roll.select(F.struct(*keys).alias("__k"),
+                    F.explode(F.map_entries(F.col(col))).alias("e"))
+    summed = (e.groupBy("__k", F.col("e.key").alias("__hb"))
                .agg(F.sum("e.value").alias("__hc")))
     maps = F.map_from_entries(F.sort_array(F.collect_list(
         F.struct(F.col("__hb"), F.col("__hc"))))).alias(alias)
-    return (summed.groupBy(*keys).agg(maps) if keys
+    return (summed.groupBy("__k").agg(maps) if keys
             else summed.agg(maps))
 
 
@@ -249,8 +259,8 @@ def merge_partials(roll: DataFrame, group_cols: list[str],
     keys = ["tbucket", *group_cols]
     out = roll.groupBy(*keys).agg(*aggs)
     for c in (hist_cols or []):
-        out = out.join(_merged_hist(roll, keys, f"{c}__hist", f"{c}__hist"),
-                       keys, "left")
+        out = _join_on_key(
+            out, _merged_hist(roll, keys, f"{c}__hist", f"{c}__hist"), keys)
     return out
 
 

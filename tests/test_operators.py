@@ -264,7 +264,9 @@ def test_ivf_assign_deterministic(spark, emb):
 def test_ivf_index_persisted_matches_adhoc(spark, emb, tmp_path):
     """build_ivf_index → ivf_index_topk answers exactly what the
     ad-hoc ivf_topk answers with the same centroids (pure-JVM
-    assignment both sides), and the probe scan is PARTITION-PRUNED:
+    assignment at build, the numpy batch assignment ad hoc; they
+    bit-match, see test_ivf_assign_batch_matches_jvm), and the probe
+    scan is PARTITION-PRUNED:
     the cluster filter lands in PartitionFilters, so non-probed
     inverted lists are dropped at file listing, before any read."""
     from sybil_spark.plans.inspect import formatted_plan
@@ -274,8 +276,7 @@ def test_ivf_index_persisted_matches_adhoc(spark, emb, tmp_path):
     q = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
     served = similarity.ivf_index_topk(spark, idx, q, k=5, nprobe=2)
     adhoc = similarity.ivf_topk(emb, "embedding", q, k=5, nlist=8,
-                                nprobe=2, centroids=cents,
-                                use_batch_assign=False)
+                                nprobe=2, centroids=cents)
     assert [(r["vec_id"], r["cos"]) for r in served.collect()] \
         == [(r["vec_id"], r["cos"]) for r in adhoc.collect()]
     import re
@@ -1119,7 +1120,7 @@ def test_tfidf_top_terms(spark):
     assert [r["tok"] for r in by_doc[2]] == ["cherry", "shared"]
 
 
-def test_cache_scope_owns_autopersisted_tf(spark):
+def test_cache_scope_owns_autopersisted_tf(spark, monkeypatch):
     """Auto-persist lifetime contract: an operator's persisted tf
     frame registers into the ambient cache_scope and is unpersisted
     at scope exit (no reliance on a droppable DataFrame attribute);
@@ -1128,14 +1129,15 @@ def test_cache_scope_owns_autopersisted_tf(spark):
     from sybil_spark.operators import quality
     from sybil_spark.operators._util import (cache_scope,
                                              unpersist_unscoped)
+    # every input size takes the persist side of the gate
+    monkeypatch.setattr(quality, "TFIDF_PERSIST_BYTES", -1)
     sc = spark.sparkContext
     unpersist_unscoped()   # clean slate from other tests
     before = len(sc._jsc.getPersistentRDDs())
     df = spark.createDataFrame([
         Row(doc_id=i, text=f"alpha beta tok{i}") for i in range(6)])
     with cache_scope() as h:
-        out = quality.tfidf_top_terms(df, "doc_id", "text", k=2,
-                                      persist_tf=True)
+        out = quality.tfidf_top_terms(df, "doc_id", "text", k=2)
         assert len(out.collect()) > 0
         assert len(h.frames) == 1          # tf registered here
         assert len(sc._jsc.getPersistentRDDs()) == before + 1
@@ -1143,13 +1145,11 @@ def test_cache_scope_owns_autopersisted_tf(spark):
     # scopes also catch nested operators (hybrid -> bm25 tf)
     qdf = spark.createDataFrame([Row(q_id=1, q_text="alpha tok3")])
     with cache_scope() as h:
-        quality.bm25_topk(df, "doc_id", "text", qdf, k=2,
-                          persist_tf=True).collect()
+        quality.bm25_topk(df, "doc_id", "text", qdf, k=2).collect()
         assert len(h.frames) == 1
     assert len(sc._jsc.getPersistentRDDs()) == before
     # no scope: the fallback registry holds it until drained
-    quality.tfidf_top_terms(df, "doc_id", "text", k=2,
-                            persist_tf=True).collect()
+    quality.tfidf_top_terms(df, "doc_id", "text", k=2).collect()
     assert len(sc._jsc.getPersistentRDDs()) == before + 1
     assert unpersist_unscoped() == 1
     assert len(sc._jsc.getPersistentRDDs()) == before

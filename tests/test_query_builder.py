@@ -421,93 +421,80 @@ def test_oracles_render_decimal_sums_via_varchar():
     assert not bad, bad
 
 
-def test_weighted_percentile_distributed_matches_window(spark, monkeypatch):
-    """Above WP_GROUPED_DISTRIBUTED_MIN_BYTES of estimated input the
-    ungrouped exact weighted percentile (no group_by: one empty-struct
-    group) switches from one global single-partition window to the
-    distributed prefix-sum CDF (range-partition + per-partition
-    offsets). Forcing each path must yield bit-identical results,
-    including heavy ties straddling range boundaries."""
+def _weighted_percentile_ref(rows, by, pcts):
+    """Per group of `by` (None: one group), the smallest v whose
+    cumulative weight w reaches p·total, for each p in `pcts`."""
+    groups = {}
+    for r in rows:
+        groups.setdefault(r[by] if by else None, []).append((r.v, r.w))
+    out = {}
+    for g, pairs in groups.items():
+        total, cum, cdf = sum(w for _v, w in pairs), 0, []
+        for v, w in sorted(pairs):
+            cum += w
+            cdf.append((cum, v))
+        out[g] = [next(v for c, v in cdf if c >= p * total) for p in pcts]
+    return out
+
+
+def _weighted_percentiles(spark, d, by, pcts):
+    """{group (None when ungrouped): [p-th weighted percentile of v]}
+    from the query builder."""
+    q = (Query.table(d).weight_col("w").group_by(*([by] if by else []))
+         .agg("v", "percentile", percentiles=pcts).limit(None)
+         .execute(spark))
+    cols = [f"p{int(p * 100)}_v" for p in pcts]
+    return {r[by] if by else None: [r[c] for c in cols]
+            for r in q.collect()}
+
+
+def test_weighted_percentile_matches_python_reference(spark):
+    """Grouped and ungrouped exact weighted percentiles equal a
+    pure-Python reference on tie-heavy random rows, and a NULL group
+    value is a real group (sybil's missing-value group) that keeps its
+    percentiles through compile()'s re-attach."""
     import random
-
-    from sybil_spark.query import builder as B
-
-    rnd = random.Random(11)
-    rows = [Row(v=float(rnd.choice([1, 2, 2, 3, 5, 8])),
-                w=rnd.randint(1, 9)) for _ in range(5000)]
-    d = spark.createDataFrame(rows).repartition(16)
-    q = lambda: (Query.table(d).weight_col("w")
-                 .agg("v", "percentile", percentiles=[0.1, 0.5, 0.9])
-                 .limit(None).execute(spark).collect())
-    # both paths forced: an in-memory frame has no size statistics
-    # and estimates at Spark's default (huge) size, so unforced it
-    # would already take the distributed path
-    monkeypatch.setattr(B, "WP_GROUPED_DISTRIBUTED_MIN_BYTES",
-                        float("inf"))
-    single = q()
-    assert len(single) == 1
-    monkeypatch.setattr(B, "WP_GROUPED_DISTRIBUTED_MIN_BYTES", 1)
-    dist = q()
-    assert len(dist) == 1
-    assert dist[0].asDict() == single[0].asDict()
-
-
-def test_weighted_percentile_grouped_distributed_matches_window(
-        spark, monkeypatch):
-    """Above WP_GROUPED_DISTRIBUTED_MIN_BYTES of estimated input the
-    GROUPED exact weighted percentile switches from the per-group
-    window (task parallelism = |groups| — serial for few huge groups)
-    to the grouped distributed prefix-sum CDF. Forcing each path must
-    yield bit-identical results: same groups (including a NULL group
-    key), same percentile values, heavy ties straddling range
-    boundaries."""
-    import random
-
-    from sybil_spark.query import builder as B
 
     rnd = random.Random(13)
     rows = [Row(g=rnd.choice(["x", "y", None]),
                 v=float(rnd.choice([1, 2, 2, 3, 5, 8])),
                 w=rnd.randint(1, 9)) for _ in range(5000)]
     d = spark.createDataFrame(rows).repartition(16)
-    key = lambda t: tuple((x is None, str(x)) for x in t)
-    q = lambda: sorted(
-        [tuple(r) for r in
-         (Query.table(d).group_by("g").weight_col("w")
-          .agg("v", "percentile", percentiles=[0.1, 0.5, 0.9])
-          .limit(None).execute(spark).collect())], key=key)
-    monkeypatch.setattr(B, "WP_GROUPED_DISTRIBUTED_MIN_BYTES",
-                        float("inf"))
-    single = q()
-    monkeypatch.setattr(B, "WP_GROUPED_DISTRIBUTED_MIN_BYTES", 1)
-    dist = q()
-    assert dist == single
+    pcts = [0.1, 0.5, 0.9]
+    got = _weighted_percentiles(spark, d, "g", pcts)
+    assert None in got
+    assert got == _weighted_percentile_ref(rows, "g", pcts)
+    assert _weighted_percentiles(spark, d, None, pcts) == \
+        _weighted_percentile_ref(rows, None, pcts)
 
 
 def test_weighted_percentile_ungrouped_builds_lazily(spark):
-    """Building an ungrouped exact weighted percentile below the size
-    gate runs no Spark job: the plan is chosen from the optimizer's
-    size estimate, not from a plan-time count/sum collect, so the
-    query stays a lazy DataFrame until the caller's action. The job
-    group's tracker sees nothing at build time and the action's jobs
-    afterwards. (spark.range carries real size statistics; an
-    in-memory frame would estimate at Spark's default huge size and
-    take the checkpointed distributed path.)"""
-    d = spark.range(200).select(
+    """Building an exact weighted percentile runs no Spark job, on a
+    frame with size statistics (spark.range) and on an in-memory
+    frame without them, ungrouped or grouped: the query stays a lazy
+    DataFrame until the caller's action. The job group's tracker sees
+    nothing at build time and the action's jobs afterwards."""
+    ranged = spark.range(200).select(
         (F.col("id") % 7).cast("double").alias("v"),
-        (F.col("id") % 3 + 1).alias("w"))
+        (F.col("id") % 3 + 1).alias("w"), (F.col("id") % 2).alias("g"))
+    rows = ranged.collect()
+    local = spark.createDataFrame(rows)
     sc = spark.sparkContext
-    group = "wp-ungrouped-lazy-build"
-    sc.setJobGroup(group, "ungrouped weighted percentile build")
-    try:
-        q = (Query.table(d).weight_col("w")
-             .agg("v", "percentile", percentiles=[0.5])
-             .limit(None).execute(spark))
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        assert q.collect()[0]["p50_v"] == 3.0
-        assert list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup(None, None)
+    for i, (d, by) in enumerate(((ranged, None), (local, None),
+                                 (local, "g"))):
+        group = f"wp-lazy-build-{i}"
+        sc.setJobGroup(group, "weighted percentile build")
+        try:
+            q = (Query.table(d).weight_col("w")
+                 .group_by(*([by] if by else []))
+                 .agg("v", "percentile", percentiles=[0.5])
+                 .limit(None).execute(spark))
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            got = {r[by] if by else None: [r["p50_v"]] for r in q.collect()}
+            assert list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+        assert got == _weighted_percentile_ref(rows, by, [0.5])
 
 
 def test_having_filters_groups(spark, df):

@@ -110,6 +110,24 @@ def test_hist_merge_and_percentiles(events, roll):
         assert r["p50"] <= true_med[r["event_type"]] <= r["p50"] + 10.0
 
 
+def test_null_group_keeps_its_histogram(spark):
+    """A NULL group value is a real group (sybil's missing-value
+    group): its histogram survives the re-joins of build_rollup,
+    merge_partials and serve."""
+    d = spark.createDataFrame([(0, "a", 5.0), (0, None, 7.0),
+                               (0, None, 15.0)], "t long, g string, v double")
+    roll = R.build_rollup(d, "t", 60, ["g"], ["v"],
+                          hist_buckets={"v": 10.0})
+    want = {"a": {0: 1}, None: {0: 1, 1: 1}}
+    assert {r["g"]: r["v__hist"] for r in roll.collect()} == want
+    assert {r["g"]: r["hist_v"] for r in
+            R.serve(roll, ["g"], hist_cols=["v"]).collect()} == want
+    merged = R.merge_partials(roll.unionByName(roll), ["g"], ["v"],
+                              hist_cols=["v"])
+    assert {r["g"]: r["v__hist"] for r in merged.collect()} == \
+        {g: {b: 2 * c for b, c in h.items()} for g, h in want.items()}
+
+
 def test_incremental_union_merges_exactly(events, roll):
     """Two half-builds unioned then served == one full build served —
     the incremental-refresh invariant."""

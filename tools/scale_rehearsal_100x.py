@@ -123,10 +123,17 @@ def main() -> None:
 
     def run_tfidf(df, persist):
         from sybil_spark.operators._util import cache_scope
+        gate = quality.TFIDF_PERSIST_BYTES
+        # pin one side of the size gate: every input persists at -1,
+        # none at +inf
+        quality.TFIDF_PERSIST_BYTES = -1 if persist else float("inf")
         t0 = time.time()
-        with cache_scope():   # release the persisted tf per run
-            quality.tfidf_top_terms(df, "doc_id", "text", k=5,
-                                    persist_tf=persist).count()
+        try:
+            with cache_scope():   # release the persisted tf per run
+                quality.tfidf_top_terms(df, "doc_id", "text",
+                                        k=5).count()
+        finally:
+            quality.TFIDF_PERSIST_BYTES = gate
         el = round(time.time() - t0, 2)
         spark.catalog.clearCache()
         return el
